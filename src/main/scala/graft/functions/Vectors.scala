@@ -23,11 +23,11 @@ object Vectors {
   /** Cosine similarity of two double arrays. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Fused-kernel variants over raw `array<float>` columns: resolve to
+  /** Fused-kernel variant over raw `array<float>` columns: resolves to
     * the native graft_dot expression (graft.plans.FusedDotProduct,
     * registered by GraftExtensions) — one multiply-add loop, no
     * intermediate products array, ~9× the HOF throughput at 200k rows.
-    * Identical sequential accumulation ⇒ bit-equal to dot/norm/cosine
+    * Identical sequential accumulation ⇒ bit-equal to dot
     * above and to the DuckDB oracle folds.
     */
   def dotFused(a: Column, b: Column): Column = call_function("graft_dot", a, b)
@@ -38,16 +38,13 @@ object Vectors {
     * family scores with — long fast path, exact BigInteger fallback on
     * overflow, null on mismatch/null-element/38-digit overflow. */
   def dotDec(a: Column, b: Column): Column = call_function("graft_dot_dec", a, b)
-  def normFused(a: Column): Column = sqrt(dotFused(a, a))
-  def cosineFused(a: Column, b: Column): Column =
-    dotFused(a, b) / (normFused(a) * normFused(b))
 
   /** Declarative forms over raw `array<float>` columns: widen + HOF
     * fold — pure builtin Spark, runs correctly on ANY session. On a
     * session with GraftExtensions, `FuseDotProductRule` rewrites each
     * dot to the native kernel (bit-equal by construction), so query
     * modules write THESE and the session supplies the performance;
-    * the *Fused variants remain for callers that must fail loudly
+    * [[dotFused]] remains for callers that must fail loudly
     * when the extension is absent. */
   def dotDecl(a: Column, b: Column): Column = dot(toDouble(a), toDouble(b))
   def normDecl(a: Column): Column = sqrt(dotDecl(a, a))

@@ -7,7 +7,6 @@ import graft.io.Bucketing
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.concurrent.TrieMap
 
 /** Curation operators beyond LlmData's x20–x62: diversity scoring,
   * weighted corpus sampling, embedding compression (product
@@ -140,27 +139,6 @@ object Curation {
     * is why keying is positional on both engines. */
   private[graft] type PqCodebook = IndexedSeq[Seq[(Long, IndexedSeq[Double])]]
 
-  // lazy + def below: Curation and LlmData reference each other
-  // (LlmData's x35 oracle embeds duckPqChain; these registries are
-  // LlmData's class). Eager vals on both sides would make object
-  // initialization ORDER-dependent — whichever object initializes
-  // first re-enters the other mid-init and reads a null val, splicing
-  // the literal string "null" into an oracle. lazy vals + a pure def
-  // make the cross-references safe from either entry point.
-  private lazy val pqMemo =
-    new LlmData.SessionRegistry[TrieMap[String, (String, PqCodebook)]]
-  private lazy val pqIndexMemo = new LlmData.SessionRegistry[TrieMap[String, (String, String)]]
-
-  /** Release hook (called from LlmData.clearMemo — one lifecycle for
-    * the whole operator surface). */
-  private[operators] def clearPqMemo(s: SparkSession): Unit = {
-    pqMemo.remove(s)
-    pqIndexMemo.remove(s)
-  }
-
-  private[operators] def pqMemoPopulated(s: SparkSession): Boolean =
-    pqMemo.has(s) || pqIndexMemo.has(s)
-
   /** Per-subspace Lloyd's training (the x34 playbook applied to PQ):
     * seed each subspace's 8 centers from the first-8 embeddings'
     * subvectors, then 2 rounds of {kernel argmin assignment → per-dim
@@ -177,7 +155,7 @@ object Curation {
     * integers (order-free), and the mean is sm/n/10⁶ in correctly-
     * rounded IEEE double on both engines. */
   private[graft] def trainPqCodebook(s: SparkSession, dir: String): PqCodebook =
-    LlmData.stampedValue(pqMemo, s, dir, dir)(
+    SessionMemo.value(s, "pq-codebook", dir)(
       trainPqCodebookOn(t(s, dir, "embeddings")))
 
   /** Codebook trained on the HISTORICAL slice only, then FROZEN — the
@@ -186,7 +164,7 @@ object Curation {
     * never retrained per append; x75 measures the recall drift that
     * decides a retrain). */
   private[graft] def trainPqCodebookHist(s: SparkSession, dir: String): PqCodebook =
-    LlmData.stampedValue(pqMemo, s, dir + "#hist", dir)(
+    SessionMemo.value(s, "pq-codebook-hist", dir)(
       trainPqCodebookOn(t(s, dir, "embeddings").filter(LlmData.histVec)))
 
   /** The Lloyd's loop itself, over an arbitrary training frame. */
@@ -477,7 +455,7 @@ object Curation {
   private def x72 = Q(
     (s, dir) => {
       val cb = trainPqCodebook(s, dir)
-      val tbl = LlmData.tableOnce(pqIndexMemo, s, dir)({
+      val tbl = SessionMemo.value(s, "pq-codes", dir)({
           val name = "graft_pq_codes_" + dir.replaceAll("[^A-Za-z0-9]", "_")
           Bucketing.writeBucketed(
             t(s, dir, "embeddings").filter(col("vec_id") =!= 0)
@@ -683,7 +661,7 @@ object Curation {
     * the frozen hist codebook, new batch APPENDED under the same
     * bucket spec — base files untouched. */
   private def incPqIndexTable(s: SparkSession, dir: String): String =
-    LlmData.tableOnce(pqIndexMemo, s, dir + "#inc") {
+    SessionMemo.value(s, "pq-codes-inc", dir) {
       val tbl = incPqIndexTableName(dir)
       pqWriteBaseIndex(s, dir, tbl)
       Bucketing.appendBucketed(

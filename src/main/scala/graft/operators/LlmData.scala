@@ -7,7 +7,6 @@ import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import scala.collection.concurrent.TrieMap
 
 /** LLM-data-pipeline operators (SURVEY.md §2.11, driver north-star):
   * dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity
@@ -252,38 +251,8 @@ object LlmData {
     * Oracle twin: `greatest(16, count(*) // 125)` (see
     * [[duckIvfChainKN]]). */
   private[operators] def corpusK(s: SparkSession, dir: String): Int =
-    stampedValue(corpusKMemo, s, dir, dir)(
+    SessionMemo.value(s, "corpus-k", dir)(
       math.max(16L, t(s, dir, "embeddings").count() / 125L).toInt)
-
-  /** Keyed DRIVER-VALUE memo with the corpus generation stamp INSIDE
-    * the value (ADVICE r9, generalized): serves the dials (corpusK /
-    * corpusSignBits), the trained quantizers (centroids, PQ codebooks)
-    * and the decontamination bloom — every collected artifact whose
-    * oracle twin replays its derivation against the LIVE file, so a
-    * stale value after an in-session regeneration would be an ANSWER
-    * change, not a performance bug. A new generation replaces the
-    * entry (no per-stamp accumulation); a concurrent duplicate
-    * derivation is wasted-but-identical work, same as the plain
-    * getOrElseUpdate these memos used before. */
-  private[operators] def stampedValue[K, V](
-      reg: SessionRegistry[TrieMap[K, (String, V)]],
-      s: SparkSession, key: K, dir: String)(derive: => V): V = {
-    val m = reg.acquire(s)(TrieMap.empty[K, (String, V)])
-    val stamp = dirStamp(s, dir)
-    m.get(key) match {
-      case Some((st, v)) if st == stamp => v
-      case _ =>
-        val v = derive
-        m.put(key, (stamp, v))
-        v
-    }
-  }
-
-  private lazy val corpusKMemo = new SessionRegistry[TrieMap[String, (String, Int)]]
-  private lazy val centroidSumsMemo = new SessionRegistry[TrieMap[String,
-    (String, (Vector[Int], Map[Int, Array[Long]], Map[Int, Double]))]]
-  private lazy val bpePicksMemo = new SessionRegistry[TrieMap[String,
-    (String, (Vector[(String, String, Long)], Vector[Long]))]]
 
   private[operators] def trainedCentroids(
       s: SparkSession, dir: String, K: Int = 16): Seq[(Long, IndexedSeq[Float])] =
@@ -292,12 +261,8 @@ object LlmData {
     // jobs per session serves all of them, and the generation stamp
     // re-trains after an in-session regeneration (the oracle replays
     // training from the live file — a stale quantizer would be an
-    // answer change). No persisted resource to leak: a concurrent
-    // duplicate training is wasted-but-identical work.
-    stampedValue(centsMemo, s, (dir, K), dir)(trainCentroids(s, dir, K))
-
-  private lazy val centsMemo = new SessionRegistry[
-    TrieMap[(String, Int), (String, Seq[(Long, IndexedSeq[Float])])]]
+    // answer change)
+    SessionMemo.value(s, s"cents-$K", dir)(trainCentroids(s, dir, K))
 
   private def trainCentroids(
       s: SparkSession, dir: String, K: Int): Seq[(Long, IndexedSeq[Float])] =
@@ -471,10 +436,8 @@ object LlmData {
       // memoized like the literal path's trainedCentroids: one
       // two-round Lloyd's per (session, corpus, K), and the persisted
       // centroid frame has a release path (clearMemo) instead of
-      // pinning a new copy per call. The EAGER variant: training runs
-      // persist+count jobs, which must not execute while holding the
-      // session-wide memo lock (see memoizedEager)
-      assignDf(e, memoizedEager(s, s"ivf-centsdf-$K", dir)(trainCentroidsDf(e, K)))
+      // pinning a new copy per call
+      assignDf(e, SessionMemo.frame(s, s"ivf-centsdf-$K", dir)(trainCentroidsDf(e, K)))
   }
 
   /** IVF probe: trained quantizer, map-side assignment, nprobe=2. */
@@ -502,6 +465,11 @@ object LlmData {
       .limit(k)
   }
 
+  /** Shared naming so audits exercise the shipped derivation instead
+    * of re-copying the formula (the Skew.saltColumn rule). */
+  private[graft] def ivfIndexTableName(dir: String): String =
+    "graft_ivf_asg_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+
   /** Index-build/query split for IVF (the "index once, query many"
     * form a static 100 TB corpus wants): the trained assignment
     * (vec_id, embedding, cid) is persisted ONCE per (session, corpus)
@@ -516,15 +484,8 @@ object LlmData {
     *     list-wise compaction — which group/join on cid with zero
     *     Exchange because the scan itself reports
     *     hashpartitioning(cid). */
-  private[operators] lazy val ivfIndexMemo = new SessionRegistry[TrieMap[String, (String, String)]]
-
-  /** Shared naming so audits exercise the shipped derivation instead
-    * of re-copying the formula (the Skew.saltColumn rule). */
-  private[graft] def ivfIndexTableName(dir: String): String =
-    "graft_ivf_asg_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-
   private def ivfIndexTable(s: SparkSession, dir: String): String =
-    tableOnce(ivfIndexMemo, s, dir)({
+    SessionMemo.value(s, "ivf-asg", dir)({
         val tbl = ivfIndexTableName(dir)
         val scored = ivfScored(trainedCentroids(s, dir)) _
         val asg = t(s, dir, "embeddings")
@@ -563,13 +524,11 @@ object LlmData {
     * what incremental maintenance assigns new batches against (retrain
     * is a deliberate, audited event — x74 measures the recall drift
     * that decides it — never an implicit side effect of an append).
-    * Tagged key in the same registry as the full-corpus quantizer. */
+    * Memoized beside the full-corpus quantizer. */
   private[graft] def trainedCentroidsHist(
       s: SparkSession, dir: String, K: Int = 16): Seq[(Long, IndexedSeq[Float])] =
-    stampedValue(centsMemo, s, (dir + "#hist", K), dir)(
+    SessionMemo.value(s, s"cents-hist-$K", dir)(
       trainCentroidsOn(t(s, dir, "embeddings").filter(histVec), K))
-
-  private[operators] lazy val incIvfMemo = new SessionRegistry[TrieMap[String, (String, String)]]
 
   private[graft] def incIvfIndexTableName(dir: String): String =
     "graft_ivf_inc_" + dir.replaceAll("[^A-Za-z0-9]", "_")
@@ -613,7 +572,7 @@ object LlmData {
     * to the untouched base files, so the probe's zero-Exchange plan
     * survives the append (PlanAuditSpec). */
   private def incIvfIndexTable(s: SparkSession, dir: String): String =
-    tableOnce(incIvfMemo, s, dir) {
+    SessionMemo.value(s, "ivf-inc", dir) {
       val tbl = incIvfIndexTableName(dir)
       ivfWriteBaseIndex(s, dir, tbl)
       graft.io.Bucketing.appendBucketed(
@@ -628,7 +587,7 @@ object LlmData {
     * + top-k (9 recomputes of the one leg all arms share). 5 rows;
     * released by clearMemo with the other staged artifacts. */
   private[operators] def exactTop5Ids(s: SparkSession, dir: String): DataFrame =
-    memoized(s, "ann-exact5", dir) {
+    SessionMemo.frame(s, "ann-exact5", dir) {
       annExactTopK(s, dir, 5).select(col("vec_id")).persist()
     }
 
@@ -719,7 +678,7 @@ object LlmData {
       .agg(count(lit(1)).as("tf"))
 
   private[graft] def bm25Staged(s: SparkSession, dir: String): DataFrame =
-    memoized(s, "x104-tf", dir) {
+    SessionMemo.frame(s, "x104-tf", dir) {
       // doc_id 0 is the query-anchor row of the CORPUS table; excluding
       // it is a corpus-staging concern, so the filter lives here, not in
       // bm25Tf — serve-gate batches score every arriving doc, id 0
@@ -932,197 +891,6 @@ object LlmData {
        |WHERE asg.vec_id <> 0
        |ORDER BY cos DESC, asg.vec_id LIMIT $k""".stripMargin
 
-  /** Per-session registry with stopped-session purge on every access —
-    * a cached value may strongly reference its session, so weak keys
-    * alone would never evict (the value pins the key). ONE lifecycle
-    * implementation shared by `memo` (persisted DataFrames) and
-    * `centsMemo` (trained centroids): a purge-condition fix lands in
-    * both or neither. */
-  private[operators] final class SessionRegistry[V] {
-    private val reg = new java.util.HashMap[SparkSession, V]
-    def acquire(s: SparkSession)(mk: => V): V = reg.synchronized {
-      reg.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
-      reg.computeIfAbsent(s, _ => mk)
-    }
-    /** Register-or-read the CURRENT entry (see memoized's race note). */
-    def registerOrGet(s: SparkSession, v: V): V = reg.synchronized {
-      reg.putIfAbsent(s, v)
-      reg.get(s)
-    }
-    def remove(s: SparkSession): Option[V] = reg.synchronized(Option(reg.remove(s)))
-    /** Whether this registry holds an entry for `s` — the bench's
-      * memo-dependence probe ([[LlmData.memoPopulated]]). */
-    def has(s: SparkSession): Boolean = reg.synchronized(reg.containsKey(s))
-  }
-
-  /** Signature tables are persisted and re-read by several join sides;
-    * memoize the built DataFrame per (session, query, sfDir) so
-    * repeated invocations in one session reuse the same cache entry
-    * instead of stacking a new persisted copy per call.
-    *
-    * Every entry carries the corpus GENERATION STAMP of its sfDir
-    * (mtime+length of the three corpus files a frame memo can derive
-    * from — so a regenerated corpus re-derives instead of drifting
-    * against the oracle's live reads, ADVICE r9):
-    * an in-session testdata regeneration re-derives the frame instead
-    * of serving the stale persisted corpus while the oracle reads the
-    * new file, and replacing evicts+unpersists the old generation, so
-    * the map stays bounded at one entry per (key, dir) however many
-    * regenerations a session spans. */
-  private val memo =
-    new SessionRegistry[TrieMap[(String, String), (String, DataFrame)]]
-
-  /** Test hook: this session's frame-memo key set. Pins the
-    * bounded-growth contract (one entry per (key, dir); a new
-    * generation REPLACES — and unpersists — the old, never
-    * accumulates). */
-  private[operators] def frameMemoKeys(s: SparkSession): Set[(String, String)] =
-    memo.acquire(s)(TrieMap.empty[(String, String), (String, DataFrame)])
-      .keySet.toSet
-
-  /** One combined stamp for the corpus files a memoized frame can
-    * derive from. Statting all three over-invalidates a single-table
-    * regeneration slightly — but regenerations rewrite the whole dir
-    * in practice, and three metadata stats are noise against the
-    * persisted build they guard. Per-file fallback to the table name
-    * keeps a missing file (different SF layouts) from failing the
-    * stamp itself. */
-  private def dirStamp(s: SparkSession, dir: String): String =
-    Seq("documents", "embeddings", "lineitem", "events").map { tbl =>
-      try graft.sources.Tables.fileStamp(s, s"$dir/$tbl.parquet")
-      catch { case scala.util.control.NonFatal(_) => tbl }
-    }.mkString("|")
-
-  // package-private: Relational's iterative q31 shares the same
-  // persisted-frame lifecycle (built once, released by clearMemo)
-  private[operators] def memoized(s: SparkSession, key: String, dir: String)
-      (build: => DataFrame): DataFrame = {
-    val stamp = dirStamp(s, dir)
-    var out: DataFrame = null
-    while (out == null) {
-      val perSession = memo.acquire(s)(
-        TrieMap.empty[(String, String), (String, DataFrame)])
-      // compute-if-absent under the per-session lock: TrieMap's bare
-      // getOrElseUpdate can run `build` (which persists) twice under
-      // concurrent first access, leaking one never-unpersisted copy
-      perSession.synchronized {
-        // build only into the map that is CURRENTLY registered: a
-        // concurrent clearMemo may have removed this map between the
-        // fetch and this lock, and another thread may already have
-        // registered a FRESH map in its place — re-registering ours
-        // with a bare putIfAbsent would then silently lose, and our
-        // build would land in an orphaned map no future clearMemo can
-        // reach (one persisted copy leaked per race). Register-or-read
-        // the current entry and retry the fetch when it isn't ours.
-        // (Lock order is safe: clearMemo never waits on a map lock
-        // while holding the registry lock.)
-        if (memo.registerOrGet(s, perSession) eq perSession)
-          perSession.get((key, dir)) match {
-            case Some((st, df)) if st == stamp => out = df
-            case stale =>
-              stale.foreach(_._2.unpersist(blocking = false))
-              val df = build
-              perSession.put((key, dir), (stamp, df))
-              out = df
-          }
-      }
-    }
-    out
-  }
-
-  /** [[memoized]] for builds that run EAGER Spark jobs (the
-    * distributed Lloyd's trains with persist+count rounds): the other
-    * builds only CONSTRUCT a lazy frame under the per-map lock —
-    * milliseconds — but holding that session-wide lock across
-    * multi-job training would head-of-line-block every concurrent
-    * memoized user for the full training duration. So: peek under the
-    * lock, build OUTSIDE any lock, insert via the same
-    * register-or-read loop, and release our speculative copy if a
-    * concurrent builder won the insert. Costs at most one redundant
-    * training per concurrent first access — never a stall.
-    *
-    * The lost-race release is NOT a blind unpersist: Spark's cache is
-    * keyed by CANONICALIZED plan, and two speculative builds of the
-    * same deterministic training produce the same canonical plan — so
-    * the loser's persist() was a no-op against the winner's entry and
-    * an unconditional unpersist would silently EVICT the one shared
-    * entry the memo now hands out. Unpersist only a semantically
-    * DIFFERENT loser (can't happen for deterministic builds, guarded
-    * anyway); a same-plan loser holds no cache resource of its own. */
-  private[operators] def memoizedEager(s: SparkSession, key: String, dir: String)
-      (build: => DataFrame): DataFrame = {
-    val stamp = dirStamp(s, dir)
-    var out: DataFrame = null
-    var built: DataFrame = null
-    while (out == null) {
-      val perSession = memo.acquire(s)(
-        TrieMap.empty[(String, String), (String, DataFrame)])
-      val peeked = perSession.synchronized {
-        if (memo.registerOrGet(s, perSession) eq perSession)
-          Some(perSession.get((key, dir)))
-        else None // lost the map to a concurrent clear — refetch
-      }
-      peeked match {
-        case Some(Some((st, df))) if st == stamp => out = df
-        case Some(_) => // absent, or a stale generation to replace
-          if (built == null) built = build // eager work, no lock held
-          perSession.synchronized {
-            // same currently-registered check as memoized: never
-            // insert into an orphaned map a clearMemo can't reach
-            if (memo.registerOrGet(s, perSession) eq perSession)
-              perSession.get((key, dir)) match {
-                case Some((st, df)) if st == stamp => out = df // lost the insert race
-                case stale =>
-                  stale.foreach(_._2.unpersist(blocking = false))
-                  perSession.put((key, dir), (stamp, built))
-                  out = built
-              }
-          }
-        case None => ()
-      }
-    }
-    if ((built != null) && !(out eq built) && !out.sameSemantics(built))
-      built.unpersist(blocking = false)
-    out
-  }
-
-  /** Compute-if-absent under the map's lock for the TABLE-NAME memos
-    * (bucketed-join layout, IVF assignment, PQ codes, the capstone's
-    * staging root): the builders run side-effecting DDL
-    * (writeBucketed / saveAsTable Overwrite) against the
-    * non-transactional catalog, so a bare TrieMap getOrElseUpdate
-    * racing two first-users could run two concurrent Overwrites of
-    * the same table. Same register-or-read loop as [[memoized]];
-    * losing a map to a concurrent clear costs only an idempotent
-    * re-write here (no persisted frame to leak).
-    *
-    * Entries carry the same corpus generation stamp as the frame
-    * memos (every key here IS an sfDir, optionally suffixed `#inc`):
-    * an in-session testdata regeneration re-runs the builder — an
-    * idempotent Overwrite of the same table name (or a fresh staging
-    * root) — instead of serving an index built over the retired
-    * corpus. */
-  private[operators] def tableOnce(
-      reg: SessionRegistry[TrieMap[String, (String, String)]],
-      s: SparkSession, key: String)(build: => String): String = {
-    val stamp = dirStamp(s, key.takeWhile(_ != '#'))
-    var out: String = null
-    while (out == null) {
-      val m = reg.acquire(s)(TrieMap.empty[String, (String, String)])
-      m.synchronized {
-        if (reg.registerOrGet(s, m) eq m)
-          m.get(key) match {
-            case Some((st, t)) if st == stamp => out = t
-            case _ =>
-              val t = build
-              m.put(key, (stamp, t))
-              out = t
-          }
-      }
-    }
-    out
-  }
-
   /** Bench's explicit "staging" warmup (r16 verdict #1): build and
     * materialize every SHARED staged family once — the token staging
     * ([[tokStaged]]), the shingle/decontam sides + bloom
@@ -1152,56 +920,23 @@ object LlmData {
     ()
   }
 
-  /** Whether ANY memo registry holds state for `s` — sampled by Bench
-    * right after a retry run (memo cleared going in, so a positive
-    * probe means the retry REBUILT family staging inside its timed
-    * window). The r18 verdict's attribution hole: a retry of a
-    * memoized query re-pays staging the steady-state pass amortizes,
-    * so its number is cold-shaped, not warm-shaped — the
+  /** Whether the session memo holds any artifact [[clearMemo]] would
+    * release — sampled by Bench right after a retry run (memo cleared
+    * going in, so a positive probe means the retry REBUILT family
+    * staging inside its timed window). The r18 verdict's attribution
+    * hole: a retry of a memoized query re-pays staging the steady-state
+    * pass amortizes, so its number is cold-shaped, not warm-shaped — the
     * `retry_memo_cold` column lets the artifact reader compare it
     * against the right baseline instead of misreading it as a
-    * reproduced residual. Covers exactly the registries
-    * [[clearMemo]] releases. */
-  def memoPopulated(s: SparkSession): Boolean =
-    memo.has(s) || centsMemo.has(s) || corpusKMemo.has(s) ||
-      centroidSumsMemo.has(s) || bpePicksMemo.has(s) || bloomMemo.has(s) ||
-      ivfIndexMemo.has(s) || dedupIdxMemo.has(s) || incIvfMemo.has(s) ||
-      Curation.pqMemoPopulated(s) || Relational.bucketMemoPopulated(s)
+    * reproduced residual. */
+  def memoPopulated(s: SparkSession): Boolean = SessionMemo.populated(s)
 
-  /** Unpersist and drop every DataFrame memoized for session `s`.
-    * Bench calls this between queries so one query's persisted
-    * signature table can't pressure the next query's measurement; any
-    * long-lived session embedding these operators can use it as the
-    * explicit cache-release hook. */
-  def clearMemo(s: SparkSession): Unit = {
-    // the centroid memo holds no cluster resources — dropping the
-    // entry is enough (Bench clears per query so cold timings keep
-    // paying for their own training); the corpus-count memo rides the
-    // same discipline (corpusK is training metadata like centroids)
-    centsMemo.remove(s)
-    corpusKMemo.remove(s)
-    centroidSumsMemo.remove(s)
-    bpePicksMemo.remove(s)
-    bloomMemo.remove(s)
-    // Curation's PQ codebook + index-table memos share this lifecycle
-    // (one release hook for the whole operator surface)
-    Curation.clearPqMemo(s)
-    Relational.clearBucketMemo(s)
-    ivfIndexMemo.remove(s)
-    dedupIdxMemo.remove(s)
-    incIvfMemo.remove(s)
-    val perSession = memo.remove(s)
-    // take the same per-map lock memoized() builds under: a build in
-    // flight during the remove would otherwise insert its persisted
-    // frame into this now-orphaned map after the values snapshot —
-    // leaked for the session's lifetime
-    perSession.foreach { m =>
-      m.synchronized {
-        m.values.foreach(_._2.unpersist(blocking = false))
-        m.clear()
-      }
-    }
-  }
+  /** Release every staged artifact memoized for session `s`
+    * ([[SessionMemo.clear]]). Bench calls this between queries so one
+    * query's persisted signature table can't pressure the next query's
+    * measurement; any long-lived session embedding these operators can
+    * use it as the explicit cache-release hook. */
+  def clearMemo(s: SparkSession): Unit = SessionMemo.clear(s)
 
   /** (doc_id, sh): distinct 3-shingle sets for every document with >= 3
     * tokens. Tokens are staged as their own column so the split() runs
@@ -1245,7 +980,7 @@ object LlmData {
     * 4-column projection) so the cached partitioning carries the
     * parallelism to every consumer. */
   private[operators] def tokStaged(s: SparkSession, dir: String): DataFrame =
-    memoized(s, "tok-corpus", dir) {
+    SessionMemo.frame(s, "tok-corpus", dir) {
       val base = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
       // explicit partition COUNT (r19): a bare repartition(col) is
@@ -1268,9 +1003,11 @@ object LlmData {
       // cap is the correct ceiling at any real volume.
       val spread =
         if (base.inputFiles.length <= 1) {
+          // through the session's Hadoop FileSystem, so s3a:// and
+          // hdfs:// corpora size by their bytes like file: ones do
           val bytes = base.inputFiles.headOption.map { f =>
-            try new java.io.File(new java.net.URI(f)).length()
-            catch { case _: Exception => 0L }
+            val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
+            p.getFileSystem(s.sessionState.newHadoopConf()).getFileStatus(p).getLen
           }.getOrElse(0L)
           val sized = math.max(1L, math.min(
             s.sessionState.conf.numShufflePartitions.toLong,
@@ -1294,7 +1031,7 @@ object LlmData {
     // reconstruction — the plan-audit sweeps build every registered
     // query) — memoize the persisted set like the other small derived
     // artifacts (minhashHashed / trained-quantizer pattern)
-    val bench = memoized(s, "x79-bench", dir) {
+    val bench = SessionMemo.frame(s, "x79-bench", dir) {
       sh.filter(col("doc_id") % 50 === 0)
         .select(explode(col("sh")).as("s")).distinct()
         .persist()
@@ -1377,27 +1114,20 @@ object LlmData {
       .head().getAs[Array[Byte]](0)
 
   /** [[decontamBloom]] over the testdata benchmark slice, memoized per
-    * (session, dir) like the other collected artifacts (centsMemo /
-    * corpusK): the bloom aggregate is an eager job, and x79 is
-    * reconstructed by every registry-wide sweep (PlanAuditSpec's
+    * (session, dir) like the other collected artifacts (trained
+    * centroids / corpusK): the bloom aggregate is an eager job, and x79
+    * is reconstructed by every registry-wide sweep (PlanAuditSpec's
     * no-cartesian / no-unpartitioned-window passes, Verify, the plan
-    * test) — without the memo each sweep re-runs the job. Duplicate
-    * concurrent builds waste work but return identical bytes, so plain
-    * getOrElseUpdate is safe (no persisted resource to leak); Option
-    * wraps the empty-benchmark null. */
+    * test) — without the memo each sweep re-runs the job. */
   private[operators] def decontamBloomFor(s: SparkSession, dir: String): Array[Byte] =
-    stampedValue(bloomMemo, s, dir, dir)(
-      Option(decontamBloom(decontamSides(s, dir)._1))).orNull
-
-  private lazy val bloomMemo =
-    new SessionRegistry[TrieMap[String, (String, Option[Array[Byte]])]]
+    SessionMemo.value(s, "decontam-bloom", dir)(decontamBloom(decontamSides(s, dir)._1))
 
   /** Memoized (doc_id, sh, hs) minhash input table — shingle sets plus
     * their portable md5 base hashes — shared by x22 (Jaccard pairs) and
     * x58 (containment pairs) so both read ONE persisted signature
     * table. */
   private[operators] def minhashHashed(s: SparkSession, dir: String): DataFrame =
-    memoized(s, "x22-hashes", dir) {
+    SessionMemo.frame(s, "x22-hashes", dir) {
       shingled(s, dir)
         .withColumn("hs", Text.md5LongsNative(col("sh"), Text.MinhashMod))
         .persist()
@@ -1490,7 +1220,7 @@ object LlmData {
     * each consumer re-runs the md5+explode+distinct pipeline. Same
     * lifecycle as [[minhashHashed]] (released by clearMemo). */
   private[operators] def sourceFps(s: SparkSession, dir: String): DataFrame =
-    memoized(s, "x85-fps", dir) {
+    SessionMemo.frame(s, "x85-fps", dir) {
       sourceHashRows(s, dir).distinct().persist()
     }
 
@@ -1525,10 +1255,8 @@ object LlmData {
     (6 to 62).find(b => (1L << b) >= (4L * n + 124L) / 125L).getOrElse(62)
 
   private[operators] def corpusSignBits(s: SparkSession, dir: String): Int =
-    stampedValue(signBitsMemo, s, dir, dir)(
+    SessionMemo.value(s, "sign-bits", dir)(
       signBitsFor(t(s, dir, "embeddings").count()))
-
-  private lazy val signBitsMemo = new SessionRegistry[TrieMap[String, (String, Int)]]
 
   /** DuckDB twin of [[signBitsFor]] over the embeddings count: defines
     * `sb(bits)`. */
@@ -1586,7 +1314,7 @@ object LlmData {
     * vote kernel runs once per document, spread across cores by the
     * repartition inside shingled(). */
   private[operators] def simhashPairs(s: SparkSession, dir: String): DataFrame = {
-    val f = memoized(s, "x23-simhash", dir) {
+    val f = SessionMemo.frame(s, "x23-simhash", dir) {
       shingled(s, dir).select(col("doc_id"),
         Text.simhashNative(Text.md5LongsNative(col("sh"), 0L), 60).as("fp"))
         .persist()
@@ -1614,7 +1342,7 @@ object LlmData {
     * attribution honest — within a query (and its warm rerun) the loop
     * runs once. */
   private[operators] def simhashComponents(s: SparkSession, dir: String): DataFrame =
-    memoized(s, "simhash-components", dir) {
+    SessionMemo.frame(s, "simhash-components", dir) {
       Components.connectedComponentsAlternating(
         simhashPairs(s, dir), "doc_a", "doc_b").persist()
     }
@@ -1677,9 +1405,6 @@ object LlmData {
         pround((lit(1.0) - ratio) * least(nTok.cast("double"), lit(50.0)) / 50.0, 6).as("quality"))
         ++ extra: _*)
   }
-
-  private def qualityFrame(s: SparkSession, dir: String): DataFrame =
-    qualityOf(t(s, dir, "documents"))
 
   /** Recursive-CTE replay of the component closure over the simhash
     * candidate graph (requires [[duckSimhashCand]] under WITH
@@ -1807,7 +1532,7 @@ object LlmData {
     // generation pays them — and deriving the totals in the same
     // eager walk is what lets each spent generation release before
     // the next one builds
-    val (picks, totals) = stampedValue(bpePicksMemo, s, dir, dir) {
+    val (picks, totals) = SessionMemo.value(s, "x94-picks", dir) {
       var st = base.persist()
       var ps = Vector.empty[(String, String, Long)]
       var ts = Vector.empty[Long]
@@ -1826,7 +1551,7 @@ object LlmData {
         val prev = st
         // round 3's frame goes through the frame memo (x114 reads it
         // as data); intermediates persist locally and release below
-        st = if (r == 3) memoized(s, "x94-st3", dir)(mergeRound(prev, a, b).persist())
+        st = if (r == 3) SessionMemo.frame(s, "x94-st3", dir)(mergeRound(prev, a, b).persist())
              else mergeRound(prev, a, b).persist()
         // one action materializes generation r while r−1 is still
         // cached, then r−1 releases — never more than 2 live
@@ -1842,7 +1567,7 @@ object LlmData {
     // that outlived the stamped picks (impossible today — clearMemo
     // drops both — but cheap to stay correct about), the rebuild is a
     // pure map-side replace chain from the stamped picks
-    val last = memoized(s, "x94-st3", dir) {
+    val last = SessionMemo.frame(s, "x94-st3", dir) {
       picks.foldLeft(base) { case (st, (a, b, _)) => mergeRound(st, a, b) }
         .persist()
     }
@@ -2291,7 +2016,7 @@ object LlmData {
         // Lloyd's (join-based, no driver collect) — the two are
         // bit-equal, so K growing with the corpus switches plans, not
         // answers
-        val asg = memoized(s, "x48-asg", dir) {
+        val asg = SessionMemo.frame(s, "x48-asg", dir) {
           assignedByTrainedQuantizer(s, dir, corpusK(s, dir)).persist()
         }
         val sizes = asg.groupBy("cid").agg(count(lit(1)).as("n_members"))
@@ -2994,7 +2719,7 @@ object LlmData {
         // the per-position md5 stage is the dominant cost and feeds
         // BOTH the cross-doc dup set and the per-doc count — persist
         // it once (the in-query analog of a materialized gram table)
-        val g = memoized(s, "x49-grams", dir) {
+        val g = SessionMemo.frame(s, "x49-grams", dir) {
           // native sliding-gram kernel (r19 — Text.gramMd5Native): same
           // md5-hex values as the HOF transform/sequence/slice chain
           // (ScrubKernelSpec pins byte equality) without its per-
@@ -3241,7 +2966,7 @@ object LlmData {
         def bucket(tok: Column, j: Int): Column = pmod(
           conv(substring(md5(concat(lit(j.toString), tok)), 1, 15), 16, 10)
             .cast("long"), lit(w))
-        val counts = memoized(s, "x56-counts", dir) {
+        val counts = SessionMemo.frame(s, "x56-counts", dir) {
           t(s, dir, "documents")
             .select(explode(Text.tokens(col("text"))).as("tok"))
             .filter(length(col("tok")) > 0)
@@ -3511,7 +3236,7 @@ object LlmData {
         // the closing probe) — memoize+persist so the band self-join
         // runs once, the same signature-table discipline as
         // minhashHashed (pairs are signature-scale, never payloads)
-        val edges = memoized(s, "x62-cand-edges", dir) {
+        val edges = SessionMemo.frame(s, "x62-cand-edges", dir) {
           minhashCandPairs(minhashHashed(s, dir)).persist()
         }
         val deg = edges.select(col("doc_a").as("node"))
@@ -3529,7 +3254,7 @@ object LlmData {
         // (r7 driver artifact: warm 6.08 s > cold 5.70 s). At |V|
         // beyond broadcast capacity, drop the hint and pre-partition
         // the edge list by the join key instead.
-        val oriented = memoized(s, "x62-oriented", dir) {
+        val oriented = SessionMemo.frame(s, "x62-oriented", dir) {
           edges
             .join(broadcast(deg.select(col("node").as("doc_a"), col("deg").as("da"))), "doc_a")
             .join(broadcast(deg.select(col("node").as("doc_b"), col("deg").as("db"))), "doc_b")
@@ -4604,7 +4329,7 @@ object LlmData {
     // spec.
     "x95_scrub_fixpoint" -> Q(
       (s, dir) => {
-        memoized(s, "x95-rows", dir) {
+        SessionMemo.frame(s, "x95-rows", dir) {
           val (bench, _) = decontamSides(s, dir)
           // round 0 rides the family's ONE token staging (tokStaged);
           // the %50 corpus cut is a filter over the cached arrays
@@ -5255,7 +4980,7 @@ object LlmData {
     // = Σtokens div 10, one broadcast scalar row.
     "x107_token_budget_select" -> Q(
       (s, dir) => {
-        val scp = memoized(s, "x107-score", dir) {
+        val scp = SessionMemo.frame(s, "x107-score", dir) {
           dsirScore(t(s, dir, "documents"), dsirRatioTable(s, dir))
             .select("doc_id", "lang", "n_tokens", "score_milli")
             .persist()
@@ -5439,7 +5164,7 @@ object LlmData {
         // quantizers use — warm invocations skip the corpus aggregate
         // entirely and pay only the map-side scoring scan
         val (labels, smByLabel, ncByLabel) =
-          stampedValue(centroidSumsMemo, s, dir, dir) {
+          SessionMemo.value(s, "x116-centroid-sums", dir) {
             val ex = embMicro(t(s, dir, "embeddings"))
             val sums = ex.groupBy(col("label").as("clabel"), col("dim"))
               .agg(sum(col("vm")).as("sm"))
@@ -5601,7 +5326,7 @@ object LlmData {
     * exactly the left-join-and-fill the oracle's tgt CTE replays —
     * with one fewer corpus pass). */
   private[graft] def dsirRatioTable(s: SparkSession, dir: String): DataFrame =
-    memoized(s, "x98-ratio", dir) {
+    SessionMemo.frame(s, "x98-ratio", dir) {
       dsirTokenBuckets(t(s, dir, "documents"))
         .groupBy("b")
         .agg(count(lit(1)).as("cr"),
@@ -5681,10 +5406,7 @@ object LlmData {
        |FROM documents d JOIN fl USING (doc_id) WHERE is_batch
        |ORDER BY d.doc_id""".stripMargin
 
-  private lazy val dedupIdxMemo =
-    new SessionRegistry[TrieMap[String, (String, String)]]
-
-  /** Build-once (session × corpus generation, via tableOnce's
+  /** Build-once (session × corpus generation, via the session memo's
     * dir-stamp) persisted dedup index — see the x101 scaladoc for the
     * three tables' roles. 8 buckets matches the other index tables at
     * spec SF; production sizes buckets so one bucket's band rows fit a
@@ -5706,7 +5428,7 @@ object LlmData {
   private def buildDedupIndex(s: SparkSession, dir: String, suffix: String,
       corpusPred: Column): (String, String, String) = {
     val base = "graft_dedup_" + dir.replaceAll("[^A-Za-z0-9]", "_") + suffix
-    val fpT = tableOnce(dedupIdxMemo, s, dir + "#fp" + suffix)({
+    val fpT = SessionMemo.value(s, "dedup-fp" + suffix, dir)({
       graft.io.Bucketing.writeBucketed(
         t(s, dir, "documents").filter(corpusPred)
           .select(md5(col("text")).as("fp")).distinct(),
@@ -5714,12 +5436,12 @@ object LlmData {
       base + "_fp"
     })
     val corpusHashed = minhashHashed(s, dir).filter(corpusPred)
-    val bandT = tableOnce(dedupIdxMemo, s, dir + "#band" + suffix)({
+    val bandT = SessionMemo.value(s, "dedup-band" + suffix, dir)({
       graft.io.Bucketing.writeBucketed(
         bandRows(corpusHashed), base + "_band", "bk", 8, sorted = false)
       base + "_band"
     })
-    val sigT = tableOnce(dedupIdxMemo, s, dir + "#sig" + suffix)({
+    val sigT = SessionMemo.value(s, "dedup-sig" + suffix, dir)({
       graft.io.Bucketing.writeBucketed(
         corpusHashed.select("doc_id", "sh"), base + "_sig", "doc_id", 8,
         sorted = false)

@@ -6,7 +6,6 @@ import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import scala.collection.concurrent.TrieMap
 
 /** Relational core — the reference's full analytics/monitoring SQL
   * surface (SURVEY.md §2.2–§2.8, mapped onto the testdata star schema
@@ -637,7 +636,7 @@ object Relational {
     "q47_bucketed_join" -> Q(
       (s, dir) => {
         val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        LlmData.tableOnce(bucketMemo, s, dir)({
+        SessionMemo.value(s, "layout-bucketed", dir)({
             graft.io.Bucketing.writeBucketed(
               t(s, dir, "orders").select("o_orderkey", "o_orderdate"),
               s"graft_b_orders_$tag", "o_orderkey", buckets = 16)
@@ -716,7 +715,7 @@ object Relational {
     // byte-faithful (sum_text_len covers the text payload itself).
     "q50_pages_source" -> Q(
       (s, dir) => {
-        val staged = LlmData.tableOnce(bucketMemo, s, dir + "#pages")(
+        val staged = SessionMemo.value(s, "layout-pages", dir)(
           graft.sources.PageSource.stageDocuments(s, dir))
         s.read.format("graft-pages")
           .option("path", staged)
@@ -803,7 +802,7 @@ object Relational {
     // marker; the registered query pins end-to-end semantics.
     "q52_pages_limit_pushdown" -> Q(
       (s, dir) => {
-        val staged = LlmData.tableOnce(bucketMemo, s, dir + "#pages")(
+        val staged = SessionMemo.value(s, "layout-pages", dir)(
           graft.sources.PageSource.stageDocuments(s, dir))
         s.read.format("graft-pages")
           .option("path", staged)
@@ -833,7 +832,7 @@ object Relational {
     // both the fast path and the refusal.
     "q53_pages_count_pushdown" -> Q(
       (s, dir) => {
-        val staged = LlmData.tableOnce(bucketMemo, s, dir + "#pages")(
+        val staged = SessionMemo.value(s, "layout-pages", dir)(
           graft.sources.PageSource.stageDocuments(s, dir))
         s.read.format("graft-pages")
           .option("path", staged)
@@ -1127,7 +1126,7 @@ object Relational {
     // reference's load-then-archive contract.
     "q60_keyed_write_roundtrip" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#keyedw")({
+        val path = SessionMemo.value(s, "layout-keyedw", dir)({
           val out = graft.io.TempDirs.scratch("graft_keyedw_") + "/bylang"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents").selectExpr("lang", "doc_id", "n_chars"),
@@ -1251,7 +1250,7 @@ object Relational {
     // fails loudly at plan time (KeyedSnapshotSpec).
     "q63_time_travel" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#ttravel")({
+        val path = SessionMemo.value(s, "layout-ttravel", dir)({
           val out = graft.io.TempDirs.scratch("graft_tt_") + "/bylang"
           val docs = t(s, dir, "documents").selectExpr("lang", "doc_id", "n_chars")
           graft.sources.KeyedSource.stageKeyed(s, docs, out, "lang",
@@ -1298,7 +1297,7 @@ object Relational {
     // DELETE FROM, SELECT.
     "q64_metadata_delete" -> Q(
       (s, dir) => {
-        val tbl = LlmData.tableOnce(bucketMemo, s, dir + "#keydel")({
+        val tbl = SessionMemo.value(s, "layout-keydel", dir)({
           val out = graft.io.TempDirs.scratch("graft_del_") + "/bykb"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents").selectExpr("doc_id % 16 AS kb", "doc_id", "n_chars"),
@@ -1337,7 +1336,7 @@ object Relational {
     // snapshot operations themselves.
     "q65_snapshot_audit" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#snapaudit")({
+        val path = SessionMemo.value(s, "layout-snapaudit", dir)({
           val out = graft.io.TempDirs.scratch("graft_snapaud_") + "/bykb"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents").selectExpr("doc_id % 16 AS kb", "doc_id", "n_chars"),
@@ -1390,7 +1389,7 @@ object Relational {
     // zero data files opened.
     "q66_merge_upsert" -> Q(
       (s, dir) => {
-        val tbl = LlmData.tableOnce(bucketMemo, s, dir + "#merge")({
+        val tbl = SessionMemo.value(s, "layout-merge", dir)({
           val out = graft.io.TempDirs.scratch("graft_merge_") + "/bykb"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents").selectExpr("doc_id % 16 AS kb", "doc_id", "n_chars"),
@@ -1451,7 +1450,7 @@ object Relational {
     // head and aggregates per (change_type, bucket).
     "q67_incremental_changes" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#changes")({
+        val path = SessionMemo.value(s, "layout-changes", dir)({
           val out = graft.io.TempDirs.scratch("graft_chg_") + "/bykb"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents").selectExpr("doc_id % 16 AS kb", "doc_id", "n_chars"),
@@ -1502,7 +1501,7 @@ object Relational {
     // count/sum/max with zero data files opened, same as q64/q66.
     "q68_append_compact" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#compact")({
+        val path = SessionMemo.value(s, "layout-compact", dir)({
           val out = graft.io.TempDirs.scratch("graft_opt_") + "/bykb"
           val docs = t(s, dir, "documents")
           graft.sources.KeyedSource.stageKeyed(s,
@@ -1562,7 +1561,7 @@ object Relational {
     // per-row cost.
     "q69_mor_delete" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#mordel")({
+        val path = SessionMemo.value(s, "layout-mordel", dir)({
           val out = graft.io.TempDirs.scratch("graft_mor_") + "/bykb"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents").selectExpr("doc_id % 16 AS kb", "doc_id", "n_chars"),
@@ -1602,7 +1601,7 @@ object Relational {
     // concat) holds until compaction folds both legs into clean files.
     "q70_mor_update" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#morupd")({
+        val path = SessionMemo.value(s, "layout-morupd", dir)({
           val out = graft.io.TempDirs.scratch("graft_morupd_") + "/bykb"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents").selectExpr("doc_id % 16 AS kb", "doc_id", "n_chars"),
@@ -1645,7 +1644,7 @@ object Relational {
     // oracle-checked against the same class of DuckDB twin.
     "q71_mor_merge" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#mormerge")({
+        val path = SessionMemo.value(s, "layout-mormerge", dir)({
           val out = graft.io.TempDirs.scratch("graft_mormrg_") + "/bykb"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents").selectExpr("doc_id % 16 AS kb", "doc_id", "n_chars"),
@@ -1707,7 +1706,7 @@ object Relational {
     // compaction folds the accumulated files on its own schedule.
     "q72_stream_keyed_ingest" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#streamkeyed")({
+        val path = SessionMemo.value(s, "layout-streamkeyed", dir)({
           val base = graft.io.TempDirs.scratch("graft_skw_")
           val src = s"$base/src"; val out = s"$base/t"; val ckpt = s"$base/ckpt"
           t(s, dir, "orders").selectExpr(
@@ -1754,7 +1753,7 @@ object Relational {
     // promoted state against the batch truth.
     "q73_branch_promote" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#branch")({
+        val path = SessionMemo.value(s, "layout-branch", dir)({
           val out = graft.io.TempDirs.scratch("graft_br_") + "/bykb"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents").selectExpr("doc_id % 16 AS kb", "doc_id", "n_chars"),
@@ -1801,7 +1800,7 @@ object Relational {
     // the new grain.
     "q74_rebucket_evolution" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#rebucket")({
+        val path = SessionMemo.value(s, "layout-rebucket", dir)({
           val out = graft.io.TempDirs.scratch("graft_rbk_") + "/bykb"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents").selectExpr("doc_id % 16 AS kb", "doc_id", "n_chars"),
@@ -1838,7 +1837,7 @@ object Relational {
     // operator (IvmSpec's foreachBatch leg).
     "q75_ivm_rollup" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#ivm")({
+        val path = SessionMemo.value(s, "layout-ivm", dir)({
           val out = graft.io.TempDirs.scratch("graft_ivm_")
           val tbl = s"$out/t"
           graft.sources.KeyedSource.stageKeyed(s,
@@ -1920,7 +1919,7 @@ object Relational {
     // surviving directories' frames.
     "q76_nonkey_skipping" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#skip")({
+        val path = SessionMemo.value(s, "layout-skip", dir)({
           val out = graft.io.TempDirs.scratch("graft_skip_") + "/bydoc"
           val docs = t(s, dir, "documents")
           val md = docs.agg(max("doc_id")).head().getLong(0)
@@ -1968,7 +1967,7 @@ object Relational {
     // refusal legs.
     "q77_type_widening" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#widen")({
+        val path = SessionMemo.value(s, "layout-widen", dir)({
           val out = graft.io.TempDirs.scratch("graft_widen_") + "/t"
           val docs = t(s, dir, "documents")
           graft.sources.KeyedSource.stageKeyed(s,
@@ -2023,7 +2022,7 @@ object Relational {
     // codec inheritance.
     "q78_codec_roundtrip" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#codec")({
+        val path = SessionMemo.value(s, "layout-codec", dir)({
           val out = graft.io.TempDirs.scratch("graft_codec_") + "/t"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents")
@@ -2064,7 +2063,7 @@ object Relational {
     // recompute (the oracle).
     "q79_ivm_minmax" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#ivmmm")({
+        val path = SessionMemo.value(s, "layout-ivmmm", dir)({
           val out = graft.io.TempDirs.scratch("graft_ivmmm_")
           val tbl = s"$out/t"
           val schema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -2141,7 +2140,7 @@ object Relational {
     // pruned to changed keys by the changes scan; never a corpus join.
     "q80_ivm_join" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#ivmjoin")({
+        val path = SessionMemo.value(s, "layout-ivmjoin", dir)({
           val out = graft.io.TempDirs.scratch("graft_ivmj_")
           val fTbl = s"$out/fact"
           val dTbl = s"$out/dim"
@@ -2231,7 +2230,7 @@ object Relational {
     // survives a busy main instead of restarting.
     "q81_branch_rebase" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#rebase")({
+        val path = SessionMemo.value(s, "layout-rebase", dir)({
           val out = graft.io.TempDirs.scratch("graft_rebase_") + "/t"
           val ddl = "kb BIGINT, doc_id BIGINT, n_chars BIGINT"
           graft.sources.KeyedSource.stageKeyed(s,
@@ -2289,7 +2288,7 @@ object Relational {
     // derivation + sidecar skipping) rather than a new operator.
     "q82_zorder_connector" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#zorder")({
+        val path = SessionMemo.value(s, "layout-zorder", dir)({
           val out = graft.io.TempDirs.scratch("graft_zord_") + "/t"
           graft.sources.KeyedSource.stageZOrdered(s,
             t(s, dir, "lineitem").select(
@@ -2342,7 +2341,7 @@ object Relational {
     // KeyedEvolutionSpec the FLOAT→DOUBLE widening leg.
     "q83_keyed_double" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#dbl")({
+        val path = SessionMemo.value(s, "layout-dbl", dir)({
           val out = graft.io.TempDirs.scratch("graft_dbl_") + "/t"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents").selectExpr("doc_id % 16 AS kb", "doc_id",
@@ -2405,7 +2404,7 @@ object Relational {
     // shrunk from directory to file.
     "q84_filegrain_skip" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#fskip")({
+        val path = SessionMemo.value(s, "layout-fskip", dir)({
           val out = graft.io.TempDirs.scratch("graft_fskip_") + "/t"
           val docs = t(s, dir, "documents")
           graft.sources.KeyedSource.stageKeyed(s,
@@ -2464,7 +2463,7 @@ object Relational {
     // values are oracle-exact.
     "q85_ndv_after_update" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#ndvupd")({
+        val path = SessionMemo.value(s, "layout-ndvupd", dir)({
           val out = graft.io.TempDirs.scratch("graft_ndvu_") + "/t"
           graft.sources.KeyedSource.stageKeyed(s,
             t(s, dir, "documents")
@@ -2526,7 +2525,7 @@ object Relational {
     "q86_catalog_mv" -> Q(
       (s, dir) => {
         val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-        LlmData.tableOnce(bucketMemo, s, dir + "#mv")({
+        SessionMemo.value(s, "layout-mv", dir)({
           val out = graft.io.TempDirs.scratch("graft_mv_")
           val tbl = s"$out/src"
           graft.sources.KeyedSource.stageKeyed(s,
@@ -2603,7 +2602,7 @@ object Relational {
     // clustering choice safe to change per table.
     "q87_hilbert_zorder" -> Q(
       (s, dir) => {
-        val path = LlmData.tableOnce(bucketMemo, s, dir + "#hilbert")({
+        val path = SessionMemo.value(s, "layout-hilbert", dir)({
           val out = graft.io.TempDirs.scratch("graft_hilb_") + "/t"
           graft.sources.KeyedSource.stageZOrdered(s,
             t(s, dir, "lineitem").select(
@@ -2639,11 +2638,11 @@ object Relational {
     * partitioned by `event_date` — derived ONCE at write under the UTC
     * session (deriving at read would filter post-scan and open every
     * partition). One layout write per (session, corpus) via the same
-    * stamped registry as the bucketed tables. */
+    * session memo as the bucketed tables. */
   private def partitionedEvents(s: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"graft_p_events_$tag"
-    LlmData.tableOnce(bucketMemo, s, dir + "#part")({
+    SessionMemo.value(s, "layout-part", dir)({
       t(s, dir, "events")
         .withColumn("event_date", to_date(col("ts")))
         .write.mode("overwrite").format("parquet")
@@ -2661,7 +2660,7 @@ object Relational {
   private def calendarDim(s: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
     val tbl = s"graft_p_caldim_$tag"
-    LlmData.tableOnce(bucketMemo, s, dir + "#caldim")({
+    SessionMemo.value(s, "layout-caldim", dir)({
       t(s, dir, "events")
         .select(to_date(col("ts")).as("event_date")).distinct()
         .withColumn("day_kind",
@@ -2681,7 +2680,7 @@ object Relational {
     * the whitespace-token formula the oracle can replay
     * (length − length(sans-spaces) + 1), so the enrichment side is a
     * genuinely distinct table, not a re-projection at read. One write
-    * per (session, corpus) via the shared stamped registry. */
+    * per (session, corpus) via the session memo. */
   /** q56's CBO child session, one per parent session: same
     * SparkContext, shared external catalog and block-manager cache,
     * but an ISOLATED SQLConf — the cbo/joinReorder flags change
@@ -2690,9 +2689,8 @@ object Relational {
     * Execution confs every query depends on are copied from the
     * parent explicitly (newSession starts from the context's initial
     * conf, which loses anything the parent set dynamically). */
-  private lazy val cboSessionReg = new LlmData.SessionRegistry[SparkSession]
   private[graft] def cboSession(s: SparkSession): SparkSession =
-    cboSessionReg.acquire(s) {
+    SessionMemo.value(s, "cbo-session", "", keep = true) {
       val c = s.newSession()
       Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone",
           "spark.sql.legacy.parquet.nanosAsLong")
@@ -2703,8 +2701,8 @@ object Relational {
     }
 
   /** q56's ANALYZE'd catalog tables (customer/orders/nation), staged
-    * once per (session, corpus generation) via the same stamped
-    * registry as every other layout; returns the table-name tag.
+    * once per (session, corpus generation) via the session memo
+    * like every other layout; returns the table-name tag.
     * `FOR ALL COLUMNS` computes row count + size AND per-column
     * NDV/min/max/null stats — what join-reorder's cardinality
     * estimation feeds on. Stats live in the shared catalog entry, so
@@ -2712,7 +2710,7 @@ object Relational {
     * count would silently skew every estimate). */
   private[graft] def cboTables(c: SparkSession, dir: String): String = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    LlmData.tableOnce(bucketMemo, c, dir + "#cbo")({
+    SessionMemo.value(c, "layout-cbo", dir)({
       Seq("customer", "orders", "nation").foreach { tn =>
         val tbl = s"graft_cbo_${tn}_$tag"
         t(c, dir, tn).write.mode("overwrite").format("parquet").saveAsTable(tbl)
@@ -2723,7 +2721,7 @@ object Relational {
   }
 
   private def keyedLayouts(s: SparkSession, dir: String): String =
-    LlmData.tableOnce(bucketMemo, s, dir + "#keyed")({
+    SessionMemo.value(s, "layout-keyed", dir)({
       val out = graft.io.TempDirs.scratch("graft_keyed_")
       val docs = t(s, dir, "documents")
       // sortBy = doc_id: each key file is written ordered, the order
@@ -2751,14 +2749,14 @@ object Relational {
     })
 
   /** q61's pure-connector layout triple, staged on the CBO child
-    * session (same registry lifecycle as every other layout): the two
+    * session (same memo lifecycle as every other layout): the two
     * fact-sized keyed layouts plus a source dimension whose `kind`
     * attribute lives only in table data — the selective predicate the
     * reorder must discover through the connector's reported column
     * statistics (ndv(kind)=2 → 0.5 selectivity; join on source
     * ndv=20), never through a literal in the query text. */
   private[graft] def cboKeyedLayouts(c: SparkSession, dir: String): String =
-    LlmData.tableOnce(bucketMemo, c, dir + "#cbok")({
+    SessionMemo.value(c, "layout-cbok", dir)({
       val out = graft.io.TempDirs.scratch("graft_cbok_")
       val docs = t(c, dir, "documents")
       graft.sources.KeyedSource.stageKeyed(c,
@@ -2776,19 +2774,6 @@ object Relational {
         s"$out/dim", "source")
       out
     })
-
-  /** Bucketed-table build registry for q47 — one layout write per
-    * (session, corpus), shared lifecycle with the other index memos
-    * (released via [[clearBucketMemo]] from LlmData.clearMemo, so a
-    * re-invocation after the release hook pays its own layout write —
-    * the same cold-attribution rule every other index memo follows). */
-  private lazy val bucketMemo = new LlmData.SessionRegistry[TrieMap[String, (String, String)]]
-
-  private[operators] def clearBucketMemo(s: SparkSession): Unit =
-    bucketMemo.remove(s)
-
-  private[operators] def bucketMemoPopulated(s: SparkSession): Boolean =
-    bucketMemo.has(s)
 
   /** q25 — pure range (interval) join, the scale-safe way.
     *
@@ -3121,7 +3106,7 @@ object Relational {
       // un-pinned exchange collapsed to one task and serialized the
       // dedup of |lineitem| pairs. repartition(N, src, dst) + distinct
       // share one exchange (the groupBy sees its clustering satisfied).
-      val li = LlmData.memoizedEager(s, "q31-li", dir) {
+      val li = SessionMemo.frame(s, "q31-li", dir) {
         val raw = t(s, dir, "lineitem")
           .select((col("l_suppkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
         val rows = t(s, dir, "lineitem").count() // parquet metadata count
@@ -3129,10 +3114,9 @@ object Relational {
           s.conf.get("spark.sql.shuffle.partitions").toLong,
           rows / 65536L + 1L)).toInt
         val f = raw.repartition(sizedPre, col("src"), col("dst")).distinct().persist()
-        // materialize NOW (memoizedEager allows eager jobs): deg's
-        // builder below reads f.rdd.getNumPartitions, which on an
-        // un-materialized adaptive plan would itself execute stages —
-        // under the LAZY memo lock, where eager work is forbidden
+        // materialize NOW: deg's builder below reads
+        // f.rdd.getNumPartitions, which on an un-materialized adaptive
+        // plan would itself execute stages
         f.write.format("noop").mode("overwrite").save()
         f
       }
@@ -3154,9 +3138,9 @@ object Relational {
       // session's sizing and the src co-location is exactly the
       // pre-partitioning the no-broadcast fallback below needs.
       // the cached pair list's own width (metadata read on the
-      // MATERIALIZED frame — no job; read OUTSIDE the lazy memo lock)
+      // MATERIALIZED frame — no job)
       val liParts = math.max(1, li.rdd.getNumPartitions)
-      val deg = LlmData.memoized(s, "q31-deg", dir) {
+      val deg = SessionMemo.frame(s, "q31-deg", dir) {
         val sym = li.unionByName(li.select(col("dst").as("src"), col("src").as("dst")))
         // pin the degree aggregation's exchange at the pair list's
         // width: repartition(n, src) + groupBy(src) share one exchange,
@@ -3166,12 +3150,7 @@ object Relational {
           .groupBy("src").agg(count(lit(1)).as("deg"))
           .withColumnRenamed("src", "node").persist()
       }
-      // memoizedEager, not memoized: this build runs an EAGER job (the
-      // edge-count agg that sizes the repartition) — the plain memo
-      // constructs lazy frames under a session-wide lock, and an eager
-      // job there head-of-line-blocks every concurrent memoized user
-      // (the documented lock discipline memoizedEager exists for)
-      val edges = LlmData.memoizedEager(s, "q31-edges", dir) {
+      val edges = SessionMemo.frame(s, "q31-edges", dir) {
         // both staging scalars ride the deg build (|V| rows + one agg)
         val edgeRows = deg.agg(sum("deg")).head().getLong(0)
         val sized = math.max(1L, math.min(

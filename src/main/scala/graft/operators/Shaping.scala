@@ -153,7 +153,7 @@ object Shaping {
     * (the dsirScore/bm25ServeScore factoring discipline), memoized +
     * persisted per sfDir like the signature tables. */
   private[operators] def lmScored(s: SparkSession, dir: String): DataFrame =
-    LlmData.memoized(s, "x110-scored", dir) {
+    SessionMemo.frame(s, "x110-scored", dir) {
       // rides the family's one memoized token staging: the LM build's
       // two corpus passes reuse the cached arrays instead of paying
       // tokenize twice more
@@ -168,7 +168,7 @@ object Shaping {
       // documents → one, two of the three feeding from
       // InMemoryRelation). Registered in the family memo so clearMemo
       // releases it with the other staged artifacts.
-      val cb = LlmData.memoized(s, "x110-cb", dir) {
+      val cb = SessionMemo.frame(s, "x110-cb", dir) {
         bigramsFromTokens(toks.filter(col("lang") === "en"))
           .groupBy("prev", "cur").agg(count(lit(1)).as("cb"))
           .withColumn("cb", fencedCb(col("cb")))
@@ -373,7 +373,7 @@ object Shaping {
     * re-ran the tokStaged⋈lmScored join; x113 re-derived the same
     * join again minus `source`). Released by clearMemo. */
   private def scoredDocs(s: SparkSession, dir: String): DataFrame =
-    LlmData.memoized(s, "x112-scored-docs", dir) {
+    SessionMemo.frame(s, "x112-scored-docs", dir) {
       LlmData.tokStaged(s, dir)
         .select(col("source"), col("doc_id"),
           size(col("tk")).cast("long").as("nt"))

@@ -338,11 +338,6 @@ final class GraftCatalog extends TableCatalog {
       GraftMv.changesBetween(spark, m, m.lastApplied, head),
       GraftMv.sourceAt(spark, m, Some(head)),
       Seq(m.group), m.sums, m.minMax)
-    if (sys.env.contains("SPARK_GRAFT_TIMING")) {
-      val t0 = System.nanoTime()
-      next.write.format("noop").mode("overwrite").save()
-      System.err.println(f"[mv-refresh] maintain-compute ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-    }
     KeyedSource.stageKeyed(spark, next, m.viewPath, m.group)
     mvs.put(ident, m.copy(lastApplied = head))
     persistMvs()

@@ -444,13 +444,6 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
       KeyedSource.codecOfHead(path, conf.value))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val tDbg = sys.env.contains("SPARK_GRAFT_TIMING")
-    var t0 = System.nanoTime()
-    def lap(name: String): Unit = if (tDbg) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[mor-commit] $name%-18s ${(t1 - t0) / 1e9}%8.3f s")
-      t0 = t1
-    }
     val msgs = messages.toSeq.collect { case m: KeyedDvMessage => m }
     val perKey: Map[String, Seq[(String, Long)]] = msgs.flatMap(_.dvs)
       .groupBy(_._1).map { case (k, xs) => k -> xs.map(x => (x._2, x._3)) }
@@ -499,7 +492,6 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
     // to O(affected keys' rows) READ (writes stay O(deleted)); the
     // alternative was every later stats question paying a data scan
     // until compaction.
-    lap("pre-patch")
     if (perKey.nonEmpty) {
       val s = org.apache.spark.sql.SparkSession.active
       import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min, sum}
@@ -520,7 +512,6 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
           }
         }
       }
-      lap("dv-range-parse")
       val keyVals: Seq[Any] = declared(key).dataType match {
         case LongType => perKey.keys.toSeq.map(_.toLong)
         case _ => perKey.keys.toSeq
@@ -544,7 +535,6 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
             (if (KeyedStats.numeric(f.dataType))
               Seq(sum(col(f.name)).cast("long").as(s"_sm$i")) else Nil)
         }
-      lap("patch-plan-build")
       // bounded collect: ONE row per affected key (the same driver
       // payload class as the dv refs themselves). Grouped by the DATA
       // key column, not the KeyCol metadata string (r20): the scan
@@ -554,10 +544,7 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
       // the driver exactly the way the writers render it (toString).
       val aggDf = survivors.groupBy(col(key).as("_pk"))
         .agg(aggExprs.head, aggExprs.tail: _*)
-      if (tDbg) { aggDf.queryExecution.executedPlan; lap("patch-optimize") }
-      val aggRows = aggDf.collect()
-      lap("patch-job")
-      val agg = aggRows
+      val agg = aggDf.collect()
         .map { r =>
           val n = declared.length
           val mins = new Array[String](n); val maxs = new Array[String](n)
@@ -611,7 +598,6 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
         new org.apache.hadoop.fs.Path(gen, KeyedStats.PatchFile),
         KeyedStats.renderPatch(declared, key, patchEntries))
     }
-    lap("stats-patch")
     if (KeyedSource.failBeforePublish) throw new IllegalStateException(
       "graft-keyed test hook: crash before publish")
     var priorGens = Set.empty[String]
@@ -658,7 +644,6 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
     }.get
     val live = published.snapshots.flatMap(_.referencedGens).toSet
     KeyedSource.expireGenerations(path, live, hconf, known = priorGens -- live)
-    lap("publish+expire")
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

@@ -732,7 +732,7 @@ object PageSource {
 
   /** Stage `documents` under a fresh scratch dir as `page=<n>/` text
     * files; returns the staged directory. One write per (session,
-    * corpus) when memoized by the caller (q50's tableOnce). */
+    * corpus) when memoized by the caller (q50's session memo entry). */
   def stageDocuments(spark: org.apache.spark.sql.SparkSession, sfDir: String,
       pageSize: Long = 100L): String = {
     import org.apache.spark.sql.functions._

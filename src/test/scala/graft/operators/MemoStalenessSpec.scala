@@ -166,14 +166,14 @@ class MemoStalenessSpec extends graft.SparkSpec {
     // storageLevel)
     var gen = 0
     def touchFrame(): org.apache.spark.sql.DataFrame =
-      LlmData.memoized(spark, "spec-bounded", dir) {
+      SessionMemo.frame(spark, "spec-bounded", dir) {
         spark.range(100L + gen).toDF("v").persist()
       }
 
     regen(0)
     val first = touchFrame()
     graft.sources.Tables.eventsTsType(spark, evDir)
-    val frameKeys0 = LlmData.frameMemoKeys(spark)
+    val frameKeys0 = SessionMemo.keys(spark)
     val tsKeys0 = graft.sources.Tables.tsTypeMemoKeys
 
     (1 to 3).foreach { i =>
@@ -186,7 +186,7 @@ class MemoStalenessSpec extends graft.SparkSpec {
     // only OUR keys are compared: the session (and its memos) is
     // JVM-shared with concurrently running suites
     def ours[A](ks: Set[A])(f: A => Boolean): Int = ks.count(f)
-    assert(ours(LlmData.frameMemoKeys(spark))(_._2 == dir) == 1
+    assert(ours(SessionMemo.keys(spark))(_._2 == dir) == 1
       && ours(frameKeys0)(_._2 == dir) == 1,
       "frame memo must hold exactly one entry per (key, dir) across regenerations")
     assert(ours(graft.sources.Tables.tsTypeMemoKeys)(_ == evDir) == 1
