@@ -110,12 +110,9 @@ object EtlCapstone {
     * post-aggregation from the tuple plus the group keys. Same JSON
     * fields, same values — collect_list order was already
     * plan-dependent and immaterial (normalize re-explodes and dedups
-    * by total column order). OptProbe: envelope+JSON leg 5.0 s → 2.6 s
+    * by total column order). Measured: envelope+JSON leg 5.0 s → 2.6 s
     * cold. */
-  // operators-visible so OptProbe's q46legs times the SHIPPED envelope
-  // plan (r19 ADVICE: the probe's inlined copy went stale after the
-  // slim-tuple rewrite)
-  private[operators] def envelopes(s: SparkSession, dir: String): DataFrame = {
+  private def envelopes(s: SparkSession, dir: String): DataFrame = {
     val slim = struct(
       col("o_orderdate").cast("string").as("added_at"),
       col("o_orderkey").as("okey"),

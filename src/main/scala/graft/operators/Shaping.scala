@@ -163,7 +163,7 @@ object Shaping {
       // groupBy over it), and vv (a distinct over it) — and without
       // the cache each branch re-ran the full en-slice bigram
       // explode+aggregate, so one lmScored rebuild paid the bigram
-      // pass three times (OptProbe: 1.81 s rebuild → 1.0 s with the
+      // pass three times (measured: 1.81 s rebuild → 1.0 s with the
       // cache; plan diff: three `Generate explode` subtrees over
       // documents → one, two of the three feeding from
       // InMemoryRelation). Registered in the family memo so clearMemo

@@ -297,10 +297,9 @@ final class GraftCatalog extends TableCatalog {
         "sum would drift from the recompute (use min/max for FP columns)"))
     if (tables.contains(ident)) throw new TableAlreadyExistsException(
       nameParts(ident))
-    val head = KeyedSource.readCommitLog(src.path,
-      spark.sessionState.newHadoopConf()).getOrElse(bad(
-        s"source ${source.name} has no commit log — stage it through the " +
-          "connector writer first")).head.seq
+    val head = KeyedSource.requireLog(src.path,
+      spark.sessionState.newHadoopConf(), s"materialized view source ${source.name}")
+      .head.seq
     var m = GraftMv.MvSpec(src.path, srcSchema.toDDL, src.key, group,
       sums, minMax, viewPath, head)
     // bootstrap pinned AT the recorded seq — a commit racing the
@@ -326,11 +325,9 @@ final class GraftCatalog extends TableCatalog {
   def refreshMaterializedView(ident: Identifier): Long = {
     val spark = org.apache.spark.sql.SparkSession.active
     val m = mvs.getOrElse(ident, throw new NoSuchTableException(nameParts(ident)))
-    val head = KeyedSource.readCommitLog(m.sourcePath,
-      spark.sessionState.newHadoopConf()).getOrElse(
-        throw new IllegalStateException(
-          s"graft-keyed materialized view ${ident.name}: source layout at " +
-            s"${m.sourcePath} lost its commit log")).head.seq
+    val head = KeyedSource.requireLog(m.sourcePath,
+      spark.sessionState.newHadoopConf(),
+      s"materialized view ${ident.name} refresh").head.seq
     if (head == m.lastApplied) return head
     val ddl = GraftMv.viewDdl(m)
     val next = graft.operators.Ivm.maintainRollupFull(

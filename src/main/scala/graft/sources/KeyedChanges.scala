@@ -296,11 +296,7 @@ final class KeyedChangesScan(declared: StructType, required: StructType,
     * interval) — the same snapshot-pinning discipline as KeyedScan's
     * SnapshotView. */
   private lazy val pinnedLog: KeyedSource.CommitLog =
-    KeyedSource.readCommitLog(path, conf.value).getOrElse(
-      throw new UnsupportedOperationException(
-        s"graft-keyed changes are defined on the snapshot log, but $path " +
-          "has no commit log (legacy flat stage) — restage through the " +
-          "connector writer first"))
+    KeyedSource.requireLog(path, conf.value, "changes read")
 
   /** `required` minus the change tag: what the tagged decode prunes to. */
   private def requiredData: StructType = StructType(
@@ -583,10 +579,7 @@ final class KeyedChangesStream(declared: StructType, required: StructType,
   }
 
   private def log: KeyedSource.CommitLog =
-    KeyedSource.readCommitLog(path, conf.value).getOrElse(
-      throw new UnsupportedOperationException(
-        s"graft-keyed changes stream at $path found no commit log — " +
-          "restage through the connector writer first"))
+    KeyedSource.requireLog(path, conf.value, "changes stream")
 
   // AvailableNow: pin the head ONCE at prepare; the run drains to it
   // and stops, commits landing mid-run wait for the next run

@@ -53,11 +53,7 @@ object KeyedCompact {
         s"got $minInputFiles")
     val hconf = spark.sessionState.newHadoopConf()
     val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
-    val log = KeyedSource.readCommitLog(path, hconf).getOrElse(
-      throw new UnsupportedOperationException(
-        s"graft-keyed compaction is a snapshot-log commit, but $path has no " +
-          "commit log (legacy flat stage) — restage through the connector " +
-          "writer first"))
+    val log = KeyedSource.requireLog(path, hconf, "compaction")
     val head = log.head
     val scanSeq = head.seq
     // eligible: multi-file keys (appends/MERGE inserts) AND any key
@@ -160,12 +156,9 @@ object KeyedCompact {
       KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedSource.OrderFile),
         KeyedSource.renderOrderMarker(schema, key, sortBy))
 
-    var priorGens = Set.empty[String]
     try {
-      val published = KeyedSource.commitLoop(path, hconf, "compaction commit") { prior =>
-        val l = prior.getOrElse(throw new IllegalStateException(
-          s"graft-keyed compaction at $path found no commit log — the layout " +
-            "was replaced mid-operation; re-run"))
+      KeyedSource.commitLoop(path, hconf, "compaction commit") { prior =>
+        val l = KeyedSource.requireLog(path, prior, "compaction commit")
         val h = l.head
         // SERIALIZABLE: the rewrite holds rows read from scanSeq; any
         // commit since (an append to a fragmented key, a DML, an
@@ -174,26 +167,18 @@ object KeyedCompact {
           s"graft-keyed compaction at $path conflicts with a concurrent " +
             s"commit: rows were read from snapshot $scanSeq but the head is " +
             s"now ${h.seq}; re-run the compaction against the fresh table")
-        priorGens = l.snapshots
-          .flatMap(_.referencedGens).toSet
         val edits = (h.edits -- fullyDeleted) ++
           written.toSeq.sorted.map(k => k -> Seq(genName))
-        val keep = math.max(l.retain, 1)
         // compacted keys fold their deletion vectors in (the rewrite
         // read the DV-applied view); zero-live-row keys tombstone
-        val snap = KeyedSource.Snapshot(l.nextSeq, h.gen,
-          h.tombstones ++ fullyDeleted, edits, h.dvs -- frag)
-        Some(KeyedSource.CommitLog(keep,
-          KeyedSource.trimWindow(l.snapshots :+ snap, keep, l.tags,
-            l.branches),
-          l.ops, l.tags, l.streams, l.branches))
-      }.get
-      val live = published.snapshots
-        .flatMap(_.referencedGens).toSet
-      KeyedSource.expireGenerations(path, live, hconf, known = priorGens -- live)
+        Some(l.append(KeyedSource.Snapshot(l.nextSeq, h.gen,
+          h.tombstones ++ fullyDeleted, edits, h.dvs -- frag)))
+      }
     } catch {
       case t: Throwable =>
-        fs.delete(gen, true) // own staging only; the live layout is untouched
+        // nothing was published (commitLoop throws only then): own
+        // staging only; the live layout is untouched
+        fs.delete(gen, true)
         throw t
     }
     frag.size
@@ -237,11 +222,7 @@ object KeyedCompact {
       key: String, newKey: org.apache.spark.sql.Column): Int = {
     val hconf = spark.sessionState.newHadoopConf()
     val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
-    val log = KeyedSource.readCommitLog(path, hconf).getOrElse(
-      throw new UnsupportedOperationException(
-        s"graft-keyed re-bucketing is a snapshot-log commit, but $path has " +
-          "no commit log (legacy flat stage) — restage through the connector " +
-          "writer first"))
+    val log = KeyedSource.requireLog(path, hconf, "re-bucketing")
     val head = log.head
     val scanSeq = head.seq
     val keyType = schema(key).dataType
@@ -333,18 +314,14 @@ object KeyedCompact {
     if (sortBy.nonEmpty)
       KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedSource.OrderFile),
         KeyedSource.renderOrderMarker(schema, key, sortBy))
-    var priorGens = Set.empty[String]
     try {
-      val published = KeyedSource.commitLoop(path, hconf, "re-bucket commit") { prior =>
-        val l = prior.getOrElse(throw new IllegalStateException(
-          s"graft-keyed re-bucketing at $path found no commit log — the " +
-            "layout was replaced mid-operation; re-run"))
+      KeyedSource.commitLoop(path, hconf, "re-bucket commit") { prior =>
+        val l = KeyedSource.requireLog(path, prior, "re-bucket commit")
         val h = l.head
         if (h.seq != scanSeq) throw new IllegalStateException(
           s"graft-keyed re-bucketing at $path conflicts with a concurrent " +
             s"commit: rows were read from snapshot $scanSeq but the head is " +
             s"now ${h.seq}; re-run against the fresh table")
-        priorGens = l.snapshots.flatMap(_.referencedGens).toSet
         val baseKeys: Set[String] = {
           val baseGen = new org.apache.hadoop.fs.Path(root, h.gen)
           if (fs.exists(baseGen)) fs.listStatus(baseGen).toSeq.collect {
@@ -366,15 +343,9 @@ object KeyedCompact {
                 else priorLive(k) :+ genName)
         }
         val tombstones = (h.tombstones -- written) ++ fullyMoved
-        val keep = math.max(l.retain, 1)
-        val snap = KeyedSource.Snapshot(l.nextSeq, h.gen, tombstones,
-          edits, h.dvs -- changedSet)
-        Some(KeyedSource.CommitLog(keep,
-          KeyedSource.trimWindow(l.snapshots :+ snap, keep, l.tags, l.branches),
-          l.ops, l.tags, l.streams, l.branches))
-      }.get
-      val live = published.snapshots.flatMap(_.referencedGens).toSet
-      KeyedSource.expireGenerations(path, live, hconf, known = priorGens -- live)
+        Some(l.append(KeyedSource.Snapshot(l.nextSeq, h.gen, tombstones,
+          edits, h.dvs -- changedSet)))
+      }
     } catch {
       case t: Throwable =>
         fs.delete(gen, true)

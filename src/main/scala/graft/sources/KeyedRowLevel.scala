@@ -105,11 +105,7 @@ final class KeyedCowOperation(declared: StructType, path: String, key: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val conf = new org.apache.spark.util.SerializableConfiguration(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    if (KeyedSource.readCommitLog(path, conf.value).isEmpty)
-      throw new UnsupportedOperationException(
-        s"graft-keyed $cmd is a copy-on-write commit against the snapshot log, " +
-          s"but $path has no commit log (legacy flat stage) — restage through " +
-          "the connector writer first")
+    KeyedSource.requireLog(path, conf.value, s"copy-on-write $cmd")
     new KeyedScanBuilder(declared, path, key, conf,
       options.getBoolean("vectorize", true),
       // a branch DML scans the BRANCH head (resolved at plan time);
@@ -150,10 +146,7 @@ final class KeyedCowWrite(op: KeyedCowOperation, schema: StructType,
   // session-parallelism writer fan-out, same rationale as
   // KeyedWrite.requiredNumPartitions (AQE advisory-sized coalescing
   // must not serialize per-key file creation)
-  private val writeParallelism: Int =
-    try org.apache.spark.sql.SparkSession.active.sessionState.conf
-      .numShufflePartitions
-    catch { case _: Throwable => 0 }
+  private val writeParallelism: Int = KeyedSource.sessionWriteParallelism
   override def requiredNumPartitions(): Int = writeParallelism
   override def requiredOrdering(): Array[SortOrder] =
     (key +: sortBy).map(c =>
@@ -224,11 +217,8 @@ final class KeyedCowBatchWrite(op: KeyedCowOperation, schema: StructType,
     if (!fs.exists(gen)) fs.mkdirs(gen)
     if (KeyedSource.failBeforePublish) throw new IllegalStateException(
       "graft-keyed test hook: crash before publish")
-    var priorGens = Set.empty[String]
-    val published = KeyedSource.commitLoop(path, hconf, "row-level commit") { prior =>
-      val log = prior.getOrElse(throw new IllegalStateException(
-        s"graft-keyed row-level commit at $path found no commit log — " +
-          "the layout was replaced mid-operation; re-run the DML"))
+    KeyedSource.commitLoop(path, hconf, "row-level commit") { prior =>
+      val log = KeyedSource.requireLog(path, prior, "row-level commit")
       // a branch DML reads and rewrites ITS ref's head; main is
       // untouched until a fastForward publishes the branch
       val head = branch.fold(log.head)(log.branchHead)
@@ -240,8 +230,6 @@ final class KeyedCowBatchWrite(op: KeyedCowOperation, schema: StructType,
           s"commit: rows were derived from snapshot ${scannedView.seq} but the " +
           s"${branch.fold("head")(b => s"branch '$b' head")} is now " +
           s"${head.seq}; re-run the DML against the fresh table")
-      priorGens = log.snapshots
-        .flatMap(_.referencedGens).toSet
       // the base generation's stored keys — needed to carry a key's
       // prior file list when a MERGE inserts into an UNAFFECTED key
       // (the new file APPENDS after the existing ones)
@@ -261,7 +249,6 @@ final class KeyedCowBatchWrite(op: KeyedCowOperation, schema: StructType,
         k -> (if (scanned.contains(k)) Seq(genName) else priorLive(k) :+ genName)
       }
       val tombstones = (head.tombstones -- written) ++ fullyDeleted
-      val keep = math.max(math.max(log.retain, retain), 1)
       // Only SCANNED keys fold their deletion vectors in: the scan read
       // the DV-applied view, so those keys' replacement files already
       // exclude the deleted rows. A key that was written but NOT
@@ -269,16 +256,9 @@ final class KeyedCowBatchWrite(op: KeyedCowOperation, schema: StructType,
       // file after the prior ones — its prior files stay referenced and
       // must keep their DVs, or rows deleted under dmlMode='mor' would
       // silently resurrect.
-      val snap = KeyedSource.Snapshot(log.nextSeq, head.gen, tombstones,
-        edits, head.dvs -- scanned, branch = branch)
-      Some(KeyedSource.CommitLog(keep,
-        KeyedSource.trimWindow(log.snapshots :+ snap, keep, log.tags,
-          log.branches),
-        log.ops, log.tags, log.streams, log.branches))
-    }.get
-    val live = published.snapshots
-      .flatMap(_.referencedGens).toSet
-    KeyedSource.expireGenerations(path, live, hconf, known = priorGens -- live)
+      Some(log.append(KeyedSource.Snapshot(log.nextSeq, head.gen, tombstones,
+        edits, head.dvs -- scanned, branch = branch), retain))
+    }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -385,11 +365,7 @@ final class KeyedMorOperation(declared: StructType, path: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val conf = new org.apache.spark.util.SerializableConfiguration(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    if (KeyedSource.readCommitLog(path, conf.value).isEmpty)
-      throw new UnsupportedOperationException(
-        s"graft-keyed merge-on-read DELETE commits deletion vectors against " +
-          s"the snapshot log, but $path has no commit log (legacy flat " +
-          "stage) — restage through the connector writer first")
+    KeyedSource.requireLog(path, conf.value, s"merge-on-read $cmd")
     new KeyedScanBuilder(declared, path, key, conf,
       options.getBoolean("vectorize", true),
       reportStats = true,
@@ -600,11 +576,8 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
     }
     if (KeyedSource.failBeforePublish) throw new IllegalStateException(
       "graft-keyed test hook: crash before publish")
-    var priorGens = Set.empty[String]
-    val published = KeyedSource.commitLoop(path, hconf, "deletion-vector commit") { prior =>
-      val log = prior.getOrElse(throw new IllegalStateException(
-        s"graft-keyed deletion-vector commit at $path found no commit log — " +
-          "the layout was replaced mid-operation; re-run the DML"))
+    KeyedSource.commitLoop(path, hconf, "deletion-vector commit") { prior =>
+      val log = KeyedSource.requireLog(path, prior, "deletion-vector commit")
       val head = branch.fold(log.head)(log.branchHead)
       // SERIALIZABLE: ordinals index the scanned snapshot's file lists
       if (head.seq != scannedSeq) throw new IllegalStateException(
@@ -612,7 +585,6 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
           s"concurrent commit: positions were derived from snapshot " +
           s"$scannedSeq but the ${branch.fold("head")(b => s"branch '$b' head")} " +
           s"is now ${head.seq}; re-run the DML")
-      priorGens = log.snapshots.flatMap(_.referencedGens).toSet
       val dvs = head.dvs ++ perKey.map { case (k, refs) =>
         k -> (head.dvs.getOrElse(k, Seq.empty) ++ refs.map(_._1))
       }
@@ -633,17 +605,10 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
       val written = insertEntries.map(_.rawKey).toSet
       val edits = head.edits ++ written.toSeq.map(k =>
         k -> (priorLive(k) :+ genName))
-      val keep = math.max(math.max(log.retain, retain), 1)
-      val snap = KeyedSource.Snapshot(log.nextSeq, head.gen,
+      Some(log.append(KeyedSource.Snapshot(log.nextSeq, head.gen,
         head.tombstones -- written, edits, dvs -- (head.tombstones & written),
-        branch = branch)
-      Some(KeyedSource.CommitLog(keep,
-        KeyedSource.trimWindow(log.snapshots :+ snap, keep, log.tags,
-          log.branches),
-        log.ops, log.tags, log.streams, log.branches))
-    }.get
-    val live = published.snapshots.flatMap(_.referencedGens).toSet
-    KeyedSource.expireGenerations(path, live, hconf, known = priorGens -- live)
+        branch = branch), retain))
+    }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

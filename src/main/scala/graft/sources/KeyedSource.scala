@@ -352,13 +352,8 @@ final class KeyedTable(declared: StructType, path: String, key: String,
     // RECOMPUTE against the fresh head — the stored-key universe and
     // the tombstone base both move with it, so the delete serializes
     // after the winner instead of silently superseding it
-    var dropped = Set.empty[String]
-    val published = KeyedSource.commitLoop(path, hconf, "DELETE commit") { prior =>
-      val log = prior.getOrElse(
-        throw new UnsupportedOperationException(
-          s"graft-keyed DELETE is metadata-grain (snapshot-log tombstones) and " +
-            s"requires a generation-committed layout, but $path has no commit " +
-            "log (legacy flat stage) — restage through the connector writer first"))
+    KeyedSource.commitLoop(path, hconf, "DELETE commit") { prior =>
+      val log = KeyedSource.requireLog(path, prior, "DELETE")
       // a branch-pinned table tombstones against ITS head — main
       // never sees the deletion until a fastForward publishes it
       val head = branch.fold(log.head)(log.branchHead)
@@ -396,28 +391,10 @@ final class KeyedTable(declared: StructType, path: String, key: String,
         // persisted retain and this table handle's declared one (a
         // catalog table registered with retain=2 over a retain=1
         // layout widens it here)
-        val keep = math.max(math.max(log.retain, retain), 1)
-        val snap = KeyedSource.Snapshot(log.nextSeq, head.gen,
+        Some(log.append(KeyedSource.Snapshot(log.nextSeq, head.gen,
           head.tombstones ++ doomed, head.edits -- doomed,
-          head.dvs -- doomed, branch = branch)
-        val snapshots = KeyedSource.trimWindow(log.snapshots :+ snap, keep,
-          log.tags, log.branches)
-        def gensOf(ss: Seq[KeyedSource.Snapshot]) =
-          ss.flatMap(_.referencedGens).toSet
-        dropped = gensOf(log.snapshots) -- gensOf(snapshots)
-        Some(KeyedSource.CommitLog(keep, snapshots, log.ops, log.tags,
-          log.streams, log.branches))
+          head.dvs -- doomed, branch = branch), retain))
       }
-    }
-    // targeted expiry: only generations this commit's window-trim
-    // dropped — never the blanket _gen-* sweep (which belongs to WRITE
-    // commits; from a "metadata-only" delete it could reap an
-    // in-flight writer's staging directory)
-    if (published.isDefined && dropped.nonEmpty) {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(hconf)
-      dropped.foreach(g =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, g), true))
     }
   }
 }
@@ -1462,9 +1439,11 @@ object KeyedSource {
     * promotion of the side utility to a DSv2 `SupportsWrite`): rows
     * stage into an uncommitted generation directory, the stats sidecar
     * and order marker are derived in the writers from exactly the rows
-    * written and land inside the SAME commit, and the
-    * `_graft_keyed_commit` pointer swaps atomically — a crash anywhere
-    * before the swap leaves the previous generation fully live.
+    * written and land inside the SAME commit, and the commit becomes
+    * visible when it claims the next versioned log file
+    * `_graft_keyed_commit.v<seq>` by atomic exclusive create (the CAS
+    * in [[commitLoop]]) — a crash anywhere before the claim leaves the
+    * previous generation fully live.
     *
     * `sortBy` is the SECOND half of paying at write time: with it,
     * each key's file is written sorted ascending by those columns
@@ -1634,10 +1613,11 @@ object KeyedSource {
 
   // ── Committed-snapshot log (the publish half of WAP) ───────────────
   //
-  // r15.2: the single committed-generation pointer grew into a SNAPSHOT
-  // LOG — still ONE file, still published by ONE atomic rename (the
-  // whole visibility transition; there is no multi-file ordering to
-  // tear) — so the connector gains the three snapshot surfaces the
+  // The committed-generation record is a SNAPSHOT LOG — each commit
+  // publishes the whole retained window as ONE new versioned file,
+  // claimed by atomic exclusive create (the whole visibility
+  // transition; there is no multi-file ordering to tear) — so the
+  // connector gains the three snapshot surfaces the
   // immediate-delete simplification used to forgo (the Iceberg snapshot
   // model: a table is a log of immutable snapshots, readers pin one):
   //
@@ -1666,17 +1646,15 @@ object KeyedSource {
   // generation directory — history of a 10-key purge costs bytes of
   // metadata, not a second copy of the corpus.
 
-  /** Commit-log base name. Since r16 the log is published as VERSIONED
-    * files `_graft_keyed_commit.v<seq>` (each holding the full retained
+  /** Commit-log base name. The log is published as VERSIONED files
+    * `_graft_keyed_commit.v<seq>` (each holding the full retained
     * window whose head is <seq>), claimed by an ATOMIC EXCLUSIVE create
-    * — the CAS that closes the r15 last-rename-wins lost-update window:
-    * two committers racing for the same next seq cannot both win, the
-    * loser re-reads the fresh log (which now contains the winner's
-    * snapshot) and retries, so the log NEVER loses a commit. Readers
-    * resolve the highest seq on disk. The bare `_graft_keyed_commit`
-    * single file is the legacy (pre-r16) form, still readable; the
-    * first CAS commit over it sweeps it. Absent ⇒ legacy flat layout,
-    * read as-is. */
+    * — the CAS: two committers racing for the same next seq cannot both
+    * win, the loser re-reads the fresh log (which now contains the
+    * winner's snapshot) and retries, so the log NEVER loses a commit.
+    * Readers resolve the highest seq on disk. A path with no versioned
+    * log and no `k=` directories is an empty table; any other
+    * log-less layout is refused ([[readCommitLog]]). */
   val CommitFile = "_graft_keyed_commit"
 
   /** Metadata column: a row's ordinal within its key's concatenated
@@ -1759,17 +1737,11 @@ object KeyedSource {
     }
     out.toSeq
   }
-  private val CommitVersionV1 = "graft-keyed-commit v1"
-  private val CommitVersionV2 = "graft-keyed-commit v2"
-  private val CommitVersion = "graft-keyed-commit v3"
-  /** v4 = v3 + the optional per-snapshot deletion-vector field and the
-    * optional tags header field. Logs carrying either DECLARE v4 so a
-    * pre-r16 v3-only reader reports a version gap instead of a generic
-    * corruption; logs without them still write v3 (old readers keep
-    * working). The v4 parser is identical to v3's — r16 briefly wrote
-    * those fields under the v3 banner, and such logs must keep
-    * parsing. */
-  private val CommitVersionV4 = "graft-keyed-commit v4"
+  /** The one log dialect written and read. Header fields after the
+    * retain width are optional (ops, tags, stream epochs, branches);
+    * snapshot lines carry 4 fields, plus deletion vectors and a branch
+    * name when present. */
+  private val CommitVersion = "graft-keyed-commit v4"
   private val VersionedName = s"""\\Q$CommitFile\\E\\.v(\\d+)""".r
 
   /** One committed snapshot: monotone sequence number, the BASE
@@ -1843,6 +1815,16 @@ object KeyedSource {
       branches: Map[String, Long] = Map.empty) {
     require(snapshots.exists(_.branch.isEmpty),
       "commit log must retain at least one main snapshot")
+    /** This log with `snap` appended and the window trimmed to the
+      * wider of the log's `retain` and `retainAtLeast` (never below 1)
+      * — the one trimming append, so no commit path can shrink the
+      * window or expire a protected snapshot (tag and branch
+      * bookkeeping commits add their head duplicate untrimmed). */
+    def append(snap: Snapshot, retainAtLeast: Int = 0): CommitLog = {
+      val keep = math.max(math.max(retain, retainAtLeast), 1)
+      copy(retain = keep,
+        snapshots = trimWindow(snapshots :+ snap, keep, tags, branches))
+    }
     /** MAIN head: the latest snapshot not belonging to a branch —
       * every read/write surface that doesn't name a branch resolves
       * here, so branch commits are invisible to main by construction. */
@@ -1864,22 +1846,21 @@ object KeyedSource {
 
   /** Window trim that honors tag AND branch protection: keep the last
     * `keep` MAIN snapshots, every tagged one, every live branch's fork
-    * and own snapshots — the ONE trim for all commit paths, so no path
-    * can expire a protected snapshot. A dropped branch's snapshots
-    * lose protection and age out at the next commit's trim (the
-    * dropTag discipline). */
-  private[sources] def trimWindow(snapshots: Seq[Snapshot], keep: Int,
+    * and own snapshots ([[CommitLog.append]] is its one caller). A
+    * dropped branch's snapshots lose protection and age out at the
+    * next commit's trim (the dropTag discipline). */
+  private def trimWindow(snapshots: Seq[Snapshot], keep: Int,
       tags: Map[String, Long],
-      branches: Map[String, Long] = Map.empty): Seq[Snapshot] = {
+      branches: Map[String, Long]): Seq[Snapshot] = {
     val protectedSeqs = tags.values.toSet ++ branches.values
     val tail = snapshots.filter(_.branch.isEmpty)
-      .takeRight(math.max(keep, 1)).map(_.seq).toSet
+      .takeRight(keep).map(_.seq).toSet
     snapshots.filter(s => tail.contains(s.seq) || protectedSeqs.contains(s.seq) ||
       s.branch.exists(branches.contains))
   }
 
   /** Crash-window test hook (KeyedWriteSpec): when set, a commit does
-    * every write EXCEPT the pointer swap, then throws — simulating a
+    * every write EXCEPT the log claim, then throws — simulating a
     * failure between audit and publish. */
   @volatile private[graft] var failBeforePublish = false
 
@@ -1892,22 +1873,20 @@ object KeyedSource {
     new java.util.concurrent.atomic.AtomicReference[Runnable]()
 
   /** Resolve the root readers should list (head snapshot): the
-    * committed generation when a log exists, the path itself otherwise.
-    * Sidecar/order-marker reads resolve through this, so handing them
-    * an already-resolved generation directory is idempotent. */
+    * committed generation when a log exists, the path itself for an
+    * empty table. Sidecar/order-marker reads resolve through this, so
+    * a generation directory (`_gen-*`) passes through as itself. */
   private[graft] def effectiveRoot(path: String,
       hconf: org.apache.hadoop.conf.Configuration): String =
-    readCommitLog(path, hconf) match {
-      case Some(log) =>
-        new org.apache.hadoop.fs.Path(path, log.head.gen).toString
-      case None => path
-    }
+    if (new org.apache.hadoop.fs.Path(path).getName.startsWith("_gen-")) path
+    else readCommitLog(path, hconf).fold(path)(log =>
+      new org.apache.hadoop.fs.Path(path, log.head.gen).toString)
 
   /** One RESOLVED snapshot, bound once per scan build or row-level
-    * commit: the layout path, the snapshot's seq (0 = legacy flat
-    * layout — conflict detection for copy-on-write commits compares
-    * it against the fresh head), the base generation (None = legacy
-    * flat), tombstones, and the per-key generation edits. Every read
+    * commit: the layout path, the snapshot's seq (0 = empty table, no
+    * log yet — conflict detection for copy-on-write commits compares
+    * it against the fresh head), the base generation (None = empty
+    * table), tombstones, and the per-key generation edits. Every read
     * surface (partition listing, merged sidecar, order marker,
     * statistics, TopN budgets) answers from ONE view, so a racing
     * commit swaps the log without tearing a plan. */
@@ -1919,7 +1898,7 @@ object KeyedSource {
       * `<gen>/k=<k>/<file>`, relative to the layout root). */
     def dvPathsOf(k: String): Seq[String] = dvs.getOrElse(k, Seq.empty)
       .map(r => new org.apache.hadoop.fs.Path(layoutPath, r).toString)
-    /** Base-generation root (the layout path itself for legacy flat). */
+    /** Base-generation root (the layout path itself for an empty table). */
     def root: String = gen.fold(layoutPath)(g =>
       new org.apache.hadoop.fs.Path(layoutPath, g).toString)
     def genRoot(g: String): String =
@@ -1928,16 +1907,21 @@ object KeyedSource {
     /** Live keys and the directories serving each, base-generation
       * `k=` dirs first (tombstones pruned, edited keys overridden by
       * their generation list — multi-entry lists are row-level APPENDS
-      * and read in list order). */
+      * and read in list order). A committed base generation always
+      * exists (writers create it even for an empty write), so a
+      * missing one is damage and fails loudly, never an empty table. */
     def liveKeyDirs(hconf: org.apache.hadoop.conf.Configuration)
         : Seq[(String, Seq[String])] = {
       val rootPath = new org.apache.hadoop.fs.Path(root)
       val fs = rootPath.getFileSystem(hconf)
-      val base: Seq[String] =
-        if (fs.exists(rootPath)) fs.listStatus(rootPath).toSeq
+      val base: Seq[String] = gen.fold(Seq.empty[String]) { g =>
+        if (!fs.exists(rootPath)) throw new IllegalStateException(
+          s"graft-keyed snapshot $seq at $layoutPath names generation $g, " +
+            "which is missing — the layout is damaged")
+        fs.listStatus(rootPath).toSeq
           .filter(s => s.isDirectory && s.getPath.getName.startsWith("k="))
           .map(_.getPath.getName.stripPrefix("k="))
-        else Seq.empty
+      }
       base.filterNot(tombstones.contains).filterNot(edits.contains)
         .map(k => k -> Seq(new org.apache.hadoop.fs.Path(root, s"k=$k").toString)) ++
         edits.toSeq.map { case (k, gs) =>
@@ -1968,40 +1952,38 @@ object KeyedSource {
         SnapshotView(path, snap.seq, Some(snap.gen), snap.tombstones,
           snap.edits, log.ops, snap.dvs)
       case None =>
-        asOf.foreach { seq =>
-          throw new IllegalArgumentException(
-            s"graft-keyed asOf=$seq requires a generation-committed layout " +
-              s"but $path has no snapshot log (legacy flat stage); " +
-              "restage through the connector writer first")
-        }
+        asOf.foreach(seq => requireLog(path, None, s"asOf=$seq"))
         SnapshotView(path, 0L, None, Set.empty, Map.empty)
     }
 
   /** Spec-facing twin of [[effectiveRoot]] (the specs that doctor
     * layout internals — delete a sidecar, inspect k= directories —
-    * must aim at the COMMITTED generation, not the pointer root). */
+    * must aim at the COMMITTED generation, not the layout root). */
   private[graft] def committedRoot(spark: SparkSession, path: String): String =
     effectiveRoot(path, spark.sessionState.newHadoopConf())
 
-  /** Versioned log files under `path`, as (seq, fileName), unsorted. */
-  private def versionedLogs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[(Long, String)] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.flatMap(s => s.getPath.getName match {
+  /** Versioned log files in a root listing, as (seq, fileName),
+    * unsorted. */
+  private def versionedLogs(listing: Seq[org.apache.hadoop.fs.FileStatus])
+      : Seq[(Long, String)] =
+    listing.flatMap(s => s.getPath.getName match {
       case VersionedName(seq) if s.isFile => Some((seq.toLong, s.getPath.getName))
       case _ => None
     })
 
-  /** Parse the commit log: the HIGHEST versioned file, or the legacy
-    * single file when none exists. v1 single-pointer content
-    * (pre-snapshot-log commits) reads as a one-snapshot window — seq 1,
-    * no tombstones, retain 1 — and v2 (pre-CAS) single-file content
-    * still parses, so layouts committed by older code keep resolving.
-    * A present but unparseable file fails loudly: corruption of a file
-    * this connector owns, not a foreign layout. A versioned file
-    * vanishing between list and read is a RACING COMMIT's cleanup of a
-    * superseded log, not corruption — re-list and resolve the newer
-    * head. */
+  private def listRoot(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty
+
+  /** Parse the commit log: the HIGHEST versioned file. None = an empty
+    * table (no log, no `k=` directories). A root that holds `k=`
+    * directories or an unversioned `_graft_keyed_commit` file but no
+    * versioned log is not a layout this connector wrote, and is refused
+    * loudly rather than read as something it might not be. A present
+    * but unparseable log fails loudly too: corruption of a file this
+    * connector owns. A versioned file vanishing between list and read
+    * is a RACING COMMIT's cleanup of a superseded log, not corruption —
+    * re-list and resolve the newer head. */
   private[graft] def readCommitLog(path: String,
       hconf: org.apache.hadoop.conf.Configuration): Option[CommitLog] = {
     val root = new org.apache.hadoop.fs.Path(path)
@@ -2009,14 +1991,20 @@ object KeyedSource {
     var attempt = 0
     while (true) {
       attempt += 1
-      val versioned = versionedLogs(fs, root)
-      val p =
-        if (versioned.nonEmpty)
-          new org.apache.hadoop.fs.Path(root, versioned.maxBy(_._1)._2)
-        else new org.apache.hadoop.fs.Path(root, CommitFile)
-      if (versioned.isEmpty && !fs.exists(p)) return None
+      val listing = listRoot(fs, root)
+      val versioned = versionedLogs(listing)
+      if (versioned.isEmpty) {
+        if (listing.exists(s => s.getPath.getName == CommitFile ||
+            (s.isDirectory && s.getPath.getName.startsWith("k="))))
+          throw new UnsupportedOperationException(
+            s"graft-keyed layout at $path has data or an unversioned " +
+              s"$CommitFile but no versioned commit log — not a " +
+              "generation-committed layout; restage it through the " +
+              "connector writer")
+        return None
+      }
       try {
-        val in = fs.open(p)
+        val in = fs.open(new org.apache.hadoop.fs.Path(root, versioned.maxBy(_._1)._2))
         val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
           finally in.close()
         return Some(parseCommitLog(path, text))
@@ -2027,13 +2015,25 @@ object KeyedSource {
     None // unreachable
   }
 
+  /** The committed log, or the ONE loud refusal for surfaces that need
+    * history (appends, DML, tags, branches, changes, compaction,
+    * time travel) on a path that has none yet. */
+  private[graft] def requireLog(path: String, log: Option[CommitLog],
+      what: String): CommitLog =
+    log.getOrElse(throw new UnsupportedOperationException(
+      s"graft-keyed $what requires a generation-committed layout, but " +
+        s"$path has no commit log — stage it through the connector " +
+        "writer (stageKeyed or mode('overwrite')) first"))
+
+  private[graft] def requireLog(path: String,
+      hconf: org.apache.hadoop.conf.Configuration, what: String): CommitLog =
+    requireLog(path, readCommitLog(path, hconf), what)
+
   private def parseCommitLog(path: String, text: String): CommitLog = {
     def corrupt(): Nothing = {
       val hint =
-        if (text.startsWith("graft-keyed-commit") &&
-            !Seq(CommitVersionV1, CommitVersionV2, CommitVersion,
-              CommitVersionV4).exists(text.startsWith))
-          " (unrecognized format version — written by a newer graft build?)"
+        if (text.startsWith("graft-keyed-commit") && !text.startsWith(CommitVersion))
+          s" (unsupported format version — this build reads '$CommitVersion' only)"
         else ""
       throw new IllegalStateException(
         s"graft-keyed commit log corrupted at $path$hint: '${text.take(80)}'")
@@ -2064,35 +2064,18 @@ object KeyedSource {
     val lines = text.split("\n", -1).filter(_.nonEmpty)
     if (lines.isEmpty) corrupt()
     lines.head.split(PageSource.US, -1) match {
-      case Array(CommitVersionV1, gen) if gen.nonEmpty && lines.length == 1 =>
-        CommitLog(1, Seq(Snapshot(1L, gen, Set.empty)))
-      case Array(v, retain, rest @ _*)
-          if (v == CommitVersion || v == CommitVersionV4 ||
-            (v == CommitVersionV2 && rest.isEmpty)) &&
-          lines.length >= 2 && rest.length <= 4 =>
+      case Array(CommitVersion, retain, rest @ _*)
+          if lines.length >= 2 && rest.length <= 4 =>
         val snaps = lines.tail.toSeq.map { line =>
           line.split(PageSource.US, -1) match {
-            case Array(seq, gen, tombCsv) if gen.nonEmpty =>
-              Snapshot(long(seq), gen,
-                tombCsv.split(",", -1).filter(_.nonEmpty).toSet)
-            case Array(seq, gen, tombCsv, editsCsv) if gen.nonEmpty &&
-                v != CommitVersionV2 =>
-              Snapshot(long(seq), gen,
-                tombCsv.split(",", -1).filter(_.nonEmpty).toSet,
-                parseEdits(editsCsv))
-            case Array(seq, gen, tombCsv, editsCsv, dvCsv) if gen.nonEmpty &&
-                v != CommitVersionV2 =>
+            // optional field 5: deletion vectors; optional field 6: a
+            // BRANCH commit's branch name (field 5 may then be empty)
+            case Array(seq, gen, tombCsv, editsCsv, opt @ _*)
+                if gen.nonEmpty && opt.length <= 2 =>
               Snapshot(long(seq), gen,
                 tombCsv.split(",", -1).filter(_.nonEmpty).toSet,
-                parseEdits(editsCsv), parseEdits(dvCsv))
-            case Array(seq, gen, tombCsv, editsCsv, dvCsv, br) if gen.nonEmpty &&
-                v != CommitVersionV2 =>
-              // 6-field form (v4): a BRANCH commit's snapshot — field 6
-              // names the branch; field 5 may be an empty placeholder
-              Snapshot(long(seq), gen,
-                tombCsv.split(",", -1).filter(_.nonEmpty).toSet,
-                parseEdits(editsCsv), parseEdits(dvCsv),
-                branch = Some(br).filter(_.nonEmpty))
+                parseEdits(editsCsv), parseEdits(opt.headOption.getOrElse("")),
+                branch = opt.lift(1).filter(_.nonEmpty))
             case _ => corrupt()
           }
         }
@@ -2106,10 +2089,10 @@ object KeyedSource {
         CommitLog(long(retain).toInt, snaps,
           rest.headOption.fold(Seq.empty[SchemaOp])(parseOps),
           nameLongMap(rest.lift(1)),
-          // header field 3 (v4): per-streaming-query max committed
-          // epoch — the exactly-once dedup marker for replayed epochs
+          // header field 3: per-streaming-query max committed epoch —
+          // the exactly-once dedup marker for replayed epochs
           nameLongMap(rest.lift(2)),
-          // header field 4 (v4): live branches, name -> fork seq
+          // header field 4: live branches, name -> fork seq
           nameLongMap(rest.lift(3)))
       case _ => corrupt()
     }
@@ -2117,14 +2100,7 @@ object KeyedSource {
 
   private[sources] def renderCommitLog(log: CommitLog): String = {
     val sb = new StringBuilder
-    val needsV4 = log.tags.nonEmpty || log.streams.nonEmpty ||
-      log.branches.nonEmpty || log.snapshots.exists(s =>
-        s.dvs.nonEmpty || s.branch.isDefined) ||
-      // widen ops are an r18 addition — declare v4 so a pre-r16 v3-only
-      // reader reports a version gap, not generic corruption
-      log.ops.exists(_.isInstanceOf[WidenCol])
-    sb.append(if (needsV4) CommitVersionV4 else CommitVersion)
-      .append(PageSource.US).append(log.retain)
+    sb.append(CommitVersion).append(PageSource.US).append(log.retain)
     val hdr3 = log.streams.nonEmpty || log.branches.nonEmpty
     if (log.ops.nonEmpty || log.tags.nonEmpty || hdr3)
       sb.append(PageSource.US).append(log.ops.map {
@@ -2191,67 +2167,41 @@ object KeyedSource {
   }
 
   /** CAS publish: claim `_graft_keyed_commit.v<head.seq>` exclusively.
-    * TRUE = the commit is visible (and superseded log files, the legacy
-    * single file, and stale `.tmp-*` leftovers from crashed publishes
-    * were swept); FALSE = a concurrent committer claimed this seq first
-    * — the caller re-reads the fresh log (now containing the winner's
-    * snapshot) and rebuilds, so no commit is ever silently lost. */
+    * TRUE = the commit is visible; FALSE = a concurrent committer
+    * claimed this seq first — the caller re-reads the fresh log (now
+    * containing the winner's snapshot) and rebuilds, so no commit is
+    * ever silently lost. */
   private[graft] def publishLog(path: String, log: CommitLog,
       hconf: org.apache.hadoop.conf.Configuration): Boolean = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(hconf)
-    val nonce = java.util.UUID.randomUUID().toString
-    val tmpName = s"$CommitFile.tmp-$nonce"
+    val tmpName = s"$CommitFile.tmp-${java.util.UUID.randomUUID()}"
     val tmp = new org.apache.hadoop.fs.Path(root, tmpName)
     val dst = new org.apache.hadoop.fs.Path(root,
       s"$CommitFile.v${log.snapshots.last.seq}")
     writeFile(fs, tmp, renderCommitLog(log))
     val won = claimExclusive(fs, tmp, dst)
     // own tmp (and its checksum twin) goes either way — the claim
-    // copied/renamed it; a leftover would only accumulate (r15 ADVICE)
-    fs.delete(tmp, false)
-    val tmpCrc = new org.apache.hadoop.fs.Path(root, s".$tmpName.crc")
-    if (fs.exists(tmpCrc)) fs.delete(tmpCrc, false)
-    if (won) {
-      // sweep superseded artifacts: older versioned logs, the legacy
-      // single file, their checksum twins, and stale tmp files from
-      // crashed publishes. All best-effort AFTER the claim — readers
-      // resolve the max seq, so leftovers are dead weight, never a
-      // torn log; a racing reader that listed an older file re-lists
-      // on FileNotFound (readCommitLog).
-      versionedLogs(fs, root).filter(_._1 < log.snapshots.last.seq).foreach { case (_, n) =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, n), false)
-        val c = new org.apache.hadoop.fs.Path(root, s".$n.crc")
-        if (fs.exists(c)) fs.delete(c, false)
-      }
-      val legacy = new org.apache.hadoop.fs.Path(root, CommitFile)
-      if (fs.exists(legacy)) fs.delete(legacy, false)
-      val legacyCrc = new org.apache.hadoop.fs.Path(root, s".$CommitFile.crc")
-      if (fs.exists(legacyCrc)) fs.delete(legacyCrc, false)
-      // STALE tmp files only — past the staleness grace. A younger tmp
-      // is a CONCURRENT committer's publish in flight between its
-      // writeFile and its claim; sweeping it would fail that commit
-      // with a context-free NoSuchFileException (found by the
-      // two-writer race spec under load — the r15 "sweep orphan tmps"
-      // fix must not race the committers the r16 CAS now supports).
-      // Crashed-publish orphans are minutes old and still get swept.
-      val tmpCutoff = System.currentTimeMillis() - stagingGraceMs
-      fs.listStatus(root).foreach { s =>
-        val n = s.getPath.getName
-        if (n.startsWith(s"$CommitFile.tmp-") && n != tmpName &&
-            s.getModificationTime <= tmpCutoff)
-          fs.delete(s.getPath, false)
-      }
+    // copied/renamed it; a leftover is swept as stale by a later commit
+    quietly(s"commit tmp cleanup at $path") {
+      fs.delete(tmp, false)
+      fs.delete(new org.apache.hadoop.fs.Path(root, s".$tmpName.crc"), false)
     }
     won
   }
 
-  /** Read-build-publish retry loop shared by every commit kind (write,
-    * delete, row-level). `build` sees the FRESH log each attempt (None
-    * = no log yet) and returns the candidate (None = nothing to commit,
-    * a visible no-op). A CAS loss re-runs `build` against the fresh log
-    * — the loser's snapshot lands AFTER the winner's in seq order;
-    * after `maxAttempts` losses it fails loudly rather than spin. */
+  /** Read-build-publish retry loop: the ONE commit path for every commit
+    * kind. `build` sees the FRESH log each attempt (None = no log yet)
+    * and returns the candidate (None = nothing to commit, a visible
+    * no-op). A CAS loss re-runs `build` against the fresh log — the
+    * loser's snapshot lands AFTER the winner's in seq order; after
+    * `maxAttempts` losses it fails loudly rather than spin. Once the
+    * claim wins the commit is visible, so the cleanup that follows
+    * ([[expireGenerations]]) is best-effort: this throws only when
+    * nothing was published. Callers delete their own staging
+    * generation when this throws (DSv2 `abort`, compaction) — a
+    * cleanup failure surfacing here would delete the generation the
+    * new head references. */
   private[sources] def commitLoop(path: String,
       hconf: org.apache.hadoop.conf.Configuration, what: String,
       maxAttempts: Int = 8)(
@@ -2265,7 +2215,11 @@ object KeyedSource {
         case Some(candidate) =>
           val h = raceHook.getAndSet(null)
           if (h != null) h.run()
-          if (publishLog(path, candidate, hconf)) return Some(candidate)
+          if (publishLog(path, candidate, hconf)) {
+            quietly(s"post-$what cleanup at $path")(
+              expireGenerations(path, prior, candidate, hconf))
+            return Some(candidate)
+          }
       }
     }
     throw new IllegalStateException(
@@ -2273,6 +2227,16 @@ object KeyedSource {
         "(another committer keeps claiming the next snapshot seq); giving up " +
         "rather than spin — retry the operation")
   }
+
+  /** Run cleanup whose failure must not fail the operation: what it
+    * leaves behind is dead weight a later commit sweeps. Fatal errors
+    * (OOM, interrupts) still propagate. */
+  private def quietly(what: String)(body: => Unit): Unit =
+    try body catch {
+      case scala.util.control.NonFatal(e) =>
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .warn(s"graft-keyed $what failed; a later commit retries it", e)
+    }
 
   /** The codec the layout's CURRENT data files carry, by extension
     * probe of one committed file ("deflate" | "none") — how derivative
@@ -2305,30 +2269,40 @@ object KeyedSource {
     * "sometime later"). */
   @volatile private[graft] var stagingGraceMs: Long = 15L * 60L * 1000L
 
-  /** Delete every `_gen-*` directory under `path` that no retained
-    * snapshot references — superseded generations past the retention
-    * window and stale staging from crashed writes alike. Runs AFTER
-    * the log swap, so a crash mid-sweep leaves orphans a later commit
-    * removes, never a broken layout. `known` names generations this
-    * commit POSITIVELY superseded (prior-window gens its trim dropped)
-    * — swept regardless of age; every other unreferenced `_gen-*` is
-    * swept only past [[stagingGraceMs]], protecting concurrent
-    * writers' in-flight staging (commits serialize through the CAS,
-    * but staging is concurrent by design). Called only from WRITE
-    * commits: a DELETE expires the generations its own window-trim
-    * dropped and nothing else (a blanket sweep from a "metadata-only"
-    * operation could reap an in-flight writer's staging — r15
-    * review). */
-  private[sources] def expireGenerations(path: String, live: Set[String],
-      hconf: org.apache.hadoop.conf.Configuration,
-      known: Set[String] = Set.empty): Unit = {
+  /** After `published` claimed its seq: delete what it made dead, from
+    * one listing of the root — superseded versioned logs (and their
+    * checksum twins), stale `.tmp-*` files from crashed publishes, and
+    * every `_gen-*` directory no retained snapshot references.
+    * Generations the prior window referenced but the new one dropped
+    * are POSITIVELY dead and go regardless of age; any other
+    * unreferenced `_gen-*` (or tmp file) is swept only past
+    * [[stagingGraceMs]] — it may be a concurrent writer's in-flight
+    * staging or publish (commits serialize through the CAS, staging is
+    * concurrent by design). Readers resolve the max seq first, so a
+    * crash mid-sweep leaves orphans a later commit removes, never a
+    * broken layout; a racing reader that listed an older log re-lists
+    * on FileNotFound ([[readCommitLog]]). Called only by
+    * [[commitLoop]], best-effort. */
+  private def expireGenerations(path: String, prior: Option[CommitLog],
+      published: CommitLog, hconf: org.apache.hadoop.conf.Configuration): Unit = {
+    def gensOf(log: CommitLog) = log.snapshots.flatMap(_.referencedGens).toSet
+    val live = gensOf(published)
+    val known = prior.fold(Set.empty[String])(gensOf) -- live
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(hconf)
+    val listing = listRoot(fs, root)
+    versionedLogs(listing).filter(_._1 < published.snapshots.last.seq)
+      .foreach { case (_, n) =>
+        fs.delete(new org.apache.hadoop.fs.Path(root, n), false)
+        fs.delete(new org.apache.hadoop.fs.Path(root, s".$n.crc"), false)
+      }
     val cutoff = System.currentTimeMillis() - stagingGraceMs
-    fs.listStatus(root).foreach { s =>
+    listing.foreach { s =>
       val n = s.getPath.getName
-      if (s.isDirectory && n.startsWith("_gen-") && !live.contains(n) &&
-          (known.contains(n) || s.getModificationTime <= cutoff))
+      val stale = s.getModificationTime <= cutoff
+      if (n.startsWith(s"$CommitFile.tmp-") && stale) fs.delete(s.getPath, false)
+      else if (s.isDirectory && n.startsWith("_gen-") && !live.contains(n) &&
+          (known.contains(n) || stale))
         fs.delete(s.getPath, true)
     }
   }
@@ -2394,20 +2368,13 @@ object KeyedSource {
     require(ops.nonEmpty, "evolveKeyed needs at least one op")
     val hconf = spark.sessionState.newHadoopConf()
     commitLoop(path, hconf, "schema evolution") { prior =>
-      val log = prior.getOrElse(throw new UnsupportedOperationException(
-        s"graft-keyed schema evolution is a snapshot-log commit, but $path " +
-          "has no commit log (legacy flat stage) — restage through the " +
-          "connector writer first"))
+      val log = requireLog(path, prior, "schema evolution")
       // validate against the full lineage (existing + new)
       val evolved = applyOps(current, ops, log.ops)
       require(evolved != null) // applyOps throws with context on any violation
       val head = log.head
-      val keep = math.max(log.retain, 1)
-      Some(CommitLog(keep,
-        trimWindow(log.snapshots :+ Snapshot(log.nextSeq, head.gen,
-          head.tombstones, head.edits, head.dvs), keep, log.tags,
-          log.branches),
-        log.ops ++ ops, log.tags, log.streams, log.branches))
+      Some(log.copy(ops = log.ops ++ ops).append(Snapshot(log.nextSeq,
+        head.gen, head.tombstones, head.edits, head.dvs)))
     }
     applyOps(current, ops, Seq.empty)
   }
@@ -2438,10 +2405,7 @@ object KeyedSource {
     val hconf = spark.sessionState.newHadoopConf()
     var tagged = 0L
     commitLoop(path, hconf, "tag commit") { prior =>
-      val log = prior.getOrElse(throw new UnsupportedOperationException(
-        s"graft-keyed tags live in the snapshot log, but $path has no " +
-          "commit log (legacy flat stage) — restage through the connector " +
-          "writer first"))
+      val log = requireLog(path, prior, "tag commit")
       val target = seq.getOrElse(log.head.seq)
       if (!log.snapshots.exists(_.seq == target))
         throw new IllegalArgumentException(
@@ -2457,8 +2421,8 @@ object KeyedSource {
       // tombstones, edits — zero data, zero visible change, CDC nets
       // it to nothing): the CAS claims log files by head seq, so a
       // metadata-only commit must advance it (the evolveKeyed
-      // precedent — a tag is auditable history). No trim here: expiry
-      // stays a write-commit side effect.
+      // precedent — a tag is auditable history). No trim here, so no
+      // retained snapshot expires with a tag commit.
       Some(log.copy(
         snapshots = log.snapshots :+ Snapshot(log.nextSeq,
           log.head.gen, log.head.tombstones, log.head.edits, log.head.dvs),
@@ -2468,22 +2432,21 @@ object KeyedSource {
   }
 
   /** Drop a tag. The previously-protected snapshot stays readable
-    * until the NEXT commit's window trim ages it out (dropping a tag
-    * never deletes data by itself — expiry stays a write-commit
-    * side effect, the q64 discipline). Unknown tags refuse. */
+    * until the NEXT trimming commit ages it out (dropping a tag never
+    * deletes data by itself — the q64 discipline). Unknown tags
+    * refuse. */
   def dropTag(spark: org.apache.spark.sql.SparkSession, path: String,
       tag: String): Unit = {
     val hconf = spark.sessionState.newHadoopConf()
     commitLoop(path, hconf, "tag drop") { prior =>
-      val log = prior.getOrElse(throw new UnsupportedOperationException(
-        s"graft-keyed tags live in the snapshot log, but $path has no commit log"))
+      val log = requireLog(path, prior, "tag drop")
       if (!log.tags.contains(tag)) throw new IllegalArgumentException(
         s"graft-keyed tag '$tag' does not exist at $path " +
           s"(tags: ${log.tags.keys.toSeq.sorted.mkString(",") match {
             case "" => "none"; case s => s }})")
       // head-duplicate seq burn for the CAS claim (tagSnapshot note);
-      // the now-unprotected snapshot stays until the next write
-      // commit's trim — dropping a tag never deletes data itself
+      // the now-unprotected snapshot stays until the next trimming
+      // commit — dropping a tag never deletes data itself
       Some(log.copy(
         snapshots = log.snapshots :+ Snapshot(log.nextSeq,
           log.head.gen, log.head.tombstones, log.head.edits, log.head.dvs),
@@ -2496,9 +2459,7 @@ object KeyedSource {
     * tag list when absent. */
   private[sources] def resolveTag(path: String,
       hconf: org.apache.hadoop.conf.Configuration, tag: String): Long = {
-    val log = readCommitLog(path, hconf).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-keyed tag '$tag' cannot resolve: $path has no commit log"))
+    val log = requireLog(path, hconf, s"tag '$tag'")
     log.tags.getOrElse(tag, throw new IllegalArgumentException(
       s"graft-keyed tag '$tag' does not exist at $path " +
         s"(tags: ${log.tags.keys.toSeq.sorted.mkString(",") match {
@@ -2533,10 +2494,7 @@ object KeyedSource {
     val hconf = spark.sessionState.newHadoopConf()
     var fork = 0L
     commitLoop(path, hconf, "branch create") { prior =>
-      val log = prior.getOrElse(throw new UnsupportedOperationException(
-        s"graft-keyed branches live in the snapshot log, but $path has no " +
-          "commit log (legacy flat stage) — restage through the connector " +
-          "writer first"))
+      val log = requireLog(path, prior, "branch create")
       val target = seq.getOrElse(log.head.seq)
       if (!log.snapshots.exists(s => s.seq == target && s.branch.isEmpty))
         throw new IllegalArgumentException(
@@ -2564,8 +2522,7 @@ object KeyedSource {
       name: String): Unit = {
     val hconf = spark.sessionState.newHadoopConf()
     commitLoop(path, hconf, "branch drop") { prior =>
-      val log = prior.getOrElse(throw new UnsupportedOperationException(
-        s"graft-keyed branches live in the snapshot log, but $path has no commit log"))
+      val log = requireLog(path, prior, "branch drop")
       if (!log.branches.contains(name)) throw new IllegalArgumentException(
         s"graft-keyed branch '$name' does not exist at $path " +
           s"(branches: ${log.branches.keys.toSeq.sorted.mkString(",") match {
@@ -2615,8 +2572,7 @@ object KeyedSource {
     val hconf = spark.sessionState.newHadoopConf()
     var promoted = 0L
     commitLoop(path, hconf, "branch promote") { prior =>
-      val log = prior.getOrElse(throw new UnsupportedOperationException(
-        s"graft-keyed branches live in the snapshot log, but $path has no commit log"))
+      val log = requireLog(path, prior, "branch promote")
       val fork = log.branches.getOrElse(name, throw new IllegalArgumentException(
         s"graft-keyed branch '$name' does not exist at $path " +
           s"(branches: ${log.branches.keys.toSeq.sorted.mkString(",") match {
@@ -2663,11 +2619,7 @@ object KeyedSource {
       promoted = adopted.seq
       // the branch is consumed (write-audit-publish: promote IS the
       // publish — fast-forward and rebase alike are metadata-only)
-      Some(log.copy(
-        snapshots = KeyedSource.trimWindow(
-          log.snapshots :+ adopted,
-          math.max(log.retain, 1), log.tags, log.branches - name),
-        branches = log.branches - name))
+      Some(log.copy(branches = log.branches - name).append(adopted))
     }
     promoted
   }
@@ -2676,9 +2628,7 @@ object KeyedSource {
     * the known branch list when absent. */
   private[sources] def resolveBranch(path: String,
       hconf: org.apache.hadoop.conf.Configuration, name: String): Long = {
-    val log = readCommitLog(path, hconf).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-keyed branch '$name' cannot resolve: $path has no commit log"))
+    val log = requireLog(path, hconf, s"branch '$name'")
     log.branchHead(name).seq
   }
 
@@ -2880,20 +2830,12 @@ object KeyedSource {
       case _ => row.getUTF8String(i).clone()
     }
 
-  /** Spec-facing: remove every commit-log artifact (versioned files,
-    * the legacy single file, checksum twins) so a layout can be
-    * doctored into the pre-connector FLAT form. */
-  private[graft] def dropCommitLog(path: String,
-      hconf: org.apache.hadoop.conf.Configuration): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(hconf)
-    (versionedLogs(fs, root).map(_._2) :+ CommitFile).foreach { n =>
-      val p = new org.apache.hadoop.fs.Path(root, n)
-      if (fs.exists(p)) fs.delete(p, false)
-      val c = new org.apache.hadoop.fs.Path(root, s".$n.crc")
-      if (fs.exists(c)) fs.delete(c, false)
-    }
-  }
+  /** Writer fan-out for the connector's DSv2 writes: the active (else
+    * default) session's shuffle parallelism, 0 (= let Spark choose)
+    * when there is no session. */
+  private[sources] def sessionWriteParallelism: Int =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(0)(_.sessionState.conf.numShufflePartitions)
 
   /** Parse a numeric read/write option with a remediating error: a
     * malformed value (option("asOf", "v1")) must name the option and
@@ -2944,7 +2886,7 @@ object KeyedSource {
     * not sorted) and every generation serving live keys carries an
     * IDENTICAL valid marker (a copy-on-write rewrite staged without
     * the layout's sortBy must poison the claim). Edit-free snapshots
-    * and legacy flat layouts reduce to the single base-root read. */
+    * reduce to the single base-root read. */
   private[graft] def readOrderMarkerView(view: SnapshotView,
       conf: org.apache.spark.util.SerializableConfiguration,
       declared: StructType, key: String): Option[Seq[String]] = {

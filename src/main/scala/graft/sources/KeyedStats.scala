@@ -20,7 +20,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * non-deterministic input cannot desynchronize data and stats,
   * because both are the same pass over the same rows — without paying
   * a second scan per stage, and the sidecar commits ATOMICALLY with
-  * the data (same generation, same pointer swap).
+  * the data (same generation, made visible by the same CAS claim of
+  * the next versioned commit log).
   *
   * [[KeyedScanBuilder.pushAggregation]] then answers
   * COUNT(*)/COUNT(col)/MIN/MAX/SUM — bare or grouped by the layout
@@ -453,7 +454,7 @@ object KeyedStats {
       widened: Set[String] = Set.empty,
       ops: Seq[KeyedSource.SchemaOp] = Seq.empty): Option[Sidecar] = {
     // resolve the committed generation (idempotent when handed a
-    // generation dir or a legacy flat layout directly)
+    // generation dir directly)
     val root = KeyedSource.effectiveRoot(path, conf.value)
     val p = new org.apache.hadoop.fs.Path(root, SidecarFile)
     val fs = p.getFileSystem(conf.value)
@@ -1057,9 +1058,9 @@ final class KeyedStatsReaderFactory extends PartitionReaderFactory {
   * remove, and which snapshots still see it?") without shelling into
   * layout internals. Driver-computed like [[KeyedStatsScan]] (bounded
   * by retain × |key domain| sidecar lines, zero data files) and
-  * reusing its partition/reader. A layout with no commit log (legacy
-  * flat stage) reports ZERO snapshots — nothing was committed, so
-  * nothing is claimed; a committed generation whose sidecar is missing
+  * reusing its partition/reader. A path with no commit log (an empty
+  * table) reports ZERO snapshots — nothing was committed, so nothing
+  * is claimed; a committed generation whose sidecar is missing
   * (foreign mutation) reports NULL keys/rows rather than guessing. */
 final class KeyedSnapshotsScanBuilder(declared: StructType, path: String,
     key: String, conf: org.apache.spark.util.SerializableConfiguration)

@@ -54,16 +54,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * file-reference mechanism row-level MERGE inserts use), so live
   * files are never rewritten in place (the torn-read the pre-log
   * connector refused appends to avoid no longer exists — generations
-  * are immutable and visibility is one atomic log swap). Appended
+  * are immutable and visibility is one CAS claim of the next
+  * versioned log). Appended
   * keys are served by >1 file until a compaction rewrites them
   * (ordering claims drop meanwhile — readOrderMarkerView); the
   * changes table prices an append interval at O(delta) because only
   * the appended directories differ by reference. Pure additions
   * cannot write-skew, so an append retries the CAS loop against a
   * fresh head instead of failing like row-level DML (Iceberg's
-  * append-vs-validate line). Appending to a layout with NO commit log
-  * refuses: a legacy flat stage must first be restaged through the
-  * connector writer.
+  * append-vs-validate line). Appending to a path with NO commit log
+  * refuses ([[KeyedSource.requireLog]]): stage it first.
   *
   * COMMITS SERIALIZE THROUGH THE CAS (r16 — the r15 last-rename-wins
   * window is closed): publish claims the versioned log file for the
@@ -152,11 +152,8 @@ final class KeyedWrite(schema: StructType, path: String, key: String,
   // parallelism is an I/O-fan-out decision, not a bytes-per-task
   // decision, so it follows spark.sql.shuffle.partitions — the knob
   // that already scales with deployment size — rather than the
-  // advisory byte target. 0 (= let Spark choose) if no active session.
-  private val writeParallelism: Int =
-    try org.apache.spark.sql.SparkSession.active.sessionState.conf
-      .numShufflePartitions
-    catch { case _: Throwable => 0 }
+  // advisory byte target. 0 (= let Spark choose) if no session.
+  private val writeParallelism: Int = KeyedSource.sessionWriteParallelism
   override def requiredNumPartitions(): Int = writeParallelism
   override def requiredOrdering(): Array[SortOrder] =
     (key +: sortBy).map(c =>
@@ -204,57 +201,20 @@ final class KeyedBatchWrite(schema: StructType, path: String, key: String,
       "graft-keyed test hook: crash before publish")
     if (!overwrite) { appendCommit(entries, fs, root, gen); return }
     // PUBLISH: append the new snapshot to the retained window and claim
-    // the next seq through the CAS (KeyedSource.publishLog) — a
+    // the next seq through the CAS (KeyedSource.commitLoop) — a
     // concurrent committer winning the seq makes the loop rebuild
     // against the FRESH log (the winner's snapshot included), so no
-    // commit is ever silently superseded pre-publish. An overwrite
-    // commit starts with an empty tombstone/edit set (the new
-    // generation IS the new truth). The retention window never SHRINKS
-    // as a side effect of a default-options overwrite: honor the wider
-    // of the log's persisted retain and this write's declared one
-    // (r15 ADVICE — deleteWhere already took the max for the same
-    // reason).
-    var wasLegacyFlat = false
-    var priorGens = Set.empty[String]
-    val published = KeyedSource.commitLoop(path, hconf, "write commit") { prior =>
-      wasLegacyFlat = prior.isEmpty
-      priorGens = prior.fold(Set.empty[String])(_.snapshots
-        .flatMap(_.referencedGens).toSet)
-      val newSeq = prior.map(_.nextSeq).getOrElse(1L)
-      val keep = math.max(math.max(prior.fold(1)(_.retain), retain), 1)
-      Some(KeyedSource.CommitLog(keep,
-        KeyedSource.trimWindow(prior.map(_.snapshots).getOrElse(Seq.empty) :+
-          KeyedSource.Snapshot(newSeq, genName, Set.empty), keep,
-          prior.fold(Map.empty[String, Long])(_.tags),
-          prior.fold(Map.empty[String, Long])(_.branches)),
-        prior.fold(Seq.empty[KeyedSource.SchemaOp])(_.ops),
-        prior.fold(Map.empty[String, Long])(_.tags),
-        prior.fold(Map.empty[String, Long])(_.streams),
-        prior.fold(Map.empty[String, Long])(_.branches)))
-    }.get
-    // cleanup AFTER the claim — readers resolve the log first, so
-    // everything below is dead weight; a crash here leaves orphans a
-    // later commit removes, never a broken layout. When the previous
-    // layout was a legacy FLAT stage, its root-level k=* directories
-    // and metadata files go too.
-    if (wasLegacyFlat) {
-      fs.listStatus(root).foreach { s =>
-        val n = s.getPath.getName
-        if ((s.isDirectory && n.startsWith("k=")) ||
-            n == KeyedStats.SidecarFile || n == KeyedSource.OrderFile ||
-            n == s".${KeyedStats.SidecarFile}.crc" || n == s".${KeyedSource.OrderFile}.crc")
-          fs.delete(s.getPath, true)
-      }
+    // commit is ever silently superseded. An overwrite commit starts
+    // with an empty tombstone/edit set (the new generation IS the new
+    // truth); the first commit on an empty path starts the log. The
+    // retention window never SHRINKS as a side effect of a
+    // default-options overwrite (CommitLog.append keeps the wider of
+    // the log's persisted retain and this write's declared one).
+    KeyedSource.commitLoop(path, hconf, "write commit") { prior =>
+      Some(prior.fold(KeyedSource.CommitLog(math.max(retain, 1),
+          Seq(KeyedSource.Snapshot(1L, genName, Set.empty))))(log =>
+        log.append(KeyedSource.Snapshot(log.nextSeq, genName, Set.empty), retain)))
     }
-    // expire: superseded generations past the retention window AND
-    // stale staging from crashed/aborted writes. Generations the prior
-    // window referenced but the new one dropped are POSITIVELY dead
-    // (swept now); any other unreferenced `_gen-*` may be a concurrent
-    // writer's in-flight staging and is swept only past the staleness
-    // grace (expireGenerations scaladoc).
-    val live = published.snapshots
-      .flatMap(_.referencedGens).toSet
-    KeyedSource.expireGenerations(path, live, hconf, known = priorGens -- live)
   }
 
   /** The APPEND publish (KeyedWriteBuilder scaladoc): the head's base
@@ -270,22 +230,12 @@ final class KeyedBatchWrite(schema: StructType, path: String, key: String,
       gen: org.apache.hadoop.fs.Path): Unit = {
     if (entries.isEmpty) { fs.delete(gen, true); return }
     val written: Set[String] = entries.map(_.rawKey).toSet
-    val hconf = conf.value
-    var priorGens = Set.empty[String]
-    val published = KeyedSource.commitLoop(path, hconf, "append commit") { prior =>
-      val log = prior.getOrElse {
-        fs.delete(gen, true)
-        throw new UnsupportedOperationException(
-          s"graft-keyed append requires a generation-committed layout, but " +
-            s"$path has no commit log (legacy flat stage or empty path) — " +
-            "write with mode('overwrite') / stageKeyed first")
-      }
+    KeyedSource.commitLoop(path, conf.value, "append commit") { prior =>
+      val log = KeyedSource.requireLog(path, prior, "append")
       // the append's BASE ref: main's head, or the named branch's head
       // (branch appends diverge invisibly — main readers skip branch
       // snapshots by construction)
       val head = branch.fold(log.head)(log.branchHead)
-      priorGens = log.snapshots
-        .flatMap(_.referencedGens).toSet
       val baseKeys: Set[String] = {
         val baseGen = new org.apache.hadoop.fs.Path(root, head.gen)
         if (fs.exists(baseGen)) fs.listStatus(baseGen).toSeq.collect {
@@ -298,19 +248,11 @@ final class KeyedBatchWrite(schema: StructType, path: String, key: String,
           if (baseKeys.contains(k) && !head.tombstones.contains(k)) Seq(head.gen)
           else Seq.empty)
       val edits = head.edits ++ written.toSeq.map(k => k -> (priorLive(k) :+ genName))
-      val keep = math.max(math.max(log.retain, retain), 1)
       // appends only ever ADD directories at the end of a key's stream,
       // so existing deletion-vector ordinals stay valid and carry as-is
-      val snap = KeyedSource.Snapshot(log.nextSeq, head.gen,
-        head.tombstones -- written, edits, head.dvs, branch = branch)
-      Some(KeyedSource.CommitLog(keep,
-        KeyedSource.trimWindow(log.snapshots :+ snap, keep, log.tags,
-          log.branches),
-        log.ops, log.tags, log.streams, log.branches))
-    }.get
-    val live = published.snapshots
-      .flatMap(_.referencedGens).toSet
-    KeyedSource.expireGenerations(path, live, hconf, known = priorGens -- live)
+      Some(log.append(KeyedSource.Snapshot(log.nextSeq, head.gen,
+        head.tombstones -- written, edits, head.dvs, branch = branch), retain))
+    }
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -625,7 +567,7 @@ private[sources] object KeyedWriteAudit {
       KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedSource.OrderFile),
         KeyedSource.renderOrderMarker(schema, key, sortBy))
     // ensure the generation directory exists even for an EMPTY write
-    // (zero tasks produced zero files): the pointer must never name a
+    // (zero tasks produced zero files): the log must never name a
     // missing directory
     if (!fs.exists(gen)) fs.mkdirs(gen)
     entries
@@ -698,10 +640,8 @@ final class KeyedStreamingWrite(schema: StructType, path: String, key: String,
     if (KeyedSource.failBeforePublish) throw new IllegalStateException(
       "graft-keyed test hook: crash before publish")
     var replayed = false
-    var priorGens = Set.empty[String]
     val written: Set[String] = entries.map(_.rawKey).toSet
-    val published = KeyedSource.commitLoop(path, hconf,
-      "streaming epoch commit") { prior =>
+    KeyedSource.commitLoop(path, hconf, "streaming epoch commit") { prior =>
       prior match {
         case Some(log) if log.streams.getOrElse(queryId, -1L) >= epochId =>
           // replayed epoch (restart after the sink committed but before
@@ -710,19 +650,10 @@ final class KeyedStreamingWrite(schema: StructType, path: String, key: String,
           replayed = true
           None
         case None =>
-          branch.foreach(b => throw new UnsupportedOperationException(
-            s"graft-keyed streaming write cannot target branch '$b' at " +
-              s"$path: the layout has no commit log yet — stage it and " +
-              "create the branch first"))
-          // first epoch bootstraps the snapshot log (same refusal as
-          // append for a legacy flat stage: restage first)
-          if (fs.exists(root) && fs.listStatus(root).exists(st =>
-              st.isDirectory && st.getPath.getName.startsWith("k=")))
-            throw new UnsupportedOperationException(
-              s"graft-keyed streaming write requires a generation-committed " +
-                s"layout, but $path is a legacy flat stage — restage through " +
-                "the connector writer first")
-          priorGens = Set.empty
+          // a branch needs a log to fork from; otherwise the first
+          // epoch starts the snapshot log
+          branch.foreach(b =>
+            KeyedSource.requireLog(path, prior, s"streaming write to branch '$b'"))
           Some(KeyedSource.CommitLog(math.max(retain, 1),
             Seq(KeyedSource.Snapshot(1L, gname, Set.empty)),
             streams = Map(queryId -> epochId)))
@@ -731,8 +662,6 @@ final class KeyedStreamingWrite(schema: StructType, path: String, key: String,
           // head, invisible to main until a fastForward promotes it —
           // the audit-a-stream-then-publish workflow
           val head = branch.fold(log.head)(log.branchHead)
-          priorGens = log.snapshots.flatMap(_.referencedGens).toSet
-          val keep = math.max(math.max(log.retain, retain), 1)
           val snap =
             if (overwrite) KeyedSource.Snapshot(log.nextSeq, gname, Set.empty)
             else {
@@ -756,18 +685,11 @@ final class KeyedStreamingWrite(schema: StructType, path: String, key: String,
                 head.edits ++ written.toSeq.map(k => k -> (priorLive(k) :+ gname)),
                 head.dvs, branch = branch)
             }
-          Some(KeyedSource.CommitLog(keep,
-            KeyedSource.trimWindow(log.snapshots :+ snap, keep, log.tags,
-              log.branches),
-            log.ops, log.tags, log.streams + (queryId -> epochId),
-            log.branches))
+          Some(log.copy(streams = log.streams + (queryId -> epochId))
+            .append(snap, retain))
       }
     }
-    if (replayed) { fs.delete(gen, true); return }
-    published.foreach { pub =>
-      val live = pub.snapshots.flatMap(_.referencedGens).toSet
-      KeyedSource.expireGenerations(path, live, hconf, known = priorGens -- live)
-    }
+    if (replayed) fs.delete(gen, true)
   }
 
   override def abort(epochId: Long,

@@ -189,24 +189,25 @@ class KeyedSnapshotSpec extends SparkSpec {
       "the pre-truncate snapshot survives")
   }
 
-  test("legacy flat layouts refuse DELETE with the restage remediation") {
-    val dir = graft.io.TempDirs.scratch("graft_snap_flat_") + "/t"
+  test("k= dirs with no commit log refuse read and DELETE with the restage message") {
+    val dir = graft.io.TempDirs.scratch("graft_snap_nolog_") + "/t"
     KeyedSource.stageKeyed(spark, df(16L), dir, "kb")
-    // flatten: move the generation's contents to the root, drop the log
+    // move the generation's contents to the root and drop the log
     val gen = new java.io.File(KeyedSource.committedRoot(spark, dir))
     gen.listFiles().foreach { f =>
       java.nio.file.Files.move(f.toPath, java.nio.file.Path.of(dir, f.getName))
     }
     java.nio.file.Files.delete(gen.toPath)
-    KeyedSource.dropCommitLog(dir, spark.sessionState.newHadoopConf())
-    val t = registerTable("flat", dir)
-    assert(spark.sql(s"SELECT * FROM $t").count() == 16L)
+    new java.io.File(dir).listFiles()
+      .filter(_.getName.contains(KeyedSource.CommitFile)).foreach(_.delete())
+    val r = intercept[Exception](readKeyed(dir).count())
+    assert(r.getMessage.contains("restage"), r.getMessage)
+    val t = registerTable("nolog", dir)
     val e = intercept[Exception] { spark.sql(s"DELETE FROM $t WHERE kb = 1") }
     assert(e.getMessage.contains("restage"), e.getMessage)
-    // nothing committed ⇒ the snapshots metadata table claims nothing
-    assert(spark.read.format("graft-keyed").option("path", dir)
-      .option("schema", ddl).option("key", "kb")
-      .option("metadata", "snapshots").load().count() == 0L)
+    // an empty path, by contrast, is an empty table
+    val empty = graft.io.TempDirs.scratch("graft_snap_empty_") + "/t"
+    assert(readKeyed(empty).count() == 0L)
   }
 
   test("catalog DDL/DML: INSERT OVERWRITE commits, INSERT INTO refuses, DROP leaves bytes") {

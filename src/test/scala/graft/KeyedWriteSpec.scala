@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** The transactional DSv2 write path for `graft-keyed`
   * (sources/KeyedWrite.scala, r14 verdict #3): write-audit-publish.
-  * Pins (1) the crash window — a commit that dies before the pointer
-  * swap leaves the PREVIOUS generation fully live, and the next
+  * Pins (1) the crash window — a commit that dies before its log
+  * claim leaves the PREVIOUS generation fully live, and the next
   * successful commit clears the orphan; (2) stageKeyed now IS the
   * connector writer (one file per key, framing guard, stats + order
   * marker inside the same commit); (3) append refusal at plan time;
@@ -135,28 +135,27 @@ class KeyedWriteSpec extends SparkSpec {
     assert(e.getMessage.contains("generation-committed"), e.getMessage)
   }
 
-  test("legacy flat layouts stay readable; the first connector commit replaces them") {
-    // simulate a pre-r15 flat layout: k=* dirs + sidecar at the ROOT
-    // (write a generation, then manually flatten it)
-    val dir = graft.io.TempDirs.scratch("graft_kwrite_legacy_") + "/t"
+  test("only versioned v4 logs are read: v3 banners and bare unversioned logs refuse") {
+    val dir = graft.io.TempDirs.scratch("graft_kwrite_logform_") + "/t"
     KeyedSource.stageKeyed(spark, df(24L), dir, "kb")
-    val gen = new java.io.File(KeyedSource.committedRoot(spark, dir))
-    gen.listFiles().foreach { f =>
-      java.nio.file.Files.move(f.toPath,
-        java.nio.file.Path.of(dir, f.getName))
-    }
-    java.nio.file.Files.delete(gen.toPath)
-    KeyedSource.dropCommitLog(dir, spark.sessionState.newHadoopConf())
-    // flat layout reads fine (pointer absent ⇒ root is the layout)
-    assert(KeyedSource.committedRoot(spark, dir) == dir)
-    assert(readKeyed(dir).count() == 24L)
-    // a connector commit over it publishes a generation and clears the
-    // flat artifacts — no double-layout leftovers
-    KeyedSource.stageKeyed(spark, df(36L), dir, "kb")
-    assert(readKeyed(dir).count() == 36L)
-    val rootK = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("k="))
-    assert(rootK.isEmpty, "legacy flat k= dirs must be cleared by the commit")
+    val logs = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith(s"${KeyedSource.CommitFile}.v"))
+    assert(logs.length == 1)
+    val text = new String(java.nio.file.Files.readAllBytes(logs.head.toPath), "UTF-8")
+    assert(text.startsWith("graft-keyed-commit v4"), "every log is written as v4")
+    // the same log under the v3 banner: refused as unsupported, not parsed
+    new java.io.File(dir, s".${logs.head.getName}.crc").delete()
+    java.nio.file.Files.writeString(logs.head.toPath,
+      text.replaceFirst("graft-keyed-commit v4", "graft-keyed-commit v3"))
+    val v3 = intercept[IllegalStateException](readKeyed(dir).count())
+    assert(v3.getMessage.contains("unsupported format version"), v3.getMessage)
+    // a bare unversioned log file beside the generation: refused too
+    java.nio.file.Files.delete(logs.head.toPath)
+    java.nio.file.Files.writeString(
+      java.nio.file.Path.of(dir, KeyedSource.CommitFile), text)
+    val bare = intercept[UnsupportedOperationException](readKeyed(dir).count())
+    assert(bare.getMessage.contains("no versioned commit log") &&
+      bare.getMessage.contains("restage"), bare.getMessage)
   }
 
   test("KMV sketch: exact below K, within 15% at 64x K, merge-stable") {
