@@ -1555,7 +1555,7 @@ object Relational {
     // deliberately runs on the DV-applying data scan), CDC prices the
     // delete interval at exactly the deleted rows, and a compaction
     // folds the vectors back into clean files, restoring the metadata
-    // and columnar paths. At 100 TB this is the retraction shape
+    // answers. At 100 TB this is the retraction shape
     // between q64's key-grain tombstone (zero IO) and q66's
     // copy-on-write (full-directory rewrite): per-row precision at
     // per-row cost.
@@ -2016,9 +2016,9 @@ object Relational {
     // uncompressed append over a compressed base, a COW rewrite either
     // way (derivative commits inherit by extension probe). Real-corpus
     // measurement in BASELINE.md r18; this query proves the full read
-    // stack — columnar decode, pushed aggregates, key pruning — over a
+    // stack — frame decode, pushed aggregates, key pruning — over a
     // compressed layout with oracle-exact values. KeyedCodecSpec pins
-    // byte shrink, both decode paths, DV/skipping composition, and
+    // byte shrink, the inflating decode, DV/skipping composition, and
     // codec inheritance.
     "q78_codec_roundtrip" -> Q(
       (s, dir) => {
@@ -2045,7 +2045,7 @@ object Relational {
              |  max(doc_id) AS last_doc
              |FROM documents WHERE doc_id % 16 IN (2, 7, 11)
              |GROUP BY kb ORDER BY kb""".stripMargin),
-      "deflate-compressed generations: the full read stack (columnar inflate, key pruning, aggregation) over .dfl frames with oracle-exact values — the 100 TB byte-cost lever measured in BASELINE.md"),
+      "deflate-compressed generations: the full read stack (inflating frame decode, key pruning, aggregation) over .dfl frames with oracle-exact values — the 100 TB byte-cost lever measured in BASELINE.md"),
 
     // ── IVM with extremes (q79 — the DV-patch discipline at view grain)
     // q75 maintained count/sum; min/max are not decomposable under

@@ -370,12 +370,8 @@ final class KeyedChangesReaderFactory(declared: StructType,
   private def mk(proj: StructType, dirs: Seq[String],
       plans: Seq[Option[KeyedSource.DirReadPlan]])
       : PartitionReader[InternalRow] =
-    new ConcatReader(dirs.indices.map(j => () => plans(j) match {
-      case None => new PageReader(dirs(j), declared, proj, conf, -1)
-      case Some(p) => new EvolvedRowReader(new PageReader(dirs(j),
-        KeyedSource.ddlToSchema(p.fileDdl), KeyedSource.ddlToSchema(p.innerDdl),
-        conf, -1), p)
-    }))
+    new ConcatReader(dirs.indices.map(j => () =>
+      EvolvedRowReader.forDir(dirs(j), plans(j), declared, proj, conf, -1)))
 
   /** Apply a side's deletion vectors (rows deleted in that STATE must
     * not appear as that state's content). */

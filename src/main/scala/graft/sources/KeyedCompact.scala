@@ -58,8 +58,8 @@ object KeyedCompact {
     val scanSeq = head.seq
     // eligible: multi-file keys (appends/MERGE inserts) AND any key
     // carrying deletion vectors (merge-on-read deletes) — compaction is
-    // what folds DVs into clean files and restores the columnar decode
-    // and metadata answers for those keys
+    // what folds DVs into clean files, dropping the per-row bitset
+    // probe, and restores metadata answers for those keys
     val frag: Seq[String] = (head.edits.collect {
       case (k, gens) if gens.length >= minInputFiles => k
     } ++ head.dvs.keys).toSeq.distinct.sorted

@@ -105,13 +105,12 @@ final class KeyedCowOperation(declared: StructType, path: String, key: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val conf = new org.apache.spark.util.SerializableConfiguration(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    KeyedSource.requireLog(path, conf.value, s"copy-on-write $cmd")
+    val log = KeyedSource.requireLog(path, conf.value, s"copy-on-write $cmd")
     new KeyedScanBuilder(declared, path, key, conf,
-      options.getBoolean("vectorize", true),
-      // a branch DML scans the BRANCH head (resolved at plan time);
-      // the commit then checks the branch head did not move
-      reportStats = true,
-      asOf = branch.map(b => KeyedSource.resolveBranch(path, conf.value, b)),
+      // a branch DML scans the BRANCH head (resolved at plan time, from
+      // the log read above); the commit then checks the branch head did
+      // not move
+      asOf = branch.map(b => log.branchHead(b).seq),
       cowHost = Some(this))
   }
 
@@ -316,15 +315,15 @@ final class KeyedCowWriterFactory(schema: StructType, key: String,
   *  - a delete costs O(deleted rows) bytes and one CAS swap, however
   *    large the key directories are (copy-on-write pays a full
   *    directory rewrite for one doomed row);
-  *  - reads pay a per-row bitset probe and COLUMNAR decode drops to
-  *    the row path for DV'd keys until a compaction folds the deletes
-  *    into clean files ([[KeyedCompact]] treats DV'd keys as eligible
-  *    and clears their vectors). Metadata AGGREGATE answers survive
-  *    (r17): the commit recomputes the affected keys' exact
-  *    count/min/max/sum into a stats PATCH — one bounded read-only
-  *    job over the affected keys, raising the commit's READ cost from
-  *    O(deleted rows) to O(affected keys' rows) while keeping every
-  *    later stats question a metadata lookup. TopN budgets SURVIVE
+  *  - reads pay a per-row bitset probe for DV'd keys until a
+  *    compaction folds the deletes into clean files ([[KeyedCompact]]
+  *    treats DV'd keys as eligible and clears their vectors).
+  *    Metadata AGGREGATE answers survive (r17): the commit
+  *    recomputes the affected keys' exact count/min/max/sum into a
+  *    stats PATCH — one bounded read-only job over the affected keys,
+  *    raising the commit's READ cost from O(deleted rows) to
+  *    O(affected keys' rows) while keeping every later stats question
+  *    a metadata lookup. TopN budgets SURVIVE
   *    patched deletion vectors for the same reason (the pushdown's
   *    exact-count license reads the patched entries through
   *    [[KeyedStats.readView]]); only a pre-patch dv commit — stale
@@ -365,11 +364,9 @@ final class KeyedMorOperation(declared: StructType, path: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val conf = new org.apache.spark.util.SerializableConfiguration(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    KeyedSource.requireLog(path, conf.value, s"merge-on-read $cmd")
+    val log = KeyedSource.requireLog(path, conf.value, s"merge-on-read $cmd")
     new KeyedScanBuilder(declared, path, key, conf,
-      options.getBoolean("vectorize", true),
-      reportStats = true,
-      asOf = branch.map(b => KeyedSource.resolveBranch(path, conf.value, b)),
+      asOf = branch.map(b => log.branchHead(b).seq),
       cowHost = Some(this))
   }
 

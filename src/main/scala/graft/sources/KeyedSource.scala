@@ -30,7 +30,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Layout: `k=<value>/` subdirectories under the staged root, one per
   * distinct key value, US-framed records ([[PageSource]]'s x94
-  * sentinel discipline — the row decode is [[PageReader]] itself, the
+  * sentinel discipline — the decode is [[PageReader]] itself, the
   * connectors share it). The key column is part of the DECLARED schema
   * (option `key` names it); for a high-cardinality join key the stager
   * materializes a bounded surrogate (`kb = doc_id % buckets`) and the
@@ -236,9 +236,6 @@ final class KeyedTable(declared: StructType, path: String, key: String,
     val conf = new org.apache.spark.util.SerializableConfiguration(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
     new KeyedScanBuilder(declared, path, key, conf,
-      // columnar byte-level decode (VectorizedFrame) by default —
-      // the same flag, default, and escape hatch as graft-pages
-      options.getBoolean("vectorize", true),
       // pruning-aware size/row statistics reported to the planner
       // (KeyedScan.estimateStatistics); false = the A/B escape hatch
       options.getBoolean("reportStats", true),
@@ -401,7 +398,7 @@ final class KeyedTable(declared: StructType, path: String, key: String,
 
 final class KeyedScanBuilder(full: StructType, path: String, key: String,
     conf: org.apache.spark.util.SerializableConfiguration,
-    vectorize: Boolean = true, reportStats: Boolean = true,
+    reportStats: Boolean = true,
     asOf: Option[Long] = None,
     cowHost: Option[KeyedRowLevelHost] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
@@ -660,7 +657,7 @@ final class KeyedScanBuilder(full: StructType, path: String, key: String,
         else KeyedStats.skippableFiles(view, conf, full, key,
           residualFilters.toSeq, skipKeys, genSidecarMemo)
       val scan = new KeyedScan(full, required, view, key, conf, keyValues,
-        vectorize, reportStats, topN, skipKeys, () => viewSidecar, fileSkip)
+        reportStats, topN, skipKeys, () => viewSidecar, fileSkip)
       // a row-level operation's commit replaces (cow) or amends (mor)
       // exactly what this scan resolves — hand it the instance (last
       // build wins; Spark builds one scan per operation)
@@ -694,7 +691,7 @@ final class KeyedScanBuilder(full: StructType, path: String, key: String,
 class KeyedScan(full: StructType, required: StructType,
     private[sources] val view: KeyedSource.SnapshotView,
     key: String, conf: org.apache.spark.util.SerializableConfiguration,
-    keyValues: Option[Set[Any]] = None, vectorize: Boolean = true,
+    keyValues: Option[Set[Any]] = None,
     reportStats: Boolean = true, topN: Int = -1,
     skipKeys: Set[String] = Set.empty,
     sidecarOf: () => Option[KeyedStats.Sidecar] = null,
@@ -709,7 +706,7 @@ class KeyedScan(full: StructType, required: StructType,
     * co-keyed SMJ plans with zero Sort on top of the SPJ report's
     * zero Exchange — the layout paid both, once, at write time. The
     * claim is per input partition (one key directory, one file, read
-    * sequentially by both decode paths), and it is only made where
+    * sequentially by the frame decode), and it is only made where
     * it is provably TRUE and RESOLVABLE: no marker / foreign layout ⇒
     * empty; the key leads only while it survives column pruning
     * (Spark resolves these expressions against the scan OUTPUT — the
@@ -877,8 +874,7 @@ class KeyedScan(full: StructType, required: StructType,
       (if (topN >= 0) s" topN=$topN" else "") +
       (if (tombstones.nonEmpty) s" tombstones=${tombstones.size}" else "") +
       (if (view.edits.nonEmpty) s" edits=${view.edits.size}" else "") +
-      (if (view.dvs.nonEmpty) s" dvs=${view.dvs.size}" else "") +
-      (if (vectorize) "" else " rowdecode")
+      (if (view.dvs.nonEmpty) s" dvs=${view.dvs.size}" else "")
 
   // runtime key set (EXECUTION-time DPP), intersected with the static
   // pushed set; @volatile — filter() runs on the driver before the
@@ -1079,28 +1075,7 @@ class KeyedScan(full: StructType, required: StructType,
       Array(Expressions.identity(key)), planInputPartitions().length)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // columnar is ALL-OR-NOTHING per scan (BatchScanExec refuses mixed
-    // modes): one evolved generation in the plan drops the whole scan
-    // to the row path — a restage under the evolved schema upgrades it
-    // back (KeyedEvolutionSpec pins the round trip). Deletion vectors
-    // and the position metadata column ride the row path too (the
-    // position skip/append is per row; a compaction folds DVs in and
-    // restores the columnar default)
-    new KeyedReaderFactory(full, required, conf,
-      vectorize && !emitMeta &&
-        // INT columns (the transitional widening source type) ride the
-        // row path — the columnar decoder types buffers BIGINT/STRING
-        // only; widening the column (or restaging) restores columnar
-        required.fields.forall(f =>
-          f.dataType == LongType || f.dataType == StringType) &&
-        !partitions.exists { p =>
-        val kp = p.asInstanceOf[KeyedPartition]
-        // evolved generations stay on the row path; DV'd keys decode
-        // COLUMNAR (PositionedColumnarReader — zero-copy passthrough
-        // for unaffected batches, live-row TopN budgets applied after
-        // the ordinal skip)
-        kp.plans.exists(_.isDefined)
-      })
+    new KeyedReaderFactory(full, required, conf)
 }
 
 /** Serializable key partition; `partitionKey` is the stored key VALUE —
@@ -1118,6 +1093,23 @@ final case class KeyedPartition(dirs: Seq[String], keyValue: Any,
   override def partitionKey(): InternalRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
       Array[Any](keyValue))
+}
+
+object EvolvedRowReader {
+  /** The reader of one keyed directory: the frame decode ([[PageReader]])
+    * by the declared schema, or — for an evolved generation — by its
+    * WRITTEN schema (the file's own arity), projected to the
+    * lineage-resolved columns and mapped to the declared output. */
+  def forDir(dir: String, plan: Option[KeyedSource.DirReadPlan],
+      full: StructType, required: StructType,
+      conf: org.apache.spark.util.SerializableConfiguration,
+      limit: Int): PartitionReader[InternalRow] =
+    plan match {
+      case None => new PageReader(dir, full, required, conf, limit)
+      case Some(p) => new EvolvedRowReader(new PageReader(dir,
+        KeyedSource.ddlToSchema(p.fileDdl), KeyedSource.ddlToSchema(p.innerDdl),
+        conf, limit), p)
+    }
 }
 
 /** Maps an evolved generation's decoded rows to the declared output:
@@ -1175,10 +1167,10 @@ final class EvolvedRowReader(inner: PartitionReader[InternalRow],
 /** Sequential concatenation of per-directory readers — a multi-gen key
   * is one partition (the SPJ alignment is by KEY), its files decoded
   * back to back. Readers open LAZILY so at most one holds buffers. */
-final class ConcatReader[T](makers: Seq[() => PartitionReader[T]])
-    extends PartitionReader[T] {
+final class ConcatReader(makers: Seq[() => PartitionReader[InternalRow]])
+    extends PartitionReader[InternalRow] {
   private var i = 0
-  private var cur: PartitionReader[T] = if (makers.nonEmpty) makers.head() else null
+  private var cur: PartitionReader[InternalRow] = if (makers.nonEmpty) makers.head() else null
   override def next(): Boolean = {
     while (cur != null) {
       if (cur.next()) return true
@@ -1187,7 +1179,7 @@ final class ConcatReader[T](makers: Seq[() => PartitionReader[T]])
     }
     false
   }
-  override def get(): T = cur.get()
+  override def get(): InternalRow = cur.get()
   override def close(): Unit = if (cur != null) { cur.close(); cur = null }
 }
 
@@ -1248,101 +1240,8 @@ object PositionedReader {
   val Key: Int = -2
 }
 
-/** Columnar deletion-vector application (r17): batches whose ordinal
-  * window contains no deleted row pass through UNTOUCHED (zero copy —
-  * the common case, deletions cluster in few batches); an affected
-  * batch is re-exposed through [[RemappedVector]]s that map row ids
-  * through the survivors array — object-allocation only, the decoded
-  * column buffers are never copied. This keeps DV'd keys on the
-  * columnar decode path (previously ONE DV'd key dropped the whole
-  * scan to the row path, since Spark plans an operator columnar only
-  * when every partition is). */
-final class PositionedColumnarReader(
-    inner: PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch],
-    deleted: java.util.BitSet, limit: Int = -1)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  private var offset = 0L
-  private var emitted = 0
-  private var current: org.apache.spark.sql.vectorized.ColumnarBatch = _
-  override def next(): Boolean = {
-    // a TopN budget counts LIVE rows (the planner subtracted
-    // DV-corrected counts) — enforced here, after the ordinal skip
-    if (limit >= 0 && emitted >= limit) return false
-    while (inner.next()) {
-      val batch = inner.get()
-      val n = batch.numRows()
-      val start = offset
-      offset += n
-      def room: Int = if (limit < 0) Int.MaxValue else limit - emitted
-      val first = deleted.nextSetBit(start.toInt)
-      if (first < 0 || first >= start + n) {
-        if (n > 0) {
-          current =
-            if (n <= room) batch
-            else new org.apache.spark.sql.vectorized.ColumnarBatch(
-              Array.tabulate(batch.numCols())(batch.column), room)
-          emitted += current.numRows()
-          return true
-        }
-      } else {
-        // affected batch: survivors index, vectors remapped in place
-        val map = new Array[Int](n)
-        var kept = 0
-        var i = 0
-        while (i < n && kept < room) {
-          if (!deleted.get((start + i).toInt)) { map(kept) = i; kept += 1 }
-          i += 1
-        }
-        if (kept > 0) {
-          val cols = Array.tabulate(batch.numCols())(j =>
-            new RemappedVector(batch.column(j), map): org.apache.spark.sql.vectorized.ColumnVector)
-          current = new org.apache.spark.sql.vectorized.ColumnarBatch(cols, kept)
-          emitted += kept
-          return true
-        }
-      }
-    }
-    false
-  }
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = current
-  override def close(): Unit = inner.close()
-}
-
-/** A ColumnVector view remapping row ids through a survivors array —
-  * the layout stores only non-null BIGINT/STRING, so only those
-  * accessors are live. The underlying vector's memory is owned by the
-  * wrapped batch; close is a no-op here. */
-final class RemappedVector(base: org.apache.spark.sql.vectorized.ColumnVector,
-    map: Array[Int])
-    extends org.apache.spark.sql.vectorized.ColumnVector(base.dataType()) {
-  override def close(): Unit = ()
-  override def hasNull: Boolean = false
-  override def numNulls(): Int = 0
-  override def isNullAt(rowId: Int): Boolean = false
-  override def getBoolean(rowId: Int): Boolean = base.getBoolean(map(rowId))
-  override def getByte(rowId: Int): Byte = base.getByte(map(rowId))
-  override def getShort(rowId: Int): Short = base.getShort(map(rowId))
-  override def getInt(rowId: Int): Int = base.getInt(map(rowId))
-  override def getLong(rowId: Int): Long = base.getLong(map(rowId))
-  override def getFloat(rowId: Int): Float = base.getFloat(map(rowId))
-  override def getDouble(rowId: Int): Double = base.getDouble(map(rowId))
-  override def getUTF8String(rowId: Int): UTF8String =
-    base.getUTF8String(map(rowId))
-  override def getBinary(rowId: Int): Array[Byte] = base.getBinary(map(rowId))
-  override def getArray(rowId: Int): org.apache.spark.sql.vectorized.ColumnarArray =
-    throw new UnsupportedOperationException("graft-keyed stores no arrays")
-  override def getMap(rowId: Int): org.apache.spark.sql.vectorized.ColumnarMap =
-    throw new UnsupportedOperationException("graft-keyed stores no maps")
-  override def getDecimal(rowId: Int, precision: Int, scale: Int)
-      : org.apache.spark.sql.types.Decimal =
-    throw new UnsupportedOperationException("graft-keyed stores no decimals")
-  override def getChild(ordinal: Int): org.apache.spark.sql.vectorized.ColumnVector =
-    throw new UnsupportedOperationException("graft-keyed stores no nested types")
-}
-
 final class KeyedReaderFactory(full: StructType, required: StructType,
-    conf: org.apache.spark.util.SerializableConfiguration,
-    vectorize: Boolean = true)
+    conf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReaderFactory {
 
   /** Decode projection (stored columns only) and the output map from
@@ -1362,23 +1261,13 @@ final class KeyedReaderFactory(full: StructType, required: StructType,
   private val dataKind: Array[Int] = dataRequired.fields.map(f =>
     KeyedSource.kindOf(f.dataType))
   // decode IS the page decode — the connectors share the US-framed
-  // line format on both paths: PageReader (row) and PageColumnarReader
-  // (byte-level batch decode, the default — VectorizedFrame scaladoc);
-  // the partition's limit (pushed TopN budget) stops the decode
-  // mid-payload exactly like the pages connector's pushed LIMIT
+  // line format and its one decoder, PageReader; the partition's limit
+  // (pushed TopN budget) stops the decode mid-payload exactly like the
+  // pages connector's pushed LIMIT
   private def rowReader(kp: KeyedPartition, j: Int,
       lim: Int): PartitionReader[InternalRow] =
-    kp.plans.lift(j).flatten match {
-      case None => new PageReader(kp.dirs(j), full, dataRequired, conf, lim)
-      case Some(p) =>
-        // evolved generation: decode by the WRITTEN schema (the file's
-        // own arity), project the lineage-resolved columns, fill
-        // added-column defaults — the row path carries evolved reads;
-        // a restage upgrades them back to the columnar default
-        new EvolvedRowReader(new PageReader(kp.dirs(j),
-          KeyedSource.ddlToSchema(p.fileDdl), KeyedSource.ddlToSchema(p.innerDdl),
-          conf, lim), p)
-    }
+    EvolvedRowReader.forDir(kp.dirs(j), kp.plans.lift(j).flatten, full,
+      dataRequired, conf, lim)
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val kp = partition.asInstanceOf[KeyedPartition]
@@ -1402,26 +1291,6 @@ final class KeyedReaderFactory(full: StructType, required: StructType,
         case other => other.toString
       }),
       limit = if (kp.dvPaths.nonEmpty) kp.limit else -1)
-  }
-  override def supportColumnarReads(partition: InputPartition): Boolean = vectorize
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val kp = partition.asInstanceOf[KeyedPartition]
-    // a DV'd key's budget counts LIVE rows: decode raw unbudgeted
-    // (bounded by the one directory), limit after the ordinal skip
-    val rawLim = if (kp.dvPaths.nonEmpty) -1 else kp.limit
-    val base =
-      if (kp.dirs.length == 1)
-        new PageColumnarReader(kp.dirs.head, full, dataRequired, conf, rawLim)
-      else {
-        require(kp.limit < 0, "TopN budgets never plan multi-directory partitions")
-        new ConcatReader(kp.dirs.map(d =>
-          () => new PageColumnarReader(d, full, dataRequired, conf, -1)))
-      }
-    if (kp.dvPaths.isEmpty) base
-    else new PositionedColumnarReader(base,
-      KeyedSource.loadDeleted(kp.dvPaths, conf.value),
-      limit = kp.limit)
   }
 }
 
@@ -2803,7 +2672,7 @@ object KeyedSource {
       fromFile, constIsLong, constVals, fpPromote)
   }
 
-  /** Boxing/wire kind codes shared by every row-path reader: 0=BIGINT,
+  /** Boxing/wire kind codes shared by every frame reader: 0=BIGINT,
     * 1=STRING, 2=INT, 3=DOUBLE, 4=FLOAT. ONE mapping so a type joining
     * the layout lands once for every reader (the r18 review's INT+MOR
     * lesson: per-reader 2-way isLong arrays silently misread a third

@@ -83,17 +83,13 @@ final class PageTable(declared: StructType, path: String) extends Table with Sup
     new PageScanBuilder(declared, path,
       new org.apache.spark.util.SerializableConfiguration(
         org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()),
-      // columnar byte-level decode (VectorizedFrame) is the default
-      // read path; `vectorize=false` is the measured row-path escape
-      // hatch and the A/B lever the parity/throughput specs use
-      options.getBoolean("vectorize", true),
       // pruning-aware size statistics reported to the planner
       options.getBoolean("reportStats", true))
 }
 
 final class PageScanBuilder(full: StructType, path: String,
     conf: org.apache.spark.util.SerializableConfiguration,
-    vectorize: Boolean = true, reportStats: Boolean = true)
+    reportStats: Boolean = true)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit
@@ -281,7 +277,7 @@ final class PageScanBuilder(full: StructType, path: String,
 
   override def build(): Scan =
     if (countOnly) new PageCountScan(path, conf)
-    else new PageScan(full, required, path, conf, ranges, limit, vectorize,
+    else new PageScan(full, required, path, conf, ranges, limit,
       reportStats, consumed)
 }
 
@@ -293,7 +289,7 @@ final class PageScanBuilder(full: StructType, path: String,
 final class PageScan(full: StructType, required: StructType, path: String,
     conf: org.apache.spark.util.SerializableConfiguration,
     ranges: Seq[(Long, Long)] = PageSource.FullRange, limit: Int = -1,
-    vectorize: Boolean = true, reportStats: Boolean = true,
+    reportStats: Boolean = true,
     consumed: Seq[(Long, Long)] = PageSource.FullRange)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
@@ -335,19 +331,17 @@ final class PageScan(full: StructType, required: StructType, path: String,
           .mkString(",")}${if (rs.length > 4) s"+${rs.length - 4}" else ""}"
       }) +
       (if (limit >= 0) s" limit=$limit" else "") +
-      (if (consumed != PageSource.FullRange) " exactfilter" else "") +
-      (if (vectorize) "" else " rowdecode")
+      (if (consumed != PageSource.FullRange) " exactfilter" else "")
 
   override def planInputPartitions(): Array[InputPartition] =
     PageSource.planPages(path, conf, ranges)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PageReaderFactory(full, required, conf, limit, vectorize, consumed)
+    new PageReaderFactory(full, required, conf, limit, consumed)
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new PageMicroBatchStream(path, full, required, conf, vectorize,
-      ranges, consumed)
+    new PageMicroBatchStream(path, full, required, conf, ranges, consumed)
 }
 
 /** Streaming leg of the paged connector — the INCREMENTAL ingest shape
@@ -388,7 +382,6 @@ final class PageScan(full: StructType, required: StructType, path: String,
   * quiesced, same as any paged-API re-read. */
 final class PageMicroBatchStream(path: String, full: StructType,
     required: StructType, conf: org.apache.spark.util.SerializableConfiguration,
-    vectorize: Boolean = true,
     ranges: Seq[(Long, Long)] = PageSource.FullRange,
     consumed: Seq[(Long, Long)] = PageSource.FullRange)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
@@ -488,8 +481,7 @@ final class PageMicroBatchStream(path: String, full: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PageReaderFactory(full, required, conf, vectorize = vectorize,
-      consumed = consumed)
+    new PageReaderFactory(full, required, conf, consumed = consumed)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -778,25 +770,11 @@ object PageSource {
 
 final class PageReaderFactory(full: StructType, required: StructType,
     conf: org.apache.spark.util.SerializableConfiguration, limit: Int = -1,
-    vectorize: Boolean = true,
     consumed: Seq[(Long, Long)] = PageSource.FullRange)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PageReader(partition.asInstanceOf[PagePartition].pageDir, full, required,
       conf, limit, consumed)
-  // columnar decode is the default scan bottom (VectorizedFrame
-  // scaladoc has the full why); BatchScanExec requires the answer to
-  // be uniform across partitions, which a constant trivially is.
-  // The columnar decoder types its buffers BIGINT/STRING only — INT
-  // (the widening source type) and the r19 sortable-bits FP columns
-  // ride the row path, the same degradation the keyed factory applies
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    vectorize && required.fields.forall(f =>
-      f.dataType == LongType || f.dataType == StringType)
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new PageColumnarReader(partition.asInstanceOf[PagePartition].pageDir,
-      full, required, conf, limit, consumed = consumed)
 }
 
 final class PageCountReaderFactory(

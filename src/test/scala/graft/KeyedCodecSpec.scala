@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.StructType
   * (`.dfl` suffix), so readers inflate by extension and mixed
   * generations compose with no marker. Pins:
   * (1) a deflate stage writes `.dfl` files MEASURABLY smaller than the
-  *     uncompressed twin, and BOTH decode paths (columnar + row)
-  *     round-trip identical values;
+  *     uncompressed twin, and the decode round-trips identical
+  *     values;
   * (2) mixed generations: an uncompressed append over a compressed
   *     base (and the reverse) read together;
   * (3) derivative commits INHERIT the codec: a COW DELETE's rewrite
@@ -35,10 +35,9 @@ class KeyedCodecSpec extends SparkSpec {
       (i * 7L) % 101L))
       .toDF("kb", "doc_id", "body", "n_chars")
 
-  private def readKeyed(dir: String, vectorize: Boolean = true): DataFrame =
+  private def readKeyed(dir: String): DataFrame =
     spark.read.format("graft-keyed").option("path", dir)
-      .option("schema", ddl).option("key", "kb")
-      .option("vectorize", vectorize.toString).load()
+      .option("schema", ddl).option("key", "kb").load()
 
   private def dataFiles(dir: String): Seq[java.io.File] =
     new java.io.File(dir).listFiles()
@@ -65,9 +64,7 @@ class KeyedCodecSpec extends SparkSpec {
 
     val expect = df(256L).orderBy("doc_id").collect()
     assert(readKeyed(packed).orderBy("doc_id").collect().sameElements(expect),
-      "columnar decode must read through the inflater")
-    assert(readKeyed(packed, vectorize = false).orderBy("doc_id").collect()
-      .sameElements(expect), "row decode must read through the inflater")
+      "the decode must read through the inflater")
 
     // metadata surfaces are orthogonal to the payload codec
     val agg = readKeyed(packed).groupBy("kb")

@@ -198,12 +198,8 @@ class KeyedMorSpec extends SparkSpec {
       sortBy = Seq("doc_id"), retain = 4)
     val t = registerMor("fold", dir)
     spark.sql(s"DELETE FROM $t WHERE doc_id IN (6, 14)") // kb=2 dvs
-    // DV'd scans STAY on the columnar decode (r17 —
-    // PositionedColumnarReader; one DV'd key used to drop the whole
-    // scan to the row path) and read the DV-applied rows exactly
+    // DV'd scans read the DV-applied rows exactly
     val live = readKeyed(dir)
-    assert(live.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-      s"DV'd scans must keep the columnar decode:\n${live.queryExecution.executedPlan}")
     val expected = live.collect().map(_.toSeq).toSet
     assert(expected.size == 30 && !expected.exists(r => r(1) == 6L || r(1) == 14L))
     val hconf = spark.sessionState.newHadoopConf()

@@ -269,10 +269,10 @@ class LlmInvariantsSpec extends SparkSpec {
         else (1 to 10).map(i => s"u${id}w$i").mkString(" ") // unique filler
       (id, s"$header $body", "en", "synthetic", 0L)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dirF = java.nio.file.Files.createTempDirectory("graft-x49cap")
+    val dirF = graft.io.TempDirs.scratch("graft-x49cap")
     try {
       docs.write.mode("overwrite").parquet(s"$dirF/documents.parquet")
-      val rows = SparkEntry.queries("x49_substring_spans")(spark, dirF.toString)
+      val rows = SparkEntry.queries("x49_substring_spans")(spark, dirF)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(rows.size == nDocs)
       // 20 tokens -> 11 gram positions per doc
@@ -289,7 +289,7 @@ class LlmInvariantsSpec extends SparkSpec {
       (3L to nDocs.toLong).foreach(id =>
         assert(rows(id)._2 == 0L,
           s"doc $id carries only boilerplate; the df-cap must zero it"))
-    } finally graft.io.TempDirs.deleteRecursively(dirF)
+    } finally graft.io.TempDirs.deleteRecursively(java.nio.file.Paths.get(dirF))
   }
 
   test("x50: bigram top-k is distinct, positive, and count-ordered") {

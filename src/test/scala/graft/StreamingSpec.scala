@@ -731,7 +731,9 @@ class StreamingSpec extends SparkSpec {
 
   test("domain-budget gate: x111 equality on one batch, stateful caps across batches") {
     import spark.implicits._
-    val src = tmp("dbg-src"); val out = tmp("dbg-out"); val ckpt = tmp("dbg-ckpt")
+    // out nested in a scratch root: the gate writes its `<out>-sums`
+    // summaries as a SIBLING of out, which must be cleaned up too
+    val src = tmp("dbg-src"); val out = s"${tmp("dbg-out")}/out"; val ckpt = tmp("dbg-ckpt")
     val docs = graft.sources.Tables.load(spark, sf0001, "documents")
     // batch A: the whole corpus in ONE file — the gate's admitted set
     // must equal the registered x111 kept set exactly (one definition

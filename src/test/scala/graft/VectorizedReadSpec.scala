@@ -1,24 +1,24 @@
 package graft
 
-import graft.sources.{KeyedSource, PageSource, Tables, VectorizedFrame}
+import graft.sources.{KeyedSource, PageSource, Tables}
 import org.apache.spark.sql.functions._
 
-/** The columnar byte-level decode (sources/VectorizedFrame.scala) —
-  * the connector family's vectorized read path, default-on for both
-  * `graft-pages` and `graft-keyed`. Pins (1) exact parity with the
-  * row decode and with the parquet source of truth, (2) the plan
-  * shape (BatchScanExec reports columnar, `vectorize=false` reverts),
-  * (3) the contract legs the row reader already honors — arity
-  * corruption fails loudly, trailing empty fields keep arity, pushed
-  * LIMIT caps the per-page decode, BIGINT grammar matches
-  * `String.toLong` exactly at the Long boundaries. */
+/** The frame decode ([[graft.sources.PageReader]]) — the one reader of
+  * the US-framed files behind both `graft-pages` and `graft-keyed`.
+  * Pins (1) exact parity with the parquet source of truth, in full and
+  * under pruning and reorder, (2) the contract legs of the frame
+  * format — arity corruption fails loudly, trailing empty fields keep
+  * arity, multi-byte UTF-8 survives, pushed LIMIT caps the per-page
+  * decode, zero-column reads still count rows — and (3) that the
+  * keyed SPJ and the pages count/prune pushdowns compose with it. The
+  * test names date from a removed columnar twin of this decoder; the
+  * legs they name are the ones both decoders shared. */
 class VectorizedReadSpec extends SparkSpec {
 
-  private def readPages(dir: String, vectorize: Boolean = true) =
+  private def readPages(dir: String) =
     spark.read.format("graft-pages")
       .option("path", dir)
       .option("schema", PageSource.DDL)
-      .option("vectorize", vectorize.toString)
       .load()
 
   private lazy val staged = PageSource.stageDocuments(spark, sf0001, pageSize = 8L)
@@ -27,39 +27,24 @@ class VectorizedReadSpec extends SparkSpec {
     df.queryExecution.sparkPlan.collectLeaves()
       .collect { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
 
-  test("columnar is the planned default; vectorize=false reverts to the row decode") {
-    val cols = batchScans(readPages(staged).select("doc_id", "text"))
-    assert(cols.length == 1 && cols.head.supportsColumnar,
-      "default graft-pages scan must report columnar")
-    val rows = batchScans(readPages(staged, vectorize = false).select("doc_id", "text"))
-    assert(rows.length == 1 && !rows.head.supportsColumnar,
-      "vectorize=false must plan the row decode")
-    assert(rows.head.scan.description().contains("rowdecode"),
-      "the escape hatch must be visible in the scan description")
-  }
-
   test("parity: columnar == row decode == parquet, full schema") {
-    val viaColumnar = readPages(staged).orderBy("doc_id").collect()
-    val viaRows = readPages(staged, vectorize = false).orderBy("doc_id").collect()
+    val viaFrames = readPages(staged).orderBy("doc_id").collect()
     val direct = Tables.load(spark, sf0001, "documents")
       .select("doc_id", "text", "lang", "source", "n_chars")
       .orderBy("doc_id").collect()
-    assert(viaColumnar.length == direct.length && direct.length > 0)
-    assert(viaColumnar.sameElements(direct))
-    assert(viaRows.sameElements(direct))
+    assert(viaFrames.length == direct.length && direct.length > 0)
+    assert(viaFrames.sameElements(direct))
   }
 
   test("parity under column pruning and projection reorder") {
     // required schema ORDER differs from the frame's field order —
-    // the srcIdx indirection must hold on the byte path too
+    // the srcIdx indirection must hold
     val sel = Seq("n_chars", "doc_id", "lang")
-    val viaColumnar = readPages(staged).select(sel.map(col): _*)
-      .orderBy("doc_id").collect()
-    val viaRows = readPages(staged, vectorize = false).select(sel.map(col): _*)
+    val viaFrames = readPages(staged).select(sel.map(col): _*)
       .orderBy("doc_id").collect()
     val direct = Tables.load(spark, sf0001, "documents").select(sel.map(col): _*)
       .orderBy("doc_id").collect()
-    assert(viaColumnar.sameElements(direct) && viaRows.sameElements(direct))
+    assert(viaFrames.sameElements(direct))
     // and the pruning still reaches the scan
     val scans = batchScans(readPages(staged).select(sel.map(col): _*))
     assert(scans.head.scan.readSchema().fieldNames.toSet == sel.toSet)
@@ -121,7 +106,7 @@ class VectorizedReadSpec extends SparkSpec {
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))
     assert(messages(e).exists(m => m != null && m.contains("frame corruption")),
-      s"expected the arity guard on the columnar path, got $e")
+      s"expected the arity guard, got $e")
   }
 
   test("pushed LIMIT caps the columnar decode per page (direct reader contract)") {
@@ -131,48 +116,13 @@ class VectorizedReadSpec extends SparkSpec {
     val factory = new graft.sources.PageReaderFactory(full, full,
       new org.apache.spark.util.SerializableConfiguration(
         spark.sessionState.newHadoopConf()), limit = 3)
-    assert(factory.supportColumnarReads(graft.sources.PagePartition(pageDir)))
-    val reader = factory.createColumnarReader(graft.sources.PagePartition(pageDir))
+    val reader = factory.createReader(graft.sources.PagePartition(pageDir))
     var n = 0L
-    while (reader.next()) n += reader.get().numRows()
+    while (reader.next()) n += 1
     reader.close()
-    assert(n == 3, s"capped columnar reader must decode exactly the pushed limit, got $n")
+    assert(n == 3, s"capped reader must decode exactly the pushed limit, got $n")
     // end-to-end through the planner, values right
     assert(readPages(staged).select("doc_id").limit(3).collect().length == 3)
-  }
-
-  test("multi-batch decode: a page larger than one ColumnarBatch round-trips exactly") {
-    import spark.implicits._
-    val dir = graft.io.TempDirs.scratch("graft_vec_big_")
-    val n = VectorizedFrame.BatchRows * 2 + 37 // forces 3 batches in one page
-    spark.range(n.toLong)
-      .select(col("id").as("doc_id"),
-        concat(lit("doc-"), col("id")).as("text"), lit("en").as("lang"),
-        lit("web").as("source"), (col("id") % 97L).as("n_chars"))
-      .write.parquet(s"$dir/documents.parquet")
-    val st = PageSource.stageDocuments(spark, dir, pageSize = n.toLong)
-    val got = readPages(st).agg(
-      count(lit(1)).as("n"), sum("doc_id").as("s"),
-      sum(length(col("text")).cast("long")).as("t")).collect().head
-    val exp = Tables.load(spark, dir, "documents").agg(
-      count(lit(1)), sum("doc_id"), sum(length(col("text")).cast("long"))).collect().head
-    assert(got == exp && got.getLong(0) == n.toLong)
-  }
-
-  test("BIGINT byte parse matches String.toLong at the boundaries and on junk") {
-    def bytes(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    def parse(s: String) = VectorizedFrame.parseLong(bytes(s), 0, bytes(s).length)
-    assert(parse(Long.MaxValue.toString) == Long.MaxValue)
-    assert(parse(Long.MinValue.toString) == Long.MinValue)
-    assert(parse("+42") == 42L && parse("-0") == 0L && parse("007") == 7L)
-    for (bad <- Seq("", "-", "+", "1.5", "12a", " 3", "9223372036854775808",
-        "-9223372036854775809", "99999999999999999999"))
-      intercept[NumberFormatException] {
-        VectorizedFrame.parseLong(bytes(bad), 0, bytes(bad).length)
-      }
-    // slice addressing: parse out of the middle of a frame buffer
-    val b = bytes("x-123y")
-    assert(VectorizedFrame.parseLong(b, 2, 6) == -123L)
   }
 
   test("graft-keyed rides the same columnar decode; SPJ stays exchange-free") {
@@ -181,16 +131,14 @@ class VectorizedReadSpec extends SparkSpec {
       .toDF("kb", "doc_id", "n_chars")
     val dirL = KeyedSource.stageKeyed(spark, left,
       graft.io.TempDirs.scratch("graft_vec_keyed_") + "/L", "kb")
-    def readKeyed(vectorize: Boolean) =
+    def readKeyed() =
       spark.read.format("graft-keyed").option("path", dirL)
         .option("schema", "kb BIGINT, doc_id BIGINT, n_chars BIGINT")
-        .option("key", "kb").option("vectorize", vectorize.toString).load()
-    assert(batchScans(readKeyed(true).select("kb", "doc_id")).head.supportsColumnar)
-    assert(!batchScans(readKeyed(false).select("kb", "doc_id")).head.supportsColumnar)
-    assert(readKeyed(true).orderBy("doc_id").collect()
-      .sameElements(readKeyed(false).orderBy("doc_id").collect()))
+        .option("key", "kb").load()
+    assert(readKeyed().orderBy("doc_id").collect()
+      .sameElements(left.orderBy("doc_id").collect()))
     // the SPJ report is orthogonal to the decode: a co-keyed self-join
-    // on the columnar path still plans zero Exchange
+    // still plans zero Exchange
     val bucketing = spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled")
     val requireAll = spark.conf.getOption("spark.sql.requireAllClusterKeysForCoPartition")
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
@@ -199,14 +147,14 @@ class VectorizedReadSpec extends SparkSpec {
       // the q54 shape: co-keyed join FIRST (aggregates directly on a
       // keyed read would push to the stats sidecar instead — the
       // KeyedStatsSpec surface, deliberately not this test's)
-      val left = readKeyed(true)
-      val right = readKeyed(true).withColumnRenamed("n_chars", "n2")
+      val left = readKeyed()
+      val right = readKeyed().withColumnRenamed("n_chars", "n2")
       val joined = left.hint("merge").join(right.hint("merge"), Seq("kb", "doc_id"))
         .groupBy("kb").agg(sum("n_chars").as("s"), sum("n2").as("s2"))
       val exchanges = joined.queryExecution.executedPlan.collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
       assert(exchanges.isEmpty,
-        s"columnar keyed scan must keep the SPJ alignment, got $exchanges")
+        s"keyed scan must keep the SPJ alignment, got $exchanges")
       assert(joined.collect().length == 4)
     } finally {
       bucketing.fold(spark.conf.unset("spark.sql.sources.v2.bucketing.enabled"))(
@@ -216,41 +164,10 @@ class VectorizedReadSpec extends SparkSpec {
     }
   }
 
-  test("streaming decode: records spanning chunk boundaries round-trip exactly (tiny chunk)") {
-    import spark.implicits._
-    val dir = graft.io.TempDirs.scratch("graft_vec_chunk_")
-    // records longer than the 64-byte refill grain (forces buffer
-    // growth) AND multi-byte UTF-8 everywhere (boundary must never
-    // split a code point's BYTES into separate records)
-    val mk = (i: Long) => (i, s"doc-$i " + ("日本語テキスト" * 3) + s" naïve-$i",
-      "ja", s"src_$i", i * 3L)
-    Seq(0L, 1L, 2L, 3L, 4L).map(mk)
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.parquet(s"$dir/documents.parquet")
-    val st = PageSource.stageDocuments(spark, dir, pageSize = 8L)
-    val pageDir = new java.io.File(st).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("page=")).head.toString
-    val full = org.apache.spark.sql.types.StructType.fromDDL(PageSource.DDL)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val tiny = new graft.sources.PageColumnarReader(pageDir, full, full, conf,
-      chunkBytes = 64)
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-    while (tiny.next()) {
-      val it = tiny.get().rowIterator()
-      while (it.hasNext) {
-        val r = it.next(); got += ((r.getLong(0), r.getUTF8String(1).toString))
-      }
-    }
-    tiny.close()
-    assert(got.sortBy(_._1).toSeq == Seq(0L, 1L, 2L, 3L, 4L).map(i => (i, mk(i)._2)),
-      s"chunked decode must carry records across refills byte-exactly, got ${got.take(2)}")
-  }
-
   test("zero-column batches: a read pruned to NO fields still delivers row counts") {
     // pushed LIMIT blocks the count fast path, so the row count rides
-    // the ordinary scan with EVERY column pruned away — the columnar
-    // reader must deliver counted, field-less batches
+    // the ordinary scan with EVERY column pruned away — the reader
+    // must deliver counted, field-less rows
     assert(readPages(staged).limit(5).count() == 5L)
     // same shape via a literal projection over the full corpus
     val ones = readPages(staged).select(lit(1).as("one"))
@@ -267,31 +184,5 @@ class VectorizedReadSpec extends SparkSpec {
       .select("doc_id", "text", "lang", "source", "n_chars")
       .orderBy("doc_id").collect()
     assert(pruned.orderBy("doc_id").collect().sameElements(expect))
-  }
-
-  test("per-thread pool engages: sequential same-schema readers reuse one vector set") {
-    // The r15 fix for the r14 in-suite regression: vectors and the
-    // 4 MB chunk buffer are per-THREAD, not per-READER (a scan opens
-    // one reader per page directory — 500 allocations per sf0.1 scan
-    // was the G1 old-gen churn). Sequential borrow/return on one
-    // thread must hand back the SAME instances; a nested borrow (never
-    // the task model) must degrade to a fresh allocation, not share.
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(PageSource.DDL)
-    val a = VectorizedFrame.borrowVectors(schema)
-    VectorizedFrame.returnVectors(schema, a)
-    val b = VectorizedFrame.borrowVectors(schema)
-    assert(a._2 eq b._2, "sequential same-schema readers must reuse the pooled batch")
-    val nested = VectorizedFrame.borrowVectors(schema) // slot empty: fresh
-    assert(!(nested._2 eq b._2), "an overlapping borrow must never share live vectors")
-    VectorizedFrame.returnVectors(schema, b)
-    VectorizedFrame.returnVectors(schema, nested)
-    // chunk buffer: default size pools, spec-sized buffers bypass
-    val buf = VectorizedFrame.borrowBuf(VectorizedFrame.ChunkBytes)
-    VectorizedFrame.returnBuf(VectorizedFrame.ChunkBytes, buf)
-    assert(VectorizedFrame.borrowBuf(VectorizedFrame.ChunkBytes) eq buf)
-    val tiny = VectorizedFrame.borrowBuf(16)
-    VectorizedFrame.returnBuf(16, tiny)
-    assert(!(VectorizedFrame.borrowBuf(VectorizedFrame.ChunkBytes) eq tiny),
-      "a spec-sized buffer must never be served where the default was asked")
   }
 }

@@ -10,10 +10,8 @@ import org.apache.spark.sql.functions._
   * streaming fallback's first-batch generation guard. */
 class MemoStalenessSpec extends graft.SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = Files.createTempDirectory(s"graft-$name")
-    d.toFile.deleteOnExit(); d.toString
-  }
+  private def tmp(name: String): String =
+    graft.io.TempDirs.scratch(s"graft-$name")
 
   test("memoized staging re-derives when the corpus file is regenerated in-session") {
     val dir = tmp("stale-corpus")

@@ -14,10 +14,8 @@ import scala.concurrent.duration._
   * leaves the shared session's memo alone. */
 class SessionMemoSpec extends graft.SparkSpec {
 
-  private def tmp(name: String): String = {
-    val d = Files.createTempDirectory(s"graft-$name")
-    d.toFile.deleteOnExit(); d.toString
-  }
+  private def tmp(name: String): String =
+    graft.io.TempDirs.scratch(s"graft-$name")
 
   /** Persisted RDDs whose cached plan carries the column `tag`. */
   private def persisted(tag: String): Int =

@@ -24,7 +24,7 @@ class TokStagedSpreadSpec extends graft.SparkSpec {
     // session confs reach every Hadoop conf the session derives
     ss.conf.set(s"fs.${OtherSchemeFileSystem.Scheme}.impl", classOf[OtherSchemeFileSystem].getName)
     // ~3 MB of incompressible text in ONE parquet file
-    val stage = Files.createTempDirectory("graft-spread-stage").toString
+    val stage = graft.io.TempDirs.scratch("graft-spread-stage")
     ss.range(3000).select(col("id").as("doc_id"),
         concat_ws(" ", transform(sequence(lit(1), lit(16)),
           i => sha2(concat(col("id").cast("string"), lit("-"), i.cast("string")), 256)))
@@ -33,7 +33,7 @@ class TokStagedSpreadSpec extends graft.SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(stage)
     val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
       .filter(_.endsWith(".parquet")).head
-    val dir = Files.createTempDirectory("graft-spread").toString
+    val dir = graft.io.TempDirs.scratch("graft-spread")
     Files.copy(Paths.get(part), Paths.get(dir, "documents.parquet"))
 
     val bytes = new java.io.File(s"$dir/documents.parquet").length()
