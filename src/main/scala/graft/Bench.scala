@@ -218,11 +218,10 @@ object Bench {
     }
     line
   }
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Local-iteration filter: comma-separated query names. Unset → all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+  /** The session every driver main runs under (Bench, Verify,
+    * PlanDump): one builder, so oracle parity and plan dumps are taken
+    * under the exact configuration the bench times. */
+  def driverSession(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -232,11 +231,15 @@ object Bench {
       // index-split queries (x71/x72) persist bucketed catalog tables;
       // keep the warehouse out of the repo checkout
       .config("spark.sql.warehouse.dir", io.TempDirs.scratch("graft-warehouse"))
-      // q54/q55's SPJ prerequisites at SESSION CONSTRUCTION (see
-      // Verify.scala for the full rationale): every query now plans
-      // under the same conf state regardless of Map ordering — the r13
-      // ADVICE ordering-sensitivity is gone because there is no longer
-      // a "before q54 ran" state to be sensitive to.
+      // q54/q55's SPJ prerequisites, set at SESSION CONSTRUCTION so no
+      // registered plan depends on whether q54 ran first (r13 ADVICE:
+      // the in-query sets are session-sticky, and restoring them inside
+      // the query function is impossible — physical planning, where
+      // these confs are read, happens at action time, after the
+      // function returns). Both are benign for every other plan:
+      // v2.bucketing only activates on DSv2 scans that REPORT
+      // partitioning (only graft-keyed does), and the co-partition
+      // relaxation is a skew heuristic, never correctness.
       .config("spark.sql.sources.v2.bucketing.enabled", "true")
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       // AQE partition coalescing sized by the advisory target, not by
@@ -254,6 +257,15 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // Local-iteration filter: comma-separated query names. Unset → all.
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    val spark = driverSession(cpus)
     // Several registered queries run bounded post-aggregate windows
     // (dimension-sized inputs under a GlobalLimit/aggregate — the shape
     // the r9 global partition-window sweep in PlanAuditSpec explicitly

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Optimization-round instrument: dump `.explain("formatted")` for named
@@ -13,8 +12,8 @@ import scala.util.control.NonFatal
   *        sbt "runMain graft.PlanDump"
   * Unset SPARK_GRAFT_PLANS → every registered query.
   *
-  * Session conf mirrors Bench exactly (same master/extensions/SPJ confs)
-  * so the dumped plan is the plan the bench times. Building a lifecycle
+  * The session is Bench's own ([[Bench.driverSession]]), so the dumped
+  * plan is the plan the bench times. Building a lifecycle
   * query's frame runs its staging side-effects — that is the same state
   * the bench's plans see (staging exists by the time the timed noop
   * plan is final).
@@ -28,21 +27,7 @@ object PlanDump {
       sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r19"))
     val only = sys.env.get("SPARK_GRAFT_PLANS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", io.TempDirs.scratch("graft-warehouse"))
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      // keep dumped plans in lockstep with Bench's AQE coalescing mode
-      // (r19 ADVICE: the dump omitted this conf after Bench gained it)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.driverSession(cpus)
     java.nio.file.Files.createDirectories(outDir)
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,29 +10,7 @@ object Verify {
     // oracle_sql.json, so filtering both keeps partial runs checkable.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // index-split queries (x71/x72) persist bucketed catalog tables;
-      // keep the warehouse out of the repo checkout
-      .config("spark.sql.warehouse.dir", io.TempDirs.scratch("graft-warehouse"))
-      // q54/q55's SPJ prerequisites, set at SESSION CONSTRUCTION so no
-      // registered plan depends on whether q54 ran first (r13 ADVICE:
-      // the in-query sets are session-sticky, and restoring them inside
-      // the query function is impossible — physical planning, where
-      // these confs are read, happens at action time, after the
-      // function returns). Both are benign for every other plan:
-      // v2.bucketing only activates on DSv2 scans that REPORT
-      // partitioning (only graft-keyed does), and the co-partition
-      // relaxation is a skew heuristic, never correctness.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.driverSession(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>

@@ -117,8 +117,7 @@ object Components {
   private def withLoopParallelism[T](s: SparkSession, rows: Long)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val orig = s.conf.get(key)
-    val sized = math.max(1L, math.min(orig.toLong, rows / 65536L + 1L))
-    s.conf.set(key, sized.toString)
+    s.conf.set(key, Partitions.inputSized(s, rows, 65536L).toString)
     try body finally s.conf.set(key, orig)
   }
 

@@ -1009,10 +1009,7 @@ object LlmData {
             val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
             p.getFileSystem(s.sessionState.newHadoopConf()).getFileStatus(p).getLen
           }.getOrElse(0L)
-          val sized = math.max(1L, math.min(
-            s.sessionState.conf.numShufflePartitions.toLong,
-            bytes / (1L << 20) + 1L)).toInt
-          base.repartition(sized, col("doc_id"))
+          base.repartition(Partitions.inputSized(s, bytes, 1L << 20), col("doc_id"))
         } else base
       spread.select(col("doc_id"), col("lang"), col("source"),
           Text.tokens(col("text")).as("tk"))

@@ -3110,9 +3110,7 @@ object Relational {
         val raw = t(s, dir, "lineitem")
           .select((col("l_suppkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
         val rows = t(s, dir, "lineitem").count() // parquet metadata count
-        val sizedPre = math.max(1L, math.min(
-          s.conf.get("spark.sql.shuffle.partitions").toLong,
-          rows / 65536L + 1L)).toInt
+        val sizedPre = Partitions.inputSized(s, rows, 65536L)
         val f = raw.repartition(sizedPre, col("src"), col("dst")).distinct().persist()
         // materialize NOW: deg's builder below reads
         // f.rdd.getNumPartitions, which on an un-materialized adaptive
@@ -3153,8 +3151,7 @@ object Relational {
       val edges = SessionMemo.frame(s, "q31-edges", dir) {
         // both staging scalars ride the deg build (|V| rows + one agg)
         val edgeRows = deg.agg(sum("deg")).head().getLong(0)
-        val sized = math.max(1L, math.min(
-          s.conf.get("spark.sql.shuffle.partitions").toLong, edgeRows / 65536L + 1L)).toInt
+        val sized = Partitions.inputSized(s, edgeRows, 65536L)
         val sym = li.unionByName(li.select(col("dst").as("src"), col("src").as("dst")))
         sym.join(broadcast(deg), col("src") === col("node"))
           .select(col("src"), col("dst"), col("deg"))

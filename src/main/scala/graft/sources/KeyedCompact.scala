@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Compaction (OPTIMIZE) for `graft-keyed` layouts — the maintenance
   * commit that repairs FRAGMENTATION: append commits and MERGE inserts
@@ -51,11 +51,9 @@ object KeyedCompact {
     require(minInputFiles >= 2,
       s"minInputFiles must be >= 2 (a single-file key has nothing to merge), " +
         s"got $minInputFiles")
-    val hconf = spark.sessionState.newHadoopConf()
-    val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
-    val log = KeyedSource.requireLog(path, hconf, "compaction")
+    val log = KeyedSource.requireLog(path,
+      spark.sessionState.newHadoopConf(), "compaction")
     val head = log.head
-    val scanSeq = head.seq
     // eligible: multi-file keys (appends/MERGE inserts) AND any key
     // carrying deletion vectors (merge-on-read deletes) — compaction is
     // what folds DVs into clean files, dropping the per-row bitset
@@ -64,122 +62,20 @@ object KeyedCompact {
       case (k, gens) if gens.length >= minInputFiles => k
     } ++ head.dvs.keys).toSeq.distinct.sorted
     if (frag.isEmpty) return 0
-
-    // the layout's recorded order (base generation's marker): compacted
-    // files are written back SORTED so the single-dir claim resurrects
-    val sortBy: Seq[String] =
-      KeyedSource.readOrderMarker(path, conf, schema, key,
-        KeyedSource.widenedColumns(log.ops),
-        KeyedSource.lineageOf(log.ops)._1).getOrElse(Seq.empty)
-
     // read ONLY the fragmented keys, pinned to the scanned snapshot
-    // (pushed key IN prunes to their directories)
-    val keyVals: Seq[Any] = schema(key).dataType match {
-      case LongType => frag.map(_.toLong)
-      case _ => frag
-    }
-    val df = spark.read.format("graft-keyed")
-      .option("path", path)
-      .option("schema", schema.toDDL)
-      .option("key", key)
-      .option("asOf", scanSeq.toString)
-      .load()
-      .where(col(key).isin(keyVals: _*))
-
-    val genName = "_gen-compact-" +
-      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val genDir = s"$path/$genName"
-    // the rewrite inherits the layout's codec (per-file extension probe)
-    val codec = KeyedSource.codecOfHead(path, hconf)
-    val orderCols = (key +: sortBy).map(col)
-
-    // the standing write distribution: each key wholly in one task,
-    // key-first sorted — the same audited writer the connector's
-    // write paths use, so the compacted generation carries a sidecar
-    // derived from exactly the rows written
-    // explicit fan-out (r19 ADVICE): a bare repartition(col) is
-    // coalescible to ONE task under advisory-sized AQE coalescing
-    // (parallelismFirst=false), serializing per-key file creation —
-    // the same pin KeyedWrite.requiredNumPartitions carries
-    val msgs: Array[KeyedCommitMessage] = df
-      .repartition(spark.sessionState.conf.numShufflePartitions, col(key))
-      .sortWithinPartitions(orderCols: _*)
-      .queryExecution.toRdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val w = new KeyedDataWriter(schema, key, genDir, pid.toLong, conf, codec)
-          var ok = false
-          try {
-            it.foreach(w.write)
-            val m = w.commit().asInstanceOf[KeyedCommitMessage]
-            ok = true
-            Iterator.single(m)
-          } finally if (!ok) w.abort()
-        }
-      }.collect() // bounded: one COMMIT MESSAGE per non-empty task (≤ shuffle
-                  // partitions), each holding per-key stats — the same driver
-                  // payload every DSv2 BatchWrite.commit receives, never rows
-
-    val entries = msgs.toSeq.flatMap(_.keys)
-    val dup = entries.groupBy(_.rawKey).collect { case (k, g) if g.size > 1 => k }
-    if (dup.nonEmpty) throw new IllegalStateException(
-      s"graft-keyed compaction produced ${dup.size} keys in multiple tasks " +
-        s"(${dup.take(3).mkString(",")}…): clustering contract violated, not publishing")
-    val written = entries.map(_.rawKey).toSet
-    require(written.subsetOf(frag.toSet),
-      s"compaction must rewrite only the fragmented keys " +
-        s"(${frag.mkString(",")}), wrote ${written.toSeq.sorted.mkString(",")}")
-    // an eligible key with ZERO live rows (every row removed by
-    // deletion vectors) writes no file and no sidecar entry — that is
-    // a FULL DELETE, not a failure: the commit tombstones it and drops
-    // its dvs/edits, the same outcome a key-grain DELETE would record
-    val fullyDeleted: Set[String] = frag.toSet -- written
-
-    val root = new org.apache.hadoop.fs.Path(path)
-    val gen = new org.apache.hadoop.fs.Path(root, genName)
-    val fs = root.getFileSystem(hconf)
-    val mergedSk = Array.fill(schema.length)(new KmvSketch)
-    msgs.foreach(_.sketches.zipWithIndex.foreach { case (hs, i) =>
-      mergedSk(i).addHashes(hs) })
-    val table = KeyedStats.TableNdv(entries.map(_.count).sum,
-      mergedSk.map(_.estimate))
-    KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedStats.SidecarFile),
-      KeyedStats.render(schema, key,
-        entries.map(e => KeyedStats.Entry(e.rawKey, e.count, e.mins, e.maxs, e.sums)),
-        Some(table)))
-    // KMV sketch bytes (r19) — a compaction's rewritten keys keep the
-    // merged-NDV read alive across exactly the mix it creates
-    KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedStats.NdvFile),
-      KeyedStats.renderNdv(schema, key, mergedSk.map(_.hashes)))
-    if (sortBy.nonEmpty)
-      KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedSource.OrderFile),
-        KeyedSource.renderOrderMarker(schema, key, sortBy))
-
-    try {
-      KeyedSource.commitLoop(path, hconf, "compaction commit") { prior =>
-        val l = KeyedSource.requireLog(path, prior, "compaction commit")
-        val h = l.head
-        // SERIALIZABLE: the rewrite holds rows read from scanSeq; any
-        // commit since (an append to a fragmented key, a DML, an
-        // overwrite) invalidates them — fail loudly, never rebase
-        if (h.seq != scanSeq) throw new IllegalStateException(
-          s"graft-keyed compaction at $path conflicts with a concurrent " +
-            s"commit: rows were read from snapshot $scanSeq but the head is " +
-            s"now ${h.seq}; re-run the compaction against the fresh table")
-        val edits = (h.edits -- fullyDeleted) ++
-          written.toSeq.sorted.map(k => k -> Seq(genName))
-        // compacted keys fold their deletion vectors in (the rewrite
-        // read the DV-applied view); zero-live-row keys tombstone
-        Some(l.append(KeyedSource.Snapshot(l.nextSeq, h.gen,
-          h.tombstones ++ fullyDeleted, edits, h.dvs -- frag)))
-      }
-    } catch {
-      case t: Throwable =>
-        // nothing was published (commitLoop throws only then): own
-        // staging only; the live layout is untouched
-        fs.delete(gen, true)
-        throw t
+    val rows = KeyedSource.readAt(spark, path, schema, key, head.seq, Some(frag))
+    rewrite(spark, path, schema, key, log, rows, "compaction", "compact") {
+        (prior, seq, written, gen) =>
+      require(written.subsetOf(frag.toSet),
+        s"compaction must rewrite only the fragmented keys " +
+          s"(${frag.mkString(",")}), wrote ${written.toSeq.sorted.mkString(",")}")
+      // every compacted key is served by the new generation alone and
+      // folds its deletion vectors in (the rewrite read the DV-applied
+      // view). An eligible key with ZERO live rows (every row removed
+      // by deletion vectors) writes no file and no sidecar entry — that
+      // is a FULL DELETE, not a failure: it tombstones, the same
+      // outcome a key-grain DELETE would record
+      prior.replaced(seq, frag.toSet, written, gen, branch = None)
     }
     frag.size
   }
@@ -220,19 +116,10 @@ object KeyedCompact {
     * unchanged; no snapshot burned). */
   def rebucket(spark: SparkSession, path: String, schema: StructType,
       key: String, newKey: org.apache.spark.sql.Column): Int = {
-    val hconf = spark.sessionState.newHadoopConf()
-    val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
-    val log = KeyedSource.requireLog(path, hconf, "re-bucketing")
-    val head = log.head
-    val scanSeq = head.seq
-    val keyType = schema(key).dataType
-    val evolved = newKey.cast(keyType)
-    def readHead = spark.read.format("graft-keyed")
-      .option("path", path)
-      .option("schema", schema.toDDL)
-      .option("key", key)
-      .option("asOf", scanSeq.toString)
-      .load()
+    val log = KeyedSource.requireLog(path,
+      spark.sessionState.newHadoopConf(), "re-bucketing")
+    val scanSeq = log.head.seq
+    val evolved = newKey.cast(schema(key).dataType)
     // ONE detection pass (r18 review: the NULL guard and the moved-key
     // scan each read the table; fold them into a single projection-
     // pruned aggregation): count NULL assignments — a partial CASE
@@ -240,7 +127,7 @@ object KeyedCompact {
     // cannot store a NULL key anyway — and collect the distinct moved
     // source keys (bounded: the key-domain class).
     import org.apache.spark.sql.functions.{collect_set, sum, when, lit}
-    val det = readHead
+    val det = KeyedSource.readAt(spark, path, schema, key, scanSeq)
       .select(col(key).as("_k"), evolved.as("_ev"))
       .where(col("_ev").isNull || col("_ev") =!= col("_k"))
       .agg(sum(when(col("_ev").isNull, lit(1L)).otherwise(lit(0L))).as("_nulls"),
@@ -254,103 +141,101 @@ object KeyedCompact {
     val changed: Seq[String] =
       det.getSeq[Any](1).map(String.valueOf).sorted
     if (changed.isEmpty) return 0
-    val changedVals: Seq[Any] = keyType match {
-      case LongType => changed.map(_.toLong)
-      case _ => changed
+    // rewrite the changed keys' rows under their NEW assignment
+    val rekeyed = KeyedSource.readAt(spark, path, schema, key, scanSeq,
+        Some(changed))
+      .withColumn(key, evolved)
+    rewrite(spark, path, schema, key, log, rekeyed, "re-bucketing", "rebucket") {
+        (prior, seq, written, gen) =>
+      // a changed key whose every row moved away is a tombstone; a
+      // written key either REPLACES its changed source directory or
+      // APPENDS after an untouched existing key's files
+      prior.replaced(seq, changed.toSet, written, gen, branch = None)
     }
+    changed.size
+  }
+
+  /** The rewrite both maintenance commits share: write `rows` into a
+    * new generation `_gen-<tag>-<id>` with the standing write
+    * distribution (each key wholly in one task, key-first sorted by the
+    * layout's recorded order, the layout's codec), audit it
+    * ([[KeyedWriteAudit]] — the same audited writer and stats the
+    * connector's write paths use), then publish `snapshot`'s candidate
+    * through [[KeyedSource.commitLoop]]. `snapshot` gets the fresh
+    * head's [[KeyedSource.PriorFiles]], the next seq, the written keys
+    * and the generation name. SERIALIZABLE like row-level DML: the rows
+    * were read from the head `log` names, so any commit since fails
+    * the rewrite loudly rather than rebase (an append to a rewritten
+    * key would otherwise be silently dropped). Nothing is published
+    * unless the claim wins (commitLoop throws only then), so any
+    * failure deletes this rewrite's own staging and rethrows; the live
+    * layout is untouched. */
+  private def rewrite(spark: SparkSession, path: String, schema: StructType,
+      key: String, log: KeyedSource.CommitLog,
+      rows: org.apache.spark.sql.DataFrame, what: String, tag: String)(
+      snapshot: (KeyedSource.PriorFiles, Long, Set[String], String) =>
+        KeyedSource.Snapshot): Unit = {
+    val hconf = spark.sessionState.newHadoopConf()
+    val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
+    val scanSeq = log.head.seq
+    // the head's base generation, named from `log` (a `_gen-` path
+    // reads without another commit-log read)
+    val headRoot = new org.apache.hadoop.fs.Path(path, log.head.gen).toString
+    // the layout's recorded order (base generation's marker): rewritten
+    // files are written back SORTED so the single-dir claim resurrects
     val sortBy: Seq[String] =
-      KeyedSource.readOrderMarker(path, conf, schema, key,
+      KeyedSource.readOrderMarker(headRoot, conf, schema, key,
         KeyedSource.widenedColumns(log.ops),
         KeyedSource.lineageOf(log.ops)._1).getOrElse(Seq.empty)
-    val genName = "_gen-rebucket-" +
+    val genName = s"_gen-$tag-" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(12)
     val genDir = s"$path/$genName"
     // the rewrite inherits the layout's codec (per-file extension probe)
-    val codec = KeyedSource.codecOfHead(path, hconf)
-    // rewrite the changed keys' rows under their NEW assignment, one
-    // sorted file per new key — the standing write distribution
-    val rekeyed = readHead
-      .where(col(key).isin(changedVals: _*))
-      .withColumn(key, evolved)
-    val orderCols = (key +: sortBy).map(col)
-    // explicit fan-out: same coalescing-proof pin as compact() above
-    val msgs: Array[KeyedCommitMessage] = rekeyed
-      .repartition(spark.sessionState.conf.numShufflePartitions, col(key))
-      .sortWithinPartitions(orderCols: _*)
-      .queryExecution.toRdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val w = new KeyedDataWriter(schema, key, genDir, pid.toLong, conf, codec)
-          var ok = false
-          try {
-            it.foreach(w.write)
-            val m = w.commit().asInstanceOf[KeyedCommitMessage]
-            ok = true
-            Iterator.single(m)
-          } finally if (!ok) w.abort()
-        }
-      }.collect() // one commit message per non-empty task, stats only
-    val entries = msgs.toSeq.flatMap(_.keys)
-    val dup = entries.groupBy(_.rawKey).collect { case (k, g) if g.size > 1 => k }
-    if (dup.nonEmpty) throw new IllegalStateException(
-      s"graft-keyed re-bucketing produced ${dup.size} keys in multiple tasks " +
-        s"(${dup.take(3).mkString(",")}…): clustering contract violated, not publishing")
-    val written: Set[String] = entries.map(_.rawKey).toSet
+    val codec = KeyedSource.codecOfHead(headRoot, hconf)
     val root = new org.apache.hadoop.fs.Path(path)
     val gen = new org.apache.hadoop.fs.Path(root, genName)
     val fs = root.getFileSystem(hconf)
-    val mergedSk = Array.fill(schema.length)(new KmvSketch)
-    msgs.foreach(_.sketches.zipWithIndex.foreach { case (hs, i) =>
-      mergedSk(i).addHashes(hs) })
-    val table = KeyedStats.TableNdv(entries.map(_.count).sum,
-      mergedSk.map(_.estimate))
-    KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedStats.SidecarFile),
-      KeyedStats.render(schema, key,
-        entries.map(e => KeyedStats.Entry(e.rawKey, e.count, e.mins, e.maxs, e.sums)),
-        Some(table)))
-    KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedStats.NdvFile),
-      KeyedStats.renderNdv(schema, key, mergedSk.map(_.hashes)))
-    if (sortBy.nonEmpty)
-      KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedSource.OrderFile),
-        KeyedSource.renderOrderMarker(schema, key, sortBy))
     try {
-      KeyedSource.commitLoop(path, hconf, "re-bucket commit") { prior =>
-        val l = KeyedSource.requireLog(path, prior, "re-bucket commit")
+      // explicit fan-out (r19 ADVICE): a bare repartition(col) is
+      // coalescible to ONE task under advisory-sized AQE coalescing
+      // (parallelismFirst=false), serializing per-key file creation —
+      // the same pin KeyedWrite.requiredNumPartitions carries
+      val msgs: Array[KeyedCommitMessage] = rows
+        .repartition(spark.sessionState.conf.numShufflePartitions, col(key))
+        .sortWithinPartitions((key +: sortBy).map(col): _*)
+        .queryExecution.toRdd
+        .mapPartitionsWithIndex { (pid, it) =>
+          if (it.isEmpty) Iterator.empty
+          else {
+            val w = new KeyedDataWriter(schema, key, genDir, pid.toLong, conf, codec)
+            var ok = false
+            try {
+              it.foreach(w.write)
+              val m = w.commit().asInstanceOf[KeyedCommitMessage]
+              ok = true
+              Iterator.single(m)
+            } finally if (!ok) w.abort()
+          }
+        }.collect() // bounded: one COMMIT MESSAGE per non-empty task (≤
+                    // shuffle partitions), each holding per-key stats —
+                    // the same driver payload every DSv2 BatchWrite.commit
+                    // receives, never rows
+      val written = KeyedWriteAudit.auditAndWrite(schema, key, sortBy,
+        msgs.toSeq, fs, gen, what).map(_.rawKey).toSet
+      KeyedSource.commitLoop(path, hconf, s"$what commit") { prior =>
+        val l = KeyedSource.requireLog(path, prior, s"$what commit")
         val h = l.head
         if (h.seq != scanSeq) throw new IllegalStateException(
-          s"graft-keyed re-bucketing at $path conflicts with a concurrent " +
+          s"graft-keyed $what at $path conflicts with a concurrent " +
             s"commit: rows were read from snapshot $scanSeq but the head is " +
-            s"now ${h.seq}; re-run against the fresh table")
-        val baseKeys: Set[String] = {
-          val baseGen = new org.apache.hadoop.fs.Path(root, h.gen)
-          if (fs.exists(baseGen)) fs.listStatus(baseGen).toSeq.collect {
-            case st if st.isDirectory && st.getPath.getName.startsWith("k=") =>
-              st.getPath.getName.stripPrefix("k=")
-          }.toSet else Set.empty
-        }
-        def priorLive(k: String): Seq[String] =
-          h.edits.getOrElse(k,
-            if (baseKeys.contains(k) && !h.tombstones.contains(k)) Seq(h.gen)
-            else Seq.empty)
-        val changedSet = changed.toSet
-        // a changed key whose every row moved away is a tombstone; a
-        // written key either REPLACES its changed source directory or
-        // APPENDS after an untouched existing key's files
-        val fullyMoved = changedSet -- written
-        val edits = (h.edits -- fullyMoved) ++ written.toSeq.sorted.map { k =>
-          k -> (if (changedSet.contains(k)) Seq(genName)
-                else priorLive(k) :+ genName)
-        }
-        val tombstones = (h.tombstones -- written) ++ fullyMoved
-        Some(l.append(KeyedSource.Snapshot(l.nextSeq, h.gen, tombstones,
-          edits, h.dvs -- changedSet)))
+            s"now ${h.seq}; re-run the $what against the fresh table")
+        Some(l.append(snapshot(new KeyedSource.PriorFiles(path, hconf, h),
+          l.nextSeq, written, genName)))
       }
     } catch {
       case t: Throwable =>
         fs.delete(gen, true)
         throw t
     }
-    changed.size
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Row-level DML on `graft-keyed` — MERGE INTO / UPDATE / row-grain
@@ -172,17 +172,12 @@ final class KeyedCowBatchWrite(op: KeyedCowOperation, schema: StructType,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect { case m: KeyedCommitMessage => m }
-    val entries = msgs.flatMap(_.keys)
-    val dup = entries.groupBy(_.rawKey).collect { case (k, g) if g.size > 1 => k }
-    if (dup.nonEmpty) throw new IllegalStateException(
-      s"graft-keyed rewrite produced ${dup.size} keys in multiple tasks " +
-        s"(${dup.take(3).mkString(",")}…): clustering contract violated, not publishing")
     val scan = op.configuredScan
     require(scan != null,
       "graft-keyed row-level commit reached without a configured scan")
     val scannedView = scan.view
     val scanned: Set[String] = scan.plannedRawKeys
-    val written: Set[String] = entries.map(_.rawKey).toSet
+    val written: Set[String] = msgs.flatMap(_.keys).map(_.rawKey).toSet
     val hconf = conf.value
     val root = new org.apache.hadoop.fs.Path(path)
     val gen = new org.apache.hadoop.fs.Path(root, genName)
@@ -194,26 +189,8 @@ final class KeyedCowBatchWrite(op: KeyedCowOperation, schema: StructType,
     // AUDIT artifacts land INSIDE the uncommitted generation — the
     // merged-sidecar read (KeyedStats.readView) serves edited keys
     // from here, unaffected keys from their own generations
-    val sidecarEntries = entries.map(e =>
-      KeyedStats.Entry(e.rawKey, e.count, e.mins, e.maxs, e.sums))
-    // ONE sketch merge serves both the estimate line and the persisted
-    // hash file (round-19 review: the first cut folded every task's
-    // arrays twice)
-    val mergedSk = Array.fill(schema.length)(new KmvSketch)
-    msgs.foreach(_.sketches.zipWithIndex.foreach { case (hs, i) =>
-      mergedSk(i).addHashes(hs) })
-    val table = KeyedStats.TableNdv(entries.map(_.count).sum,
-      mergedSk.map(_.estimate))
-    KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedStats.SidecarFile),
-      KeyedStats.render(schema, key, sidecarEntries, Some(table)))
-    // KMV sketch bytes per column (r19) — what lets table NDV merge
-    // across exactly the generation mix this commit creates
-    KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedStats.NdvFile),
-      KeyedStats.renderNdv(schema, key, mergedSk.map(_.hashes)))
-    if (sortBy.nonEmpty)
-      KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedSource.OrderFile),
-        KeyedSource.renderOrderMarker(schema, key, sortBy))
-    if (!fs.exists(gen)) fs.mkdirs(gen)
+    KeyedWriteAudit.auditAndWrite(schema, key, sortBy, msgs, fs, gen,
+      what = "rewrite")
     if (KeyedSource.failBeforePublish) throw new IllegalStateException(
       "graft-keyed test hook: crash before publish")
     KeyedSource.commitLoop(path, hconf, "row-level commit") { prior =>
@@ -229,34 +206,11 @@ final class KeyedCowBatchWrite(op: KeyedCowOperation, schema: StructType,
           s"commit: rows were derived from snapshot ${scannedView.seq} but the " +
           s"${branch.fold("head")(b => s"branch '$b' head")} is now " +
           s"${head.seq}; re-run the DML against the fresh table")
-      // the base generation's stored keys — needed to carry a key's
-      // prior file list when a MERGE inserts into an UNAFFECTED key
-      // (the new file APPENDS after the existing ones)
-      val baseKeys: Set[String] = {
-        val baseGen = new org.apache.hadoop.fs.Path(root, head.gen)
-        if (fs.exists(baseGen)) fs.listStatus(baseGen).toSeq.collect {
-          case s if s.isDirectory && s.getPath.getName.startsWith("k=") =>
-            s.getPath.getName.stripPrefix("k=")
-        }.toSet else Set.empty
-      }
-      def priorLive(k: String): Seq[String] =
-        head.edits.getOrElse(k,
-          if (baseKeys.contains(k) && !head.tombstones.contains(k)) Seq(head.gen)
-          else Seq.empty)
-      val fullyDeleted = scanned -- written
-      val edits = (head.edits -- fullyDeleted) ++ written.toSeq.map { k =>
-        k -> (if (scanned.contains(k)) Seq(genName) else priorLive(k) :+ genName)
-      }
-      val tombstones = (head.tombstones -- written) ++ fullyDeleted
-      // Only SCANNED keys fold their deletion vectors in: the scan read
-      // the DV-applied view, so those keys' replacement files already
-      // exclude the deleted rows. A key that was written but NOT
-      // scanned (MERGE insert into an unaffected key) merely APPENDS a
-      // file after the prior ones — its prior files stay referenced and
-      // must keep their DVs, or rows deleted under dmlMode='mor' would
-      // silently resurrect.
-      Some(log.append(KeyedSource.Snapshot(log.nextSeq, head.gen, tombstones,
-        edits, head.dvs -- scanned, branch = branch), retain))
+      // scanned keys are replaced (or tombstoned when every row was
+      // deleted); a MERGE insert into an UNAFFECTED key appends its new
+      // file after the key's prior ones
+      Some(log.append(new KeyedSource.PriorFiles(path, hconf, head)
+        .replaced(log.nextSeq, scanned, written, genName, branch), retain))
     }
   }
 
@@ -427,8 +381,7 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
     val insertEntries: Seq[KeyedStats.Entry] = insertMsgs
       .flatMap(_.keys)
       .groupBy(_.rawKey).toSeq.map { case (_, ks) =>
-        KeyedStats.mergeEntries(declared, ks.map(e =>
-          KeyedStats.Entry(e.rawKey, e.count, e.mins, e.maxs, e.sums)))
+        KeyedStats.mergeEntries(declared, ks.map(_.entry))
       }
     val hconf = conf.value
     val root = new org.apache.hadoop.fs.Path(path)
@@ -436,19 +389,9 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
     val fs = root.getFileSystem(hconf)
     // visible no-op: no row matched — burn no snapshot
     if (perKey.isEmpty && insertEntries.isEmpty) { fs.delete(gen, true); return }
-    if (insertEntries.nonEmpty) {
-      val mergedSk = Array.fill(declared.length)(new KmvSketch)
-      insertMsgs.foreach(_.sketches.zipWithIndex.foreach { case (hs, i) =>
-        mergedSk(i).addHashes(hs) })
-      val table = KeyedStats.TableNdv(insertEntries.map(_.count).sum,
-        mergedSk.map(_.estimate))
-      KeyedSource.writeFile(fs,
-        new org.apache.hadoop.fs.Path(gen, KeyedStats.SidecarFile),
-        KeyedStats.render(declared, key, insertEntries, Some(table)))
-      KeyedSource.writeFile(fs,
-        new org.apache.hadoop.fs.Path(gen, KeyedStats.NdvFile),
-        KeyedStats.renderNdv(declared, key, mergedSk.map(_.hashes)))
-    }
+    if (insertEntries.nonEmpty)
+      KeyedWriteAudit.writeStats(declared, key, Seq.empty, insertEntries,
+        insertMsgs, fs, gen)
     val scan = op.configuredScan
     require(scan != null,
       "graft-keyed merge-on-read commit reached without a configured scan")
@@ -485,17 +428,10 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
           }
         }
       }
-      val keyVals: Seq[Any] = declared(key).dataType match {
-        case LongType => perKey.keys.toSeq.map(_.toLong)
-        case _ => perKey.keys.toSeq
-      }
       import s.implicits._
       val rng = ranges.toDF("_dv_k", "_dv_s", "_dv_e")
-      val survivors = s.read.format("graft-keyed")
-        .option("path", path).option("schema", declared.toDDL)
-        .option("key", key).option("asOf", scannedSeq.toString)
-        .load()
-        .where(col(key).isin(keyVals: _*))
+      val survivors = KeyedSource.readAt(s, path, declared, key, scannedSeq,
+          Some(perKey.keys))
         .select(col("*"), col(KeyedSource.KeyCol), col(KeyedSource.PosCol))
         .join(broadcast(rng),
           col(KeyedSource.KeyCol) === col("_dv_k") &&
@@ -588,23 +524,10 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
       // UPDATE's new versions APPEND to their target keys (the same
       // edit mechanism appends/MERGE-inserts use; a key-moving update
       // lands under the NEW key, possibly creating it)
-      val baseKeys: Set[String] = {
-        val baseGen = new org.apache.hadoop.fs.Path(root, head.gen)
-        if (fs.exists(baseGen)) fs.listStatus(baseGen).toSeq.collect {
-          case st if st.isDirectory && st.getPath.getName.startsWith("k=") =>
-            st.getPath.getName.stripPrefix("k=")
-        }.toSet else Set.empty
-      }
-      def priorLive(k: String): Seq[String] =
-        head.edits.getOrElse(k,
-          if (baseKeys.contains(k) && !head.tombstones.contains(k)) Seq(head.gen)
-          else Seq.empty)
       val written = insertEntries.map(_.rawKey).toSet
-      val edits = head.edits ++ written.toSeq.map(k =>
-        k -> (priorLive(k) :+ genName))
-      Some(log.append(KeyedSource.Snapshot(log.nextSeq, head.gen,
-        head.tombstones -- written, edits, dvs -- (head.tombstones & written),
-        branch = branch), retain))
+      Some(log.append(new KeyedSource.PriorFiles(path, hconf, head)
+        .appended(log.nextSeq, written, genName, branch)
+        .copy(dvs = dvs -- (head.tombstones & written)), retain))
     }
   }
 

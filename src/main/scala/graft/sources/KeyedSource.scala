@@ -363,15 +363,7 @@ final class KeyedTable(declared: StructType, path: String, key: String,
       // comma/US/newline framing an unvalidated string like "a,b" or
       // "x\ny" would silently corrupt (r15 review: that could tombstone
       // unrelated live keys, or brick the table's metadata outright)
-      val stored: Set[String] = {
-        val gen = new org.apache.hadoop.fs.Path(path, head.gen)
-        val fs = gen.getFileSystem(hconf)
-        val base = if (fs.exists(gen)) fs.listStatus(gen).toSeq.collect {
-          case s if s.isDirectory && s.getPath.getName.startsWith("k=") =>
-            s.getPath.getName.stripPrefix("k=")
-        }.toSet else Set.empty[String]
-        (base -- head.tombstones) ++ head.edits.keySet
-      }
+      val stored = new KeyedSource.PriorFiles(path, hconf, head).stored
       val doomed: Set[String] = tombstoneSet(filters)
         .getOrElse(throw new IllegalArgumentException(
           s"graft-keyed can only delete at key grain, got " +
@@ -1787,9 +1779,7 @@ object KeyedSource {
         if (!fs.exists(rootPath)) throw new IllegalStateException(
           s"graft-keyed snapshot $seq at $layoutPath names generation $g, " +
             "which is missing — the layout is damaged")
-        fs.listStatus(rootPath).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("k="))
-          .map(_.getPath.getName.stripPrefix("k="))
+        keyDirNames(fs, rootPath)
       }
       base.filterNot(tombstones.contains).filterNot(edits.contains)
         .map(k => k -> Seq(new org.apache.hadoop.fs.Path(root, s"k=$k").toString)) ++
@@ -1843,6 +1833,15 @@ object KeyedSource {
   private def listRoot(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
     if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty
+
+  /** The raw keys of a generation directory's `k=` subdirectories, in
+    * listing order. */
+  private def keyDirNames(fs: org.apache.hadoop.fs.FileSystem,
+      gen: org.apache.hadoop.fs.Path): Seq[String] =
+    fs.listStatus(gen).toSeq.collect {
+      case s if s.isDirectory && s.getPath.getName.startsWith("k=") =>
+        s.getPath.getName.stripPrefix("k=")
+    }
 
   /** Parse the commit log: the HIGHEST versioned file. None = an empty
     * table (no log, no `k=` directories). A root that holds `k=`
@@ -2095,6 +2094,74 @@ object KeyedSource {
       s"graft-keyed $what at $path lost the commit race $maxAttempts times " +
         "(another committer keeps claiming the next snapshot seq); giving up " +
         "rather than spin — retry the operation")
+  }
+
+  /** A head snapshot's live files per key: the one rule every commit
+    * that lands a generation AFTER a key's existing files follows
+    * (appends, streaming epochs, MERGE inserts, merge-on-read update
+    * versions, re-bucketed rows moving into a kept key), and DELETE's
+    * stored-key universe. The base generation's `k=` directories are
+    * listed once, on first use. Build it inside a [[commitLoop]] body
+    * from the fresh head, so a CAS retry re-lists. */
+  private[sources] final class PriorFiles(path: String,
+      hconf: org.apache.hadoop.conf.Configuration, head: Snapshot) {
+    private lazy val baseKeys: Set[String] = {
+      val base = new org.apache.hadoop.fs.Path(path, head.gen)
+      val fs = base.getFileSystem(hconf)
+      if (fs.exists(base)) keyDirNames(fs, base).toSet else Set.empty
+    }
+    /** Key `k`'s live generations: its edit list, else the base
+      * generation unless tombstoned, else none (a new or deleted key). */
+    def priorLive(k: String): Seq[String] =
+      head.edits.getOrElse(k,
+        if (baseKeys.contains(k) && !head.tombstones.contains(k)) Seq(head.gen)
+        else Seq.empty)
+    /** Every key the head stores: base keys minus tombstones, plus
+      * edited keys. */
+    def stored: Set[String] = (baseKeys -- head.tombstones) ++ head.edits.keySet
+    /** The head with generation `gen` appended after each `written`
+      * key's live files (a tombstoned or new key is served by `gen`
+      * alone). Appends only add directories at the end of a key's
+      * stream, so deletion-vector ordinals stay valid and carry as-is. */
+    def appended(seq: Long, written: Set[String], gen: String,
+        branch: Option[String]): Snapshot =
+      Snapshot(seq, head.gen, head.tombstones -- written,
+        head.edits ++ written.toSeq.map(k => k -> (priorLive(k) :+ gen)),
+        head.dvs, branch = branch)
+    /** The head after a rewrite that read the `rewrote` keys and wrote
+      * `written` into `gen`: a rewritten key is served by `gen` alone,
+      * one written but not read appends after its live files, and one
+      * read but not written (every row gone) is tombstoned. Rewritten
+      * keys fold their deletion vectors (the rewrite read the
+      * DV-applied rows); an appended key keeps its own, or rows deleted
+      * by merge-on-read would resurrect. */
+    def replaced(seq: Long, rewrote: Set[String], written: Set[String],
+        gen: String, branch: Option[String]): Snapshot = {
+      val gone = rewrote -- written
+      Snapshot(seq, head.gen, (head.tombstones -- written) ++ gone,
+        (head.edits -- gone) ++ written.toSeq.map { k =>
+          k -> (if (rewrote.contains(k)) Seq(gen) else priorLive(k) :+ gen)
+        },
+        head.dvs -- rewrote, branch = branch)
+    }
+  }
+
+  /** Snapshot `seq` read back through the connector, narrowed to the
+    * raw keys `only` when given (the pushed key IN prunes the scan to
+    * their directories). */
+  private[sources] def readAt(spark: SparkSession, path: String,
+      schema: StructType, key: String, seq: Long,
+      only: Option[Iterable[String]] = None): org.apache.spark.sql.DataFrame = {
+    val df = spark.read.format("graft-keyed").option("path", path)
+      .option("schema", schema.toDDL).option("key", key)
+      .option("asOf", seq.toString).load()
+    only.fold(df) { raws =>
+      val vals: Seq[Any] = schema(key).dataType match {
+        case LongType => raws.toSeq.map(_.toLong)
+        case _ => raws.toSeq
+      }
+      df.where(org.apache.spark.sql.functions.col(key).isin(vals: _*))
+    }
   }
 
   /** Run cleanup whose failure must not fail the operation: what it

@@ -173,7 +173,9 @@ final class KeyedWrite(schema: StructType, path: String, key: String,
   * the rows written; shapes match [[KeyedStats.Entry]] (min/max as the
   * framed string forms, sum only meaningful at BIGINT columns). */
 final case class KeyedKeyStats(rawKey: String, count: Long,
-    mins: Array[String], maxs: Array[String], sums: Array[Long])
+    mins: Array[String], maxs: Array[String], sums: Array[Long]) {
+  def entry: KeyedStats.Entry = KeyedStats.Entry(rawKey, count, mins, maxs, sums)
+}
 
 final case class KeyedCommitMessage(keys: Seq[KeyedKeyStats],
     sketches: Array[Array[Long]]) extends WriterCommitMessage
@@ -199,7 +201,7 @@ final class KeyedBatchWrite(schema: StructType, path: String, key: String,
       fs, gen, what = "write")
     if (KeyedSource.failBeforePublish) throw new IllegalStateException(
       "graft-keyed test hook: crash before publish")
-    if (!overwrite) { appendCommit(entries, fs, root, gen); return }
+    if (!overwrite) { appendCommit(entries, fs, gen); return }
     // PUBLISH: append the new snapshot to the retained window and claim
     // the next seq through the CAS (KeyedSource.commitLoop) — a
     // concurrent committer winning the seq makes the loop rebuild
@@ -226,8 +228,7 @@ final class KeyedBatchWrite(schema: StructType, path: String, key: String,
     * head — the appended rows land after the winner, never instead of
     * it. An EMPTY append is a visible no-op: no snapshot burned. */
   private def appendCommit(entries: Seq[KeyedKeyStats],
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path,
-      gen: org.apache.hadoop.fs.Path): Unit = {
+      fs: org.apache.hadoop.fs.FileSystem, gen: org.apache.hadoop.fs.Path): Unit = {
     if (entries.isEmpty) { fs.delete(gen, true); return }
     val written: Set[String] = entries.map(_.rawKey).toSet
     KeyedSource.commitLoop(path, conf.value, "append commit") { prior =>
@@ -236,22 +237,8 @@ final class KeyedBatchWrite(schema: StructType, path: String, key: String,
       // (branch appends diverge invisibly — main readers skip branch
       // snapshots by construction)
       val head = branch.fold(log.head)(log.branchHead)
-      val baseKeys: Set[String] = {
-        val baseGen = new org.apache.hadoop.fs.Path(root, head.gen)
-        if (fs.exists(baseGen)) fs.listStatus(baseGen).toSeq.collect {
-          case s if s.isDirectory && s.getPath.getName.startsWith("k=") =>
-            s.getPath.getName.stripPrefix("k=")
-        }.toSet else Set.empty
-      }
-      def priorLive(k: String): Seq[String] =
-        head.edits.getOrElse(k,
-          if (baseKeys.contains(k) && !head.tombstones.contains(k)) Seq(head.gen)
-          else Seq.empty)
-      val edits = head.edits ++ written.toSeq.map(k => k -> (priorLive(k) :+ genName))
-      // appends only ever ADD directories at the end of a key's stream,
-      // so existing deletion-vector ordinals stay valid and carry as-is
-      Some(log.append(KeyedSource.Snapshot(log.nextSeq, head.gen,
-        head.tombstones -- written, edits, head.dvs, branch = branch), retain))
+      Some(log.append(new KeyedSource.PriorFiles(path, conf.value, head)
+        .appended(log.nextSeq, written, genName, branch), retain))
     }
   }
 
@@ -527,12 +514,15 @@ object KmvSketch {
 }
 
 
-/** The generation AUDIT step shared by the batch overwrite/append
-  * commit and the streaming epoch commit: enforce the one-task-per-key
-  * clustering contract, then write the writer-derived stats sidecar
-  * (per-key count/min/max/sum + table NDVs) and the order marker
-  * INSIDE the uncommitted generation — stats derive from exactly the
-  * rows written, never a read-back pass. */
+/** The generation AUDIT every graft-keyed commit runs before publish.
+  * The batch overwrite and append ([[KeyedBatchWrite]]), the streaming
+  * epoch ([[KeyedStreamingWrite]]), the copy-on-write rewrite
+  * ([[KeyedCowBatchWrite]]), compaction and re-bucketing
+  * ([[KeyedCompact]]) call [[auditAndWrite]]: the one-task-per-key
+  * check, then the stats write. Merge-on-read inserts
+  * ([[KeyedMorBatchWrite]]), whose per-key entries legitimately merge
+  * across tasks, call only [[writeStats]]. Stats derive from exactly
+  * the rows written, never a read-back pass. */
 private[sources] object KeyedWriteAudit {
   def auditAndWrite(schema: StructType, key: String, sortBy: Seq[String],
       msgs: Seq[KeyedCommitMessage], fs: org.apache.hadoop.fs.FileSystem,
@@ -545,22 +535,31 @@ private[sources] object KeyedWriteAudit {
     if (dup.nonEmpty) throw new IllegalStateException(
       s"graft-keyed $what produced ${dup.size} keys in multiple tasks " +
         s"(${dup.take(3).mkString(",")}…): clustering contract violated, not publishing")
+    writeStats(schema, key, sortBy, entries.map(_.entry), msgs, fs, gen)
+    entries
+  }
+
+  /** Write the stats sidecar (per-key count/min/max/sum + the table
+    * line of total count and per-column NDVs), the KMV sketch file and
+    * the order marker INSIDE the uncommitted generation `gen`. */
+  def writeStats(schema: StructType, key: String, sortBy: Seq[String],
+      entries: Seq[KeyedStats.Entry], msgs: Seq[KeyedCommitMessage],
+      fs: org.apache.hadoop.fs.FileSystem, gen: org.apache.hadoop.fs.Path): Unit = {
+    // ONE sketch merge serves both the estimate line and the persisted
+    // hash file: KMV merges by construction (union the hash sets, keep
+    // the K smallest)
     val merged = Array.fill(schema.length)(new KmvSketch)
     msgs.foreach(_.sketches.zipWithIndex.foreach { case (hs, i) =>
       merged(i).addHashes(hs) })
     val table = KeyedStats.TableNdv(entries.map(_.count).sum,
       merged.map(_.estimate))
-    val sidecarEntries = entries.map(e =>
-      KeyedStats.Entry(e.rawKey, e.count, e.mins, e.maxs, e.sums))
     KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedStats.SidecarFile),
-      KeyedStats.render(schema, key, sidecarEntries, Some(table)))
+      KeyedStats.render(schema, key, entries, Some(table)))
     // r19: persist the KMV sketch BYTES per column alongside the
-    // estimates — KMV merges by construction (union the hash sets,
-    // keep the K smallest), so a view whose keys are served by
-    // several generations can still answer table NDV by merging the
-    // per-generation sketches (readView used to drop NDV on ANY
-    // edited view: "estimates do not merge without the sketches" —
-    // now they travel). ~K×8 bytes per column, one file per commit.
+    // estimates, so a view whose keys are served by several
+    // generations can still answer table NDV by merging the
+    // per-generation sketches. ~K×8 bytes per column, one file per
+    // commit.
     KeyedSource.writeFile(fs, new org.apache.hadoop.fs.Path(gen, KeyedStats.NdvFile),
       KeyedStats.renderNdv(schema, key, merged.map(_.hashes)))
     if (sortBy.nonEmpty)
@@ -570,7 +569,6 @@ private[sources] object KeyedWriteAudit {
     // (zero tasks produced zero files): the log must never name a
     // missing directory
     if (!fs.exists(gen)) fs.mkdirs(gen)
-    entries
   }
 }
 
@@ -665,25 +663,9 @@ final class KeyedStreamingWrite(schema: StructType, path: String, key: String,
           val snap =
             if (overwrite) KeyedSource.Snapshot(log.nextSeq, gname, Set.empty)
             else {
-              // append publish — identical shape to the batch
-              // appendCommit: written keys gain this generation as an
-              // edit APPEND after their prior files; DVs carry as-is
-              val baseKeys: Set[String] = {
-                val baseGen = new org.apache.hadoop.fs.Path(root, head.gen)
-                if (fs.exists(baseGen)) fs.listStatus(baseGen).toSeq.collect {
-                  case st if st.isDirectory && st.getPath.getName.startsWith("k=") =>
-                    st.getPath.getName.stripPrefix("k=")
-                }.toSet else Set.empty
-              }
-              def priorLive(k: String): Seq[String] =
-                head.edits.getOrElse(k,
-                  if (baseKeys.contains(k) && !head.tombstones.contains(k))
-                    Seq(head.gen)
-                  else Seq.empty)
-              KeyedSource.Snapshot(log.nextSeq, head.gen,
-                head.tombstones -- written,
-                head.edits ++ written.toSeq.map(k => k -> (priorLive(k) :+ gname)),
-                head.dvs, branch = branch)
+              // append publish — the batch appendCommit's shape
+              new KeyedSource.PriorFiles(path, hconf, head)
+                .appended(log.nextSeq, written, gname, branch)
             }
           Some(log.copy(streams = log.streams + (queryId -> epochId))
             .append(snap, retain))

@@ -15,7 +15,9 @@ import org.apache.spark.sql.types.StructType
   * no-op — zero keys, no snapshot burned; (5) the changes table nets
   * a compaction interval to ZERO rows (maintenance commits are
   * invisible to CDC consumers); (6) a commit racing the compaction
-  * fails it loudly (serializable, never rebase). */
+  * fails it loudly (serializable, never rebase); (7) the compaction's
+  * audit: the head view's stats (sidecar + KMV table line) equal a
+  * direct aggregate of the rows read back. */
 class KeyedCompactionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -181,5 +183,25 @@ class KeyedCompactionSpec extends SparkSpec {
     // and a re-run against the fresh head succeeds
     assert(KeyedCompact.compact(spark, dir, schema, "kb") == 4)
     assert(readKeyed(dir).count() == 22L)
+  }
+
+  test("compaction writes audited stats: per-key sidecar and table line match the rows") {
+    val dir = graft.io.TempDirs.scratch("graft_compact_stats_") + "/t"
+    KeyedSource.stageKeyed(spark, df(32L), dir, "kb",
+      sortBy = Seq("doc_id"), retain = 4)
+    append(dir, df(8L, off = 100L))
+    append(dir, df(4L, off = 200L))
+    assert(KeyedCompact.compact(spark, dir, schema, "kb") == 4)
+    val hconf = spark.sessionState.newHadoopConf()
+    val gen = KeyedSource.readCommitLog(dir, hconf).get.head.edits.values.flatten.toSet
+    assert(gen.size == 1 && gen.head.startsWith("_gen-compact-"))
+    // the compacted generation carries its own sidecar and KMV file
+    Seq(graft.sources.KeyedStats.SidecarFile, graft.sources.KeyedStats.NdvFile)
+      .foreach(f => assert(new java.io.File(s"$dir/${gen.head}/$f").isFile, f))
+    val (stats, tableCount) = KeyedStatsAudit.fromStats(spark, dir, schema, "kb")
+    val (data, total) = KeyedStatsAudit.fromRows(readKeyed(dir), schema, "kb")
+    assert(total == 44L)
+    assert(stats == data, s"stats $stats vs rows $data")
+    assert(tableCount.contains(total), s"table line count $tableCount vs $total rows")
   }
 }

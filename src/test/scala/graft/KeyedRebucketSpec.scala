@@ -16,7 +16,9 @@ import org.apache.spark.sql.types.StructType
   *     carry the rest by reference;
   * (3) rows moving INTO an existing key append after its files;
   * (4) an assignment-preserving derivation is a no-op (no snapshot);
-  * (5) a racing commit fails the evolution loudly (serializable). */
+  * (5) a racing commit fails the evolution loudly (serializable);
+  * (6) the re-bucketing's audit: the head view's stats (sidecar + KMV
+  *     table line) equal a direct aggregate of the rows read back. */
 class KeyedRebucketSpec extends SparkSpec {
   import spark.implicits._
 
@@ -161,5 +163,31 @@ class KeyedRebucketSpec extends SparkSpec {
     // refused before any commit: no snapshot burned, old grain intact
     assert(KeyedSource.readCommitLog(dir, hconf).get.head.seq == 1L)
     assert(readKeyed(dir).count() == 32L)
+  }
+
+  test("re-bucketing writes audited stats: per-key sidecar and table line match the rows") {
+    val dir = graft.io.TempDirs.scratch("graft_rebkt_stats_") + "/t"
+    KeyedSource.stageKeyed(spark, df16(128L), dir, "kb",
+      sortBy = Seq("doc_id"), retain = 4)
+    def check(): Unit = {
+      val (stats, tableCount) = KeyedStatsAudit.fromStats(spark, dir, schema, "kb")
+      val (data, total) = KeyedStatsAudit.fromRows(readKeyed(dir), schema, "kb")
+      assert(total == 128L)
+      assert(stats == data, s"stats $stats vs rows $data")
+      assert(tableCount.contains(total), s"table line count $tableCount vs $total rows")
+    }
+    // split one bucket (7 -> 7 and 23), then move 23 into the kept key
+    // 3, whose entry then merges its base and re-bucketed generations
+    assert(KeyedCompact.rebucket(spark, dir, schema, "kb",
+      expr("CASE WHEN kb = 7 THEN doc_id % 32 ELSE kb END")) == 1)
+    check()
+    assert(KeyedCompact.rebucket(spark, dir, schema, "kb",
+      expr("CASE WHEN kb = 23 THEN 3 ELSE kb END")) == 1)
+    assert(KeyedSource.readCommitLog(dir, hconf).get.head.edits("3").length == 2)
+    check()
+    // doubling the fan-out rewrites every key into one generation
+    assert(KeyedCompact.rebucket(spark, dir, schema, "kb",
+      col("doc_id") % 32) > 0)
+    check()
   }
 }

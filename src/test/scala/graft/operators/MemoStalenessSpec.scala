@@ -10,6 +10,16 @@ import org.apache.spark.sql.functions._
   * streaming fallback's first-batch generation guard. */
 class MemoStalenessSpec extends graft.SparkSpec {
 
+  /** The single part-file of a one-partition staged write, with the
+    * directory stream CLOSED (Files.list leaks the handle if only
+    * consumed via toArray). */
+  private def firstParquet(stage: String): String = {
+    val s = Files.list(Paths.get(stage))
+    try s.toArray.map(_.toString)
+      .filter(f => f.endsWith(".parquet") && !f.contains("_SUCCESS")).head
+    finally s.close()
+  }
+
   private def tmp(name: String): String =
     graft.io.TempDirs.scratch(s"graft-$name")
 
@@ -30,8 +40,7 @@ class MemoStalenessSpec extends graft.SparkSpec {
     graft.sources.Tables.load(spark, sf0001, "documents")
       .filter(col("doc_id") % 2 === 0)
       .coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
-      .filter(f => f.endsWith(".parquet") && !f.contains("_SUCCESS")).head
+    val part = firstParquet(stage)
     Files.copy(Paths.get(part), Paths.get(dir, "documents.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     // drop Spark's own file-listing cache for the rewritten path (a
@@ -68,8 +77,7 @@ class MemoStalenessSpec extends graft.SparkSpec {
     (1 to 30).map(i => e.withColumn("vec_id", col("vec_id") + lit(i * 1000000L)))
       .reduce(_ unionByName _)
       .coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
-      .filter(f => f.endsWith(".parquet") && !f.contains("_SUCCESS")).head
+    val part = firstParquet(stage)
     Files.copy(Paths.get(part), Paths.get(dir, "embeddings.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     spark.catalog.refreshByPath(dir)
@@ -96,8 +104,7 @@ class MemoStalenessSpec extends graft.SparkSpec {
     graft.sources.Tables.load(spark, sf0001, "documents")
       .filter(col("doc_id") % 2 === 1)
       .coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
-      .filter(f => f.endsWith(".parquet") && !f.contains("_SUCCESS")).head
+    val part = firstParquet(stage)
     Files.copy(Paths.get(part), Paths.get(dir, "documents.parquet"),
       StandardCopyOption.REPLACE_EXISTING)
     spark.catalog.refreshByPath(dir)
@@ -145,8 +152,7 @@ class MemoStalenessSpec extends graft.SparkSpec {
       graft.sources.Tables.load(spark, sf0001, "documents")
         .filter(col("doc_id") % 7 =!= lit(i % 7))
         .coalesce(1).write.mode("overwrite").parquet(stage)
-      val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
-        .filter(f => f.endsWith(".parquet") && !f.contains("_SUCCESS")).head
+      val part = firstParquet(stage)
       Files.copy(Paths.get(part), Paths.get(dir, "documents.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
       spark.catalog.refreshByPath(dir)

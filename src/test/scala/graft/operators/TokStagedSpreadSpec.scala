@@ -31,8 +31,10 @@ class TokStagedSpreadSpec extends graft.SparkSpec {
           .as("text"),
         lit("en").as("lang"), lit("src0").as("source"), lit(1024L).as("n_chars"))
       .coalesce(1).write.mode("overwrite").parquet(stage)
-    val part = Files.list(Paths.get(stage)).toArray.map(_.toString)
+    val listing = Files.list(Paths.get(stage))
+    val part = try listing.toArray.map(_.toString)
       .filter(_.endsWith(".parquet")).head
+    finally listing.close()
     val dir = graft.io.TempDirs.scratch("graft-spread")
     Files.copy(Paths.get(part), Paths.get(dir, "documents.parquet"))
 
