@@ -80,39 +80,11 @@ object KeyedChanges {
             s"retain=${log.retain}) — expired or never committed; a consumer " +
             "behind retention must re-sync from changesFrom=0, or the layout " +
             "must be staged with a larger 'retain'"))
-      val view = KeyedSource.SnapshotView(path, snap.seq, Some(snap.gen),
-        snap.tombstones, snap.edits, log.ops, snap.dvs)
+      val view = KeyedSource.SnapshotView.of(path, log, snap)
       view.liveKeyDirs(hconf).map { case (k, dirs) =>
         k -> (dirs, view.dvPathsOf(k))
       }.toMap
     }
-
-  /** Per-directory evolved-read plan (None = the generation already
-    * stores the declared schema, so the frame decoder's own projection
-    * serves `required` directly) — [[KeyedScan]]'s resolution, shared
-    * so changes over schema-evolved layouts read through the same
-    * lineage. The SAME-check compares against the full DECLARED
-    * schema; the plan, when needed, resolves only `required`. */
-  private def planFor(dir: String, ops: Seq[KeyedSource.SchemaOp],
-      declared: StructType, required: StructType, layoutPath: String,
-      conf: org.apache.spark.util.SerializableConfiguration,
-      cache: scala.collection.mutable.Map[String, Option[KeyedSource.DirReadPlan]])
-      : Option[KeyedSource.DirReadPlan] = {
-    if (ops.isEmpty) return None
-    val genRoot = new org.apache.hadoop.fs.Path(dir).getParent.toString
-    cache.getOrElseUpdate(genRoot,
-      KeyedStats.writtenSchema(genRoot, conf) match {
-        case Some(w) =>
-          val same = w.fields.map(f => (f.name, f.dataType)).toSeq ==
-            declared.fields.map(f => (f.name, f.dataType)).toSeq
-          if (same) None
-          else Some(KeyedSource.evolvedPlan(genRoot, w, required, ops))
-        case None => throw new IllegalStateException(
-          s"graft-keyed layout at $layoutPath has schema-evolution lineage " +
-            s"but the generation at $genRoot has no readable stats sidecar " +
-            "to recover its written schema — cannot map; restage")
-      })
-  }
 
   /** The driver-side diff: one partition per CHANGED key, unchanged
     * keys (identical file references) skipped without IO. `keys` (pushed key-grain filters, raw
@@ -145,15 +117,15 @@ object KeyedChanges {
       s"graft-keyed changes interval is (from, to] with from <= to, " +
         s"got changesFrom=$from > changesTo=$to")
     // plans are per (generation, projection): tagged partitions decode
-    // the pruned projection, net partitions the full declared schema
-    val tagCache = scala.collection.mutable.Map
-      .empty[String, Option[KeyedSource.DirReadPlan]]
-    val netCache = scala.collection.mutable.Map
-      .empty[String, Option[KeyedSource.DirReadPlan]]
-    def tagPlans(dirs: Seq[String]): Seq[Option[KeyedSource.DirReadPlan]] =
-      dirs.map(d => planFor(d, log.ops, declared, tagRequired, path, conf, tagCache))
-    def netPlans(dirs: Seq[String]): Seq[Option[KeyedSource.DirReadPlan]] =
-      dirs.map(d => planFor(d, log.ops, declared, declared, path, conf, netCache))
+    // the pruned projection, net partitions the full declared schema —
+    // the scan's per-directory resolution (KeyedSource.dirPlan)
+    val lineage = KeyedSource.Lineage(log.ops)
+    def plans(required: StructType): Seq[String] => Seq[Option[KeyedSource.DirReadPlan]] = {
+      val cache = scala.collection.mutable.Map.empty[String, Option[KeyedSource.DirReadPlan]]
+      _.map(d => KeyedSource.dirPlan(d, lineage, declared, required, path, conf, cache))
+    }
+    val tagPlans = plans(tagRequired)
+    val netPlans = plans(declared)
     (a.keySet ++ b.keySet).toSeq.sorted
       .filter(k => keys.forall(_.contains(k)))
       .flatMap { k =>

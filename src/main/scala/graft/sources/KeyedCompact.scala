@@ -178,20 +178,17 @@ object KeyedCompact {
     val hconf = spark.sessionState.newHadoopConf()
     val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
     val scanSeq = log.head.seq
-    // the head's base generation, named from `log` (a `_gen-` path
-    // reads without another commit-log read)
-    val headRoot = new org.apache.hadoop.fs.Path(path, log.head.gen).toString
+    // the head named by `log` (no further commit-log read)
+    val view = KeyedSource.SnapshotView.of(path, log, log.head)
     // the layout's recorded order (base generation's marker): rewritten
     // files are written back SORTED so the single-dir claim resurrects
-    val sortBy: Seq[String] =
-      KeyedSource.readOrderMarker(headRoot, conf, schema, key,
-        KeyedSource.widenedColumns(log.ops),
-        KeyedSource.lineageOf(log.ops)._1).getOrElse(Seq.empty)
+    val sortBy: Seq[String] = KeyedSource.readOrderMarker(view.root, conf,
+      schema, key, view.lineage).getOrElse(Seq.empty)
     val genName = s"_gen-$tag-" +
       java.util.UUID.randomUUID().toString.replace("-", "").take(12)
     val genDir = s"$path/$genName"
-    // the rewrite inherits the layout's codec (per-file extension probe)
-    val codec = KeyedSource.codecOfHead(headRoot, hconf)
+    // the rewrite inherits the codec of the files it reads
+    val codec = KeyedSource.codecOf(view, hconf)
     val root = new org.apache.hadoop.fs.Path(path)
     val gen = new org.apache.hadoop.fs.Path(root, genName)
     val fs = root.getFileSystem(hconf)

@@ -61,7 +61,33 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * operation's commit consumes the scan's resolved snapshot (conflict
   * detection) and, for copy-on-write, its final planned key set. */
 trait KeyedRowLevelHost {
-  private[sources] def registerScan(s: KeyedScan): Unit
+  /** The scan instance Spark executes for this operation, registered
+    * at scan build: its resolved snapshot is the one the commit checks
+    * for conflicts and the write inherits its codec from, and (for
+    * copy-on-write) its final effective key set — static pushdown ∩
+    * runtime group filter — is the affected-group set the commit
+    * replaces. */
+  @volatile private var configured: KeyedScan = _
+  private[sources] def registerScan(s: KeyedScan): Unit = configured = s
+  private[sources] def configuredScan: KeyedScan = {
+    require(configured != null,
+      "graft-keyed row-level write reached without a configured scan")
+    configured
+  }
+
+  /** The scan builder over the snapshot `log` names for this
+    * operation's ref (the branch head, else the main head) — built from
+    * the log the caller already read, so planning reads the commit log
+    * once. */
+  private[sources] def scanBuilder(declared: StructType, path: String,
+      key: String, branch: Option[String], what: String): ScanBuilder = {
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+    val log = KeyedSource.requireLog(path, conf.value, what)
+    new KeyedScanBuilder(declared, key, conf,
+      KeyedSource.SnapshotView.of(path, log, branch.fold(log.head)(log.branchHead)),
+      cowHost = Some(this))
+  }
 }
 
 final class KeyedRowLevelBuilder(declared: StructType, path: String,
@@ -90,29 +116,14 @@ final class KeyedCowOperation(declared: StructType, path: String, key: String,
     branch: Option[String] = None)
     extends RowLevelOperation with KeyedRowLevelHost {
 
-  /** The scan instance Spark executes for this operation — its final
-    * effective key set (static pushdown ∩ runtime group filter) IS the
-    * affected-group set the commit replaces. Registered at scan build;
-    * read at commit, which runs strictly after the query executed. */
-  @volatile private[sources] var configuredScan: KeyedScan = _
-  override private[sources] def registerScan(s: KeyedScan): Unit =
-    configuredScan = s
-
   override def command(): Command = cmd
   override def description(): String =
     s"GraftKeyedCow path=$path key=$key command=$cmd"
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    val log = KeyedSource.requireLog(path, conf.value, s"copy-on-write $cmd")
-    new KeyedScanBuilder(declared, path, key, conf,
-      // a branch DML scans the BRANCH head (resolved at plan time, from
-      // the log read above); the commit then checks the branch head did
-      // not move
-      asOf = branch.map(b => log.branchHead(b).seq),
-      cowHost = Some(this))
-  }
+  // a branch DML scans the BRANCH head; the commit then checks the
+  // branch head did not move
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    scanBuilder(declared, path, key, branch, s"copy-on-write $cmd")
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
@@ -166,15 +177,13 @@ final class KeyedCowBatchWrite(op: KeyedCowOperation, schema: StructType,
   private def genName = s"_gen-$queryId"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    // rewrites INHERIT the layout's codec (per-file extension probe)
+    // rewrites INHERIT the codec of the files the scan read
     new KeyedCowWriterFactory(schema, key, s"$path/$genName", conf,
-      KeyedSource.codecOfHead(path, conf.value))
+      KeyedSource.codecOf(op.configuredScan.view, conf.value))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect { case m: KeyedCommitMessage => m }
     val scan = op.configuredScan
-    require(scan != null,
-      "graft-keyed row-level commit reached without a configured scan")
     val scannedView = scan.view
     val scanned: Set[String] = scan.plannedRawKeys
     val written: Set[String] = msgs.flatMap(_.keys).map(_.rawKey).toSet
@@ -280,8 +289,9 @@ final class KeyedCowWriterFactory(schema: StructType, key: String,
   *    a metadata lookup. TopN budgets SURVIVE
   *    patched deletion vectors for the same reason (the pushdown's
   *    exact-count license reads the patched entries through
-  *    [[KeyedStats.readView]]); only a pre-patch dv commit — stale
-  *    counts, `unresolvedDvKeys` — refuses until compaction. The DV
+  *    [[KeyedStats.readView]]); a DV'd key without a resolvable patch
+  *    (a pre-r17 commit) makes every metadata answer refuse until
+  *    compaction, and the data scan answers. The DV
   *    container forms live in their readers: bare-ordinal/range lines
   *    in [[KeyedSource.loadDeleted]], the dense base64 bitmap in
   *    [[KeyedSource.bitmapRuns]], and the stats-patch range parse in
@@ -300,10 +310,6 @@ final class KeyedMorOperation(declared: StructType, path: String,
   import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
   import org.apache.spark.sql.connector.write.{DeltaWrite, DeltaWriteBuilder}
 
-  @volatile private[sources] var configuredScan: KeyedScan = _
-  override private[sources] def registerScan(s: KeyedScan): Unit =
-    configuredScan = s
-
   override def command(): Command = cmd
   override def description(): String =
     s"GraftKeyedMor path=$path key=$key command=$cmd"
@@ -315,14 +321,8 @@ final class KeyedMorOperation(declared: StructType, path: String,
     Array(Expressions.column(KeyedSource.KeyCol),
       Expressions.column(KeyedSource.PosCol))
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    val log = KeyedSource.requireLog(path, conf.value, s"merge-on-read $cmd")
-    new KeyedScanBuilder(declared, path, key, conf,
-      asOf = branch.map(b => log.branchHead(b).seq),
-      cowHost = Some(this))
-  }
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    scanBuilder(declared, path, key, branch, s"merge-on-read $cmd")
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
@@ -368,7 +368,7 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriterFactory =
     new KeyedDvWriterFactory(declared, key, path, genName, idSchema, conf,
-      KeyedSource.codecOfHead(path, conf.value))
+      KeyedSource.codecOf(op.configuredScan.view, conf.value))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val msgs = messages.toSeq.collect { case m: KeyedDvMessage => m }
@@ -392,14 +392,11 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
     if (insertEntries.nonEmpty)
       KeyedWriteAudit.writeStats(declared, key, Seq.empty, insertEntries,
         insertMsgs, fs, gen)
-    val scan = op.configuredScan
-    require(scan != null,
-      "graft-keyed merge-on-read commit reached without a configured scan")
-    val scannedSeq = scan.view.seq
+    val scannedSeq = op.configuredScan.view.seq
     // ── STATS PATCH (r17): recompute the affected keys' post-delete
-    // stats so min/max/sum stay metadata-answered under live deletion
-    // vectors (they don't decompose under row deletion — count does,
-    // via the dv filenames). One bounded read-only job over EXACTLY
+    // stats so count/min/max/sum stay metadata-answered under live
+    // deletion vectors (min/max don't decompose under row deletion).
+    // One bounded read-only job over EXACTLY
     // the affected keys' DV-applied rows, anti-joined against this
     // commit's own deleted ordinal ranges (tiny, broadcast); the
     // result — one stats line per affected key — lands as a patch
@@ -488,7 +485,7 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
           val pk = String.valueOf(r.getAs[Any]("_pk"))
           pk -> KeyedStats.Entry(pk, r.getAs[Long]("_n"), mins, maxs, sums)
         }.toMap
-      val scanView = scan.view
+      val scanView = op.configuredScan.view
       val patchEntries: Seq[(KeyedStats.Entry, Int)] = perKey.keys.toSeq.sorted
         .map { k =>
           // covered = the key's serving-dir count at the scanned

@@ -6,7 +6,7 @@ import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartiti
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -235,29 +235,31 @@ final class KeyedTable(declared: StructType, path: String, key: String,
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val conf = new org.apache.spark.util.SerializableConfiguration(
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
-    new KeyedScanBuilder(declared, path, key, conf,
+    // snapshot pin: scan options first (DataFrameReader path — numeric
+    // asOf, then named tag), table pin second (catalog VERSION AS OF,
+    // numeric or tag — GraftCatalog.loadTable). Tags resolve to their
+    // pinned seq HERE, at plan time, so an unknown tag fails with the
+    // tag list before any scan exists
+    val asOfSeq = KeyedSource.numericOption(options.get("asOf"),
+      "asOf", "a snapshot sequence number like asOf=3")(_.toLong)
+      .orElse(Option(options.get("tag"))
+        .map(t => KeyedSource.resolveTag(path, conf.value, t)))
+      // branch read: resolve the branch head ONCE at plan time; the
+      // scan then pins that seq like any snapshot read (a commit on
+      // the branch mid-query cannot tear the plan)
+      .orElse(Option(options.get("branch"))
+        .map(b => KeyedSource.resolveBranch(path, conf.value, b)))
+      .orElse(asOf)
+      .orElse(asOfTag.map(t => KeyedSource.resolveTag(path, conf.value, t)))
+      // a BRANCH-pinned table reads its branch head (resolved fresh per
+      // plan — branch heads move, unlike snapshot pins)
+      .orElse(branch.map(b => KeyedSource.resolveBranch(path, conf.value, b)))
+    // an expired seq fails loudly here, at plan time
+    new KeyedScanBuilder(declared, key, conf,
+      KeyedSource.resolveView(path, conf.value, asOfSeq),
       // pruning-aware size/row statistics reported to the planner
       // (KeyedScan.estimateStatistics); false = the A/B escape hatch
-      options.getBoolean("reportStats", true),
-      // snapshot pin: scan options first (DataFrameReader path —
-      // numeric asOf, then named tag), table pin second (catalog
-      // VERSION AS OF, numeric or tag — GraftCatalog.loadTable).
-      // Tags resolve to their pinned seq HERE, at plan time, so an
-      // unknown tag fails with the tag list before any scan exists
-      asOf = KeyedSource.numericOption(options.get("asOf"),
-        "asOf", "a snapshot sequence number like asOf=3")(_.toLong)
-        .orElse(Option(options.get("tag"))
-          .map(t => KeyedSource.resolveTag(path, conf.value, t)))
-        // branch read: resolve the branch head ONCE at plan time; the
-        // scan then pins that seq like any snapshot read (a commit on
-        // the branch mid-query cannot tear the plan)
-        .orElse(Option(options.get("branch"))
-          .map(b => KeyedSource.resolveBranch(path, conf.value, b)))
-        .orElse(asOf)
-        .orElse(asOfTag.map(t => KeyedSource.resolveTag(path, conf.value, t)))
-        // a BRANCH-pinned table reads its branch head (resolved fresh
-        // per plan — branch heads move, unlike snapshot pins)
-        .orElse(branch.map(b => KeyedSource.resolveBranch(path, conf.value, b))))
+      options.getBoolean("reportStats", true))
   }
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -388,24 +390,22 @@ final class KeyedTable(declared: StructType, path: String, key: String,
   }
 }
 
-final class KeyedScanBuilder(full: StructType, path: String, key: String,
+final class KeyedScanBuilder(full: StructType, key: String,
     conf: org.apache.spark.util.SerializableConfiguration,
+    private[sources] val view: KeyedSource.SnapshotView,
     reportStats: Boolean = true,
-    asOf: Option[Long] = None,
     cowHost: Option[KeyedRowLevelHost] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownTopN {
   import org.apache.spark.sql.sources._
-  // SNAPSHOT RESOLUTION: the commit log is read ONCE per scan build —
-  // every downstream surface (partition listing, sidecar, order
-  // marker, statistics) then binds to that snapshot's generation AND
-  // tombstone set, so a commit racing this query swaps the log without
-  // tearing the plan (readers of the next query resolve the new head).
-  // `asOf` pins a retained historical snapshot instead of the head
-  // (time travel); an expired seq fails loudly here, at plan time.
-  private[sources] val view = KeyedSource.resolveView(path, conf.value, asOf)
+  // SNAPSHOT RESOLUTION: `view` is the snapshot the caller resolved
+  // from ONE commit-log read (the head, a time-travel pin, a branch
+  // head) — every downstream surface (partition listing, sidecar,
+  // order marker, statistics) binds to its generation AND tombstone
+  // set, so a commit racing this query swaps the log without tearing
+  // the plan (readers of the next query resolve the new head).
   private def root = view.root
   private def tombstones = view.tombstones
   // ONE driver-side sidecar read per scan build, shared by the TopN
@@ -416,10 +416,17 @@ final class KeyedScanBuilder(full: StructType, path: String, key: String,
   // `genSidecarMemo` extends the same discipline to the PER-GENERATION
   // parses: file-grain skipping re-proves against the same sidecars
   // readView walked (r19 review), so the two share one memo.
+  // `viewBounds` is the view before deletion-vector correction (a DV'd
+  // key's intervals still bound its surviving rows — enough for a
+  // skipping proof); `viewSidecar` is the exact, DV-corrected view the
+  // aggregates, TopN budgets and statistics answer from (None when a
+  // DV'd key's stats patch does not resolve).
   private val genSidecarMemo =
     scala.collection.mutable.Map.empty[String, Option[KeyedStats.Sidecar]]
+  private lazy val viewBounds: Option[KeyedStats.Sidecar] =
+    KeyedStats.readBounds(view, conf, full, key, genSidecarMemo)
   private lazy val viewSidecar: Option[KeyedStats.Sidecar] =
-    KeyedStats.readView(view, conf, full, key, genSidecarMemo)
+    viewBounds.flatMap(KeyedStats.applyDvs(view, conf, full, key, _, genSidecarMemo))
   private var required: StructType = full
   // None = no key predicate pushed (all directories); Some(s) = only
   // directories whose key value ∈ s are planned. Distinct from
@@ -480,13 +487,9 @@ final class KeyedScanBuilder(full: StructType, path: String, key: String,
     if (cowHost.isDefined) return false
     if (sawUnconsumed || statsPlan.isDefined || orders.isEmpty) return false
     // the budget arithmetic licenses full pushdown, so per-key counts
-    // must be EXACT: the DV-corrected view qualifies when every DV'd
-    // key resolved through a stats patch (readView); a pre-r17 dv
-    // commit leaves stale counts and refuses until compaction
-    viewSidecar match {
-      case None => return false
-      case Some(sc) => if (sc.unresolvedDvKeys.nonEmpty) return false
-    }
+    // must be EXACT: the corrected view exists only when every DV'd key
+    // resolved through a stats patch
+    if (viewSidecar.isEmpty) return false
     val marker = KeyedSource.readOrderMarkerView(view, conf, full, key)
     if (marker.isEmpty) return false
     val names = orders.toSeq.map { o =>
@@ -588,18 +591,12 @@ final class KeyedScanBuilder(full: StructType, path: String, key: String,
     if (cowHost.isDefined || sawUnconsumed) return false
     KeyedStatsScan.translate(agg, full, key) match {
       case Some((groupByKey, stats, schema)) =>
-        // Deletion vectors: readView already serves DV-corrected
-        // entries — patched keys carry EXACT post-delete min/max/sum
-        // (the DV commit's stats patch, r17) and fully-deleted keys
-        // drop. Only a key a pre-r17 dv commit touched last has no
-        // patch: its count stays exact (dv filenames carry their
-        // cardinality) but min/max/sum still include deleted rows, so
-        // non-count aggregates refuse exactly for those views.
+        // Deletion vectors: the corrected view's patched keys carry
+        // EXACT post-delete count/min/max/sum (the DV commit's stats
+        // patch, r17) and fully-deleted keys drop; a DV'd key without a
+        // resolvable patch leaves no corrected view
         viewSidecar match {
           case Some(sc) =>
-            if (sc.unresolvedDvKeys.nonEmpty &&
-                !stats.forall(_.isInstanceOf[KeyedStats.CountStat]))
-              return false
             statsPlan = Some((groupByKey, stats, schema, sc.entries))
             true
           case None => false
@@ -628,14 +625,14 @@ final class KeyedScanBuilder(full: StructType, path: String, key: String,
     case None =>
       // NON-KEY DATA SKIPPING (r18): residual predicates prune
       // directories whose sidecar interval PROVES them empty — only
-      // under a trusted sidecar (readView's header match; None = no
-      // skipping, plan everything), with unresolved-DV keys refused
-      // inside skippableKeys. Composes with everything downstream:
+      // under a trusted sidecar (the exact view, else the uncorrected
+      // one's sound intervals; None = no skipping, plan everything).
+      // Composes with everything downstream:
       // tombstones/edits are already folded into the view's entries,
       // and key-grain + runtime pruning intersect in the scan.
       val skipKeys: Set[String] =
         if (residualFilters.isEmpty) Set.empty
-        else viewSidecar.fold(Set.empty[String])(
+        else viewSidecar.orElse(viewBounds).fold(Set.empty[String])(
           sc => KeyedStats.skippableKeys(sc, residualFilters.toSeq, full))
       // FILE-grain skipping (r19): inside KEPT multi-generation keys,
       // drop individual generation dirs whose per-(key, generation)
@@ -801,9 +798,8 @@ class KeyedScan(full: StructType, required: StructType,
         })
       }
     }
-    // readView already DV-corrects entry counts (patch or filename
-    // cardinality), so the estimate is a plain sum; min/max/NDV stay
-    // estimates for unpatched keys only
+    // readView already DV-corrects entry counts (through the stats
+    // patches), so the estimate is a plain sum
     val rows = surviving.map(_.map(_.count).sum)
     val colStats = empty
     for (sc <- sidecar; t <- sc.table; entries <- surviving) {
@@ -917,34 +913,13 @@ class KeyedScan(full: StructType, required: StructType,
     case (a, b) => a.orElse(b)
   }
 
-  /** Per-generation evolved-read plan, resolved once per scan (the
-    * required projection is fixed at build). Only consulted when the
-    * snapshot carries schema-evolution ops: an op-free layout keeps the
-    * exact pre-evolution read path, byte for byte. A generation whose
-    * written schema already equals the declared one reads identity
-    * (None); otherwise the lineage maps old names/defaults
-    * ([[KeyedSource.evolvedPlan]] — loud on type drift). A generation
-    * with no readable sidecar cannot recover its written schema under
-    * an evolved declaration and fails loudly rather than decode
-    * positionally against the wrong arity. */
+  // per-generation read plans, resolved once per scan (the required
+  // projection is fixed at build) — KeyedSource.dirPlan
   private val dirPlanCache = scala.collection.concurrent.TrieMap
     .empty[String, Option[KeyedSource.DirReadPlan]]
-  private def planFor(dir: String): Option[KeyedSource.DirReadPlan] = {
-    if (view.ops.isEmpty) return None
-    val genRoot = new org.apache.hadoop.fs.Path(dir).getParent.toString
-    dirPlanCache.getOrElseUpdate(genRoot,
-      KeyedStats.writtenSchema(genRoot, conf) match {
-        case Some(w) =>
-          val same = w.fields.map(f => (f.name, f.dataType)).toSeq ==
-            full.fields.map(f => (f.name, f.dataType)).toSeq
-          if (same) None
-          else Some(KeyedSource.evolvedPlan(genRoot, w, dataRequired, view.ops))
-        case None => throw new IllegalStateException(
-          s"graft-keyed layout at ${view.layoutPath} has schema-evolution " +
-            s"lineage but the generation at $genRoot has no readable stats " +
-            "sidecar to recover its written schema — cannot map; restage")
-      })
-  }
+  private def planFor(dir: String): Option[KeyedSource.DirReadPlan] =
+    KeyedSource.dirPlan(dir, view.lineage, full, dataRequired, view.layoutPath,
+      conf, dirPlanCache)
 
   // a DEF, not a lazy val: BatchScanExec re-plans partitions after
   // runtime filter() mutates the scan — a cached listing would serve
@@ -1125,8 +1100,6 @@ final class EvolvedRowReader(inner: PartitionReader[InternalRow],
     if (plan.fromFile(i)) null
     else if (plan.constIsLong(i)) java.lang.Long.valueOf(plan.constVals(i).toLong)
     else UTF8String.fromString(plan.constVals(i)))
-  private val promote: Array[Boolean] =
-    if (plan.fpPromote == null) new Array[Boolean](n) else plan.fpPromote
   private var current: InternalRow = _
   override def next(): Boolean = {
     if (!inner.next()) return false
@@ -1141,7 +1114,7 @@ final class EvolvedRowReader(inner: PartitionReader[InternalRow],
           case 2 => Int.box(src.getInt(j))
           case 3 => Double.box(src.getDouble(j))
           case 4 =>
-            if (promote(i)) Double.box(src.getFloat(j).toDouble)
+            if (plan.fpPromote(i)) Double.box(src.getFloat(j).toDouble)
             else Float.box(src.getFloat(j))
           case _ => src.getUTF8String(j)
         }
@@ -1532,8 +1505,7 @@ object KeyedSource {
   val KeyCol = "_graft_key"
 
   /** DV files are named `_dv-<rowCount>-<taskId>` (underscore: hidden
-    * from the frame decoders) so metadata surfaces can price a
-    * deletion without opening the file. */
+    * from the frame decoders); the count a ref's name carries. */
   private[graft] def dvCountOf(ref: String): Long = {
     val name = ref.substring(ref.lastIndexOf('/') + 1)
     name.split("-", -1) match {
@@ -1638,26 +1610,22 @@ object KeyedSource {
     * rename without restaging 100 TB of frames). Ops are APPEND-ONLY
     * and name-based: a generation written before a rename stores the
     * OLD name, one written after stores the new — readers resolve each
-    * declared column against a generation's written schema through the
-    * alias chain, so no per-generation stamping is needed. Added
+    * declared column against a generation's written schema through
+    * [[Lineage]], so no per-generation stamping is needed. Added
     * columns carry a DEFAULT (the framed layout stores no NULLs — an
     * added column must answer something for pre-evolution rows). Type
-    * CHANGES have no op except the one SAFE WIDENING (r18): INT →
-    * BIGINT via [[WidenCol]] — pure metadata in this layout, since
-    * frames store ASCII digits under both types and every INT value's
-    * digit string parses as the same BIGINT; numeric order, sidecar
-    * min/max/sum digits, and the order-marker claim all carry over
-    * unchanged. Everything else (narrowing, BIGINT↔STRING) refuses
-    * loudly at plan time. Float→double has no analog here on purpose:
-    * the layout stores no floating point (the repo-wide exactness
-    * discipline — doubles are derived at query time from exact
-    * integer sums). */
+    * CHANGES have no op except the two SAFE WIDENINGS via [[WidenCol]]:
+    * INT → BIGINT (r18 — pure metadata, frames store the same ASCII
+    * digits under both types) and FLOAT → DOUBLE (r19 — exact and
+    * monotone, promoted per value). Everything else (narrowing,
+    * BIGINT↔STRING) refuses loudly at plan time. */
   sealed trait SchemaOp
   final case class AddCol(name: String, isLong: Boolean, default: String)
       extends SchemaOp
   final case class RenCol(from: String, to: String) extends SchemaOp
-  /** INT → BIGINT promotion of column `name` (by its CURRENT name at
-    * op time; later renames track it like any lineage name). */
+  /** INT → BIGINT or FLOAT → DOUBLE promotion of column `name` (by its
+    * CURRENT name at op time; later renames track it like any lineage
+    * name). */
   final case class WidenCol(name: String) extends SchemaOp
 
   /** The retained snapshot window plus the retention width that
@@ -1755,6 +1723,8 @@ object KeyedSource {
       gen: Option[String], tombstones: Set[String],
       edits: Map[String, Seq[String]], ops: Seq[SchemaOp] = Seq.empty,
       dvs: Map[String, Seq[String]] = Map.empty) {
+    /** The layout's column resolver ([[Lineage]]). */
+    lazy val lineage: Lineage = Lineage(ops)
     /** Absolute paths of key `k`'s deletion-vector files (refs are
       * `<gen>/k=<k>/<file>`, relative to the layout root). */
     def dvPathsOf(k: String): Seq[String] = dvs.getOrElse(k, Seq.empty)
@@ -1790,6 +1760,13 @@ object KeyedSource {
     }
   }
 
+  object SnapshotView {
+    /** Snapshot `snap` of `log`, the committed log of the layout at `path`. */
+    def of(path: String, log: CommitLog, snap: Snapshot): SnapshotView =
+      SnapshotView(path, snap.seq, Some(snap.gen), snap.tombstones,
+        snap.edits, log.ops, snap.dvs)
+  }
+
   /** Resolve one snapshot for a scan. `asOf = None` reads the head;
     * `asOf = Some(seq)` reads a RETAINED snapshot and fails loudly
     * when the seq expired out of the retention window (or never
@@ -1808,8 +1785,7 @@ object KeyedSource {
                 s"retain=${log.retain}) — expired or never committed; " +
                 "stage with a larger 'retain' to keep history"))
         }
-        SnapshotView(path, snap.seq, Some(snap.gen), snap.tombstones,
-          snap.edits, log.ops, snap.dvs)
+        SnapshotView.of(path, log, snap)
       case None =>
         asOf.foreach(seq => requireLog(path, None, s"asOf=$seq"))
         SnapshotView(path, 0L, None, Set.empty, Map.empty)
@@ -2174,26 +2150,26 @@ object KeyedSource {
           .warn(s"graft-keyed $what failed; a later commit retries it", e)
     }
 
-  /** The codec the layout's CURRENT data files carry, by extension
-    * probe of one committed file ("deflate" | "none") — how derivative
-    * writers (copy-on-write rewrites, MOR update appends, compaction,
-    * rebucket) INHERIT compression: the codec is recorded per file in
-    * the name, so a rewrite that kept the layout's own choice needs
-    * one driver-side listStatus, no marker. A layout with no committed
-    * data (or a foreign one) probes "none". */
-  private[sources] def codecOfHead(path: String,
+  /** The codec of the files `view` serves ("deflate" | "none"), by
+    * extension probe of one data file — how derivative writers
+    * (copy-on-write rewrites, merge-on-read update appends, compaction,
+    * re-bucketing) INHERIT compression: the codec is recorded per file
+    * in its name, so no marker is needed. Probes the newest serving
+    * generation first (each edited key's last generation — every edit
+    * is newer than the base), then the base generation's live keys, so
+    * a base that holds no key directory cannot hide the appends'
+    * codec. A view serving no data file probes "none". */
+  private[sources] def codecOf(view: SnapshotView,
       hconf: org.apache.hadoop.conf.Configuration): String = {
-    val root = new org.apache.hadoop.fs.Path(effectiveRoot(path, hconf))
-    val fs = root.getFileSystem(hconf)
-    if (!fs.exists(root)) return "none"
-    val kd = fs.listStatus(root).find(st =>
-      st.isDirectory && st.getPath.getName.startsWith("k="))
-    kd.flatMap(d => fs.listStatus(d.getPath).find(f => f.isFile &&
-        !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith(".")))
-      .map(f =>
-        if (f.getPath.getName.endsWith(PageSource.DeflateSuffix)) "deflate"
-        else "none")
-      .getOrElse("none")
+    val fs = new org.apache.hadoop.fs.Path(view.layoutPath).getFileSystem(hconf)
+    val newest = view.edits.iterator.map { case (k, gs) =>
+      new org.apache.hadoop.fs.Path(view.genRoot(gs.last), s"k=$k").toString }
+    (newest ++ view.liveKeyDirs(hconf).iterator.flatMap(_._2))
+      .flatMap(d => fs.listStatus(new org.apache.hadoop.fs.Path(d)).find(f =>
+        f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith(".")))
+      .map(f => if (f.getPath.getName.endsWith(PageSource.DeflateSuffix)) "deflate" else "none")
+      .nextOption().getOrElse("none")
   }
 
   /** Stale-staging grace: an unreferenced `_gen-*` directory younger
@@ -2630,113 +2606,163 @@ object KeyedSource {
   private[sources] def ddlToSchema(ddl: String): StructType =
     if (ddl.isEmpty) new StructType() else StructType.fromDDL(ddl)
 
-  /** Read-time lineage: for each CURRENT column name, its historical
-    * aliases (newest-first), the add-op default (if the column was
-    * introduced by evolution), and whether an INT→BIGINT widening is
-    * recorded — all tracked through renames. */
-  private[sources] def lineageOf(ops: Seq[SchemaOp])
-      : (Map[String, Seq[String]], Map[String, (Boolean, String)], Set[String]) = {
-    var aliases = Map.empty[String, Seq[String]]
-    var defaults = Map.empty[String, (Boolean, String)]
-    var widened = Set.empty[String]
-    ops.foreach {
-      case AddCol(n, l, d) => defaults += n -> ((l, d))
-      case WidenCol(n) => widened += n
-      case RenCol(o, n) =>
-        aliases += n -> (o +: aliases.getOrElse(o, Seq.empty))
-        aliases -= o
-        defaults.get(o).foreach { d => defaults += n -> d; defaults -= o }
-        if (widened.contains(o)) { widened -= o; widened += n }
+  /** The ONE rule matching a declared column to what a generation
+    * WROTE, built from the layout's schema-evolution lineage (`ops`).
+    * Every surface reading a generation under today's declaration
+    * resolves through it: the data read plan ([[dirPlan]]), the stats
+    * sidecar and deletion-vector stats patch ([[KeyedStats.read]],
+    * [[KeyedStats.readPatch]]), the KMV sketch file and the order
+    * marker ([[readOrderMarker]]) — so a new stored type or promotion
+    * is taught here once. Iceberg answers the same question with one
+    * resolver keyed by column id; ops here are name-based, so a
+    * declared column resolves through its alias chain (current name
+    * first, then older names newest-first), all tracked through
+    * renames. */
+  final case class Lineage(ops: Seq[SchemaOp]) {
+    private val (aliases, defaults, widened) = ops.foldLeft((
+      Map.empty[String, Seq[String]], Map.empty[String, (Boolean, String)],
+      Set.empty[String])) {
+      case ((al, df, wd), AddCol(n, l, d)) => (al, df + (n -> ((l, d))), wd)
+      case ((al, df, wd), WidenCol(n)) => (al, df, wd + n)
+      case ((al, df, wd), RenCol(o, n)) =>
+        (al - o + (n -> (o +: al.getOrElse(o, Seq.empty))),
+          df.get(o).fold(df)(d => df - o + (n -> d)),
+          if (wd.contains(o)) wd - o + n else wd)
     }
-    (aliases, defaults, widened)
+
+    /** Each declared column's answer against `written` ([[column]]),
+      * under one whole-schema rule first: with no recorded ops the
+      * written (name, type) sequence must EQUAL the declared one, so a
+      * reordered declaration over a lineage-free layout refuses rather
+      * than re-read positional stats by name. */
+    def resolve(written: StructType, declared: StructType): IndexedSeq[Lineage.Col] =
+      if (ops.isEmpty && !Lineage.same(written, declared)) {
+        val no = Lineage.Refused(s"written columns ${written.simpleString} " +
+          s"differ from the declared ${declared.simpleString} and the layout " +
+          "records no schema evolution")
+        declared.fields.toIndexedSeq.map(_ => no)
+      } else declared.fields.toIndexedSeq.map(column(written, _))
+
+    /** One declared column against `written`: the first alias-chain
+      * name the generation stored, type-equal or under a recorded
+      * widening (INT→BIGINT, FLOAT→DOUBLE — narrowing and cross-kind
+      * changes refuse); else its add-op constant, whose recorded kind
+      * must be EXACTLY the declared type (a DOUBLE declaration never
+      * binds a BIGINT or STRING default); else a refusal. */
+    def column(written: StructType, f: StructField): Lineage.Col =
+      (f.name +: aliases.getOrElse(f.name, Seq.empty))
+          .find(written.fieldNames.contains) match {
+        case Some(src) =>
+          val st = written(src).dataType
+          val promotion =
+            if (st == f.dataType) Some(Lineage.Same)
+            else if (!widened.contains(f.name)) None
+            else (st, f.dataType) match {
+              case (IntegerType, LongType) => Some(Lineage.IntToBigint)
+              case (FloatType, DoubleType) => Some(Lineage.FloatToDouble)
+              case _ => None
+            }
+          promotion.fold[Lineage.Col](Lineage.Refused(s"schema drift: column " +
+            s"'${f.name}' (stored as '$src') was written ${st.sql} but is " +
+            s"declared ${f.dataType.sql} — type changes refuse; restage the layout"))(
+            Lineage.Stored(written.fieldIndex(src), _))
+        case None => defaults.get(f.name) match {
+          case Some((isLong, d)) if f.dataType == (if (isLong) LongType else StringType) =>
+            Lineage.Const(isLong, d)
+          case Some(_) => Lineage.Refused(s"schema drift: added column " +
+            s"'${f.name}' is declared ${f.dataType.sql} but its add-op recorded " +
+            "the other type — type changes refuse")
+          case None => Lineage.Refused(s"cannot resolve column '${f.name}' " +
+            s"(written: ${written.simpleString}; no lineage alias, no add-op " +
+            "default) — declared schema and layout lineage disagree")
+        }
+      }
   }
 
-  /** The CURRENT names carrying a recorded INT→BIGINT widening — the
-    * set every trust check (sidecar header, order marker) consults to
-    * accept a generation's stored INT where the declaration now says
-    * BIGINT. */
-  private[graft] def widenedColumns(ops: Seq[SchemaOp]): Set[String] =
-    lineageOf(ops)._3
+  object Lineage {
+    val empty: Lineage = Lineage(Seq.empty)
+
+    /** How a stored column's digits become the declared type. */
+    sealed trait Promotion
+    case object Same extends Promotion
+    /** Same ASCII digits under both types: decode target, sidecar
+      * digits and numeric order all carry over. */
+    case object IntToBigint extends Promotion
+    /** Sortable-int digits: promoted per value (exact and monotone —
+      * every float is a double), never re-read as sortable-long. */
+    case object FloatToDouble extends Promotion
+
+    sealed trait Col
+    /** Written column `at` (an index into the written schema). */
+    final case class Stored(at: Int, promotion: Promotion) extends Col
+    /** Added by evolution: every row of the generation answers `value`. */
+    final case class Const(isLong: Boolean, value: String) extends Col
+    final case class Refused(reason: String) extends Col
+
+    /** Same names and types in the same order (nullability ignored —
+      * the layout stores no nulls). */
+    def same(written: StructType, declared: StructType): Boolean =
+      written.fields.map(f => (f.name, f.dataType)).toSeq ==
+        declared.fields.map(f => (f.name, f.dataType)).toSeq
+
+    def refusal(cols: Seq[Col]): Option[String] =
+      cols.collectFirst { case Refused(r) => r }
+  }
 
   /** Per-directory evolved-read plan: how one generation's files map
     * to the scan's output columns. `innerDdl` is the projection the
     * frame decoder reads from the FILE (file-side names/types, output
     * order); `fromFile(i)` says output column i comes from the decoder
-    * (in sequence) vs the parsed constant default. None = identity
-    * (the generation already stores the declared schema). */
+    * (in sequence) vs the parsed constant default; `fpPromote(i)` marks
+    * a FLOAT-decoded column promoted to DOUBLE in [[EvolvedRowReader]]. */
   final case class DirReadPlan(fileDdl: String, innerDdl: String,
       fromFile: Array[Boolean], constIsLong: Array[Boolean],
-      constVals: Array[String],
-      // output columns whose file column decodes FLOAT under a
-      // recorded FLOAT→DOUBLE widening — promoted in EvolvedRowReader
-      // (null for plans built before r19: no promotion)
-      fpPromote: Array[Boolean] = null)
+      constVals: Array[String], fpPromote: Array[Boolean])
 
-  /** Resolve `required` against a generation's written schema through
-    * the lineage. Loud on: a column that neither resolves nor has a
-    * default, and on TYPE DRIFT (a BIGINT-written field read as STRING
-    * would silently reorder and corrupt; narrowing likewise refuses —
-    * the order-marker v2 rule applied to the data path). */
+  /** `required` against a generation's written schema through the
+    * lineage; loud with the resolver's reason on any refusal (type
+    * drift would silently misdecode). An INT→BIGINT column decodes
+    * directly as BIGINT (same digits); a FLOAT→DOUBLE one decodes as
+    * FLOAT and promotes per value. */
   private[sources] def evolvedPlan(genRoot: String, written: StructType,
-      required: StructType, ops: Seq[SchemaOp]): DirReadPlan = {
-    import org.apache.spark.sql.types.StructField
-    val (aliases, defaults, widened) = lineageOf(ops)
-    val inner = scala.collection.mutable.ArrayBuffer.empty[StructField]
-    val fromFile = new Array[Boolean](required.length)
-    val constIsLong = new Array[Boolean](required.length)
-    val constVals = new Array[String](required.length)
-    val fpPromote = new Array[Boolean](required.length)
-    required.fields.zipWithIndex.foreach { case (f, i) =>
-      val candidates = f.name +: aliases.getOrElse(f.name, Seq.empty)
-      candidates.find(written.fieldNames.contains) match {
-        case Some(src) =>
-          val st = written(src).dataType
-          // the SAFE promotions: an INT-written column under a
-          // recorded widening decodes DIRECTLY as BIGINT — the frames
-          // hold the same ASCII digits, only the parse target changes,
-          // so the "promotion" is the inner projection's declared
-          // type; a FLOAT-written column under a recorded widening
-          // decodes as FLOAT (its sortable-int digits) and PROMOTES
-          // per value in EvolvedRowReader (the digit domains differ)
-          val widens = st == org.apache.spark.sql.types.IntegerType &&
-            f.dataType == LongType && widened.contains(f.name)
-          val fpWidens = st == org.apache.spark.sql.types.FloatType &&
-            f.dataType == org.apache.spark.sql.types.DoubleType &&
-            widened.contains(f.name)
-          if (st != f.dataType && !widens && !fpWidens)
-            throw new IllegalArgumentException(
-              s"graft-keyed schema drift at $genRoot: column '${f.name}' " +
-                s"(stored as '$src') was written ${st.sql} but is declared " +
-                s"${f.dataType.sql} — type changes refuse; restage the layout")
-          fromFile(i) = true
-          fpPromote(i) = fpWidens
-          inner += StructField(src,
-            if (fpWidens) org.apache.spark.sql.types.FloatType else f.dataType,
-            nullable = false)
-        case None => defaults.get(f.name) match {
-          // the declared type must be EXACTLY the add-op's kind
-          // (round-19 review: `isLong == (dt == LongType)` let a
-          // DOUBLE-declared column bind a STRING default — a
-          // UTF8String constant in an fp slot, a decode-time CCE)
-          case Some((isLong, d))
-              if (if (isLong) f.dataType == LongType
-                  else f.dataType == StringType) =>
-            constIsLong(i) = isLong
-            constVals(i) = d
-          case Some(_) => throw new IllegalArgumentException(
-            s"graft-keyed schema drift at $genRoot: added column " +
-              s"'${f.name}' is declared ${f.dataType.sql} but its add-op " +
-              "recorded the other type — type changes refuse")
-          case None => throw new IllegalArgumentException(
-            s"graft-keyed cannot resolve column '${f.name}' against the " +
-              s"generation at $genRoot (written: ${written.simpleString}; " +
-              "no lineage alias, no add-op default) — declared schema and " +
-              "layout lineage disagree")
-        }
-      }
+      required: StructType, lineage: Lineage): DirReadPlan = {
+    val cols = lineage.resolve(written, required)
+    Lineage.refusal(cols).foreach(r =>
+      throw new IllegalArgumentException(s"graft-keyed generation at $genRoot: $r"))
+    val inner = cols.zip(required.fields).collect {
+      case (Lineage.Stored(w, p), f) => StructField(written(w).name,
+        if (p == Lineage.FloatToDouble) FloatType else f.dataType, nullable = false)
     }
-    DirReadPlan(written.toDDL, StructType(inner.toSeq).toDDL,
-      fromFile, constIsLong, constVals, fpPromote)
+    DirReadPlan(written.toDDL, StructType(inner).toDDL,
+      cols.map(_.isInstanceOf[Lineage.Stored]).toArray,
+      cols.map { case Lineage.Const(l, _) => l; case _ => false }.toArray,
+      cols.map { case Lineage.Const(_, v) => v; case _ => null }.toArray,
+      cols.map { case Lineage.Stored(_, p) => p == Lineage.FloatToDouble; case _ => false }
+        .toArray)
+  }
+
+  /** One directory's read plan, memoized per generation in `cache`:
+    * None = decode by the declared schema (no lineage recorded, or the
+    * generation wrote exactly the declared columns); otherwise
+    * [[evolvedPlan]] over `required`. The written schema comes from the
+    * generation's stats sidecar header — without one an evolved layout
+    * cannot map and fails loudly rather than decode positionally. */
+  private[sources] def dirPlan(dir: String, lineage: Lineage,
+      declared: StructType, required: StructType, layoutPath: String,
+      conf: org.apache.spark.util.SerializableConfiguration,
+      cache: scala.collection.mutable.Map[String, Option[DirReadPlan]])
+      : Option[DirReadPlan] = {
+    if (lineage.ops.isEmpty) return None
+    val genRoot = new org.apache.hadoop.fs.Path(dir).getParent.toString
+    cache.getOrElseUpdate(genRoot, KeyedStats.writtenSchema(genRoot, conf) match {
+      case Some(w) =>
+        if (Lineage.same(w, declared)) None
+        else Some(evolvedPlan(genRoot, w, required, lineage))
+      case None => throw new IllegalStateException(
+        s"graft-keyed layout at $layoutPath has schema-evolution lineage but " +
+          s"the generation at $genRoot has no readable stats sidecar to " +
+          "recover its written schema — cannot map; restage")
+    })
   }
 
   /** Boxing/wire kind codes shared by every frame reader: 0=BIGINT,
@@ -2826,10 +2852,8 @@ object KeyedSource {
   private[graft] def readOrderMarkerView(view: SnapshotView,
       conf: org.apache.spark.util.SerializableConfiguration,
       declared: StructType, key: String): Option[Seq[String]] = {
-    val widened = widenedColumns(view.ops)
-    val aliases = lineageOf(view.ops)._1
     if (view.edits.isEmpty)
-      return readOrderMarker(view.root, conf, declared, key, widened, aliases)
+      return readOrderMarker(view.root, conf, declared, key, view.lineage)
     val live = view.liveKeyDirs(conf.value)
     if (live.exists(_._2.length > 1)) return None
     val roots: Seq[String] =
@@ -2837,54 +2861,39 @@ object KeyedSource {
       else live.flatMap(_._2)
         .map(d => new org.apache.hadoop.fs.Path(d).getParent.toString).distinct
     val markers = roots.map(r =>
-      readOrderMarker(r, conf, declared, key, widened, aliases))
+      readOrderMarker(r, conf, declared, key, view.lineage))
     if (markers.forall(_.isDefined) && markers.distinct.length == 1) markers.head
     else None
   }
 
   /** Parse the order marker against the declared key AND types; None =
-    * no marker, wrong version, or any name/type the declared schema
-    * cannot back — the scan then claims nothing (the stats-sidecar
-    * trust rule, applied to ordering). A recorded INT→BIGINT widening
-    * (`widened`) keeps a pre-widening marker's claim: numeric order is
-    * identical under both types, unlike the BIGINT/STRING drift the
-    * v2 type check exists to refuse. */
+    * no marker, wrong version, or a tag the declared schema cannot back
+    * — the scan then claims nothing (the stats-sidecar trust rule,
+    * applied to ordering). Each `name:TYPE` tag is a written column the
+    * [[Lineage]] resolves a declared column to, and the claim is made
+    * under the DECLARED names, which the scan output resolves: renames
+    * keep the claim (same rows, same bytes), and so do the recorded
+    * widenings (numeric order is identical under INT→BIGINT, and
+    * FLOAT→DOUBLE is monotone), unlike the BIGINT/STRING drift the v2
+    * type check exists to refuse. */
   private[graft] def readOrderMarker(path: String,
       conf: org.apache.spark.util.SerializableConfiguration,
-      declared: StructType, key: String,
-      widened: Set[String] = Set.empty,
-      aliases: Map[String, Seq[String]] = Map.empty): Option[Seq[String]] = {
-    val root = effectiveRoot(path, conf.value)
-    val p = new org.apache.hadoop.fs.Path(root, OrderFile)
-    val fs = p.getFileSystem(conf.value)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    // a stored name resolves to the DECLARED column whose alias chain
-    // carries it (r18: ordering claims survive renames — same rows,
-    // same bytes, new name), type-equal or INT under a recorded
-    // widening (numeric order identical); the claim is returned under
-    // the DECLARED name, which is what the scan output resolves
-    def matches(tagged: String): Option[String] = tagged.split(":", 2) match {
-      case Array(name, tpe) =>
-        declared.fields.find(f =>
-          (f.name +: aliases.getOrElse(f.name, Seq.empty)).contains(name))
-          .filter(f => f.dataType.sql == tpe ||
-            (tpe == "INT" && f.dataType == LongType &&
-              widened.contains(f.name)) ||
-            // FLOAT→DOUBLE widening keeps ordering claims too: the
-            // promotion is monotone, so the stored order IS the
-            // declared-type order (r19)
-            (tpe == "FLOAT" &&
-              f.dataType == org.apache.spark.sql.types.DoubleType &&
-              widened.contains(f.name)))
-          .map(_.name)
-      case _ => None
-    }
+      declared: StructType, key: String, lineage: Lineage): Option[Seq[String]] = {
+    val text = KeyedStats.readText(effectiveRoot(path, conf.value), OrderFile, conf)
+      .getOrElse(return None)
     text.split(PageSource.US, -1) match {
-      case Array(OrderVersion, k, colsCsv) if matches(k).contains(key) =>
-        val cs = colsCsv.split(",", -1).toSeq.map(matches)
-        if (cs.nonEmpty && cs.forall(_.isDefined)) Some(cs.flatten) else None
+      case Array(OrderVersion, k, colsCsv) =>
+        val written = KeyedStats.tagSchema(k +: colsCsv.split(",", -1).toSeq, ':')
+          .getOrElse(return None)
+        val claims: Map[Int, String] = declared.fields.flatMap(f =>
+          lineage.column(written, f) match {
+            case Lineage.Stored(at, _) => Some(at -> f.name)
+            case _ => None
+          }).toMap
+        val names = written.indices.map(claims.get)
+        if (names.forall(_.isDefined) && names.head.contains(key))
+          Some(names.tail.flatten)
+        else None
       case _ => None
     }
   }

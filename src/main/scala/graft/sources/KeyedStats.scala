@@ -43,7 +43,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * count/min/max/sum closure, a
   * group-by that is not exactly the layout key, SUM of a STRING
   * column, a missing sidecar (foreign layout), or a sidecar whose
-  * header does not match the declared schema + key (stale or
+  * header the layout's lineage ([[KeyedSource.Lineage]]) does not
+  * resolve against the declared schema + key (stale or
   * foreign-written layout — the sidecar is part of stageKeyed's write
   * contract, and a layout some other writer mutated must not be
   * trusted for metadata answers).
@@ -67,8 +68,9 @@ object KeyedStats {
     * again). Each entry records how many of the key's serving
     * directories it COVERS: generations appended after the patch add
     * their own sidecar entries on top, and a later DV commit writes a
-    * newer patch. A dv ref whose generation carries no patch entry
-    * (pre-r17 commits) falls back to the count-only correction. */
+    * newer patch. A DV'd key whose patch does not resolve (a pre-r17
+    * commit, a foreign writer) leaves the view without metadata
+    * answers: the data scan answers instead. */
   val PatchFile = "_graft_keyed_stats_patch"
   val PatchVersion = "graft-keyed-stats-patch v1"
   // v2 (r15): stats derive in the WRITERS (write-audit-publish — from
@@ -98,12 +100,8 @@ object KeyedStats {
   /** Parsed sidecar: per-key entries plus the table line (absent only
     * in a zero-entry layout's degenerate case — the writer always
     * emits it, but the reader treats it as optional so the per-key
-    * surfaces never depend on it). `unresolvedDvKeys` (view reads
-    * only): keys whose entries carry EXACT counts but whose min/max/
-    * sum still include DV-deleted rows — no patch was available, so
-    * non-count aggregates must refuse for views containing them. */
-  final case class Sidecar(entries: Seq[Entry], table: Option[TableNdv],
-      unresolvedDvKeys: Set[String] = Set.empty)
+    * surfaces never depend on it). */
+  final case class Sidecar(entries: Seq[Entry], table: Option[TableNdv])
 
   /** The stat one pushed aggregate expression reads from an entry.
     * `sentinel` is the zero-survivor value (bare aggregates only). */
@@ -192,11 +190,6 @@ object KeyedStats {
     case other => throw new IllegalArgumentException(s"unsupported stat type $other")
   }
 
-  /** Fields per entry line: key + count + (3 per numeric col, 2 per
-    * STRING col). */
-  private def lineArity(schema: StructType): Int =
-    2 + schema.fields.map(f => if (numeric(f.dataType)) 3 else 2).sum
-
   /** Schema identity for the header: name + type, nullability ignored
     * (fromDDL-declared schemas are all-nullable while staged lineage
     * schemas usually are not — the layout stores no nulls either way,
@@ -204,24 +197,51 @@ object KeyedStats {
   private def schemaTag(schema: StructType): String =
     schema.fields.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
 
-  /** Header-tag trust under widening (r18): exact match, or differing
-    * ONLY by a recorded INT→BIGINT promotion at the named columns —
-    * the stored digits and line arity are identical under both types,
-    * so a pre-widening generation's entries parse under the declared
-    * schema unchanged and stay metadata-answer-worthy. Any other
-    * divergence (names — i.e. pre-rename generations — kinds, arity)
-    * refuses as ever. */
-  private def tagCompatible(stored: String, declared: StructType,
-      widened: Set[String]): Boolean = {
-    if (stored == schemaTag(declared)) return true
-    if (widened.isEmpty) return false
-    val parts = stored.split(", ", -1)
-    parts.length == declared.length && parts.zip(declared.fields).forall {
-      case (p, f) =>
-        p == s"${f.name} ${f.dataType.sql}" ||
-          (f.dataType == LongType && widened.contains(f.name) &&
-            p == s"${f.name} INT")
+  /** The types a layout stores. */
+  private val Storable: Seq[DataType] = Seq(LongType, StringType,
+    org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.DoubleType,
+    org.apache.spark.sql.types.FloatType)
+
+  /** A WRITTEN schema from its header tags, each `name<sep>TYPE` (the
+    * stats files' `name TYPE`, the order marker's `name:TYPE`). None =
+    * a malformed tag or a type no layout stores. */
+  private[sources] def tagSchema(tags: Seq[String], sep: Char): Option[StructType] = {
+    val fields = tags.map { t =>
+      val i = t.lastIndexOf(sep)
+      Storable.find(_.sql == t.substring(i + 1)).filter(_ => i > 0)
+        .map(StructField(t.substring(0, i), _))
     }
+    if (fields.forall(_.isDefined)) Some(StructType(fields.flatten)) else None
+  }
+
+  /** The text of metadata file `file` under `dir`; None = absent. */
+  private[sources] def readText(dir: String, file: String,
+      conf: org.apache.spark.util.SerializableConfiguration): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir, file)
+    val fs = p.getFileSystem(conf.value)
+    if (!fs.exists(p)) return None
+    val in = fs.open(p)
+    try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString) finally in.close()
+  }
+
+  private def appendHeader(sb: StringBuilder, version: String,
+      schema: StructType, key: String): Unit =
+    sb.append(version).append(PageSource.US).append(schemaTag(schema))
+      .append(PageSource.US).append(key).append('\n')
+
+  /** One entry line: key, the patch's covered-dir count (patch lines
+    * only), count, then per column min, max (and sum when numeric). */
+  private def appendEntry(sb: StringBuilder, schema: StructType, e: Entry,
+      covered: Option[Int]): Unit = {
+    sb.append(e.rawKey)
+    covered.foreach(c => sb.append(PageSource.US).append(c))
+    sb.append(PageSource.US).append(e.count)
+    schema.fields.zipWithIndex.foreach { case (f, i) =>
+      sb.append(PageSource.US).append(e.mins(i))
+        .append(PageSource.US).append(e.maxs(i))
+      if (numeric(f.dataType)) sb.append(PageSource.US).append(e.sums(i))
+    }
+    sb.append('\n')
   }
 
   /** Render the sidecar: header line pins version + schema + key, then
@@ -230,317 +250,154 @@ object KeyedStats {
   private[sources] def render(schema: StructType, key: String,
       entries: Seq[Entry], table: Option[TableNdv] = None): String = {
     val sb = new StringBuilder
-    sb.append(Version).append(PageSource.US).append(schemaTag(schema))
-      .append(PageSource.US).append(key).append('\n')
+    appendHeader(sb, Version, schema, key)
     table.foreach { t =>
       sb.append(t.count)
       t.ndvs.foreach(v => sb.append(PageSource.US).append(v))
       sb.append('\n')
     }
-    entries.sortBy(_.rawKey).foreach { e =>
-      sb.append(e.rawKey).append(PageSource.US).append(e.count)
-      schema.fields.zipWithIndex.foreach { case (f, i) =>
-        sb.append(PageSource.US).append(e.mins(i))
-          .append(PageSource.US).append(e.maxs(i))
-        if (numeric(f.dataType)) sb.append(PageSource.US).append(e.sums(i))
-      }
-      sb.append('\n')
-    }
+    entries.sortBy(_.rawKey).foreach(appendEntry(sb, schema, _, None))
     sb.toString
   }
 
-  /** Render the deletion-vector stats patch ([[PatchFile]]): header
-    * pins version + schema + key like the sidecar; one line per
-    * affected key = key, covered-dir count, then the entry fields in
-    * sidecar order. A fully-deleted key writes count=0 with empty
-    * min/max placeholders (never read — zero-count entries drop). */
+  /** Render the deletion-vector stats patch ([[PatchFile]]): the
+    * sidecar's header and entry lines, each entry carrying the count of
+    * the key's serving directories it covers. A fully-deleted key
+    * writes count=0 with empty min/max placeholders (never read —
+    * zero-count entries drop). */
   private[sources] def renderPatch(schema: StructType, key: String,
       entries: Seq[(Entry, Int)]): String = {
     val sb = new StringBuilder
-    sb.append(PatchVersion).append(PageSource.US).append(schemaTag(schema))
-      .append(PageSource.US).append(key).append('\n')
+    appendHeader(sb, PatchVersion, schema, key)
     entries.sortBy(_._1.rawKey).foreach { case (e, covered) =>
-      sb.append(e.rawKey).append(PageSource.US).append(covered)
-        .append(PageSource.US).append(e.count)
-      schema.fields.zipWithIndex.foreach { case (f, i) =>
-        sb.append(PageSource.US).append(e.mins(i))
-          .append(PageSource.US).append(e.maxs(i))
-        if (numeric(f.dataType)) sb.append(PageSource.US).append(e.sums(i))
-      }
-      sb.append('\n')
+      appendEntry(sb, schema, e, Some(covered))
     }
     sb.toString
   }
 
-  /** Parse a generation's stats patch — directly when the header
-    * matches, ADAPTED through the evolution lineage otherwise (same
-    * resolution as the sidecar read: a DV'd key whose layout evolved
-    * AFTER the delete keeps its exact patched stats instead of
-    * falling to the count-only correction). None ⇒ no patch (pre-r17
-    * DV commit) or a header the lineage cannot resolve. */
-  private[graft] def readPatch(genRoot: String,
-      conf: org.apache.spark.util.SerializableConfiguration,
-      declared: StructType, key: String,
-      widened: Set[String] = Set.empty,
-      ops: Seq[KeyedSource.SchemaOp] = Seq.empty): Option[Map[String, (Entry, Int)]] = {
-    val p = new org.apache.hadoop.fs.Path(genRoot, PatchFile)
-    val fs = p.getFileSystem(conf.value)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val lines = text.split("\n", -1).filter(_.nonEmpty)
-    if (lines.isEmpty) return None
-    val header = lines.head.split(PageSource.US, -1)
-    if (header.length != 3 || header(0) != PatchVersion) return None
-    if (!tagCompatible(header(1), declared, widened) || header(2) != key) {
-      if (ops.isEmpty) return None
-      val written = try StructType.fromDDL(header(1)) catch {
-        case _: Exception => return None
-      }
-      val map = lineageMap(declared, written, key, header(2), ops)
-        .getOrElse(return None)
-      val (minOff, sumOff) = writtenOffsets(written, base = 3)
-      val wArity = lineArity(written) + 1
-      return Some(lines.tail.map { line =>
-        val f = line.split(PageSource.US, -1)
-        if (f.length != wArity) throw new IllegalStateException(
-          s"graft-keyed stats patch corrupted at $genRoot: line has " +
-            s"${f.length} fields, written schema implies $wArity " +
-            s"(head: ${line.take(80)})")
-        val e = remapEntry(declared, map, minOff, sumOff,
-          f, rawKey = f(0), count = f(2).toLong)
-        f(0) -> (e, f(1).toInt)
-      }.toMap)
+  /** A stats-family header (`version`, written schema tag, stored key)
+    * against the declared schema + key: the written schema and each
+    * declared column's [[KeyedSource.Lineage]] answer. None = another
+    * version, or a header the lineage does not resolve — any refused
+    * column, or a stored key that is not the declared key's written
+    * column (a foreign or stale layout; the caller refuses the metadata
+    * answer and the data scan answers instead). */
+  private def resolveHeader(line: String, version: String,
+      declared: StructType, key: String, lineage: KeyedSource.Lineage)
+      : Option[(StructType, IndexedSeq[KeyedSource.Lineage.Col])] =
+    line.split(PageSource.US, -1) match {
+      case Array(`version`, tag, storedKey) =>
+        tagSchema(tag.split(", ", -1).toSeq, ' ').flatMap { written =>
+          val cols = lineage.resolve(written, declared)
+          val keyOk = cols(declared.fieldIndex(key)) match {
+            case KeyedSource.Lineage.Stored(at, _) => written(at).name == storedKey
+            case _ => false
+          }
+          if (keyOk && KeyedSource.Lineage.refusal(cols).isEmpty) Some((written, cols))
+          else None
+        }
+      case _ => None
     }
-    val arity = lineArity(declared) + 1 // + covered field
-    val n = declared.length
-    Some(lines.tail.map { line =>
-      val f = line.split(PageSource.US, -1)
-      if (f.length != arity) throw new IllegalStateException(
-        s"graft-keyed stats patch corrupted at $genRoot: line has ${f.length} " +
-          s"fields, schema implies $arity (head: ${line.take(80)})")
+
+  /** Entry lines of one stats file, written under `written`, read as
+    * declared-order [[Entry]]s: stored columns read their min/max(/sum)
+    * fields (FLOAT digits convert under a FLOAT→DOUBLE promotion —
+    * monotone, so min stays min), added columns synthesize their
+    * constant (min = max = value, sum = value·count). */
+  private final class EntryParser(where: String, val written: StructType,
+      val cols: IndexedSeq[KeyedSource.Lineage.Col], declared: StructType) {
+    // offset of each written column's min field past the count field
+    private val off: Array[Int] =
+      written.fields.scanLeft(1)((p, f) => p + (if (numeric(f.dataType)) 3 else 2))
+
+    /** `f(0)` is the raw key and `f(at)` the row count. */
+    def entry(f: Array[String], at: Int): Entry = {
+      if (f.length != at + off.last) throw new IllegalStateException(
+        s"graft-keyed $where: line has ${f.length} fields, written schema " +
+          s"implies ${at + off.last} (head: ${f.mkString(PageSource.US).take(80)})")
+      val count = f(at).toLong
+      val n = declared.length
       val mins = new Array[String](n)
       val maxs = new Array[String](n)
       val sums = new Array[Long](n)
-      var i = 0
-      var pos = 3
-      while (i < n) {
-        mins(i) = f(pos); maxs(i) = f(pos + 1); pos += 2
-        if (numeric(declared(i).dataType)) { sums(i) = f(pos).toLong; pos += 1 }
-        i += 1
-      }
-      f(0) -> (Entry(f(0), f(2).toLong, mins, maxs, sums), f(1).toInt)
-    }.toMap)
-  }
-
-  /** Declared-column resolution against a generation's WRITTEN schema
-    * through the lineage: Left((written index, fpWiden)) for mapped
-    * columns — type-equal, INT under a recorded widening (same
-    * digits), or FLOAT under a recorded widening read as DOUBLE
-    * (fpWiden = true: the stored sortable-int digits CONVERT through
-    * [[floatDigitsAsDouble]], monotone so min/max stay exact) —
-    * Right((isLong, default)) for added-by-evolution columns. None =
-    * some column has no lineage answer (foreign layout), or the
-    * stored key name is not the declared key or one of its aliases. */
-  private def lineageMap(declared: StructType, written: StructType,
-      key: String, storedKey: String, ops: Seq[KeyedSource.SchemaOp])
-      : Option[Array[Either[(Int, Boolean), (Boolean, String)]]] = {
-    val (aliases, defaults, widened) = KeyedSource.lineageOf(ops)
-    val keyCands = key +: aliases.getOrElse(key, Seq.empty)
-    if (!keyCands.contains(storedKey)) return None
-    val n = declared.length
-    val map = new Array[Either[(Int, Boolean), (Boolean, String)]](n)
-    var i = 0
-    while (i < n) {
-      val f = declared(i)
-      val cands = f.name +: aliases.getOrElse(f.name, Seq.empty)
-      cands.find(written.fieldNames.contains) match {
-        case Some(src) =>
-          val st = written(src).dataType
-          val fpWiden = st == org.apache.spark.sql.types.FloatType &&
-            f.dataType == org.apache.spark.sql.types.DoubleType &&
-            widened.contains(f.name)
-          val ok = st == f.dataType ||
-            (st == org.apache.spark.sql.types.IntegerType &&
-              f.dataType == LongType && widened.contains(f.name)) ||
-            fpWiden
-          if (!ok) return None
-          map(i) = Left((written.fieldIndex(src), fpWiden))
-        case None => defaults.get(f.name) match {
-          // EXACT kind match (round-19 review — the evolvedPlan twin):
-          // a DOUBLE-declared column must never bind an add-op default
-          // of either recorded kind (typed() would misparse the digits
-          // as sortable bits — a silently wrong metadata answer)
-          case Some((isLong, d))
-              if (if (isLong) f.dataType == LongType
-                  else f.dataType == StringType) =>
-            map(i) = Right((isLong, d))
-          case _ => return None
+      var k = 0
+      while (k < n) {
+        cols(k) match {
+          case KeyedSource.Lineage.Stored(w, p) =>
+            val m = at + off(w)
+            if (p == KeyedSource.Lineage.FloatToDouble) {
+              mins(k) = floatDigitsAsDouble(f(m)); maxs(k) = floatDigitsAsDouble(f(m + 1))
+            } else { mins(k) = f(m); maxs(k) = f(m + 1) }
+            if (numeric(declared(k).dataType)) sums(k) = f(m + 2).toLong
+          case KeyedSource.Lineage.Const(isLong, d) =>
+            mins(k) = d; maxs(k) = d
+            if (isLong) sums(k) = Math.multiplyExact(d.toLong, count)
+          case r: KeyedSource.Lineage.Refused => throw new IllegalStateException(r.reason)
         }
+        k += 1
       }
-      i += 1
+      Entry(f(0), count, mins, maxs, sums)
     }
-    Some(map)
   }
 
-  /** Per-written-field (min, sum) offsets within a stats line whose
-    * stat fields start at `base`. sumOff = -1 for STRING columns. */
-  private def writtenOffsets(written: StructType, base: Int)
-      : (Array[Int], Array[Int]) = {
-    val wn = written.length
-    val minOff = new Array[Int](wn)
-    val sumOff = new Array[Int](wn)
-    var pos = base
-    var j = 0
-    while (j < wn) {
-      minOff(j) = pos; pos += 2
-      if (numeric(written(j).dataType)) { sumOff(j) = pos; pos += 1 }
-      else sumOff(j) = -1
-      j += 1
-    }
-    (minOff, sumOff)
-  }
+  /** A stats file's body lines and their parser; None = no file, or a
+    * header [[resolveHeader]] refuses. */
+  private def openStats(dir: String, file: String, version: String,
+      what: String, conf: org.apache.spark.util.SerializableConfiguration,
+      declared: StructType, key: String, lineage: KeyedSource.Lineage)
+      : Option[(Seq[Array[String]], EntryParser)] =
+    for {
+      text <- readText(dir, file, conf)
+      lines = text.split("\n", -1).filter(_.nonEmpty)
+      if lines.nonEmpty
+      (written, cols) <- resolveHeader(lines.head, version, declared, key, lineage)
+    } yield (lines.tail.toSeq.map(_.split(PageSource.US, -1)),
+      new EntryParser(s"$what corrupted at $dir", written, cols, declared))
 
-  /** Build one declared-order Entry from a written-order stats line
-    * through a [[lineageMap]]: mapped columns read stored min/max/sum,
-    * added columns synthesize their constant (sum = default·count). */
-  private def remapEntry(declared: StructType,
-      map: Array[Either[(Int, Boolean), (Boolean, String)]],
-      minOff: Array[Int], sumOff: Array[Int],
-      f: Array[String], rawKey: String, count: Long): Entry = {
-    val n = declared.length
-    val mins = new Array[String](n)
-    val maxs = new Array[String](n)
-    val sums = new Array[Long](n)
-    var k = 0
-    while (k < n) {
-      map(k) match {
-        case Left((w, fpWiden)) =>
-          if (fpWiden) {
-            // FLOAT-written digits under a DOUBLE declaration: convert
-            // through the value domain (monotone — min stays min)
-            mins(k) = floatDigitsAsDouble(f(minOff(w)))
-            maxs(k) = floatDigitsAsDouble(f(minOff(w) + 1))
-          } else {
-            mins(k) = f(minOff(w)); maxs(k) = f(minOff(w) + 1)
-          }
-          if (numeric(declared(k).dataType)) sums(k) = f(sumOff(w)).toLong
-        case Right((isLong, d)) =>
-          mins(k) = d; maxs(k) = d
-          if (isLong) sums(k) = Math.multiplyExact(d.toLong, count)
-      }
-      k += 1
+  /** Parse a generation's stats patch through the lineage (a DV'd key
+    * whose layout evolved AFTER the delete keeps its exact patched
+    * stats): raw key → (entry, covered-dir count). None ⇒ no patch or
+    * a header the lineage cannot resolve. */
+  private[graft] def readPatch(genRoot: String,
+      conf: org.apache.spark.util.SerializableConfiguration,
+      declared: StructType, key: String, lineage: KeyedSource.Lineage)
+      : Option[Map[String, (Entry, Int)]] =
+    openStats(genRoot, PatchFile, PatchVersion, "stats patch", conf, declared,
+      key, lineage).map { case (body, parser) =>
+      body.map(f => f(0) -> ((parser.entry(f, at = 2), f(1).toInt))).toMap
     }
-    Entry(rawKey, count, mins, maxs, sums)
-  }
 
-  /** Parse the sidecar against the DECLARED schema + key. A header
-    * that matches directly (including recorded widenings) parses in
-    * place; one that differs but RESOLVES through the layout's
-    * schema-evolution lineage (`ops` — renames remap, added columns
-    * synthesize min=max=default and sum=default·count, since every
-    * pre-evolution row answers the constant) parses ADAPTED, so
-    * metadata answers and skipping survive add/rename evolution
-    * instead of refusing until a restage (r18 — the Iceberg
+  /** Parse the sidecar against the DECLARED schema + key through the
+    * layout's schema-evolution lineage: stats written before a rename,
+    * an add or a widening stay metadata-answer-worthy (the Iceberg
     * stats-through-evolution parity). None ⇒ no sidecar, or a header
     * the lineage cannot resolve (foreign layout) — the caller refuses
     * the pushdown and the ordinary data scan answers instead. A
-    * PRESENT matching sidecar with a malformed body fails loudly:
-    * that is corruption of a file this connector owns, not a foreign
-    * layout. */
+    * PRESENT matching sidecar with a malformed body fails loudly: that
+    * is corruption of a file this connector owns, not a foreign
+    * layout. The table NDV line maps too (an added constant column
+    * has NDV 1). */
   private[graft] def read(path: String,
       conf: org.apache.spark.util.SerializableConfiguration,
       declared: StructType, key: String,
-      widened: Set[String] = Set.empty,
-      ops: Seq[KeyedSource.SchemaOp] = Seq.empty): Option[Sidecar] = {
+      lineage: KeyedSource.Lineage = KeyedSource.Lineage.empty): Option[Sidecar] = {
     // resolve the committed generation (idempotent when handed a
     // generation dir directly)
     val root = KeyedSource.effectiveRoot(path, conf.value)
-    val p = new org.apache.hadoop.fs.Path(root, SidecarFile)
-    val fs = p.getFileSystem(conf.value)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val lines = text.split("\n", -1).filter(_.nonEmpty)
-    if (lines.isEmpty) return None
-    val header = lines.head.split("", -1)
-    if (header.length != 3 || header(0) != Version) return None
-    if (!tagCompatible(header(1), declared, widened) || header(2) != key)
-      return if (ops.isEmpty) None
-        else adaptedParse(root, lines, header, declared, key, ops)
-    val arity = lineArity(declared)
-    val n = declared.length
-    // the table line is structurally distinct from every entry line
-    // (1+n fields vs 2+2n or more — never equal for a non-empty schema)
-    val (table, entryLines) = lines.tail.toSeq match {
-      case first +: rest if first.split("", -1).length == 1 + n =>
-        val f = first.split("", -1)
-        (Some(TableNdv(f(0).toLong, f.tail.map(_.toLong))), rest)
-      case all => (None, all)
-    }
-    Some(Sidecar(entryLines.map { line =>
-      val f = line.split("", -1)
-      if (f.length != arity) throw new IllegalStateException(
-        s"graft-keyed stats sidecar corrupted at $root: line has ${f.length} " +
-          s"fields, schema implies $arity (head: ${line.take(80)})")
-      val mins = new Array[String](n)
-      val maxs = new Array[String](n)
-      val sums = new Array[Long](n)
-      var i = 0
-      var pos = 2
-      while (i < n) {
-        mins(i) = f(pos); maxs(i) = f(pos + 1); pos += 2
-        if (numeric(declared(i).dataType)) { sums(i) = f(pos).toLong; pos += 1 }
-        i += 1
+    openStats(root, SidecarFile, Version, "stats sidecar", conf, declared, key,
+      lineage).map { case (body, parser) =>
+      // the table line is structurally distinct from every entry line
+      // (1+n fields vs 2+2n or more — never equal for a non-empty schema)
+      val (table, entryLines) = body match {
+        case first +: rest if first.length == 1 + parser.written.length =>
+          (Some(TableNdv(first(0).toLong, parser.cols.map {
+            case KeyedSource.Lineage.Stored(w, _) => first(1 + w).toLong
+            case _ => 1L
+          }.toArray)), rest)
+        case all => (None, all)
       }
-      Entry(f(0), f(1).toLong, mins, maxs, sums)
-    }, table))
-  }
-
-  /** Lineage-ADAPTED sidecar parse: the generation's header records
-    * its WRITTEN schema; each declared column resolves to a written
-    * column through the alias chain (type-equal, or INT under a
-    * recorded widening) or to its add-op DEFAULT — in which case the
-    * stats are synthesized exactly (every pre-evolution row answers
-    * the constant: min=max=default, sum=default·count). The stored
-    * KEY name must be the declared key or one of its aliases. Any
-    * unresolvable column refuses (None — foreign layout, not
-    * lineage). Entry lines parse at the WRITTEN arity and remap to
-    * declared order; the table NDV line remaps too (a synthesized
-    * constant column has NDV 1). */
-  private def adaptedParse(root: String, lines: Array[String],
-      header: Array[String], declared: StructType, key: String,
-      ops: Seq[KeyedSource.SchemaOp]): Option[Sidecar] = {
-    val written = try StructType.fromDDL(header(1)) catch {
-      case _: Exception => return None
+      Sidecar(entryLines.map(parser.entry(_, at = 1)), table)
     }
-    val map = lineageMap(declared, written, key, header(2), ops)
-      .getOrElse(return None)
-    val (minOff, sumOff) = writtenOffsets(written, base = 2)
-    val wn = written.length
-    val wArity = lineArity(written)
-    val (tableRaw, entryLines) = lines.tail.toSeq match {
-      case first +: rest
-          if first.split(PageSource.US, -1).length == 1 + wn =>
-        (Some(first.split(PageSource.US, -1)), rest)
-      case all => (None, all)
-    }
-    val entries = entryLines.map { line =>
-      val f = line.split(PageSource.US, -1)
-      if (f.length != wArity) throw new IllegalStateException(
-        s"graft-keyed stats sidecar corrupted at $root: line has ${f.length} " +
-          s"fields, written schema implies $wArity (head: ${line.take(80)})")
-      remapEntry(declared, map, minOff, sumOff, f,
-        rawKey = f(0), count = f(1).toLong)
-    }
-    val table = tableRaw.map { t =>
-      val ndvs = Array.tabulate(declared.length)(k => map(k) match {
-        case Left((w, _)) => t(1 + w).toLong // NDV survives conversion
-        case Right(_) => 1L // a synthesized constant column
-      })
-      TableNdv(t(0).toLong, ndvs)
-    }
-    Some(Sidecar(entries, table))
   }
 
   /** The WRITTEN schema a generation's sidecar header records —
@@ -549,18 +406,11 @@ object KeyedStats {
     * truth to map old files under an evolved declared schema). None =
     * no sidecar / unknown version. */
   private[graft] def writtenSchema(genRoot: String,
-      conf: org.apache.spark.util.SerializableConfiguration): Option[StructType] = {
-    val p = new org.apache.hadoop.fs.Path(genRoot, SidecarFile)
-    val fs = p.getFileSystem(conf.value)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val head = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().nextOption() finally in.close()
-    head.map(_.split(PageSource.US, -1)).collect {
-      case Array(Version, tag, _) =>
-        try Some(StructType.fromDDL(tag)) catch { case _: Exception => None }
-    }.flatten
-  }
+      conf: org.apache.spark.util.SerializableConfiguration): Option[StructType] =
+    readText(genRoot, SidecarFile, conf).flatMap(_.linesIterator.nextOption())
+      .map(_.split(PageSource.US, -1)).collect {
+        case Array(Version, tag, _) => tagSchema(tag.split(", ", -1).toSeq, ' ')
+      }.flatten
 
   /** Merge one key's per-generation entries (a row-level APPEND leaves
     * a key served by several generations): counts and sums add, min/max
@@ -745,19 +595,13 @@ object KeyedStats {
   }
 
   /** Keys PROVABLY empty under the residual conjuncts (each pushed
-    * filter is one conjunct, so ANY single proof suffices). Skips only
-    * keys whose entry carries trustworthy intervals: a key in
-    * [[Sidecar.unresolvedDvKeys]] (pre-patch deletion vectors — its
-    * min/max still include deleted rows) never skips, per the
-    * conservative refusal the DV stats-patch discipline pins. */
+    * filter is one conjunct, so ANY single proof suffices). */
   private[graft] def skippableKeys(sc: Sidecar,
       residuals: Seq[org.apache.spark.sql.sources.Filter],
       schema: StructType): Set[String] =
     if (residuals.isEmpty) Set.empty
-    else sc.entries.iterator.filter { e =>
-      !sc.unresolvedDvKeys.contains(e.rawKey) &&
-        residuals.exists(f => !canMatch(f, e, schema))
-    }.map(_.rawKey).toSet
+    else sc.entries.iterator.filter(e => residuals.exists(f => !canMatch(f, e, schema)))
+      .map(_.rawKey).toSet
 
   /** Render the per-generation NDV sketch file: header pins version +
     * schema + key (the sidecar trust discipline), then one line per
@@ -765,8 +609,7 @@ object KeyedStats {
   private[sources] def renderNdv(schema: StructType, key: String,
       hashes: Array[Array[Long]]): String = {
     val sb = new StringBuilder
-    sb.append(NdvVersion).append(PageSource.US).append(schemaTag(schema))
-      .append(PageSource.US).append(key).append('\n')
+    appendHeader(sb, NdvVersion, schema, key)
     hashes.foreach { hs =>
       sb.append(hs.mkString(PageSource.US)).append('\n')
     }
@@ -774,37 +617,30 @@ object KeyedStats {
   }
 
   /** Parse one generation's NDV sketch file against the declared
-    * schema + key. The header must match directly or differ only by
-    * recorded widenings whose hash domain is unchanged (INT→BIGINT:
-    * values were hashed as longs either way). Renames/adds and the
-    * FLOAT→DOUBLE widening refuse (None): their hash domains or
-    * column maps diverge, and an NDV silently merged across diverging
-    * domains would double-count — the conservative refusal drops the
-    * view to the no-NDV behavior, never a wrong number. */
+    * schema + key. Only an identity or INT→BIGINT map keeps the hash
+    * domain (values were hashed as longs either way); renames, adds,
+    * reorders and FLOAT→DOUBLE (float bits ≠ the promoted doubles'
+    * bits) refuse (None) — an NDV merged across diverging domains would
+    * double-count, so the view drops to the no-NDV behavior, never a
+    * wrong number. */
   private def readNdv(genRoot: String,
       conf: org.apache.spark.util.SerializableConfiguration,
       declared: StructType, key: String,
-      widened: Set[String]): Option[Array[Array[Long]]] = {
-    val p = new org.apache.hadoop.fs.Path(genRoot, NdvFile)
-    val fs = p.getFileSystem(conf.value)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      lineage: KeyedSource.Lineage): Option[Array[Array[Long]]] = {
     // split KEEPING empty lines: a zero-hash column renders empty and
     // must hold its position
-    val lines = text.split("\n", -1).dropRight(1)
+    val lines = readText(genRoot, NdvFile, conf).getOrElse(return None)
+      .split("\n", -1).dropRight(1)
     if (lines.isEmpty) return None
-    val header = lines.head.split(PageSource.US, -1)
-    if (header.length != 3 || header(0) != NdvVersion) return None
-    // the INT-widen relaxation only: same digits, same hash domain.
-    // An fp widening must refuse here even though tagCompatible would
-    // accept it for min/max — hashes of float bits ≠ hashes of the
-    // promoted doubles' bits.
-    val fpWidened = declared.fields.exists(f =>
-      f.dataType == org.apache.spark.sql.types.DoubleType &&
-        widened.contains(f.name))
-    if (fpWidened || !tagCompatible(header(1), declared, widened) ||
-        header(2) != key) return None
+    val (written, cols) = resolveHeader(lines.head, NdvVersion, declared, key,
+      lineage).getOrElse(return None)
+    val sameDomain = written.length == declared.length &&
+      cols.zipWithIndex.forall {
+        case (KeyedSource.Lineage.Stored(w, p), i) => w == i &&
+          written(w).name == declared(i).name && p != KeyedSource.Lineage.FloatToDouble
+        case _ => false
+      }
+    if (!sameDomain) return None
     if (lines.length != 1 + declared.length) throw new IllegalStateException(
       s"graft-keyed ndv file corrupted at $genRoot: ${lines.length - 1} " +
         s"column lines, schema implies ${declared.length}")
@@ -827,13 +663,12 @@ object KeyedStats {
     * merged-manifest NDVs behave between compactions. */
   private def mergedNdvTable(view: KeyedSource.SnapshotView,
       conf: org.apache.spark.util.SerializableConfiguration,
-      declared: StructType, key: String, widened: Set[String],
-      liveCount: Long): Option[TableNdv] = {
+      declared: StructType, key: String, liveCount: Long): Option[TableNdv] = {
     val gens: Seq[String] = (view.root +:
       view.edits.valuesIterator.flatten.toSeq.map(view.genRoot)).distinct
     val sketches = Array.fill(declared.length)(new KmvSketch)
     val all = gens.forall { g =>
-      readNdv(g, conf, declared, key, widened) match {
+      readNdv(g, conf, declared, key, view.lineage) match {
         case Some(cols) =>
           var i = 0
           while (i < cols.length) { sketches(i).addHashes(cols(i)); i += 1 }
@@ -857,8 +692,8 @@ object KeyedStats {
     * shift every later ordinal), keys already skipped whole, and any
     * generation whose sidecar misses the key's line (no proof ⇒ plan
     * it). Composes with evolution exactly like the view read: each
-    * generation's sidecar parses adapted through the lineage. Returns
-    * raw key → the generation names to drop. */
+    * generation's sidecar parses through the lineage. Returns raw key
+    * → the generation names to drop. */
   private[graft] def skippableFiles(view: KeyedSource.SnapshotView,
       conf: org.apache.spark.util.SerializableConfiguration,
       declared: StructType, key: String,
@@ -867,16 +702,12 @@ object KeyedStats {
       genMemo: scala.collection.mutable.Map[String, Option[Sidecar]] = null)
       : Map[String, Set[String]] = {
     if (residuals.isEmpty || view.edits.isEmpty) return Map.empty
-    val widened = KeyedSource.widenedColumns(view.ops)
     // per-generation parses shared with the builder's readView when a
     // memo is handed in (round-19 review: both walked the same
     // sidecars — doubled driver metadata reads per filtered plan on
     // exactly the DML-heavy tables this feature targets)
-    val perGen = if (genMemo != null) genMemo
-      else scala.collection.mutable.Map.empty[String, Option[Sidecar]]
-    def sidecarOf(g: String): Option[Sidecar] =
-      perGen.getOrElseUpdate(g,
-        read(view.genRoot(g), conf, declared, key, widened, view.ops))
+    val sidecarOf = genSidecars(view, conf, declared, key,
+      Option(genMemo).getOrElse(scala.collection.mutable.Map.empty))
     view.edits.iterator.collect {
       case (raw, gens) if !view.dvs.contains(raw) && !skipKeys.contains(raw) =>
         val dropped = gens.filter { g =>
@@ -887,110 +718,111 @@ object KeyedStats {
     }.filter(_._2.nonEmpty).toMap
   }
 
-  /** Snapshot-view sidecar: the metadata twin of
-    * [[KeyedSource.SnapshotView.liveKeyDirs]]. Edit-free views reduce
-    * to the base-generation sidecar read (entries unfiltered —
-    * callers prune tombstones, as ever). With edits, returns LIVE
-    * per-key entries only: base entries for unedited keys, and for
-    * each edited key the TYPED merge of its generations' entries. Any
-    * generation whose sidecar is absent, header-mismatched, or missing
-    * the key's line refuses the whole read (None — metadata answers
-    * fall back to the data scan). The table-level NDV line: edit-free
-    * views claim the base generation's directly; edited views MERGE
-    * the per-generation KMV sketch files (r19 — [[mergedNdvTable]];
-    * the sketches travel now, so "estimates do not merge" stopped
-    * being true) and refuse only when a serving generation lacks a
-    * trustworthy sketch. */
+  /** Generation name → its sidecar read through the view's lineage,
+    * memoized in `memo`. */
+  private def genSidecars(view: KeyedSource.SnapshotView,
+      conf: org.apache.spark.util.SerializableConfiguration,
+      declared: StructType, key: String,
+      memo: scala.collection.mutable.Map[String, Option[Sidecar]])
+      : String => Option[Sidecar] =
+    g => memo.getOrElseUpdate(g, read(view.genRoot(g), conf, declared, key, view.lineage))
+
+  /** The EXACT snapshot-view sidecar: [[readBounds]] corrected for the
+    * view's deletion vectors ([[applyDvs]]). */
   private[graft] def readView(view: KeyedSource.SnapshotView,
       conf: org.apache.spark.util.SerializableConfiguration,
       declared: StructType, key: String,
       genMemo: scala.collection.mutable.Map[String, Option[Sidecar]] = null)
       : Option[Sidecar] = {
-    // recorded INT->BIGINT widenings relax the per-generation header
-    // check: a pre-widening generation's sidecar stays trusted (same
-    // digits, same arity) instead of refusing as foreign
-    val widened = KeyedSource.widenedColumns(view.ops)
-    val base = read(view.root, conf, declared, key, widened, view.ops)
-    val perGen = if (genMemo != null) genMemo
-      else scala.collection.mutable.Map.empty[String, Option[Sidecar]]
-    def sidecarOf(g: String): Option[Sidecar] =
-      perGen.getOrElseUpdate(g,
-        read(view.genRoot(g), conf, declared, key, widened, view.ops))
-    val merged: Option[Sidecar] =
-      if (view.edits.isEmpty) base
-      else base.flatMap { b =>
-        val baseOnly = b.entries.filterNot(e =>
-          view.tombstones.contains(e.rawKey) || view.edits.contains(e.rawKey))
-        val edited: Option[Seq[Entry]] = view.edits.toSeq.sortBy(_._1)
-          .foldLeft(Option(Seq.empty[Entry])) { case (acc, (k, gens)) =>
-            for {
-              a <- acc
-              parts <- {
-                val es = gens.map(g =>
-                  sidecarOf(g).flatMap(_.entries.find(_.rawKey == k)))
-                if (es.forall(_.isDefined)) Some(es.flatten) else None
-              }
-            } yield a :+ mergeEntries(declared, parts)
-          }
-        edited.map { ed =>
-          val entries = baseOnly ++ ed
-          Sidecar(entries, mergedNdvTable(view, conf, declared, key,
-            widened, entries.map(_.count).sum))
+    val memo = Option(genMemo).getOrElse(scala.collection.mutable.Map.empty[String, Option[Sidecar]])
+    readBounds(view, conf, declared, key, memo)
+      .flatMap(applyDvs(view, conf, declared, key, _, memo))
+  }
+
+  /** Snapshot-view sidecar BEFORE deletion-vector correction: the
+    * metadata twin of [[KeyedSource.SnapshotView.liveKeyDirs]]. A DV'd
+    * key's entry still counts its deleted rows, but its intervals bound
+    * the surviving ones (deletes only remove rows), which is all a
+    * skipping proof needs. Edit-free views reduce to the
+    * base-generation sidecar read (entries unfiltered — callers prune
+    * tombstones, as ever). With edits, returns LIVE per-key entries
+    * only: base entries for unedited keys, and for each edited key the
+    * TYPED merge of its generations' entries. Any generation whose
+    * sidecar is absent, header-mismatched, or missing the key's line
+    * refuses the whole read (None — metadata answers fall back to the
+    * data scan). The table-level NDV line: edit-free views claim the
+    * base generation's directly; edited views MERGE the per-generation
+    * KMV sketch files (r19 — [[mergedNdvTable]]) and refuse only when a
+    * serving generation lacks a trustworthy sketch. Per-generation
+    * sidecars parse once through `memo`. */
+  private[sources] def readBounds(view: KeyedSource.SnapshotView,
+      conf: org.apache.spark.util.SerializableConfiguration,
+      declared: StructType, key: String,
+      memo: scala.collection.mutable.Map[String, Option[Sidecar]]): Option[Sidecar] = {
+    val sidecarOf = genSidecars(view, conf, declared, key, memo)
+    val base = view.gen.fold(read(view.root, conf, declared, key, view.lineage))(sidecarOf)
+    if (view.edits.isEmpty) base
+    else base.flatMap { b =>
+      val baseOnly = b.entries.filterNot(e =>
+        view.tombstones.contains(e.rawKey) || view.edits.contains(e.rawKey))
+      val edited: Option[Seq[Entry]] = view.edits.toSeq.sortBy(_._1)
+        .foldLeft(Option(Seq.empty[Entry])) { case (acc, (k, gens)) =>
+          for {
+            a <- acc
+            parts <- {
+              val es = gens.map(g =>
+                sidecarOf(g).flatMap(_.entries.find(_.rawKey == k)))
+              if (es.forall(_.isDefined)) Some(es.flatten) else None
+            }
+          } yield a :+ mergeEntries(declared, parts)
         }
+      edited.map { ed =>
+        val entries = baseOnly ++ ed
+        Sidecar(entries, mergedNdvTable(view, conf, declared, key,
+          entries.map(_.count).sum))
       }
-    if (view.dvs.isEmpty) merged
-    else merged.map(sc => applyDvs(view, conf, declared, key, sc, sidecarOf))
+    }
   }
 
   /** Deletion-vector correction of a view's entries (r17). Entries of
     * DV-free keys pass through. A DV'd key resolves through its LAST
     * dv ref's generation PATCH (exact post-delete stats) merged with
     * the sidecar entries of any generations appended after the patch;
-    * with no patch (pre-r17 dv commit) the entry keeps its exact
-    * count (sidecar count minus the dv filenames' cardinalities) but
-    * its min/max/sum still include deleted rows — the key lands in
-    * `unresolvedDvKeys` and non-count aggregates refuse. A key whose
-    * every row is deleted DROPS from the entries: the group is gone,
-    * exactly what the data scan would answer. */
-  private def applyDvs(view: KeyedSource.SnapshotView,
+    * a key whose every row is deleted DROPS from the entries (the group
+    * is gone, exactly what the data scan would answer). A DV'd key
+    * whose patch or later entries do not resolve refuses the whole
+    * view (None): its sidecar stats still include deleted rows. */
+  private[sources] def applyDvs(view: KeyedSource.SnapshotView,
       conf: org.apache.spark.util.SerializableConfiguration,
       declared: StructType, key: String, sc: Sidecar,
-      sidecarOf: String => Option[Sidecar]): Sidecar = {
+      memo: scala.collection.mutable.Map[String, Option[Sidecar]]): Option[Sidecar] = {
+    if (view.dvs.isEmpty) return Some(sc)
+    val sidecarOf = genSidecars(view, conf, declared, key, memo)
     val patches = scala.collection.mutable.Map
       .empty[String, Option[Map[String, (Entry, Int)]]]
-    val widened = KeyedSource.widenedColumns(view.ops)
     def patchOf(g: String): Option[Map[String, (Entry, Int)]] =
       patches.getOrElseUpdate(g,
-        readPatch(view.genRoot(g), conf, declared, key, widened, view.ops))
-    var unresolved = Set.empty[String]
-    val entries = sc.entries.flatMap { e =>
-      view.dvs.get(e.rawKey) match {
-        case None => Some(e)
-        case Some(refs) =>
-          val dirList: Seq[String] =
-            view.edits.getOrElse(e.rawKey, view.gen.toSeq)
-          val lastGen = refs.last.takeWhile(_ != '/')
-          def countFallback: Option[Entry] = {
-            val dv = refs.map(KeyedSource.dvCountOf).sum
-            val c = e.count - dv
-            if (c <= 0L) None
-            else { unresolved += e.rawKey; Some(e.copy(count = c)) }
-          }
-          patchOf(lastGen).flatMap(_.get(e.rawKey)) match {
-            case Some((pe, covered)) if covered <= dirList.length =>
-              val later = dirList.drop(covered).map(g =>
-                sidecarOf(g).flatMap(_.entries.find(_.rawKey == e.rawKey)))
-              if (later.forall(_.isDefined)) {
-                // a zero-count patch entry holds placeholder min/max —
-                // merge only the real parts
-                val parts = (if (pe.count > 0) Seq(pe) else Nil) ++ later.flatten
-                if (parts.isEmpty) None else Some(mergeEntries(declared, parts))
-              } else countFallback
-            case _ => countFallback
-          }
+        readPatch(view.genRoot(g), conf, declared, key, view.lineage))
+    // per entry: None = unresolved, Some(None) = every row deleted
+    val corrected: Seq[Option[Option[Entry]]] = sc.entries.map { e =>
+      view.dvs.get(e.rawKey).fold(Option(Option(e))) { refs =>
+        val dirList: Seq[String] = view.edits.getOrElse(e.rawKey, view.gen.toSeq)
+        for {
+          (pe, covered) <- patchOf(refs.last.takeWhile(_ != '/'))
+            .flatMap(_.get(e.rawKey)).filter(_._2 <= dirList.length)
+          later = dirList.drop(covered).map(g =>
+            sidecarOf(g).flatMap(_.entries.find(_.rawKey == e.rawKey)))
+          if later.forall(_.isDefined)
+        } yield {
+          // a zero-count patch entry holds placeholder min/max — merge
+          // only the real parts
+          val parts = (if (pe.count > 0) Seq(pe) else Nil) ++ later.flatten
+          if (parts.isEmpty) None else Some(mergeEntries(declared, parts))
+        }
       }
     }
-    Sidecar(entries, sc.table, unresolved)
+    if (corrected.forall(_.isDefined)) Some(Sidecar(corrected.flatten.flatten, sc.table))
+    else None
   }
 }
 
@@ -1097,14 +929,12 @@ final class KeyedSnapshotsScan(declared: StructType, path: String, key: String,
         case None => Array.empty
         case Some(log) => log.snapshots.toArray.map { snap =>
           // each snapshot reads through its OWN view (base generation,
-          // tombstones, row-level edits) — exactly what a reader of
-          // that snapshot would see
-          val view = KeyedSource.SnapshotView(path, snap.seq,
-            Some(snap.gen), snap.tombstones, snap.edits, dvs = snap.dvs)
-          // readView serves DV-corrected entries (patched keys exact,
-          // unpatched keys count-corrected from the dv filenames'
-          // cardinality, fully-deleted keys dropped — a key with zero
-          // live rows is not a live key)
+          // tombstones, row-level edits, the layout's lineage) — exactly
+          // what a reader of that snapshot would see. readView serves
+          // DV-corrected entries (patched keys exact, fully-deleted keys
+          // dropped — a key with zero live rows is not a live key); a
+          // DV'd key without a resolvable patch reports NULL keys/rows
+          val view = KeyedSource.SnapshotView.of(path, log, snap)
           val visible = KeyedStats.readView(view, conf, declared, key)
             .map(_.entries.filterNot(e => snap.tombstones.contains(e.rawKey)))
           Array[Any](snap.seq,

@@ -121,6 +121,45 @@ class KeyedCodecSpec extends SparkSpec {
     assert(readKeyed(dir).where($"doc_id" === 17L).count() == 0L)
   }
 
+  test("a base generation without key directories: rewrites keep the appends' deflate codec") {
+    val dir = graft.io.TempDirs.scratch("graft_codec_empty_") + "/t"
+    // an empty overwrite commits a base generation holding no `k=`
+    // directory; every row then arrives through deflate appends
+    KeyedSource.stageKeyed(spark, df(0L), dir, "kb",
+      sortBy = Seq("doc_id"), retain = 4)
+    def append(from: Long) = df(32L).selectExpr("kb", s"doc_id + $from AS doc_id",
+      "body", "n_chars").write.format("graft-keyed").option("schema", ddl)
+      .option("key", "kb").option("sortBy", "doc_id").option("codec", "deflate")
+      .mode("append").save(dir)
+    append(0L)
+    spark.conf.set("spark.sql.catalog.gcodec3", classOf[GraftCatalog].getName)
+    Seq("cow", "mor").foreach { mode =>
+      spark.sql(s"DROP TABLE IF EXISTS gcodec3.$mode")
+      spark.sql(
+        s"""CREATE TABLE gcodec3.$mode (kb BIGINT, doc_id BIGINT, body STRING,
+           |n_chars BIGINT) USING `graft-keyed` LOCATION '$dir'
+           |TBLPROPERTIES('key'='kb','sortBy'='doc_id','retain'='4',
+           |'dmlMode'='$mode')""".stripMargin)
+    }
+    def allDeflate(): Unit = {
+      val names = dataFiles(dir).map(_.getName)
+      assert(names.nonEmpty && names.forall(_.endsWith(".dfl")), names)
+    }
+    allDeflate()
+    // copy-on-write rewrite of kb=1, merge-on-read update versions of
+    // kb=2, then compaction of the keys a second append fragments
+    spark.sql("DELETE FROM gcodec3.cow WHERE doc_id = 17")
+    allDeflate()
+    spark.sql("UPDATE gcodec3.mor SET n_chars = 0 WHERE doc_id = 18")
+    allDeflate()
+    append(1000L)
+    assert(KeyedCompact.compact(spark, dir, schema, "kb") > 0)
+    allDeflate()
+    val got = readKeyed(dir).orderBy("doc_id").collect()
+    assert(got.length == 63 && !got.exists(_.getLong(1) == 17L))
+    assert(got.find(_.getLong(1) == 18L).exists(_.getLong(3) == 0L))
+  }
+
   test("MOR deletion vectors and non-key skipping compose over compressed frames") {
     val dir = graft.io.TempDirs.scratch("graft_codec_mor_") + "/t"
     // range-keyed so doc_id skipping has disjoint intervals

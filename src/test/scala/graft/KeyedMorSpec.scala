@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.StructType
   * still takes the tombstone path (no dvs, no rewrite); (4) metadata
   * answers SURVIVE dvs (r17): the DV commit's stats patch keeps
   * count/min/max/sum metadata-answered and exact; without a patch
-  * (pre-r17 commits) counts stay answered and the rest falls back to
-  * the DV-applying data scan; (5) the `_graft_pos` metadata column is selectable
+  * (pre-r17 commits) every aggregate falls back to the DV-applying
+  * data scan; (5) the `_graft_pos` metadata column is selectable
   * and deleted ordinals vanish from it; (6) CDC prices a MOR-delete
   * interval at the DELTA: one partition, only the newly-deleted rows,
   * tagged 'delete'; (7) compaction folds DVs into clean files —
@@ -144,8 +144,8 @@ class KeyedMorSpec extends SparkSpec {
     assert(snaps.map(_.getLong(3)).toSeq == Seq(32L, 31L))
 
     // WITHOUT the patch (a pre-r17 dv commit, modeled by deleting the
-    // patch file): counts stay answered, min/max/sum fall back to the
-    // DV-applying data scan — honestly, with identical values
+    // patch file): every aggregate falls back to the DV-applying data
+    // scan — honestly, with identical values
     val hconf = spark.sessionState.newHadoopConf()
     val log = KeyedSource.readCommitLog(dir, hconf).get
     val dvGen = log.head.dvs("2").head.takeWhile(_ != '/')
@@ -153,8 +153,11 @@ class KeyedMorSpec extends SparkSpec {
     assert(patch.exists(), "the DV commit must write a stats patch")
     assert(patch.delete())
     new java.io.File(s"$dir/$dvGen", "._graft_keyed_stats_patch.crc").delete()
-    assert(agg().queryExecution.executedPlan.toString.contains("GraftKeyedStats"),
-      "counts stay metadata-answered without a patch")
+    val counts = agg()
+    assert(!counts.queryExecution.executedPlan.toString.contains("GraftKeyedStats"),
+      "counts must refuse without a patch")
+    assert(counts.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(0L -> 8L, 1L -> 8L, 2L -> 7L, 3L -> 8L))
     val fallback = q()
     assert(!fallback.queryExecution.executedPlan.toString.contains("GraftKeyedStats"),
       "min/max/sum must refuse without a patch")
