@@ -275,12 +275,12 @@ final class KeyedChangesScan(declared: StructType, required: StructType,
     required.fields.filterNot(_.name == KeyedChanges.ChangeCol))
 
   /** An interval bound is a snapshot seq OR a tag name (resolved
-    * through the log's tag map — a CDC consumer anchors at the named
+    * through the pinned log's tag map — a CDC consumer anchors at the named
     * state a training run pinned, not a raw number). */
   private def resolveBound(raw: String): Long =
     try raw.toLong catch {
       case _: NumberFormatException =>
-        KeyedSource.resolveTag(path, conf.value, raw)
+        KeyedSource.tagSeq(path, pinnedLog, raw)
     }
   private lazy val fromSeq: Long = fromOpt.fold(0L)(resolveBound)
   private lazy val toSeq: Long = toOpt.fold(pinnedLog.head.seq)(resolveBound)

@@ -53,18 +53,18 @@ object KeyedCompact {
         s"got $minInputFiles")
     val log = KeyedSource.requireLog(path,
       spark.sessionState.newHadoopConf(), "compaction")
-    val head = log.head
+    val view = KeyedSource.SnapshotView.of(path, log, log.head)
     // eligible: multi-file keys (appends/MERGE inserts) AND any key
     // carrying deletion vectors (merge-on-read deletes) — compaction is
     // what folds DVs into clean files, dropping the per-row bitset
     // probe, and restores metadata answers for those keys
-    val frag: Seq[String] = (head.edits.collect {
+    val frag: Seq[String] = (view.edits.collect {
       case (k, gens) if gens.length >= minInputFiles => k
-    } ++ head.dvs.keys).toSeq.distinct.sorted
+    } ++ view.dvs.keys).toSeq.distinct.sorted
     if (frag.isEmpty) return 0
-    // read ONLY the fragmented keys, pinned to the scanned snapshot
-    val rows = KeyedSource.readAt(spark, path, schema, key, head.seq, Some(frag))
-    rewrite(spark, path, schema, key, log, rows, "compaction", "compact") {
+    // read ONLY the fragmented keys of the head that read names
+    val rows = KeyedSource.readView(spark, view, schema, key, Some(frag))
+    rewrite(spark, view, schema, key, rows, "compaction", "compact") {
         (prior, seq, written, gen) =>
       require(written.subsetOf(frag.toSet),
         s"compaction must rewrite only the fragmented keys " +
@@ -118,7 +118,8 @@ object KeyedCompact {
       key: String, newKey: org.apache.spark.sql.Column): Int = {
     val log = KeyedSource.requireLog(path,
       spark.sessionState.newHadoopConf(), "re-bucketing")
-    val scanSeq = log.head.seq
+    // both scans read the head that one log read names
+    val view = KeyedSource.SnapshotView.of(path, log, log.head)
     val evolved = newKey.cast(schema(key).dataType)
     // ONE detection pass (r18 review: the NULL guard and the moved-key
     // scan each read the table; fold them into a single projection-
@@ -127,7 +128,7 @@ object KeyedCompact {
     // cannot store a NULL key anyway — and collect the distinct moved
     // source keys (bounded: the key-domain class).
     import org.apache.spark.sql.functions.{collect_set, sum, when, lit}
-    val det = KeyedSource.readAt(spark, path, schema, key, scanSeq)
+    val det = KeyedSource.readView(spark, view, schema, key)
       .select(col(key).as("_k"), evolved.as("_ev"))
       .where(col("_ev").isNull || col("_ev") =!= col("_k"))
       .agg(sum(when(col("_ev").isNull, lit(1L)).otherwise(lit(0L))).as("_nulls"),
@@ -142,10 +143,9 @@ object KeyedCompact {
       det.getSeq[Any](1).map(String.valueOf).sorted
     if (changed.isEmpty) return 0
     // rewrite the changed keys' rows under their NEW assignment
-    val rekeyed = KeyedSource.readAt(spark, path, schema, key, scanSeq,
-        Some(changed))
+    val rekeyed = KeyedSource.readView(spark, view, schema, key, Some(changed))
       .withColumn(key, evolved)
-    rewrite(spark, path, schema, key, log, rekeyed, "re-bucketing", "rebucket") {
+    rewrite(spark, view, schema, key, rekeyed, "re-bucketing", "rebucket") {
         (prior, seq, written, gen) =>
       // a changed key whose every row moved away is a tombstone; a
       // written key either REPLACES its changed source directory or
@@ -164,22 +164,21 @@ object KeyedCompact {
     * through [[KeyedSource.commitLoop]]. `snapshot` gets the fresh
     * head's [[KeyedSource.PriorFiles]], the next seq, the written keys
     * and the generation name. SERIALIZABLE like row-level DML: the rows
-    * were read from the head `log` names, so any commit since fails
+    * were read from the head `view` binds, so any commit since fails
     * the rewrite loudly rather than rebase (an append to a rewritten
     * key would otherwise be silently dropped). Nothing is published
     * unless the claim wins (commitLoop throws only then), so any
     * failure deletes this rewrite's own staging and rethrows; the live
     * layout is untouched. */
-  private def rewrite(spark: SparkSession, path: String, schema: StructType,
-      key: String, log: KeyedSource.CommitLog,
+  private def rewrite(spark: SparkSession, view: KeyedSource.SnapshotView,
+      schema: StructType, key: String,
       rows: org.apache.spark.sql.DataFrame, what: String, tag: String)(
       snapshot: (KeyedSource.PriorFiles, Long, Set[String], String) =>
         KeyedSource.Snapshot): Unit = {
     val hconf = spark.sessionState.newHadoopConf()
     val conf = new org.apache.spark.util.SerializableConfiguration(hconf)
-    val scanSeq = log.head.seq
-    // the head named by `log` (no further commit-log read)
-    val view = KeyedSource.SnapshotView.of(path, log, log.head)
+    val path = view.layoutPath
+    val scanSeq = view.seq
     // the layout's recorded order (base generation's marker): rewritten
     // files are written back SORTED so the single-dir claim resurrects
     val sortBy: Seq[String] = KeyedSource.readOrderMarker(view.root, conf,

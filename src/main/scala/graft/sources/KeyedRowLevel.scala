@@ -283,19 +283,19 @@ final class KeyedCowWriterFactory(schema: StructType, key: String,
   *    treats DV'd keys as eligible and clears their vectors).
   *    Metadata AGGREGATE answers survive (r17): the commit
   *    recomputes the affected keys' exact count/min/max/sum into a
-  *    stats PATCH — one bounded read-only job over the affected keys,
-  *    raising the commit's READ cost from O(deleted rows) to
-  *    O(affected keys' rows) while keeping every later stats question
-  *    a metadata lookup. TopN budgets SURVIVE
-  *    patched deletion vectors for the same reason (the pushdown's
-  *    exact-count license reads the patched entries through
-  *    [[KeyedStats.readView]]); a DV'd key without a resolvable patch
-  *    (a pre-r17 commit) makes every metadata answer refuse until
-  *    compaction, and the data scan answers. The DV
-  *    container forms live in their readers: bare-ordinal/range lines
-  *    in [[KeyedSource.loadDeleted]], the dense base64 bitmap in
-  *    [[KeyedSource.bitmapRuns]], and the stats-patch range parse in
-  *    [[KeyedStats.readPatch]].
+  *    stats PATCH — one bounded read-only job over the affected keys
+  *    of the SCANNED view with the commit's own vectors added (the
+  *    reader skips them like committed ones), folded per key by the
+  *    writers' stats rule ([[KeyedStatsAcc]]) — raising the commit's
+  *    READ cost from O(deleted rows) to O(affected keys' rows) while
+  *    keeping every later stats question a metadata lookup. TopN
+  *    budgets SURVIVE patched deletion vectors for the same reason
+  *    (the pushdown's exact-count license reads the patched entries
+  *    through [[KeyedStats.readView]]); a DV'd key without a
+  *    resolvable patch (a pre-r17 commit) makes every metadata answer
+  *    refuse until compaction, and the data scan answers. The DV
+  *    container forms (bare ordinals, `start-end` runs, the dense
+  *    base64 bitmap) have one reader, [[KeyedSource.loadDeleted]].
   *
   * Conflict detection is the serializable scanned-seq check: positions
   * are ordinals into the SCANNED snapshot's file lists; any commit
@@ -392,114 +392,56 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
     if (insertEntries.nonEmpty)
       KeyedWriteAudit.writeStats(declared, key, Seq.empty, insertEntries,
         insertMsgs, fs, gen)
-    val scannedSeq = op.configuredScan.view.seq
+    val scanView = op.configuredScan.view
+    // this commit's deletion vectors appended to a snapshot's per-key refs
+    def withOwnDvs(dvs: Map[String, Seq[String]]): Map[String, Seq[String]] =
+      dvs ++ perKey.map { case (k, refs) =>
+        k -> (dvs.getOrElse(k, Seq.empty) ++ refs.map(_._1))
+      }
     // ── STATS PATCH (r17): recompute the affected keys' post-delete
     // stats so count/min/max/sum stay metadata-answered under live
     // deletion vectors (min/max don't decompose under row deletion).
-    // One bounded read-only job over EXACTLY
-    // the affected keys' DV-applied rows, anti-joined against this
-    // commit's own deleted ordinal ranges (tiny, broadcast); the
-    // result — one stats line per affected key — lands as a patch
-    // file inside this generation, atomic with the commit. Honest
-    // cost statement: this raises the DV commit from O(deleted rows)
-    // to O(affected keys' rows) READ (writes stay O(deleted)); the
-    // alternative was every later stats question paying a data scan
-    // until compaction.
+    // One bounded read-only job over EXACTLY the affected keys of the
+    // scanned view with this commit's own vectors added — the reader
+    // skips their ordinals like any committed ones, so the survivors
+    // are what the snapshot will serve — folded per key by the writers'
+    // own stats rule; the result, one stats line per affected key,
+    // lands as a patch file inside this generation, atomic with the
+    // commit. Honest cost statement: this raises the DV commit from
+    // O(deleted rows) to O(affected keys' rows) READ (writes stay
+    // O(deleted)); the alternative was every later stats question
+    // paying a data scan until compaction.
     if (perKey.nonEmpty) {
-      val s = org.apache.spark.sql.SparkSession.active
-      import org.apache.spark.sql.functions.{broadcast, col, count, lit, max, min, sum}
-      val ranges: Seq[(String, Long, Long)] = perKey.toSeq.flatMap {
-        case (k, refs) => refs.flatMap { case (ref, _) =>
-          val in = fs.open(new org.apache.hadoop.fs.Path(root, ref))
-          val lines = try scala.io.Source.fromInputStream(in, "US-ASCII")
-            .getLines().filter(_.nonEmpty).toVector finally in.close()
-          lines.flatMap { line =>
-            if (line.charAt(0) == 'B')
-              KeyedSource.bitmapRuns(line).map { case (a, b) => (k, a, b) }
-            else {
-              val dash = line.indexOf('-')
-              if (dash < 0) Seq((k, line.toLong, line.toLong))
-              else Seq((k, line.substring(0, dash).toLong,
-                line.substring(dash + 1).toLong))
-            }
-          }
-        }
-      }
-      import s.implicits._
-      val rng = ranges.toDF("_dv_k", "_dv_s", "_dv_e")
-      val survivors = KeyedSource.readAt(s, path, declared, key, scannedSeq,
+      // locals only: the task closure must not capture this batch write
+      val keyIsLong = declared(key).dataType == org.apache.spark.sql.types.LongType
+      val keyIdx = declared.fieldIndex(key)
+      val schema = declared
+      // bounded collect: one entry per (task, affected key) — the same
+      // driver payload class as the dv refs themselves
+      val survivors: Map[String, KeyedStats.Entry] = KeyedSource.readView(
+          org.apache.spark.sql.SparkSession.active,
+          scanView.copy(dvs = withOwnDvs(scanView.dvs)), declared, key,
           Some(perKey.keys))
-        .select(col("*"), col(KeyedSource.KeyCol), col(KeyedSource.PosCol))
-        .join(broadcast(rng),
-          col(KeyedSource.KeyCol) === col("_dv_k") &&
-            col(KeyedSource.PosCol).between(col("_dv_s"), col("_dv_e")),
-          "left_anti")
-      val aggExprs = count(lit(1)).as("_n") +:
-        declared.fields.toSeq.zipWithIndex.flatMap { case (f, i) =>
-          Seq(min(col(f.name)).as(s"_mn$i"), max(col(f.name)).as(s"_mx$i")) ++
-            // INT rides the numeric leg like the sidecar writers (r18)
-            (if (KeyedStats.numeric(f.dataType))
-              Seq(sum(col(f.name)).cast("long").as(s"_sm$i")) else Nil)
+        .queryExecution.toRdd.mapPartitions { rows =>
+          val acc = new KeyedStatsAcc(schema)
+          // raw keys render the way the writers name directories
+          rows.foreach(r => acc.add(
+            if (keyIsLong) r.getLong(keyIdx).toString
+            else r.getUTF8String(keyIdx).toString, r))
+          acc.result().iterator.map(_.entry)
+        }.collect().groupBy(_.rawKey).map { case (k, es) =>
+          k -> KeyedStats.mergeEntries(declared, es.toSeq)
         }
-      // bounded collect: ONE row per affected key (the same driver
-      // payload class as the dv refs themselves). Grouped by the DATA
-      // key column, not the KeyCol metadata string (r20): the scan
-      // reports key-grouped partitioning on the data column, so this
-      // aggregate plans WITHOUT an Exchange — one stage, no AQE
-      // materialization break; the raw-key string is re-rendered on
-      // the driver exactly the way the writers render it (toString).
-      val aggDf = survivors.groupBy(col(key).as("_pk"))
-        .agg(aggExprs.head, aggExprs.tail: _*)
-      val agg = aggDf.collect()
-        .map { r =>
-          val n = declared.length
-          val mins = new Array[String](n); val maxs = new Array[String](n)
-          val sums = new Array[Long](n)
-          declared.fields.zipWithIndex.foreach { case (f, i) =>
-            if (KeyedStats.numeric(f.dataType)) {
-              // min/max come back typed per column (Long or Integer);
-              // the sidecar stores digit strings either way
-              mins(i) = String.valueOf(r.getAs[Number](s"_mn$i").longValue)
-              maxs(i) = String.valueOf(r.getAs[Number](s"_mx$i").longValue)
-              sums(i) = r.getAs[Long](s"_sm$i")
-            } else if (KeyedStats.fp(f.dataType)) {
-              // Spark's min/max over doubles shares the stored order
-              // (NaN greatest), so transforming the extremes back to
-              // sortable digits is exact
-              def dig(v: Any): String = v match {
-                case d: java.lang.Double => KeyedStats.sortableDouble(d).toString
-                case fl: java.lang.Float => KeyedStats.sortableFloat(fl).toString
-                case other => throw new IllegalStateException(
-                  s"unexpected fp aggregate value $other")
-              }
-              mins(i) = dig(r.getAs[Any](s"_mn$i"))
-              maxs(i) = dig(r.getAs[Any](s"_mx$i"))
-            } else {
-              mins(i) = r.getAs[String](s"_mn$i")
-              maxs(i) = r.getAs[String](s"_mx$i")
-            }
-          }
-          // raw-key rendering: the writers store LongType keys as
-          // their decimal string (KeyedDvWriter.insert), so toString
-          // of the typed group value reproduces the sidecar's raw key
-          val pk = String.valueOf(r.getAs[Any]("_pk"))
-          pk -> KeyedStats.Entry(pk, r.getAs[Long]("_n"), mins, maxs, sums)
-        }.toMap
-      val scanView = op.configuredScan.view
-      val patchEntries: Seq[(KeyedStats.Entry, Int)] = perKey.keys.toSeq.sorted
-        .map { k =>
-          // covered = the key's serving-dir count at the scanned
-          // snapshot; the UPDATE path's own appended generation (and
-          // any later append) adds its sidecar entry ON TOP
-          val covered = scanView.edits.get(k).map(_.length).getOrElse(1)
-          val n = declared.length
-          agg.get(k) match {
-            case Some(e) => (e, covered)
-            case None => // every row of k deleted: explicit zero entry
-              (KeyedStats.Entry(k, 0L, Array.fill(n)(""), Array.fill(n)(""),
-                Array.fill(n)(0L)), covered)
-          }
-        }
+      val n = declared.length
+      val patchEntries: Seq[(KeyedStats.Entry, Int)] = perKey.keys.toSeq.map { k =>
+        // covered = the key's serving-dir count at the scanned
+        // snapshot; the UPDATE path's own appended generation (and any
+        // later append) adds its sidecar entry ON TOP. A key with no
+        // survivor (every row deleted) writes an explicit zero entry
+        (survivors.getOrElse(k, KeyedStats.Entry(k, 0L, Array.fill(n)(""),
+            Array.fill(n)(""), Array.fill(n)(0L))),
+          scanView.edits.get(k).map(_.length).getOrElse(1))
+      }
       KeyedSource.writeFile(fs,
         new org.apache.hadoop.fs.Path(gen, KeyedStats.PatchFile),
         KeyedStats.renderPatch(declared, key, patchEntries))
@@ -510,14 +452,12 @@ final class KeyedMorBatchWrite(op: KeyedMorOperation,
       val log = KeyedSource.requireLog(path, prior, "deletion-vector commit")
       val head = branch.fold(log.head)(log.branchHead)
       // SERIALIZABLE: ordinals index the scanned snapshot's file lists
-      if (head.seq != scannedSeq) throw new IllegalStateException(
+      if (head.seq != scanView.seq) throw new IllegalStateException(
         s"graft-keyed deletion-vector commit at $path conflicts with a " +
           s"concurrent commit: positions were derived from snapshot " +
-          s"$scannedSeq but the ${branch.fold("head")(b => s"branch '$b' head")} " +
+          s"${scanView.seq} but the ${branch.fold("head")(b => s"branch '$b' head")} " +
           s"is now ${head.seq}; re-run the DML")
-      val dvs = head.dvs ++ perKey.map { case (k, refs) =>
-        k -> (head.dvs.getOrElse(k, Seq.empty) ++ refs.map(_._1))
-      }
+      val dvs = withOwnDvs(head.dvs)
       // UPDATE's new versions APPEND to their target keys (the same
       // edit mechanism appends/MERGE-inserts use; a key-moving update
       // lands under the NEW key, possibly creating it)
@@ -640,8 +580,8 @@ final class KeyedDvWriter(declared: StructType, key: String, path: String,
       // deletes) would degrade to a line per run, so past the density
       // threshold the whole vector writes as ONE base64 bitmap line
       // (`B<base64 of BitSet bytes>` — ~1 bit per ordinal vs ~8 bytes
-      // per run). The loaders read all three forms
-      // ([[KeyedSource.loadDeleted]], [[KeyedSource.dvRangesOf]]).
+      // per run). One loader reads all three forms
+      // ([[KeyedSource.loadDeleted]]).
       try {
         var runs = 0
         var i = bits.nextSetBit(0)

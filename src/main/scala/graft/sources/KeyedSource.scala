@@ -237,26 +237,27 @@ final class KeyedTable(declared: StructType, path: String, key: String,
       org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
     // snapshot pin: scan options first (DataFrameReader path — numeric
     // asOf, then named tag), table pin second (catalog VERSION AS OF,
-    // numeric or tag — GraftCatalog.loadTable). Tags resolve to their
-    // pinned seq HERE, at plan time, so an unknown tag fails with the
-    // tag list before any scan exists
+    // numeric or tag — GraftCatalog.loadTable). Every pin resolves
+    // against ONE commit-log read, at plan time, so an unknown tag
+    // fails with the tag list before any scan exists
+    val log = KeyedSource.readCommitLog(path, conf.value)
+    def tagSeq(t: String): Long =
+      KeyedSource.tagSeq(path, KeyedSource.requireLog(path, log, s"tag '$t'"), t)
+    // a branch read pins the branch head that read names (a commit on
+    // the branch mid-query cannot tear the plan; a BRANCH-pinned table
+    // resolves it fresh per plan — branch heads move, unlike snapshots)
+    def branchSeq(b: String): Long =
+      KeyedSource.requireLog(path, log, s"branch '$b'").branchHead(b).seq
     val asOfSeq = KeyedSource.numericOption(options.get("asOf"),
       "asOf", "a snapshot sequence number like asOf=3")(_.toLong)
-      .orElse(Option(options.get("tag"))
-        .map(t => KeyedSource.resolveTag(path, conf.value, t)))
-      // branch read: resolve the branch head ONCE at plan time; the
-      // scan then pins that seq like any snapshot read (a commit on
-      // the branch mid-query cannot tear the plan)
-      .orElse(Option(options.get("branch"))
-        .map(b => KeyedSource.resolveBranch(path, conf.value, b)))
+      .orElse(Option(options.get("tag")).map(tagSeq))
+      .orElse(Option(options.get("branch")).map(branchSeq))
       .orElse(asOf)
-      .orElse(asOfTag.map(t => KeyedSource.resolveTag(path, conf.value, t)))
-      // a BRANCH-pinned table reads its branch head (resolved fresh per
-      // plan — branch heads move, unlike snapshot pins)
-      .orElse(branch.map(b => KeyedSource.resolveBranch(path, conf.value, b)))
+      .orElse(asOfTag.map(tagSeq))
+      .orElse(branch.map(branchSeq))
     // an expired seq fails loudly here, at plan time
     new KeyedScanBuilder(declared, key, conf,
-      KeyedSource.resolveView(path, conf.value, asOfSeq),
+      KeyedSource.resolveView(path, log, asOfSeq),
       // pruning-aware size/row statistics reported to the planner
       // (KeyedScan.estimateStatistics); false = the A/B escape hatch
       options.getBoolean("reportStats", true))
@@ -388,6 +389,23 @@ final class KeyedTable(declared: StructType, path: String, key: String,
       }
     }
   }
+}
+
+/** A read-only table over one RESOLVED snapshot: the connector's own
+  * reads (compaction, re-bucketing, the merge-on-read stats patch) scan
+  * the view their caller already holds, so they never read the commit
+  * log again ([[KeyedSource.readView]]). */
+private[sources] final class KeyedViewTable(declared: StructType, key: String,
+    view: KeyedSource.SnapshotView) extends Table with SupportsRead {
+  override def name(): String = s"graft-keyed:${view.layoutPath}@${view.seq}"
+  override def schema(): StructType = declared
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new KeyedScanBuilder(declared, key,
+      new org.apache.spark.util.SerializableConfiguration(
+        org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()),
+      view)
 }
 
 final class KeyedScanBuilder(full: StructType, key: String,
@@ -1556,20 +1574,6 @@ object KeyedSource {
     bits
   }
 
-  /** A bitmap dv line's set ordinals as inclusive runs — the range
-    * form the stats-patch anti-join consumes. */
-  private[sources] def bitmapRuns(line: String): Seq[(Long, Long)] = {
-    val bits = java.util.BitSet.valueOf(
-      java.util.Base64.getDecoder.decode(line.substring(1)))
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var i = bits.nextSetBit(0)
-    while (i >= 0) {
-      val end = bits.nextClearBit(i) - 1
-      out += ((i.toLong, end.toLong))
-      i = bits.nextSetBit(end + 1)
-    }
-    out.toSeq
-  }
   /** The one log dialect written and read. Header fields after the
     * retain width are optional (ops, tags, stream epochs, branches);
     * snapshot lines carry 4 fields, plus deletion vectors and a branch
@@ -1701,16 +1705,6 @@ object KeyedSource {
   private[graft] val raceHook =
     new java.util.concurrent.atomic.AtomicReference[Runnable]()
 
-  /** Resolve the root readers should list (head snapshot): the
-    * committed generation when a log exists, the path itself for an
-    * empty table. Sidecar/order-marker reads resolve through this, so
-    * a generation directory (`_gen-*`) passes through as itself. */
-  private[graft] def effectiveRoot(path: String,
-      hconf: org.apache.hadoop.conf.Configuration): String =
-    if (new org.apache.hadoop.fs.Path(path).getName.startsWith("_gen-")) path
-    else readCommitLog(path, hconf).fold(path)(log =>
-      new org.apache.hadoop.fs.Path(path, log.head.gen).toString)
-
   /** One RESOLVED snapshot, bound once per scan build or row-level
     * commit: the layout path, the snapshot's seq (0 = empty table, no
     * log yet — conflict detection for copy-on-write commits compares
@@ -1775,7 +1769,13 @@ object KeyedSource {
   private[graft] def resolveView(path: String,
       hconf: org.apache.hadoop.conf.Configuration,
       asOf: Option[Long]): SnapshotView =
-    readCommitLog(path, hconf) match {
+    resolveView(path, readCommitLog(path, hconf), asOf)
+
+  /** [[resolveView]] against the log the caller already read (None =
+    * no log: an empty table). */
+  private[graft] def resolveView(path: String, log: Option[CommitLog],
+      asOf: Option[Long]): SnapshotView =
+    log match {
       case Some(log) =>
         val snap = asOf.fold(log.head) { seq =>
           log.snapshots.find(_.seq == seq).getOrElse(
@@ -1791,11 +1791,12 @@ object KeyedSource {
         SnapshotView(path, 0L, None, Set.empty, Map.empty)
     }
 
-  /** Spec-facing twin of [[effectiveRoot]] (the specs that doctor
-    * layout internals — delete a sidecar, inspect k= directories —
-    * must aim at the COMMITTED generation, not the layout root). */
+  /** The head's base-generation root, the layout path itself for an
+    * empty table (the specs that doctor layout internals — delete a
+    * sidecar, inspect k= directories — must aim at the COMMITTED
+    * generation, not the layout root). */
   private[graft] def committedRoot(spark: SparkSession, path: String): String =
-    effectiveRoot(path, spark.sessionState.newHadoopConf())
+    resolveView(path, spark.sessionState.newHadoopConf(), None).root
 
   /** Versioned log files in a root listing, as (seq, fileName),
     * unsorted. */
@@ -2122,15 +2123,20 @@ object KeyedSource {
     }
   }
 
-  /** Snapshot `seq` read back through the connector, narrowed to the
-    * raw keys `only` when given (the pushed key IN prunes the scan to
-    * their directories). */
-  private[sources] def readAt(spark: SparkSession, path: String,
-      schema: StructType, key: String, seq: Long,
+  /** The rows `view` serves through the connector's own scan, narrowed
+    * to the raw keys `only` when given (the pushed key IN prunes the
+    * scan to their directories). The scan binds `view` as given — no
+    * commit-log read ([[KeyedViewTable]]). */
+  private[sources] def readView(spark: SparkSession, view: SnapshotView,
+      schema: StructType, key: String,
       only: Option[Iterable[String]] = None): org.apache.spark.sql.DataFrame = {
-    val df = spark.read.format("graft-keyed").option("path", path)
-      .option("schema", schema.toDDL).option("key", key)
-      .option("asOf", seq.toString).load()
+    val rel = org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+      .create(new KeyedViewTable(schema, key, view), None, None,
+        CaseInsensitiveStringMap.empty())
+    val df: org.apache.spark.sql.DataFrame =
+      new org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row](
+        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], rel,
+        org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(rel.schema))
     only.fold(df) { raws =>
       val vals: Seq[Any] = schema(key).dataType match {
         case LongType => raws.toSeq.map(_.toLong)
@@ -2352,10 +2358,7 @@ object KeyedSource {
     val hconf = spark.sessionState.newHadoopConf()
     commitLoop(path, hconf, "tag drop") { prior =>
       val log = requireLog(path, prior, "tag drop")
-      if (!log.tags.contains(tag)) throw new IllegalArgumentException(
-        s"graft-keyed tag '$tag' does not exist at $path " +
-          s"(tags: ${log.tags.keys.toSeq.sorted.mkString(",") match {
-            case "" => "none"; case s => s }})")
+      tagSeq(path, log, tag) // unknown tags refuse
       // head-duplicate seq burn for the CAS claim (tagSnapshot note);
       // the now-unprotected snapshot stays until the next trimming
       // commit — dropping a tag never deletes data itself
@@ -2367,16 +2370,13 @@ object KeyedSource {
     ()
   }
 
-  /** Resolve a tag to its pinned seq for a read; loud with the known
-    * tag list when absent. */
-  private[sources] def resolveTag(path: String,
-      hconf: org.apache.hadoop.conf.Configuration, tag: String): Long = {
-    val log = requireLog(path, hconf, s"tag '$tag'")
+  /** The seq tag `tag` pins in `log`, the committed log of the layout
+    * at `path`; loud with the known tag list when absent. */
+  private[sources] def tagSeq(path: String, log: CommitLog, tag: String): Long =
     log.tags.getOrElse(tag, throw new IllegalArgumentException(
       s"graft-keyed tag '$tag' does not exist at $path " +
         s"(tags: ${log.tags.keys.toSeq.sorted.mkString(",") match {
           case "" => "none"; case s => s }})"))
-  }
 
   // ── Branch refs (r17 — write-audit-publish at the table layer) ─────
   //
@@ -2534,14 +2534,6 @@ object KeyedSource {
       Some(log.copy(branches = log.branches - name).append(adopted))
     }
     promoted
-  }
-
-  /** Resolve a branch to its current head seq for a read; loud with
-    * the known branch list when absent. */
-  private[sources] def resolveBranch(path: String,
-      hconf: org.apache.hadoop.conf.Configuration, name: String): Long = {
-    val log = requireLog(path, hconf, s"branch '$name'")
-    log.branchHead(name).seq
   }
 
   /** Apply `ops` to `current`, validating each against the schema state
@@ -2866,8 +2858,9 @@ object KeyedSource {
     else None
   }
 
-  /** Parse the order marker against the declared key AND types; None =
-    * no marker, wrong version, or a tag the declared schema cannot back
+  /** Parse generation `root`'s order marker against the declared key
+    * AND types; None = no marker, wrong version, or a tag the declared
+    * schema cannot back
     * — the scan then claims nothing (the stats-sidecar trust rule,
     * applied to ordering). Each `name:TYPE` tag is a written column the
     * [[Lineage]] resolves a declared column to, and the claim is made
@@ -2876,10 +2869,10 @@ object KeyedSource {
     * widenings (numeric order is identical under INT→BIGINT, and
     * FLOAT→DOUBLE is monotone), unlike the BIGINT/STRING drift the v2
     * type check exists to refuse. */
-  private[graft] def readOrderMarker(path: String,
+  private[graft] def readOrderMarker(root: String,
       conf: org.apache.spark.util.SerializableConfiguration,
       declared: StructType, key: String, lineage: Lineage): Option[Seq[String]] = {
-    val text = KeyedStats.readText(effectiveRoot(path, conf.value), OrderFile, conf)
+    val text = KeyedStats.readText(root, OrderFile, conf)
       .getOrElse(return None)
     text.split(PageSource.US, -1) match {
       case Array(OrderVersion, k, colsCsv) =>

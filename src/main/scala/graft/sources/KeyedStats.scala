@@ -367,8 +367,9 @@ object KeyedStats {
       body.map(f => f(0) -> ((parser.entry(f, at = 2), f(1).toInt))).toMap
     }
 
-  /** Parse the sidecar against the DECLARED schema + key through the
-    * layout's schema-evolution lineage: stats written before a rename,
+  /** Parse generation `root`'s sidecar against the DECLARED schema +
+    * key through the layout's schema-evolution lineage: stats written
+    * before a rename,
     * an add or a widening stay metadata-answer-worthy (the Iceberg
     * stats-through-evolution parity). None ⇒ no sidecar, or a header
     * the lineage cannot resolve (foreign layout) — the caller refuses
@@ -377,13 +378,10 @@ object KeyedStats {
     * is corruption of a file this connector owns, not a foreign
     * layout. The table NDV line maps too (an added constant column
     * has NDV 1). */
-  private[graft] def read(path: String,
+  private[graft] def read(root: String,
       conf: org.apache.spark.util.SerializableConfiguration,
       declared: StructType, key: String,
       lineage: KeyedSource.Lineage = KeyedSource.Lineage.empty): Option[Sidecar] = {
-    // resolve the committed generation (idempotent when handed a
-    // generation dir directly)
-    val root = KeyedSource.effectiveRoot(path, conf.value)
     openStats(root, SidecarFile, Version, "stats sidecar", conf, declared, key,
       lineage).map { case (body, parser) =>
       // the table line is structurally distinct from every entry line

@@ -177,6 +177,98 @@ final case class KeyedKeyStats(rawKey: String, count: Long,
   def entry: KeyedStats.Entry = KeyedStats.Entry(rawKey, count, mins, maxs, sums)
 }
 
+/** Per-key count/min/max/sum over rows that arrive key-contiguous: the
+  * one stats rule behind the writers' sidecar entries and the
+  * merge-on-read stats patch. BIGINT and INT take the integer leg
+  * (min/max as Long, an exact `addExact` sum — ANSI semantics, like a
+  * Spark sum); DOUBLE and FLOAT fold their sortable-bits digits
+  * ([[KeyedStats.sortableDouble]] — numeric order there IS the value
+  * order, NaN and -0.0 normalized) into min/max and keep no sum (FP
+  * addition is not associative); STRING keeps UTF8String byte-order
+  * extremes. */
+private[sources] final class KeyedStatsAcc(schema: StructType) {
+  private val n = schema.length
+  private val kind: Array[Int] = schema.fields.map(f => KeyedSource.kindOf(f.dataType))
+  private var raw: String = null
+  private var count = 0L
+  private val minL = new Array[Long](n)
+  private val maxL = new Array[Long](n)
+  private val sums = new Array[Long](n)
+  private val minS = new Array[UTF8String](n)
+  private val maxS = new Array[UTF8String](n)
+  private val done = scala.collection.mutable.ArrayBuffer.empty[KeyedKeyStats]
+
+  /** Whether column `i` is stored as digits (every kind but STRING). */
+  def digits(i: Int): Boolean = kind(i) != 1
+
+  /** Count one row of key `raw`, closing the previous key's run when
+    * `raw` starts a new one; the row's columns then fold through
+    * [[long]] / [[string]]. */
+  def begin(raw: String): Unit = {
+    if (raw != this.raw) {
+      close()
+      this.raw = raw
+      count = 0L
+      java.util.Arrays.fill(minL, Long.MaxValue)
+      java.util.Arrays.fill(maxL, Long.MinValue)
+      java.util.Arrays.fill(sums, 0L)
+      java.util.Arrays.fill(minS.asInstanceOf[Array[AnyRef]], null)
+      java.util.Arrays.fill(maxS.asInstanceOf[Array[AnyRef]], null)
+    }
+    count += 1
+  }
+
+  /** Fold digit column `i` of `row`; returns its stored Long form. */
+  def long(row: InternalRow, i: Int): Long = {
+    val v = kind(i) match {
+      case 0 => row.getLong(i)
+      case 2 => row.getInt(i).toLong
+      case 3 => KeyedStats.sortableDouble(row.getDouble(i))
+      case _ => KeyedStats.sortableFloat(row.getFloat(i)).toLong
+    }
+    if (v < minL(i)) minL(i) = v
+    if (v > maxL(i)) maxL(i) = v
+    if (kind(i) == 0 || kind(i) == 2) sums(i) = Math.addExact(sums(i), v)
+    v
+  }
+
+  /** Fold STRING column `i` of `row`; returns its value. An extreme is
+    * cloned (the row's buffer is reused) only when it becomes one —
+    * sorted-run data makes that rare. */
+  def string(row: InternalRow, i: Int): UTF8String = {
+    val u = row.getUTF8String(i)
+    if (minS(i) == null || u.compareTo(minS(i)) < 0) minS(i) = u.clone()
+    if (maxS(i) == null || u.compareTo(maxS(i)) > 0) maxS(i) = u.clone()
+    u
+  }
+
+  /** Fold a whole row of key `raw`. */
+  def add(raw: String, row: InternalRow): Unit = {
+    begin(raw)
+    var i = 0
+    while (i < n) {
+      if (digits(i)) long(row, i) else string(row, i)
+      i += 1
+    }
+  }
+
+  private def close(): Unit = if (raw != null) {
+    val mins = new Array[String](n)
+    val maxs = new Array[String](n)
+    var i = 0
+    while (i < n) {
+      if (digits(i)) { mins(i) = minL(i).toString; maxs(i) = maxL(i).toString }
+      else { mins(i) = minS(i).toString; maxs(i) = maxS(i).toString }
+      i += 1
+    }
+    done += KeyedKeyStats(raw, count, mins, maxs, sums.clone())
+    raw = null
+  }
+
+  /** Every key's stats, in arrival order. */
+  def result(): Seq[KeyedKeyStats] = { close(); done.toSeq }
+}
+
 final case class KeyedCommitMessage(keys: Seq[KeyedKeyStats],
     sketches: Array[Array[Long]]) extends WriterCommitMessage
 
@@ -275,21 +367,7 @@ final class KeyedDataWriter(schema: StructType, key: String, genDir: String,
   private val deflate = codec == "deflate"
 
   private val keyIdx = schema.fieldIndex(key)
-  private val isLong: Array[Boolean] = schema.fields.map(_.dataType == LongType)
-  // INT columns take the numeric leg (min/max/sum accumulate as Long,
-  // frames are the same ASCII digits) — only the row accessor differs
-  private val isInt: Array[Boolean] = schema.fields.map(
-    _.dataType == org.apache.spark.sql.types.IntegerType)
-  // DOUBLE/FLOAT frames store SORTABLE BITS digits (r19 —
-  // KeyedStats.sortableDouble/Float: bit-exact, numeric order = Spark
-  // double order), so min/max accumulate in the same Long slots as
-  // the integer leg; SUMS are never accumulated for them (the sidecar
-  // line carries 2 fields like STRING — FP addition isn't associative
-  // and a metadata sum could not match the scan bit-for-bit)
-  private val isFpD: Array[Boolean] = schema.fields.map(
-    _.dataType == org.apache.spark.sql.types.DoubleType)
-  private val isFpF: Array[Boolean] = schema.fields.map(
-    _.dataType == org.apache.spark.sql.types.FloatType)
+  private val keyIsLong = schema(key).dataType == LongType
   private val n = schema.length
   private val dirnameOk = java.util.regex.Pattern.compile("[A-Za-z0-9_.-]+")
   private val fs = new org.apache.hadoop.fs.Path(genDir).getFileSystem(conf.value)
@@ -323,33 +401,14 @@ final class KeyedDataWriter(schema: StructType, key: String, genDir: String,
   }
 
   // per-key audit accumulation (Entry shapes) + table-level sketches
-  private var count = 0L
-  private val minL = new Array[Long](n)
-  private val maxL = new Array[Long](n)
-  private val sums = new Array[Long](n)
-  private val minS = new Array[UTF8String](n)
-  private val maxS = new Array[UTF8String](n)
+  private val stats = new KeyedStatsAcc(schema)
   private val sketches = Array.fill(n)(new KmvSketch)
-  private val done = scala.collection.mutable.ArrayBuffer.empty[KeyedKeyStats]
 
   private def violation(raw: String, what: String): Nothing =
     throw new IllegalStateException(
       s"graft-keyed framing violation at key=$raw: $what")
 
-  private def flushKey(): Unit = if (currentRaw != null) {
-    out.close(); out = null
-    val mins = new Array[String](n)
-    val maxs = new Array[String](n)
-    var i = 0
-    while (i < n) {
-      if (isLong(i) || isInt(i) || isFpD(i) || isFpF(i)) {
-        mins(i) = minL(i).toString; maxs(i) = maxL(i).toString
-      } else { mins(i) = minS(i).toString; maxs(i) = maxS(i).toString }
-      i += 1
-    }
-    done += KeyedKeyStats(currentRaw, count, mins, maxs, sums.clone())
-    currentRaw = null
-  }
+  private def closeFile(): Unit = if (out != null) { out.close(); out = null }
 
   private def openKey(raw: String): Unit = {
     if (seen.contains(raw)) throw new IllegalStateException(
@@ -357,12 +416,6 @@ final class KeyedDataWriter(schema: StructType, key: String, genDir: String,
         "key-first sort contract broke; refusing to split a one-file directory")
     seen += raw
     currentRaw = raw
-    count = 0L
-    java.util.Arrays.fill(minL, Long.MaxValue)
-    java.util.Arrays.fill(maxL, Long.MinValue)
-    java.util.Arrays.fill(sums, 0L)
-    java.util.Arrays.fill(minS.asInstanceOf[Array[AnyRef]], null)
-    java.util.Arrays.fill(maxS.asInstanceOf[Array[AnyRef]], null)
     // the suffix IS the codec record (per-file, like the DV naming):
     // readers inflate by extension, so mixed generations compose
     val name = if (deflate) s"part-$taskId${PageSource.DeflateSuffix}"
@@ -387,38 +440,27 @@ final class KeyedDataWriter(schema: StructType, key: String, genDir: String,
     // key first: its raw form names the directory and every violation
     if (row.isNullAt(keyIdx)) violation("NULL", s"NULL key column '$key'")
     val raw =
-      if (isLong(keyIdx)) row.getLong(keyIdx).toString
+      if (keyIsLong) row.getLong(keyIdx).toString
       else {
         val u = row.getUTF8String(keyIdx).toString
         if (!dirnameOk.matcher(u).matches())
           violation(u, s"STRING key must be a directory name over [A-Za-z0-9_.-], got '$u'")
         u
       }
-    if (raw != currentRaw) { flushKey(); openKey(raw) }
-    count += 1
+    if (raw != currentRaw) { closeFile(); openKey(raw) }
+    stats.begin(raw)
     var i = 0
     while (i < n) {
       if (row.isNullAt(i)) violation(raw, s"NULL field '${schema(i).name}'")
-      if (isLong(i) || isInt(i)) {
-        val v = if (isInt(i)) row.getInt(i).toLong else row.getLong(i)
-        if (v < minL(i)) minL(i) = v
-        if (v > maxL(i)) maxL(i) = v
-        // ANSI semantics at stage time, like the old stager's Spark sum
-        sums(i) = Math.addExact(sums(i), v)
-        sketches(i).addLong(v)
-        writeLongAscii(v)
-      } else if (isFpD(i) || isFpF(i)) {
-        // sortable-bits digits: accumulation, sketch hashing, and the
-        // frame bytes all live in the transformed Long domain (numeric
-        // order there IS the value order, NaN/-0.0 pre-normalized)
-        val v = if (isFpD(i)) KeyedStats.sortableDouble(row.getDouble(i))
-          else KeyedStats.sortableFloat(row.getFloat(i)).toLong
-        if (v < minL(i)) minL(i) = v
-        if (v > maxL(i)) maxL(i) = v
+      if (stats.digits(i)) {
+        // integers as is, DOUBLE/FLOAT as sortable-bits digits: the
+        // sketch hashing and the frame bytes live in the same Long
+        // domain the stats accumulate in
+        val v = stats.long(row, i)
         sketches(i).addLong(v)
         writeLongAscii(v)
       } else {
-        val u = row.getUTF8String(i)
+        val u = stats.string(row, i)
         val bytes = u.getBytes
         var b = 0
         while (b < bytes.length) {
@@ -427,14 +469,6 @@ final class KeyedDataWriter(schema: StructType, key: String, genDir: String,
             violation(raw, s"frame delimiter byte in field '${schema(i).name}'")
           b += 1
         }
-        // UTF8String.clone(): the row's backing buffer is reused by the
-        // iterator — a HELD reference must own its bytes. Clone only
-        // when the value actually becomes the new extreme (r19
-        // optimization — the old form cloned every row; sorted-run
-        // data makes a new extreme rare, so this drops one allocation
-        // per string field per row in the common case).
-        if (minS(i) == null || u.compareTo(minS(i)) < 0) minS(i) = u.clone()
-        if (maxS(i) == null || u.compareTo(maxS(i)) > 0) maxS(i) = u.clone()
         sketches(i).addBytes(bytes)
         out.write(bytes)
       }
@@ -445,13 +479,13 @@ final class KeyedDataWriter(schema: StructType, key: String, genDir: String,
   }
 
   override def commit(): WriterCommitMessage = {
-    flushKey()
-    KeyedCommitMessage(done.toSeq, sketches.map(_.hashes))
+    closeFile()
+    KeyedCommitMessage(stats.result(), sketches.map(_.hashes))
   }
 
   override def abort(): Unit = close() // job-level abort deletes the staging dir
 
-  override def close(): Unit = if (out != null) { out.close(); out = null }
+  override def close(): Unit = closeFile()
 }
 
 /** K-minimum-values distinct sketch (seedless, deterministic — the
@@ -521,8 +555,11 @@ object KmvSketch {
   * ([[KeyedCompact]]) call [[auditAndWrite]]: the one-task-per-key
   * check, then the stats write. Merge-on-read inserts
   * ([[KeyedMorBatchWrite]]), whose per-key entries legitimately merge
-  * across tasks, call only [[writeStats]]. Stats derive from exactly
-  * the rows written, never a read-back pass. */
+  * across tasks, call only [[writeStats]]. Sidecar stats derive from
+  * exactly the rows written ([[KeyedStatsAcc]]). The one read-back
+  * pass is the merge-on-read stats PATCH: a deletion vector changes no
+  * written row, so its commit folds the affected keys' surviving rows
+  * through the same accumulator ([[KeyedMorBatchWrite]]). */
 private[sources] object KeyedWriteAudit {
   def auditAndWrite(schema: StructType, key: String, sortBy: Seq[String],
       msgs: Seq[KeyedCommitMessage], fs: org.apache.hadoop.fs.FileSystem,

@@ -19,7 +19,9 @@ import org.apache.spark.sql.types.StructType
   * tagged 'delete'; (7) compaction folds DVs into clean files —
   * vectors cleared, metadata answers restored, data identical;
   * (8) time travel still reads the pre-delete rows; (9) a commit
-  * racing the DV commit fails it loudly. */
+  * racing the DV commit fails it loudly; (10) after every MOR DELETE,
+  * UPDATE and MERGE the head view's stats (sidecars + patches) equal a
+  * direct aggregate of its rows, DOUBLE/FLOAT extremes included. */
 class KeyedMorSpec extends SparkSpec {
   import spark.implicits._
 
@@ -478,5 +480,73 @@ class KeyedMorSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
     assert(agg.collect().map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
       == expect)
+  }
+
+  /** Runs each DML against a fresh merge-on-read table over `rows` and,
+    * after each, checks the head view's stats (sidecars + patches)
+    * against a direct aggregate of the rows it serves. */
+  private def auditAfterEach(name: String, tddl: String, rows: DataFrame,
+      dml: Seq[String]): Unit = {
+    val dir = graft.io.TempDirs.scratch(s"graft_mor_audit_${name}_") + "/t"
+    val tschema = StructType.fromDDL(tddl)
+    KeyedSource.stageKeyed(spark, rows, dir, "kb", sortBy = Seq("doc_id"), retain = 8)
+    spark.sql(s"DROP TABLE IF EXISTS $cat.$name")
+    spark.sql(s"CREATE TABLE $cat.$name ($tddl) USING `graft-keyed` " +
+      s"LOCATION '$dir' " +
+      "TBLPROPERTIES('key'='kb','sortBy'='doc_id','retain'='8','dmlMode'='mor')")
+    val hconf = spark.sessionState.newHadoopConf()
+    dml.foreach { stmt =>
+      spark.sql(stmt.replace("$t", s"$cat.$name"))
+      val (stats, _) = KeyedStatsAudit.fromStats(spark, dir, tschema, "kb")
+      val (data, _) = KeyedStatsAudit.fromRows(spark.read.format("graft-keyed")
+        .option("path", dir).option("schema", tddl).option("key", "kb").load(),
+        tschema, "kb")
+      assert(stats == data, s"after '$stmt': stats $stats vs rows $data")
+    }
+    // every statement above committed deletion vectors
+    assert(KeyedSource.readCommitLog(dir, hconf).get.head.dvs.nonEmpty)
+  }
+
+  test("the stats patch equals the surviving rows after MOR DELETE, UPDATE and MERGE") {
+    df(64L).where($"doc_id" % 8 === 6)
+      .select(($"doc_id" + 500L) % 4L as "kb", $"doc_id" + 500L as "doc_id",
+        org.apache.spark.sql.functions.lit("a0") as "source", $"n_chars")
+      .unionAll(df(64L).where($"doc_id" % 8 === 1)
+        .select($"kb", $"doc_id", org.apache.spark.sql.functions.lit("zz") as "source",
+          $"n_chars" + 900L as "n_chars"))
+      .createOrReplaceTempView("mor_audit_src")
+    auditAfterEach("audit", ddl, df(64L), Seq(
+      "DELETE FROM $t WHERE doc_id % 5 = 1",
+      "UPDATE $t SET source = 'a', n_chars = n_chars + 1000 WHERE doc_id % 7 = 2",
+      """MERGE INTO $t AS t USING mor_audit_src AS s ON t.doc_id = s.doc_id
+        |WHEN MATCHED THEN UPDATE SET source = s.source, n_chars = s.n_chars
+        |WHEN NOT MATCHED THEN INSERT (kb, doc_id, source, n_chars)
+        |  VALUES (s.kb, s.doc_id, s.source, s.n_chars)""".stripMargin,
+      // every row of kb=3 (doc_id % 4 = kb): a fully deleted key
+      "DELETE FROM $t WHERE doc_id % 4 = 3"))
+  }
+
+  test("the stats patch keeps DOUBLE and FLOAT extremes exact through NaN and -0.0") {
+    val fdf = (0L until 32L).map { i =>
+      val d = i % 8 match {
+        case 0 => Double.NaN
+        case 1 => -0.0
+        case 2 => 0.0
+        case 3 => Double.NegativeInfinity
+        case _ => (i - 16L) * 1.25
+      }
+      (i % 4L, i, d, (if (i % 8 == 5) -0.0f else (16L - i) * 0.5f))
+    }.toDF("kb", "doc_id", "score", "w")
+    fdf.where($"doc_id" % 8 === 7).select($"kb", $"doc_id", -$"score" as "score",
+      $"w" * 2.0f as "w").createOrReplaceTempView("mor_fp_src")
+    auditAfterEach("fpaudit", "kb BIGINT, doc_id BIGINT, score DOUBLE, w FLOAT", fdf, Seq(
+      // drops kb=0's NaN maxima and kb=3's -Infinity minima
+      "DELETE FROM $t WHERE isnan(score) OR score < -1e300",
+      "UPDATE $t SET score = CAST('NaN' AS DOUBLE), w = CAST('-0.0' AS FLOAT) " +
+        "WHERE doc_id % 8 = 4",
+      "UPDATE $t SET score = CAST('-0.0' AS DOUBLE) WHERE doc_id % 8 = 6",
+      """MERGE INTO $t AS t USING mor_fp_src AS s ON t.doc_id = s.doc_id
+        |WHEN MATCHED THEN UPDATE SET score = s.score, w = s.w""".stripMargin,
+      "DELETE FROM $t WHERE w > 5.0"))
   }
 }

@@ -7,8 +7,9 @@ import org.apache.spark.sql.types.StructType
 
 /** Spec helper for the keyed write audit: the per-key stats a layout's
   * head view reports against a direct aggregate of its rows. Figures
-  * are raw strings per column (BIGINT digits, STRING values — the
-  * sidecar's own form), so it covers BIGINT and STRING layouts. */
+  * are raw strings per column in the sidecar's own form: BIGINT and
+  * INT digits, STRING values, DOUBLE and FLOAT sortable-bits digits
+  * ([[KeyedStats.sortableDouble]] — NaN and -0.0 normalized). */
 object KeyedStatsAudit {
   /** raw key -> (row count, per-column (min, max)) */
   type PerKey = Map[String, (Long, Seq[(String, String)])]
@@ -28,12 +29,21 @@ object KeyedStatsAudit {
   }
 
   /** The same per-key figures aggregated from the rows of `df`, plus
-    * the row total. */
-  def fromRows(df: DataFrame, schema: StructType, key: String): (PerKey, Long) = {
+    * the row total. The rows are collected first, so the aggregate
+    * cannot be answered from the very stats under audit (a keyed scan
+    * pushes count/min/max down to its sidecar). */
+  def fromRows(scanned: DataFrame, schema: StructType, key: String): (PerKey, Long) = {
+    val df = scanned.sparkSession.createDataFrame(
+      java.util.Arrays.asList(scanned.collect(): _*), scanned.schema)
     val aggs = schema.fieldNames.toSeq.flatMap(c => Seq(min(col(c)), max(col(c))))
+    def raw(v: Any): String = v match {
+      case d: java.lang.Double => KeyedStats.sortableDouble(d).toString
+      case f: java.lang.Float => KeyedStats.sortableFloat(f).toString
+      case other => String.valueOf(other)
+    }
     val perKey = df.groupBy(col(key)).agg(count(lit(1)), aggs: _*).collect()
       .map(r => String.valueOf(r.get(0)) -> (r.getLong(1), schema.indices.map(i =>
-        (String.valueOf(r.get(2 + 2 * i)), String.valueOf(r.get(3 + 2 * i)))))).toMap
+        (raw(r.get(2 + 2 * i)), raw(r.get(3 + 2 * i)))))).toMap
     (perKey, df.count())
   }
 }

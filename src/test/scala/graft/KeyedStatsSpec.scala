@@ -42,7 +42,7 @@ class KeyedStatsSpec extends SparkSpec {
       .orderBy("kb")
 
   test("stageKeyed writes the sidecar; parsed entries equal a direct computation") {
-    val sidecar = KeyedStats.read(staged,
+    val sidecar = KeyedStats.read(KeyedSource.committedRoot(spark, staged),
       new org.apache.spark.util.SerializableConfiguration(
         spark.sessionState.newHadoopConf()),
       org.apache.spark.sql.types.StructType.fromDDL(ddl), "kb").get

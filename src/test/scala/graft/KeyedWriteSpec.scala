@@ -44,7 +44,7 @@ class KeyedWriteSpec extends SparkSpec {
     assert(readKeyed(dir).orderBy("doc_id").collect()
       .sameElements(df(64L).orderBy("doc_id").collect()))
     // writer-derived sidecar equals a direct computation over the read
-    val sc = KeyedStats.read(dir,
+    val sc = KeyedStats.read(KeyedSource.committedRoot(spark, dir),
       new org.apache.spark.util.SerializableConfiguration(
         spark.sessionState.newHadoopConf()),
       org.apache.spark.sql.types.StructType.fromDDL(ddl), "kb").get
